@@ -1,70 +1,44 @@
 package graft
 
+import scala.reflect.ClassTag
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import graft.functions.{AssignCid, DotDouble, LutSum, MinhashSig, Simhash64, SortedIntersect, SortedIntersectAtLeast, SortedIntersectSize, TopKByAgg}
 
-/** SparkSessionExtensions entry point — makes graft's native expressions
-  * available to any session via
-  * `spark.sql.extensions=graft.GraftExtensions` (cluster deploys) in
-  * addition to the programmatic [[graft.functions.ArrayOps.register]].
-  */
+/** SparkSessionExtensions entry point and the ONE registration path for
+  * graft's native SQL functions and its optimizer rule. Every session
+  * built through [[Sessions.tune]] gets them via `withExtensions`; any
+  * other session gets them from `spark.sql.extensions=graft.GraftExtensions`
+  * (cluster deploys). Nothing registers per call. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("sorted_intersect_size"),
-      new ExpressionInfo(classOf[SortedIntersectSize].getName, "sorted_intersect_size"),
-      (exprs: Seq[Expression]) => SortedIntersectSize(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("sorted_intersect"),
-      new ExpressionInfo(classOf[SortedIntersect].getName, "sorted_intersect"),
-      (exprs: Seq[Expression]) => SortedIntersect(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("lut_sum"),
-      new ExpressionInfo(classOf[LutSum].getName, "lut_sum"),
-      (exprs: Seq[Expression]) => LutSum(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("assign_cid"),
-      new ExpressionInfo(classOf[AssignCid].getName, "assign_cid"),
-      (exprs: Seq[Expression]) => AssignCid(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[Simhash64].getName, "simhash64"),
-      (exprs: Seq[Expression]) => Simhash64(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("dot_double"),
-      new ExpressionInfo(classOf[DotDouble].getName, "dot_double"),
-      (exprs: Seq[Expression]) => DotDouble(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinhashSig].getName, "minhash_sig"),
-      (exprs: Seq[Expression]) => MinhashSig(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("sorted_intersect_atleast"),
-      new ExpressionInfo(classOf[SortedIntersectAtLeast].getName, "sorted_intersect_atleast"),
-      (exprs: Seq[Expression]) => SortedIntersectAtLeast(exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier("topk_by"),
-      new ExpressionInfo(classOf[TopKByAgg].getName, "topk_by"),
-      (exprs: Seq[Expression]) => TopKByAgg(exprs(0), exprs(1), exprs(2))))
-    // Spark's own runtime-filter bloom expressions, SQL-visible (the
-    // explicit semi-join prune graft.functions.Bloom registers per session)
-    ext.injectFunction((
-      FunctionIdentifier("bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "bloom_agg"),
-      (exprs: Seq[Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          exprs(0), exprs(1), exprs(2))))
-    ext.injectFunction((
-      FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "bloom_might_contain"),
-      (exprs: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(exprs(0), exprs(1))))
+    GraftExtensions.functions.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => graft.plans.IntersectRewrite)
   }
+}
+
+object GraftExtensions {
+
+  private def fn[T <: Expression](name: String)(build: Seq[Expression] => T)
+      (implicit ct: ClassTag[T]) =
+    (FunctionIdentifier(name), new ExpressionInfo(ct.runtimeClass.getName, name), build)
+
+  /** Every native SQL function, by name and builder. `bloom_agg` and
+    * `bloom_might_contain` are Spark's own runtime-filter expressions,
+    * which Catalyst does not expose to SQL. */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    fn("sorted_intersect_size")(e => SortedIntersectSize(e(0), e(1))),
+    fn("sorted_intersect")(e => SortedIntersect(e(0), e(1))),
+    fn("sorted_intersect_atleast")(e => SortedIntersectAtLeast(e(0), e(1), e(2))),
+    fn("lut_sum")(e => LutSum(e(0), e(1))),
+    fn("assign_cid")(e => AssignCid(e(0), e(1), e(2))),
+    fn("simhash64")(e => Simhash64(e(0), e(1))),
+    fn("dot_double")(e => DotDouble(e(0), e(1))),
+    fn("minhash_sig")(e => MinhashSig(e(0))),
+    fn("topk_by")(e => TopKByAgg(e(0), e(1), e(2))),
+    fn("bloom_agg")(e => new BloomFilterAggregate(e(0), e(1), e(2))),
+    fn("bloom_might_contain")(e => BloomFilterMightContain(e(0), e(1))),
+  )
 }

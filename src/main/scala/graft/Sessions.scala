@@ -12,12 +12,10 @@ object Sessions {
     * set here is CLUSTER-SAFE: a deploy that copies tune() verbatim gets
     * correct, sane behavior. Local-only perf flips live in [[localTune]].
     *
-    * Also installs [[GraftExtensions]], so every session built through
-    * here has the native functions (dot_double, minhash_sig, topk_by, …)
-    * in its registry from birth — operator correctness must never depend
-    * on which query happened to call an ArrayOps.register first
-    * (round-7 ADVICE: matryoshka_recall threw UNRESOLVED_ROUTINE in a
-    * fresh session because registration rode Map iteration order). */
+    * Also installs [[GraftExtensions]], the only registration path for
+    * the native functions (dot_double, minhash_sig, topk_by, …): every
+    * session built through here has them in its registry from birth, so
+    * operator correctness never depends on which query ran first. */
   def tune(b: SparkSession.Builder, cpus: String): SparkSession.Builder =
     b.withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", cpus)

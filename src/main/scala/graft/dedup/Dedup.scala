@@ -86,7 +86,6 @@ object Dedup {
   def minhashPairs(spark: SparkSession, dir: String, threshold: Double = 0.9,
       maxBucketSize: Option[Int] = None,
       bandSubset: Option[Seq[Int]] = None): DataFrame = {
-    graft.functions.ArrayOps.register(spark)
     if (maxBucketSize.isDefined)
       minhashPairsByDoc(spark, dir, threshold, maxBucketSize, bandSubset)
     else
@@ -142,7 +141,6 @@ object Dedup {
     * granularity and never materialize the expanded pair set. */
   private def minhashGroupPairs(spark: SparkSession, dir: String,
       threshold: Double, bandSubset: Option[Seq[Int]]): (DataFrame, DataFrame) = {
-    graft.functions.ArrayOps.register(spark)
     // the contraction (token-hash sets → one row per distinct set, with
     // members and the MinHash signature) is a deterministic derivation
     // of the corpus — materialized once per JVM via the derived-relation
@@ -330,7 +328,6 @@ object Dedup {
   def dedupIncremental(spark: SparkSession, dir: String,
       threshold: Double = 0.9, batchMod: Int = 10,
       maxBroadcastSets: Long = 500000L): DataFrame = {
-    graft.functions.ArrayOps.register(spark)
     val all = Tables.documents(spark, dir)
       .withColumn("th", expr(
         s"""array_sort(array_distinct(transform(array_distinct(split(text, ' ')),
@@ -389,8 +386,7 @@ object Dedup {
     * (jaccard ≤ min/max, so failing pairs can't reach the threshold),
     * codegen'd merge-scan intersect, threshold filter. Keeping it in one
     * place keeps admission and pair-generation semantics provably
-    * identical. Requires `ArrayOps.register`; adds `inter` and
-    * `jaccard_raw` columns. */
+    * identical. Adds `inter` and `jaccard_raw` columns. */
   private[graft] def jaccardAtLeast(df: DataFrame, thA: String, thB: String,
       threshold: Double): DataFrame =
     df.filter(least(expr(s"size($thA)"), expr(s"size($thB)")) >=
@@ -429,15 +425,11 @@ object Dedup {
     * signature probe SUMS a signature element — a bare count() would be
     * column-pruned down to a parquet footer read and measure nothing. */
   private[graft] def signatureProbe(spark: SparkSession, dir: String): Long = {
-    // self-registering: the probe must work against ANY session, not only
-    // one whose history already resolved minhash_sig (round-7 ADVICE)
-    graft.functions.ArrayOps.register(spark)
     withSignature(Tables.documents(spark, dir))
       .agg(sum(expr("element_at(sig, 1)"))).head().getLong(0)
   }
 
   private[graft] def candidateProbe(spark: SparkSession, dir: String): Long = {
-    graft.functions.ArrayOps.register(spark)
     // persisted exactly like the real pipeline, so the probe isolates the
     // band join instead of re-running the signature stage per join side
     val docs = withSignature(Tables.documents(spark, dir))
@@ -470,7 +462,6 @@ object Dedup {
     * per-lambda-call and measured 64-bit at ~2× the whole 32-bit
     * pipeline's cost; the md5 halves stay in (codegen'd) `transform`s. */
   private def simhashFingerprints(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.ArrayOps.register(spark)
     Tables.documents(spark, dir)
       .withColumn("toks", expr("array_distinct(split(text, ' '))"))
       .withColumn("th_lo", expr(
@@ -685,8 +676,8 @@ object Dedup {
     // re-checkpoints per query: consumers fan out into a size aggregate
     // plus a doc-level explode, and block-manager blocks beat
     // re-decoding parquet per consumer. NESTED derivation by design
-    // (simhashGroups is itself Derived-cached — the Slot build runs
-    // outside the registry's bin lock).
+    // (simhashGroups is itself Derived-cached — the engine.Memo slot
+    // build runs outside the registry's bin lock).
     graft.engine.Derived.cached(spark, s"fpclusters_h$maxHamming", dir) {
       // eager checkpoint: groups feed the pair pipeline (via the
       // fixpoint's edge materialization) AND the labeled output below
@@ -782,8 +773,6 @@ object Dedup {
     var prevSum = labelSum(labels)
     var converged = false
     var rounds = 0
-    val ccDebug = sys.env.contains("GRAFT_CC_DEBUG")
-    var tRound = System.nanoTime()
     while (!converged) {
       rounds += 1
       require(rounds <= 64, "connected components failed to converge in 64 rounds")
@@ -799,11 +788,6 @@ object Dedup {
       prevSum = newSum
       labels.unpersist(false)
       labels = next
-      if (ccDebug) {
-        val now = System.nanoTime()
-        System.err.println(f"[cc] round $rounds: ${(now - tRound) / 1e9}%.2f s")
-        tRound = now
-      }
     }
     edges.unpersist(false)
     // hand back an eagerly-checkpointed label-scale DataFrame so BOTH
@@ -938,7 +922,6 @@ object Dedup {
     *   the recall contract). None (default) enumerates exactly. */
   def containmentPairs(spark: SparkSession, dir: String,
       threshold: Double = 0.8, maxShingleFreq: Option[Int] = None): DataFrame = {
-    graft.functions.ArrayOps.register(spark)
     val docs = shingleIndex(spark, dir)
       .filter(col("n_sh") > 0)
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -1009,7 +992,6 @@ object Dedup {
     * the sliced pair space. */
   def containmentIncremental(spark: SparkSession, dir: String,
       threshold: Double = 0.8, maxBroadcastDocs: Long = 500000L): DataFrame = {
-    graft.functions.ArrayOps.register(spark)
     val docs = shingleIndex(spark, dir).filter(col("n_sh") > 0)
       .persist(StorageLevel.MEMORY_AND_DISK)
     containmentIncrementalOn(docs, col("doc_id") % 10 === 0, threshold,
@@ -1072,7 +1054,6 @@ object Dedup {
     *   lost. None (default, oracle-replayed) enumerates exactly. */
   def ngramJaccardPairs(spark: SparkSession, dir: String, threshold: Double = 0.5,
       maxShingleFreq: Option[Int] = None): DataFrame = {
-    graft.functions.ArrayOps.register(spark)
     val docs = shingleIndex(spark, dir)
       .persist(StorageLevel.MEMORY_AND_DISK)
 
@@ -1143,7 +1124,6 @@ object Dedup {
     require(nPlanes >= 1 && nPlanes <= 64,
       s"nPlanes must be in [1, 64] (embedding dim; got $nPlanes) — " +
         "element_at past the vector end throws under ANSI mode")
-    graft.functions.ArrayOps.register(spark)
     val e = Tables.embeddings(spark, dir)
       .withColumn("v", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
       .withColumn("bucket", expr(
@@ -1180,7 +1160,6 @@ object Dedup {
     require(nPlanes >= 1 && nPlanes <= 64,
       s"nPlanes must be in [1, 64] (embedding dim; got $nPlanes) — " +
         "element_at past the vector end throws under ANSI mode")
-    graft.functions.ArrayOps.register(spark)
     val e = Tables.embeddings(spark, dir)
       .withColumn("v", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
       .withColumn("bucket", expr(
@@ -1255,7 +1234,6 @@ object Dedup {
     * spec pins it) and on any single-byte corpus. */
   def editDistancePairs(spark: SparkSession, dir: String, prefix: Int = 120,
       maxLenDiff: Int = 60, maxDist: Int = 12): DataFrame = {
-    graft.functions.ArrayOps.register(spark)
     // CONTRACTED on (lang, n_chars, prefix) — the full pair predicate
     // (band, length filter, q-gram filter, DP) is a pure function of
     // those three columns, so docs sharing them are interchangeable
@@ -1408,7 +1386,6 @@ object Dedup {
     * the RAW int/int ratio — IEEE-identical cross-engine. */
   def simhashPrecision(spark: SparkSession, dir: String,
       threshold: Double = 0.9): DataFrame = {
-    graft.functions.ArrayOps.register(spark)
     val th = Tables.documents(spark, dir)
       .select(col("doc_id"), expr(
         s"""array_sort(array_distinct(transform(array_distinct(split(text, ' ')),

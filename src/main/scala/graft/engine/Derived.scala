@@ -24,19 +24,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * doubles, parquet round-trips them bit-exactly too). */
 object Derived {
 
-  /** One registry slot: the multi-second Spark build runs under the
-    * SLOT's own lazy-val lock, never under the ConcurrentHashMap bin
-    * lock — concurrent first-touch of the SAME key still serializes
-    * (must not double-build), but other keys sharing the hash bin
-    * proceed, and a derivation whose build itself calls
-    * [[Derived.cached]] (nested derivations) cannot hit
-    * computeIfAbsent's "recursive update" IllegalStateException. A
-    * failed build leaves the lazy val uninitialized, so the next caller
-    * retries rather than caching the failure. */
-  private final class Slot(thunk: () => String) { lazy val path: String = thunk() }
-
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, Slot]()
+  private val built = new Memo[String]
 
   /** The derivation named `name` over fixture `dir`: built and written
     * on first use (charged to that caller), read back by everyone
@@ -48,11 +36,11 @@ object Derived {
     * fresh path, exactly as it must for Spark's own file-index caches. */
   def cached(spark: SparkSession, name: String, dir: String)
       (build: => DataFrame): DataFrame =
-    spark.read.parquet(slotFor(spark, name, dir)(build).path)
+    spark.read.parquet(relPath(spark, name, dir)(build))
 
-  private def slotFor(spark: SparkSession, name: String, dir: String)
-      (build: => DataFrame): Slot =
-    built.computeIfAbsent(s"$name|$dir", _ => new Slot(() => {
+  private def relPath(spark: SparkSession, name: String, dir: String)
+      (build: => DataFrame): String =
+    built(s"$name|$dir") {
       // prefix segment `rel_` vs store's `store_`: the namespaces are
       // disjoint BY CONSTRUCTION — a cached relation named "store_x"
       // digests to graft_derived_rel_store_x while a store named "x"
@@ -63,7 +51,7 @@ object Derived {
       Fs.deleteDir(spark, p)
       build.write.mode("overwrite").parquet(p)
       p
-    }))
+    }
 
   /** A deterministic STORE build memoized per (name, dir) — [[cached]]
     * for derivations that materialize a DIRECTORY (e.g. a manifest
@@ -75,9 +63,9 @@ object Derived {
     * writes (reload/retry proofs) must keep building their own stores. */
   def store(spark: SparkSession, name: String, dir: String)
       (populate: String => Unit): String =
-    built.computeIfAbsent(s"store:$name|$dir", _ => new Slot(() => {
+    built(s"store:$name|$dir") {
       // scratch prefix is namespaced apart from cached's `rel_` segment
-      // (disjoint by construction — see slotFor): a store and a cached
+      // (disjoint by construction — see relPath): a store and a cached
       // relation sharing a NAME must not share a PATH (the second build
       // would delete-and-overwrite the first's files while both
       // registry entries keep pointing there)
@@ -85,10 +73,9 @@ object Derived {
       Fs.deleteDir(spark, p)
       populate(p)
       p
-    })).path
+    }
 
-  private val counts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private val counts = new Memo[Long]
 
   /** Row count of the derivation from parquet FOOTER metadata
     * ([[Fs.parquetRowCount]] — driver-side, NO Spark job), memoized per
@@ -98,10 +85,8 @@ object Derived {
     * this is its first touch. */
   def rowCount(spark: SparkSession, name: String, dir: String)
       (build: => DataFrame): Long = {
-    val slot = slotFor(spark, name, dir)(build)
-    counts.computeIfAbsent(s"$name|$dir",
-      _ => java.lang.Long.valueOf(Fs.parquetRowCount(spark, slot.path)))
-      .longValue()
+    val path = relPath(spark, name, dir)(build)
+    counts(s"$name|$dir")(Fs.parquetRowCount(spark, path))
   }
 
   /** Test hook: drop the registry (files stay; keys are re-derivable). */

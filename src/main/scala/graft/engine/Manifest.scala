@@ -377,7 +377,6 @@ object Manifest {
       bloomCols: Seq[String], entries: Seq[Entry]): Seq[Entry] = {
     if (statsCols.isEmpty && bloomCols.isEmpty) return entries
     import org.apache.spark.sql.functions.{col, element_at, expr, max, min, split}
-    if (bloomCols.nonEmpty) graft.functions.Bloom.register(spark)
     val written = spark.read.schema(schema).parquet(dirPath)
     val aggs = statsCols.flatMap(c => Seq(
       min(col(c)).cast("string").as(s"__min_$c"),

@@ -511,43 +511,6 @@ object ArrayOps {
     throw new IllegalArgumentException(
       s"$fn requires array_sort order (nulls LAST); got a null-leading " +
         "array — sort_array(asc) places nulls first and is not supported")
-
-  /** Register graft's native expressions in a session's function registry
-    * (idempotent) so they are usable via `expr("sorted_intersect_size(a,b)")`. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_size",
-      exprs => SortedIntersectSize(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect",
-      exprs => SortedIntersect(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lut_sum",
-      exprs => LutSum(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "assign_cid",
-      exprs => AssignCid(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64",
-      exprs => Simhash64(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_double",
-      exprs => DotDouble(exprs.head, exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig",
-      exprs => MinhashSig(exprs.head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_atleast",
-      exprs => SortedIntersectAtLeast(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-  }
 }
 
 /** Threshold-aware variant of [[SortedIntersectSize]]: TRUE iff the

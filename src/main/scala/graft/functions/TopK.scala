@@ -165,11 +165,4 @@ object TopKByAgg {
         if (a._1 != b._1) a._1 > b._1 else a._2 < b._2
       }
   }
-
-  /** Register `topk_by` in the session's function registry (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_by",
-      exprs => TopKByAgg(exprs(0), exprs(1), exprs(2)),
-      "built-in")
 }

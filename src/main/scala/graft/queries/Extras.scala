@@ -259,7 +259,6 @@ object Extras {
     * and sorts every order; the aggregate's map-side partials shuffle at
     * most k rows per (customer, map task). */
   def topOrdersPerCustomer(spark: SparkSession, dir: String, k: Int = 2): DataFrame = {
-    graft.functions.TopKByAgg.register(spark)
     Tables.orders(spark, dir)
       .groupBy(col("o_custkey").as("custkey"))
       .agg(expr(s"topk_by(o_totalprice, o_orderkey, $k)").as("topk"))

@@ -151,7 +151,6 @@ object Graphs {
     * Deterministic: counts are integers, top-k tiebreak is
     * (count desc, part asc). */
   def triangleCounts(spark: SparkSession, dir: String, k: Int = 20): DataFrame = {
-    graft.functions.ArrayOps.register(spark)
     // symmetric adjacency once ([[coPurchaseAdjacency]]): degree = list
     // size rides for free, replacing the edge-DISTINCT + degree-rollup +
     // two degree joins of the edge-list build (three M-row exchanges)
@@ -211,7 +210,6 @@ object Graphs {
     * money-rounded VALUE, never a sort key), inner threshold on the
     * integer intersection size. */
   def partSimilarity(spark: SparkSession, dir: String, minCommon: Int = 20): DataFrame = {
-    graft.functions.ArrayOps.register(spark)
     // symmetric adjacency once ([[coPurchaseAdjacency]]): the undirected
     // pair relation is born from the lists (a < b keeps each edge once)
     // with N(a)/deg(a) already onboard, so only N(b) attaches by join —
@@ -259,7 +257,6 @@ object Graphs {
     * near-dup banding. */
   def partSimilarityCapped(spark: SparkSession, dir: String,
       threshold: Double = 0.1, maxBucketSize: Int = 10): DataFrame = {
-    graft.functions.ArrayOps.register(spark)
     val P = graft.dedup.Dedup.P
     // neighbor HASH sets straight off the symmetric adjacency (the
     // neighbor lists are already distinct, so the per-element md5 runs

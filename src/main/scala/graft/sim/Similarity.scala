@@ -25,11 +25,10 @@ object Similarity {
   // native codegen'd dot (graft.functions.DotDouble) — the HOF
   // formulation (aggregate over zip_with) evaluates lambdas INTERPRETED
   // per element; at pairs x dims multiply-adds that dominated the
-  // embedding family. Bit-identical fold order, registered by prepared().
+  // embedding family. Bit-identical fold order.
   private val dotExpr = "dot_double(va, vb)"
 
   private[graft] def prepared(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.ArrayOps.register(spark)
     Tables.embeddings(spark, dir)
       .withColumn("v", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
       .withColumn("norm2", expr("aggregate(v, CAST(0 AS DOUBLE), (acc, x) -> acc + x * x)"))
@@ -68,12 +67,6 @@ object Similarity {
     * machinery instead of re-deriving it. */
   private def bruteForceOn(e: DataFrame, k: Int,
       queryChunkRows: Int): DataFrame = {
-    // self-registering (round-7 ADVICE: matryoshka_recall enters here
-    // WITHOUT passing through prepared(), and this method analyzes
-    // dot_double eagerly via the sizing count — correctness must not
-    // depend on which query ran earlier in the session)
-    graft.functions.ArrayOps.register(e.sparkSession)
-    graft.functions.TopKByAgg.register(e.sparkSession)
     // localCheckpoint (not persist): the sizing count below and every
     // chunk's broadcast read the same small relation — a bare persist
     // here would leak for the session lifetime (the returned plan is
@@ -141,7 +134,6 @@ object Similarity {
     // bounded-heap rank (see topKPerQuery); `label` is functionally
     // determined by query_id (it is the equi-join key), so it rides the
     // grouping key instead of a re-join
-    graft.functions.TopKByAgg.register(spark)
     corpus.join(broadcast(queries), "label")
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cosine", Fns.money(expr(dotExpr) / sqrt(col("na2") * col("nb2"))))
@@ -181,7 +173,6 @@ object Similarity {
     // broadcast join of the tiny (anchors × k) shortlist against a
     // 2-column label projection — the label scan column-prunes at
     // parquet, so this costs far less than windowing the candidate set
-    graft.functions.TopKByAgg.register(spark)
     val ranked = corpus.join(broadcast(anchors), col("label") =!= col("anchor_label"))
       .withColumn("cosine", Fns.money(expr(dotExpr) / sqrt(col("na2") * col("nb2"))))
       .groupBy(col("anchor_id"), col("anchor_label"))
@@ -322,13 +313,12 @@ object Similarity {
     * arbitrary ingested batches) pass None and always fit fresh.
     * Job-count pins that need a COLD fit clear the registry first
     * ([[clearFitRegistry]]). */
-  private val fitRegistry =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+  private val fitRegistry = new graft.engine.Memo[AnyRef]
 
   private def memoFit[T <: AnyRef](key: Option[String])(fit: => T): T =
     key match {
       case None => fit
-      case Some(k) => fitRegistry.computeIfAbsent(k, _ => fit).asInstanceOf[T]
+      case Some(k) => fitRegistry(k)(fit).asInstanceOf[T]
     }
 
   private[graft] def clearFitRegistry(): Unit = fitRegistry.clear()
@@ -366,7 +356,6 @@ object Similarity {
   private[graft] def pqFitFused(e: DataFrame, m: Int, subDim: Int,
       codes: Int, iters: Int): Seq[Seq[Centroid]] = {
     import e.sparkSession.implicits._
-    graft.functions.ArrayOps.register(e.sparkSession)
     val seedRows = e
       .withColumn("h", Fns.h64(col("vec_id").cast("string")))
       .orderBy(col("h"), col("vec_id")).limit(codes)
@@ -421,7 +410,6 @@ object Similarity {
     * against a query relation this method does not own. Tie order
     * (ccos DESC, cid ASC) matches the prior window bit-for-bit. */
   private def probesFor(queries: DataFrame, centDf: DataFrame, nprobe: Int): DataFrame = {
-    graft.functions.TopKByAgg.register(queries.sparkSession)
     queries.crossJoin(broadcast(centDf))
       .withColumn("vb", col("centroid"))
       .withColumn("ccos", Fns.money(expr(dotExpr) / sqrt(col("na2") * col("cnorm2"))))
@@ -435,8 +423,6 @@ object Similarity {
     * bounded-heap [[topKPerQuery]], not a window — the probed lists are
     * nprobe/nClusters of the corpus, still corpus-scale per query. */
   private def probeSearch(corpus: DataFrame, probes: DataFrame, k: Int): DataFrame = {
-    graft.functions.ArrayOps.register(corpus.sparkSession)
-    graft.functions.TopKByAgg.register(corpus.sparkSession)
     corpus.join(broadcast(probes), Seq("cid"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cosine", Fns.money(expr(dotExpr) / sqrt(col("na2") * col("nb2"))))
@@ -589,7 +575,6 @@ object Similarity {
       fitKey: Option[String] = None): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
-    graft.functions.TopKByAgg.register(spark)
     val subDim = 64 / m
     val fits: Seq[Seq[Centroid]] = pqFitCached(e, fitKey, m, subDim, codes, iters)
     // dense (s, cid)-indexed codebook, zero-padded where a codeword died
@@ -754,8 +739,6 @@ object Similarity {
       centDf: DataFrame, cbDf: DataFrame, k: Int, nprobe: Int, m: Int,
       shortlist: Int): DataFrame = {
     val spark = e.sparkSession
-    graft.functions.ArrayOps.register(spark)
-    graft.functions.TopKByAgg.register(spark)
     val subDim = 64 / m
     val queries = e.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("query_id"), col("v").as("va"), col("norm2").as("na2"))
@@ -1633,7 +1616,6 @@ object Similarity {
   def mmrSelect(spark: SparkSession, dir: String, k: Int = 10,
       lambda: Double = 0.7): DataFrame = {
     import spark.implicits._
-    graft.functions.ArrayOps.register(spark)
     val e = preparedCk(spark, dir)
     val meanRows = e.select(posexplode(col("v")).as(Seq("pos", "x")))
       .groupBy(col("pos"))
@@ -2150,7 +2132,6 @@ object Similarity {
     * — NOT a window, which would sort corpus/k rows per cluster. */
   def embeddingOutliers(spark: SparkSession, dir: String, nClusters: Int = 10,
       kOut: Int = 3): DataFrame = {
-    graft.functions.TopKByAgg.register(spark)
     val e = preparedCk(spark, dir)
     val cents = coarseFit(e, Some(s"$dir|all"), nClusters, 3)
     val best = array_max(transform(col("cents"), s => struct(
@@ -2182,7 +2163,6 @@ object Similarity {
     * partials; centroid assembly and the pair enumeration are bounded
     * by sources × dims. */
   def sourceDrift(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.ArrayOps.register(spark)
     val comps = Tables.embeddings(spark, dir)
       .join(Tables.documents(spark, dir)
         .select(col("doc_id").as("vec_id"), col("source")), "vec_id")

@@ -148,19 +148,10 @@ object ClusterMaintain {
   def ingestBatch(batch: DataFrame, root: String, batchId: Long,
       threshold: Double = 0.9, maxBroadcastDocs: Long = 500000L): Long = {
     val spark = batch.sparkSession
-    val dbg = sys.env.contains("GRAFT_CM_DEBUG")
-    var tLast = System.nanoTime()
-    def lap(tag: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      System.err.println(f"[cm] batch $batchId $tag%-12s ${(now - tLast) / 1e9}%.2fs")
-      tLast = now
-    }
-    graft.functions.ArrayOps.register(spark)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val n = batch.select(col("doc_id")).count()
-    lap("count")
     val idxPath = s"$root/index"
     val labPath = s"$root/labels"
     val mrgPath = s"$root/merges"
@@ -186,7 +177,6 @@ object ClusterMaintain {
         first(col("sig")).as("sig"))
       .localCheckpoint(true)
     val gsig = groups.select(col("doc_id"), col("th"), col("sig"))
-    lap("groups")
     val broadcastOk = n <= maxBroadcastDocs || {
       val nGroups = groups.count()
       val ok = nGroups <= maxBroadcastDocs
@@ -214,7 +204,6 @@ object ClusterMaintain {
     }
     // survivor-scale; feeds the touched-set, the graph and the merge legs
     val cand = candidateEdges(gsig, stored, threshold, broadcastOk).localCheckpoint(true)
-    lap("cross")
     val cross = cand.filter(!col("in_batch"))
     val inB = cand.filter(col("in_batch"))
       .select(col("cdoc").as("bdoc"), col("bdoc").as("bdoc2"))
@@ -249,9 +238,7 @@ object ClusterMaintain {
       .unionAll(crossLab.select(col("bdoc").as("a"), col("label").as("b")))
       .unionAll(priorMerges.select(col("old_label").as("a"), col("new_label").as("b")))
       .hint("rebalance")
-    lap("resolve")
     val comp = Dedup.connectedComponents(edges, "a", "b") // checkpointed
-    lap("cc")
     // expand reps back to members: a group is a clique, so every member
     // shares the rep's component (or the rep itself when untouched);
     // empty-token docs have no rep and label themselves
@@ -286,7 +273,6 @@ object ClusterMaintain {
     Await.result(idxPub, Duration.Inf)
     Await.result(labPub, Duration.Inf)
     Await.result(mrgPub, Duration.Inf)
-    lap("writes")
     n
   }
 

@@ -85,7 +85,6 @@ object CorpusIngest {
   def ingestBatch(batch: DataFrame, root: String, batchId: Long,
       threshold: Double = 0.9): Long = {
     val spark = batch.sparkSession
-    graft.functions.ArrayOps.register(spark)
     val sigs = Dedup.signaturesFor(batch).persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val idxPath = s"$root/index"

@@ -47,7 +47,6 @@ object CorpusIngestTx {
   def ingestBatch(batch: DataFrame, root: String, batchId: Long,
       threshold: Double = 0.9): Long = {
     val spark = batch.sparkSession
-    graft.functions.ArrayOps.register(spark)
     val docsPath = s"$root/docs"
     val idxPath = s"$root/index"
     if (Manifest.hasVersion(spark, docsPath, batchId)) {

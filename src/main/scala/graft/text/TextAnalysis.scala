@@ -297,17 +297,22 @@ object TextAnalysis {
   /** [[decontaminate]] with a BLOOM-FILTER pre-prune — the shape that
     * holds when the benchmark set is too large to broadcast-join every
     * corpus shingle against directly: build one bloom over the benchmark
-    * shingle hashes ([[graft.functions.Bloom]] exposes Spark's own
-    * runtime-filter expressions to SQL), prune the corpus map-side with
-    * `bloom_might_contain`, and run the exact join only on survivors.
-    * Bloom filters have NO false negatives, so the exact join behind the
-    * prune returns exactly [[decontaminate]]'s answer — which is why
-    * this variant can sit in the oracle gate at all. The filter reaches
-    * the corpus as a scalar subquery (broadcast once per executor, never
-    * embedded in task binaries), and false positives only cost wasted
-    * probes, never wrong rows. */
+    * shingle hashes (`bloom_agg`: Spark's own runtime-filter expressions,
+    * SQL-visible through [[graft.GraftExtensions]]), prune the corpus
+    * map-side with `bloom_might_contain`, and run the exact join only on
+    * survivors. Bloom filters have NO false negatives, so the exact join
+    * behind the prune returns exactly [[decontaminate]]'s answer — which
+    * is why this variant can sit in the oracle gate at all. False
+    * positives only cost wasted probes, never wrong rows.
+    *
+    * `bloom_might_contain`'s analysis check requires the filter argument
+    * to be foldable or a plan expression — so the built filter is passed
+    * as a scalar subquery (`(SELECT bf FROM built)`), which also keeps
+    * the bloom bytes OUT of the task binary: the subquery result ships
+    * once per executor as a broadcast value, unlike a literal, which
+    * would re-embed the ~MB bitmap in every task closure (the same trap
+    * as the typedLit k-means centroids this repo already replaced). */
   def decontaminateBloom(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Bloom.register(spark)
     shingleHashes(spark, dir).createOrReplaceTempView("decon_shingles")
     spark.sql("""
       WITH bench AS (SELECT DISTINCT g FROM decon_shingles WHERE doc_id % 97 = 0),
@@ -448,7 +453,6 @@ object TextAnalysis {
     * [[topDocsList]]) so downstream row-hash tooling can treat it as a
     * scalar; consumers wanting the typed list split on ','. */
   def postingsIndex(spark: SparkSession, dir: String, k: Int = 20): DataFrame = {
-    graft.functions.TopKByAgg.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"), explode(expr("split(text, ' ')")).as("term"))
       .filter(col("term") =!= "")
@@ -477,7 +481,6 @@ object TextAnalysis {
     * Quality is money-rounded (exact in a double), doc_id breaks ties
     * ascending — deterministic on any engine. */
   def sourceQuota(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    graft.functions.TopKByAgg.register(spark)
     quality(spark, dir)
       .join(Tables.documents(spark, dir).select(col("doc_id"), col("source")), "doc_id")
       .groupBy(col("source"))
@@ -1328,7 +1331,6 @@ object TextAnalysis {
     * over the shrinking survivor set; the only full-corpus work is the
     * dedup hash aggregate and the scoring scan. */
   def curationPipeline(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TopKByAgg.register(spark)
     val docs = Tables.documents(spark, dir)
     val keptIds = docs.groupBy(md5(col("text")).as("__h"))
       .agg(min(col("doc_id")).as("doc_id")).select(col("doc_id"))
@@ -1413,7 +1415,6 @@ object TextAnalysis {
     * DOUBLE image in the heap is exact (53-bit mantissa): the heap's
     * double ordering and the oracle's BIGINT ordering cannot disagree. */
   def groupSample(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    graft.functions.TopKByAgg.register(spark)
     Tables.documents(spark, dir)
       .withColumn("h52",
         conv(substring(md5(col("doc_id").cast("string")), 1, 13), 16, 10).cast("long"))

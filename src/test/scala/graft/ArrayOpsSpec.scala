@@ -1,13 +1,11 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.ArrayOps
 
 class ArrayOpsSpec extends SparkSpec {
 
   test("sorted_intersect_size matches size(array_intersect) on sorted distinct arrays") {
     import spark.implicits._
-    ArrayOps.register(spark)
     val df = Seq(
       (Seq(1L, 3L, 5L, 9L), Seq(3L, 4L, 5L, 10L)), // overlap 2
       (Seq(1L, 2L), Seq(3L, 4L)),                  // disjoint
@@ -21,7 +19,6 @@ class ArrayOpsSpec extends SparkSpec {
   }
 
   test("null ELEMENTS match array_intersect semantics (null==null counts, sorted to tail)") {
-    ArrayOps.register(spark)
     val rows = spark.sql(
       """SELECT
          |  sorted_intersect_size(array(1L, 3L, NULL), array(3L, 5L, NULL)) AS both_null,
@@ -35,7 +32,6 @@ class ArrayOpsSpec extends SparkSpec {
 
   test("dot_double equals the HOF zip_with fold bit-for-bit, incl. null/length semantics") {
     import spark.implicits._
-    ArrayOps.register(spark)
     val df = Seq(
       (Seq(1.5, -2.25, 3.0), Seq(0.5, 4.0, -1.0)),
       (Seq(0.1, 0.2, 0.3), Seq(0.3, 0.2, 0.1)),     // non-exact doubles: fold order matters
@@ -65,7 +61,6 @@ class ArrayOpsSpec extends SparkSpec {
 
   test("minhash_sig equals the nested-HOF signature, incl. empty input -> 16 nulls") {
     import spark.implicits._
-    ArrayOps.register(spark)
     val P = graft.dedup.Dedup.P
     val df = Seq(
       Seq(12345L, 987654321L, 42L),
@@ -88,8 +83,6 @@ class ArrayOpsSpec extends SparkSpec {
 
   test("native expressions COMPILE under codegen — no silent interpreter fallback") {
     import spark.implicits._
-    ArrayOps.register(spark)
-    graft.functions.TopKByAgg.register(spark)
     // with fallback disabled a Janino error in any doGenCode THROWS
     // instead of quietly degrading to interpreted eval (which would pass
     // every value-equality pin while losing the whole-stage span)
@@ -120,7 +113,6 @@ class ArrayOpsSpec extends SparkSpec {
 
   test("lut_sum equals the zip_with/aggregate HOF form") {
     import spark.implicits._
-    ArrayOps.register(spark)
     val df = Seq(
       (Seq(0, 2, 1), Seq(Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0), Seq(7.0, 8.0, 9.0))),
       (Seq(2, 2, 2), Seq(Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0), Seq(7.0, 8.0, 9.0))),
@@ -138,7 +130,6 @@ class ArrayOpsSpec extends SparkSpec {
 
   test("assign_cid equals the array_max/transform HOF argmax; NaN and ties pinned") {
     import spark.implicits._
-    ArrayOps.register(spark)
     // equivalence vs the HOF form on the production domain (cn2 > 0):
     // cid 0 duplicates cid 2 so the cosine TIES and the smaller cid
     // must win on both paths; cid 1 is a distinct direction
@@ -181,7 +172,6 @@ class ArrayOpsSpec extends SparkSpec {
 
   test("sorted_intersect matches array_intersect on sorted distinct arrays") {
     import spark.implicits._
-    ArrayOps.register(spark)
     val df = Seq(
       (Seq(1L, 3L, 5L, 9L), Seq(3L, 4L, 5L, 10L)),
       (Seq(1L, 2L), Seq(3L, 4L)),
@@ -201,7 +191,6 @@ class ArrayOpsSpec extends SparkSpec {
 
   test("sorted_intersect_atleast equals size(...) >= t for every threshold") {
     import spark.implicits._
-    ArrayOps.register(spark)
     val df = Seq(
       (Seq(1L, 3L, 5L, 9L), Seq(3L, 4L, 5L, 10L)),
       (Seq(1L, 2L), Seq(3L, 4L)),
@@ -218,7 +207,6 @@ class ArrayOpsSpec extends SparkSpec {
   }
 
   test("null-LEADING arrays (sort_array order) are rejected loudly, never a wrong count") {
-    ArrayOps.register(spark)
     // sort_array(asc) places the null FIRST — the merge's null-as-+infinity
     // assumption would silently skip every real match; the guard throws
     for (fn <- Seq("sorted_intersect_size(a, b)", "sorted_intersect(a, b)",
@@ -249,7 +237,6 @@ class ArrayOpsSpec extends SparkSpec {
 
   test("assign_cid skips null centroid SLOTS; all-null slots yield null like empty") {
     import spark.implicits._
-    ArrayOps.register(spark)
     val rows = Seq((Seq(1.0, 0.0), 1.0)).toDF("v", "norm2")
     // a null slot between two real centroids: the real argmax must win
     val mixed = rows.select(expr(
@@ -267,7 +254,6 @@ class ArrayOpsSpec extends SparkSpec {
   }
 
   test("null inputs propagate null") {
-    ArrayOps.register(spark)
     val r = spark.sql(
       "SELECT sorted_intersect_size(CAST(NULL AS ARRAY<BIGINT>), array(1L)) AS x")
       .collect()(0)
@@ -275,7 +261,6 @@ class ArrayOpsSpec extends SparkSpec {
   }
 
   test("type mismatch is rejected at analysis") {
-    ArrayOps.register(spark)
     intercept[Exception] {
       spark.sql("SELECT sorted_intersect_size(array('a'), array('b'))").collect()
     }
@@ -283,7 +268,6 @@ class ArrayOpsSpec extends SparkSpec {
 
   test("simhash64 native expression equals the HOF bit-vote formulation") {
     import org.apache.spark.sql.functions.expr
-    ArrayOps.register(spark)
     // pseudo-random 32-bit halves, incl. empty and single-element docs
     val rnd = new scala.util.Random(42)
     val rows = (Seq.empty[Long] -> Seq.empty[Long]) +:
@@ -305,12 +289,14 @@ class ArrayOpsSpec extends SparkSpec {
   }
 
   test("extensions class registers the function in a fresh session") {
-    val ext = new GraftExtensions()
-    // applying to the existing session's extension container isn't exposed;
-    // validate the builder path compiles and the function resolves via registry
-    assert(ext != null)
-    ArrayOps.register(spark)
-    val n = spark.sql("SELECT sorted_intersect_size(array(1L,2L), array(2L,3L)) AS n")
+    // a new session builds its own function registry, seeded only by the
+    // extensions the session was built with: nothing registers per call
+    val fresh = spark.newSession()
+    val registry = fresh.sessionState.functionRegistry
+    GraftExtensions.functions.foreach { case (id, _, _) =>
+      assert(registry.functionExists(id), s"${id.funcName} not registered")
+    }
+    val n = fresh.sql("SELECT sorted_intersect_size(array(1L,2L), array(2L,3L)) AS n")
       .collect()(0).getInt(0)
     assert(n == 1)
   }

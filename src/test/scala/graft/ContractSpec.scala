@@ -13,6 +13,14 @@ class ContractSpec extends SparkSpec {
     assert((o -- q).isEmpty, s"oracle SQL without a query: ${(o -- q).toSeq.sorted}")
   }
 
+  test("query names in the table are distinct") {
+    // the Map views would silently keep only the last of two same-named
+    // entries, dropping a query from the gate without a trace
+    val names = SparkEntry.table.map(_.name)
+    val dups = names.diff(names.distinct).distinct.sorted
+    assert(dups.isEmpty, s"duplicated query names: $dups")
+  }
+
   test("oracle SQL strings are non-empty and reference only fixture tables") {
     val tables = Set("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")

@@ -14,25 +14,7 @@ import java.nio.file.Files
 class HiveMetastoreSpec extends SparkSpec {
 
   private def runChild(mode: String, warehouse: String): Int = {
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar",
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val java = s"${System.getProperty("java.home")}/bin/java"
-    val cmd = Seq(java) ++ addOpens ++ Seq(
-      "-Xmx2g", "-Dspark.ui.enabled=false",
-      "-cp", System.getProperty("java.class.path"),
-      "graft.HiveChild", warehouse, mode)
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.redirectErrorStream(true)
-    val proc = pb.start()
-    val out = new String(proc.getInputStream.readAllBytes())
-    val rc = proc.waitFor()
+    val (rc, out) = ChildJvm.run("graft.HiveChild", warehouse, mode)
     if (rc != 0) info(s"child[$mode] output:\n${out.takeRight(4000)}")
     rc
   }

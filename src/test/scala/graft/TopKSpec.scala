@@ -1,13 +1,11 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.TopKByAgg
 
 class TopKByAggSpec extends SparkSpec {
   import spark.implicits._
 
   test("topk_by equals the window row_number form on the fixture") {
-    TopKByAgg.register(spark)
     val viaAgg = graft.queries.Extras.topOrdersPerCustomer(spark, sf)
       .collect().map(r => (r.getAs[Long]("custkey"), r.getAs[Int]("rank"),
         r.getAs[Long]("orderkey"))).toSet
@@ -23,7 +21,6 @@ class TopKByAggSpec extends SparkSpec {
   }
 
   test("partial aggregation: two aggregate stages, no window sort of the full input") {
-    TopKByAgg.register(spark)
     val df = Tables.orders(spark, sf)
       .groupBy(col("o_custkey"))
       .agg(expr("topk_by(o_totalprice, o_orderkey, 3)").as("topk"))
@@ -36,7 +33,6 @@ class TopKByAggSpec extends SparkSpec {
   }
 
   test("ties break to the smaller payload, exactly ORDER BY ord DESC, id ASC") {
-    TopKByAgg.register(spark)
     val df = Seq(
       (1L, 5.0, 30L), (1L, 5.0, 10L), (1L, 5.0, 20L), (1L, 4.0, 1L),
       (2L, 1.0, 2L)
@@ -50,7 +46,6 @@ class TopKByAggSpec extends SparkSpec {
   }
 
   test("null ord rows are skipped; k < 1 is rejected at analysis") {
-    TopKByAgg.register(spark)
     val df = Seq((1L, Some(5.0), 1L), (1L, None, 2L)).toDF("k", "v", "id")
     val out = df.groupBy(col("k")).agg(expr("topk_by(v, id, 5)").as("t"))
       .select(expr("size(t)")).collect()(0).getInt(0)
