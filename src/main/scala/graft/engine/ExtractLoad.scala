@@ -1,8 +1,10 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.util.Try
 
 /** Incremental watermark extract-load — Spark-native re-expression of the
   * reference's reusable extractor (`dags/utils/extract_load_template.py:20-209`):
@@ -15,9 +17,21 @@ import scala.util.Try
   * skipping locally, a JDBC WHERE on a cluster — the reference builds the
   * same predicate by hand at `extract_load_template.py:158`).
   *
-  * Scale notes: the checkpoint is a single tiny JSON doc (`coalesce(1)`,
-  * reference `:209`); the data path stays fully distributed, appends are
-  * partitioned by `ingestion_date` so re-loads prune to new partitions.
+  * Checkpoint storage: the watermark is ONE tiny JSON doc per table,
+  * read and written driver-side through the Hadoop FileSystem API plus
+  * Jackson (the way [[Manifest]] handles its log) — no Spark job. The
+  * dir holds `ckpt-<seq>.json` docs, `seq` a zero-padded sequence
+  * number; the newest is the checkpoint. A save writes `_tmp-<uuid>`,
+  * renames it to the next unused `ckpt-<seq>.json`, and only then
+  * deletes the older docs, so a crash at any point leaves either the
+  * old watermark or the new one readable — never neither, which would
+  * silently full-reload rows later batches already loaded. Dirs written
+  * by the earlier Spark JSON writer (`part-*.json`) still read; their
+  * doc counts as older than any sequenced one.
+  *
+  * The data path stays fully distributed: one aggregate computes the
+  * count gate and the new watermark, and appends are partitioned by
+  * `ingestion_date` so re-loads prune to new partitions.
   */
 object ExtractLoad {
 
@@ -33,27 +47,63 @@ object ExtractLoad {
       last_event_time: String, // "yyyy-MM-dd HH:mm:ss.SSSSSS", session TZ
       processed_at: String)
 
-  /** S3: read watermark; empty/missing dir → None → full load
-    * (reference `extract_load_template.py:102-119`). */
+  // a doc missing a field is corrupt, not a zero watermark
+  private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
+    .enable(DeserializationFeature.FAIL_ON_MISSING_CREATOR_PROPERTIES)
+    .enable(DeserializationFeature.FAIL_ON_NULL_FOR_PRIMITIVES)
+
+  private val SeqDoc = """ckpt-(\d+)\.json""".r
+  private val LegacyDoc = """part-.*\.json""".r
+
+  /** Checkpoint docs in `dir` by sequence number, oldest first; the
+    * legacy Spark-written doc ranks below every sequenced one. */
+  private def docs(fs: FileSystem, dir: Path): Seq[(Long, Path)] =
+    files(fs, dir).flatMap(p => p.getName match {
+      case SeqDoc(n)   => Some(n.toLong -> p)
+      case LegacyDoc() => Some(-1L -> p)
+      case _           => None
+    }).sortBy { case (n, p) => (n, p.getName) }
+
+  private def files(fs: FileSystem, dir: Path): Seq[Path] =
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).toIndexedSeq.filter(_.isFile).map(_.getPath)
+
+  /** S3: read the watermark (reference `extract_load_template.py:102-119`).
+    * None — a full load — only when the dir is missing or holds no doc;
+    * an unreadable or corrupt doc throws rather than silently reloading
+    * everything under `batch_id = -1`. */
   def readCheckpoint(spark: SparkSession, dir: String): Option[Checkpoint] = {
-    import spark.implicits._
-    Try {
-      val df = spark.read.json(dir)
-      if (df.isEmpty) None
-      else {
-        val r = df.select(
-          col("table_name"), col("last_id").cast("long"),
-          col("last_event_time").cast("string"),
-          col("processed_at").cast("string")).as[Checkpoint].head()
-        Some(r)
-      }
-    }.toOption.flatten
+    val (fs, d) = Fs.resolve(spark, dir)
+    docs(fs, d).lastOption.map { case (_, doc) =>
+      val in = fs.open(doc)
+      try mapper.readValue(in: java.io.InputStream, classOf[Checkpoint])
+      finally in.close()
+    }
   }
 
-  /** S4: single-row JSON overwrite (reference `extract_load_template.py:197-209`). */
+  /** S4: publish a new watermark doc (reference
+    * `extract_load_template.py:197-209`): temp write, rename to the next
+    * sequence number, then drop the older docs. The rename target must
+    * not exist — on HDFS rename refuses to overwrite, as
+    * [[Manifest.commit]] relies on — so two racing saves cannot both
+    * publish one number; the loser throws. The cleanup also sweeps the
+    * `_tmp-*` debris of saves that crashed before their rename. */
   def saveCheckpoint(spark: SparkSession, dir: String, ckpt: Checkpoint): Unit = {
-    import spark.implicits._
-    Seq(ckpt).toDS().toDF().coalesce(1).write.mode(SaveMode.Overwrite).json(dir)
+    val (fs, d) = Fs.resolve(spark, dir)
+    val old = docs(fs, d)
+    val next = old.lastOption.fold(0L)(_._1 + 1).max(0L)
+    fs.mkdirs(d)
+    val tmp = new Path(d, s"_tmp-${java.util.UUID.randomUUID()}")
+    val out = fs.create(tmp, false)
+    try out.write(mapper.writeValueAsBytes(ckpt)) finally out.close()
+    val target = new Path(d, f"ckpt-$next%020d.json")
+    if (fs.exists(target) || !fs.rename(tmp, target)) {
+      fs.delete(tmp, false)
+      throw new java.util.ConcurrentModificationException(
+        s"checkpoint save lost the race for doc $next at $dir")
+    }
+    (old.map(_._2) ++ files(fs, d).filter(_.getName.startsWith("_tmp-")))
+      .foreach(fs.delete(_, false))
   }
 
   /** S2: incremental scan — watermark predicate pushed into the source
@@ -89,19 +139,29 @@ object ExtractLoad {
     val delta = incremental(source, idCol, eventCol, ckpt)
       .withColumn("ingestion_date", to_date(lit(ingestionDate)))
       .withColumn("batch_id", lit(batchId))
-    val n = delta.count() // count gate (reference :78,166)
-    if (n > 0)
-      promote(spark, delta, tableName, idCol, eventCol, ckptDir, outDir,
-        ingestionDate, batchId)
+    val (n, wm) = watermark(delta, tableName, idCol, eventCol, ingestionDate)
+    wm.foreach(promote(spark, delta, _, eventCol, ckptDir, outDir, ingestionDate, batchId))
     n
   }
 
+  /** One aggregate over the delta: its row count (the count gate,
+    * reference `:78,166`) and, for a non-empty delta, the checkpoint
+    * that loading it advances to. */
+  private def watermark(delta: DataFrame, tableName: String, idCol: String,
+      eventCol: String, ingestionDate: String): (Long, Option[Checkpoint]) = {
+    val r = delta.agg(count(lit(1)), max(col(idCol)).cast("long"),
+      date_format(max(col(eventCol)), "yyyy-MM-dd HH:mm:ss.SSSSSS")).head()
+    val n = r.getLong(0)
+    (n, Option.when(n > 0)(Checkpoint(tableName, r.getLong(1), r.getString(2),
+      s"$ingestionDate 00:00:00")))
+  }
+
   /** The write + watermark-advance half of [[run]]: replace this work
-    * unit's partition, then persist the new checkpoint. Only called once
-    * the batch has passed its gates — the checkpoint must never advance
-    * past data that was not durably written. */
-  private def promote(spark: SparkSession, delta: DataFrame, tableName: String,
-      idCol: String, eventCol: String, ckptDir: String, outDir: String,
+    * unit's partition, then persist `wm`. Only called once the batch has
+    * passed its gates — the checkpoint must never advance past data that
+    * was not durably written. */
+  private def promote(spark: SparkSession, delta: DataFrame, wm: Checkpoint,
+      eventCol: String, ckptDir: String, outDir: String,
       ingestionDate: String, batchId: Long): Unit = {
     // a retry can cross midnight: same work unit (batch_id) but a NEW
     // ingestionDate — dynamic overwrite would leave the partial write
@@ -113,12 +173,12 @@ object ExtractLoad {
         d.getName != s"ingestion_date=$ingestionDate")
       .map(d => s"$d/batch_id=$batchId")
       .foreach(Fs.deleteDir(spark, _))
-    Layers.replacePartitionsPath(delta, outDir, Seq("ingestion_date", "batch_id"))
-    val wm = delta.agg(
-      max(col(idCol)).cast("long"),
-      date_format(max(col(eventCol)), "yyyy-MM-dd HH:mm:ss.SSSSSS")).head()
-    saveCheckpoint(spark, ckptDir, Checkpoint(
-      tableName, wm.getLong(0), wm.getString(1), s"$ingestionDate 00:00:00"))
+    // `wm` was taken before this write re-reads the source: rows a live
+    // source gained since lie past it and wait for the next batch
+    // instead of landing here AND being re-extracted by it
+    val upTo = coalesce(col(eventCol) <= to_timestamp(lit(wm.last_event_time)), lit(true))
+    Layers.replacePartitionsPath(delta.filter(upTo), outDir, Seq("ingestion_date", "batch_id"))
+    saveCheckpoint(spark, ckptDir, wm)
   }
 
   /** [[run]] with a DATA-QUALITY GATE between extract and load — the
@@ -152,8 +212,8 @@ object ExtractLoad {
     val clean = rows.forall(_.getAs[Boolean]("passed"))
     val promoted = clean && n > 0
     if (promoted)
-      promote(spark, delta, tableName, idCol, eventCol, ckptDir, outDir,
-        ingestionDate, batchId)
+      watermark(delta, tableName, idCol, eventCol, ingestionDate)._2.foreach(
+        promote(spark, delta, _, eventCol, ckptDir, outDir, ingestionDate, batchId))
     (if (promoted) n else 0L, report.withColumn("promoted", lit(promoted)))
   }
 }

@@ -58,6 +58,72 @@ class DagRunnerSpec extends SparkSpec {
     }
   }
 
+  test("a task starts once its own deps are done, while an unrelated slow task still runs") {
+    val childStarted = new java.util.concurrent.CountDownLatch(1)
+    @volatile var sawChildWhileSlow = false
+    Dag.run(Seq(
+      // a wave runner holds `child` until `slow` ends: the wait times out
+      Dag.Task("slow", Seq.empty, () => {
+        sawChildWhileSlow = childStarted.await(10, java.util.concurrent.TimeUnit.SECONDS)
+      }),
+      Dag.Task("fast", Seq.empty, () => ()),
+      Dag.Task("child", Seq("fast"), () => childStarted.countDown())
+    ), parallelism = 2)
+    assert(sawChildWhileSlow, "child waited for the unrelated slow task")
+  }
+
+  test("after a failure no new task starts, and running siblings finish before TaskFailed") {
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val boomThrown = new java.util.concurrent.CountDownLatch(1)
+    @volatile var siblingFinished = false
+    val e = intercept[Dag.TaskFailed] {
+      Dag.run(Seq(
+        Dag.Task("a_boom", Seq.empty, () => {
+          started.add("a_boom"); boomThrown.countDown(); throw new RuntimeException("dead")
+        }, maxAttempts = 1),
+        Dag.Task("b_sibling", Seq.empty, () => {
+          started.add("b_sibling")
+          boomThrown.await()
+          Thread.sleep(300) // still running when the runner sees the failure
+          siblingFinished = true
+        }),
+        Dag.Task("c_later", Seq.empty, () => { started.add("c_later"); () }),
+        Dag.Task("d_after_sibling", Seq("b_sibling"), () => { started.add("d_after_sibling"); () })
+      ), parallelism = 2)
+    }
+    assert(e.task == "a_boom")
+    assert(siblingFinished, "TaskFailed surfaced before the running sibling finished")
+    assert(started.toArray.toSet == Set("a_boom", "b_sibling"))
+  }
+
+  test("Report.order is a topological order of every task") {
+    val rnd = new scala.util.Random(11)
+    val names = (0 until 30).map(i => f"t$i%02d")
+    // edges only point backwards in `names`, so the graph is acyclic
+    val tasks = names.zipWithIndex.map { case (n, i) =>
+      val deps = names.take(i).filter(_ => rnd.nextInt(6) == 0)
+      val ms = rnd.nextInt(15).toLong
+      Dag.Task(n, deps, () => Thread.sleep(ms))
+    }
+    val r = Dag.run(rnd.shuffle(tasks), parallelism = 3)
+    assert(r.order.sorted == names)
+    val pos = r.order.zipWithIndex.toMap
+    for (t <- tasks; d <- t.deps)
+      assert(pos(d) < pos(t.name), s"${t.name} completed before its dep $d")
+  }
+
+  test("with parallelism 1, ready tasks launch longest chain of dependents first, then by name") {
+    val log = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def t(name: String, deps: String*) = Dag.Task(name, deps, () => { log.add(name); () })
+    // chain lengths: z_head 2, m_head 1, y_mid 1, the rest 0
+    val r = Dag.run(Seq(
+      t("a_leaf"), t("m_head"), t("n_tail", "m_head"),
+      t("x_tail", "y_mid"), t("y_mid", "z_head"), t("z_head")))
+    val expected = Seq("z_head", "m_head", "y_mid", "a_leaf", "n_tail", "x_tail")
+    assert(log.toArray.toSeq == expected)
+    assert(r.order == expected)
+  }
+
   /** The product-pipeline analog: extract events + orders in parallel →
     * silver conform → gold aggregate, run once cleanly and once with the
     * silver task dying AFTER its write on the first attempt. The retry

@@ -60,22 +60,12 @@ class DerivedSpec extends SparkSpec {
 
   test("rowCount serves footer metadata: exact, memoized, zero Spark executions") {
     import spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
-    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     val dir = java.nio.file.Files.createTempDirectory("derived_count").toString
     // build it first so the count path has nothing left to materialize
     graft.engine.Derived.cached(spark, "spec_cnt", dir) {
       spark.range(0, 12345).select(col("id"), (col("id") * 2).as("x"))
     }
-    val execs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
-        case _: SparkListenerSQLExecutionStart => execs.incrementAndGet(); ()
-        case _ => ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, work) = SparkWork.count(spark) {
       val n = graft.engine.Derived.rowCount(spark, "spec_cnt", dir) {
         sys.error("already built"): org.apache.spark.sql.DataFrame
       }
@@ -84,14 +74,10 @@ class DerivedSpec extends SparkSpec {
       assert(graft.engine.Derived.rowCount(spark, "spec_cnt", dir) {
         sys.error("already built"): org.apache.spark.sql.DataFrame
       } == 12345L)
-      var prev = -1; var tries = 0
-      while (execs.get() != prev && tries < 20) {
-        prev = execs.get(); Thread.sleep(50); tries += 1
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
     // the guard promise: footer metadata, never a Spark job
-    assert(execs.get() == 0,
-      s"rowCount scheduled ${execs.get()} Spark executions — must be footer-only")
+    assert(work.sqlExecutions == 0 && work.jobs == 0,
+      s"rowCount scheduled $work — must be footer-only")
   }
 
   test("store: a directory build runs once per (name, dir) and the path is stable") {

@@ -14,37 +14,22 @@ import graft.sim.Similarity
 class IvfBuildSpec extends SparkSpec {
 
   test("buildIvfIndexOn schedules 1 seed + iters iterations + 2 writes, nothing else") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
-    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-    val e = Similarity.preparedCk(spark, sf) // materialized BEFORE the listener
+    val e = Similarity.preparedCk(spark, sf) // materialized BEFORE the count
     val idx = graft.engine.Fs.scratch("graft_ivf_spec", sf)
     graft.engine.Fs.deleteDir(spark, idx)
-    val execs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
-        case _: SparkListenerSQLExecutionStart => execs.incrementAndGet(); ()
-        case _ => ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
     val iters = 3
-    try {
+    val execs = SparkWork.count(spark) {
       Similarity.buildIvfIndexOn(e, idx, nClusters = 10, iters = iters)
-      // the listener bus is async: poll until the count is stable
-      var prev = -1; var tries = 0
-      while (execs.get() != prev && tries < 50) {
-        prev = execs.get(); Thread.sleep(100); tries += 1
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }._2.sqlExecutions
     // upper bound, not exact (round-11 ADVICE): the pin guards against
     // the fusion REGRESSING into extra corpus scans; a Spark-version
     // change emitting one more bookkeeping execution must not fail it.
     // A lower bound of the irreducible actions keeps the pin honest.
-    assert(execs.get() <= 1 + iters + 2,
+    assert(execs <= 1 + iters + 2,
       s"fused IVF build must schedule at most 1 seed + $iters iteration " +
-        s"jobs + 2 index writes, saw ${execs.get()} — fusion regressed")
-    assert(execs.get() >= 1 + iters,
-      s"expected at least the seed + $iters iteration jobs, saw ${execs.get()} " +
+        s"jobs + 2 index writes, saw $execs — fusion regressed")
+    assert(execs >= 1 + iters,
+      s"expected at least the seed + $iters iteration jobs, saw $execs " +
         "— the listener missed executions; pin is not measuring")
   }
 

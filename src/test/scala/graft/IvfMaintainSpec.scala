@@ -401,36 +401,22 @@ class IvfMaintainSpec extends SparkSpec {
   }
 
   test("ingest schedules a bounded handful of executions — none over the corpus") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
-    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     val idx = Files.createTempDirectory("ivf_jobs").toString + "/idx"
     val e = Similarity.preparedCk(spark, sf)
     Similarity.buildIvfPqIndexOn(e.filter(col("vec_id") % 4 =!= 3), idx, 10, 3, m, codes, 2)
     val batch = e.filter(col("vec_id") % 4 === 3).localCheckpoint(true)
-    val execs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
-        case _: SparkListenerSQLExecutionStart => execs.incrementAndGet(); ()
-        case _ => ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val execs = SparkWork.count(spark) {
       Similarity.ingestIvfPqBatch(batch, idx, 1L, m)
-      var prev = -1; var tries = 0
-      while (execs.get() != prev && tries < 50) {
-        prev = execs.get(); Thread.sleep(100); tries += 1
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }._2.sqlExecutions
     // 2 metadata collects (centroids + codebooks read ×2: fits + cbDf) +
     // delta write + stats write + the batch count — the IvfBuildSpec
     // upper-bound discipline: the pin guards against the ingest
     // regressing into corpus-scale scans/fits, with slack for a Spark
     // version emitting a bookkeeping execution
-    assert(execs.get() <= 7,
-      s"ingest must stay a bounded metadata+batch composite, saw ${execs.get()}")
-    assert(execs.get() >= 4,
-      s"expected at least the 2 store publishes + metadata reads, saw ${execs.get()}")
+    assert(execs <= 7,
+      s"ingest must stay a bounded metadata+batch composite, saw $execs")
+    assert(execs >= 4,
+      s"expected at least the 2 store publishes + metadata reads, saw $execs")
   }
 
   test("drift report shape + the trigger fires on a genuinely drifted batch") {

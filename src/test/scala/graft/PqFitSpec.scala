@@ -38,28 +38,13 @@ class PqFitSpec extends SparkSpec {
     // The fusion's whole value is SCHEDULING count, which no plan-shape
     // pin can see: the per-slice form runs m×(1 seed + iters) jobs
     // (m=8, iters=3 ⇒ 32); the fused form must run exactly 1 + iters.
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
-    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-    val e = Similarity.prepared(spark, sf).localCheckpoint(true) // before the listener
-    val execs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
-        case _: SparkListenerSQLExecutionStart => execs.incrementAndGet(); ()
-        case _ => ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val e = Similarity.prepared(spark, sf).localCheckpoint(true) // before the count
     val iters = 3
-    try {
+    val execs = SparkWork.count(spark) {
       Similarity.pqFitFused(e, m = 8, subDim = 8, codes = 16, iters = iters)
-      // the listener bus is async: poll until the count is stable
-      var prev = -1; var tries = 0
-      while (execs.get() != prev && tries < 50) {
-        prev = execs.get(); Thread.sleep(100); tries += 1
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(execs.get() == 1 + iters,
-      s"fused fit must schedule 1 seed + $iters iteration jobs, saw ${execs.get()}")
+    }._2.sqlExecutions
+    assert(execs == 1 + iters,
+      s"fused fit must schedule 1 seed + $iters iteration jobs, saw $execs")
   }
 
   test("pqFitFused at a coarse config (m=4, codes=8) still matches per-slice") {

@@ -50,15 +50,6 @@ class DataQualitySpec extends SparkSpec {
   }
 
   test("gateReport evaluates rules AND referential integrity in ONE Spark action") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
-    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-    val execs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
-        case _: SparkListenerSQLExecutionStart => execs.incrementAndGet(); ()
-        case _ => ()
-      }
-    }
     val orders = Tables.orders(spark, sf)
     val customer = Tables.customer(spark, sf).select(col("c_custkey"))
     val rules = Seq(DataQuality.NotNull("o_custkey"), DataQuality.Unique("o_orderkey"))
@@ -66,19 +57,9 @@ class DataQualitySpec extends SparkSpec {
     val ri = Seq(
       DataQuality.Ri("fk_cust", "o_custkey", customer, "c_custkey"),
       DataQuality.Ri("fk_cust_again", "o_custkey", customer, "c_custkey"))
-    spark.sparkContext.addSparkListener(listener)
-    val report = try {
-      val r = DataQuality.gateReport(orders, rules, ri)
-      // the listener bus is async: poll until the count is stable
-      var prev = -1
-      var tries = 0
-      while (execs.get() != prev && tries < 50) {
-        prev = execs.get(); Thread.sleep(100); tries += 1
-      }
-      r
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(execs.get() == 1,
-      s"gateReport must be a single aggregation action, saw ${execs.get()} SQL executions")
+    val (report, work) = SparkWork.count(spark)(DataQuality.gateReport(orders, rules, ri))
+    assert(work.sqlExecutions == 1,
+      s"gateReport must be a single aggregation action, saw ${work.sqlExecutions} SQL executions")
     // and the fused counts are still right: clean fixture ⇒ all pass,
     // including both RI rows
     val rows = report.collect()
