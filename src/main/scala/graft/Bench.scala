@@ -1,5 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: steady-state per-query timings on SPARK_GRAFT_SF_DIR.
   *
@@ -17,10 +19,6 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** Prior-round medians from a BENCH_TOTAL.json, for stall re-probing.
-    * A malformed artifact must NOT silently disable stall detection
-    * (round-9 verdict #7): parse failures warn loudly and return empty.
-    * Factored out of main so the parse + threshold logic is unit-testable. */
   /** The contractual bench envelope: BENCH_r01's recorded 86.58 s at
     * sf0.1 with the 2× ceiling (BASELINE.md "Recorded numeric
     * baseline"). */
@@ -55,10 +53,15 @@ object Bench {
     else Right(names.map(n => priors.getOrElse(n, budget(n))).sum)
   }
 
+  private val json = new ObjectMapper()
+
+  /** Prior-round medians from a BENCH_TOTAL.json, for stall re-probing.
+    * A malformed artifact must NOT silently disable stall detection
+    * (round-9 verdict #7): parse failures warn loudly and return empty. */
   private[graft] def parsePriors(f: java.io.File): Map[String, Double] =
     if (!f.exists) Map.empty
     else try {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
+      val node = json.readTree(f)
       val q = if (node == null) null else node.get("queries")
       if (q == null) {
         System.err.println(
@@ -79,29 +82,25 @@ object Bench {
 
   /** The scale factor a BENCH_TOTAL.json was recorded at — prior medians
     * are only comparable to a run at the SAME sf (a sf0.001 smoke against
-    * sf0.1 priors would report a fictitious ~0.1 band_factor). Stall
-    * re-probing is self-guarding either way (sub-scale runs sit far
-    * BELOW prior, never 2× above), but band_factor must not be. */
+    * sf0.1 priors would report a fictitious set_factor far below 1). */
   private[graft] def parsePriorSf(f: java.io.File): Option[String] =
     if (!f.exists) None
     else try {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
-      Option(node).flatMap(n => Option(n.get("sf"))).map(_.asText())
+      Option(json.readTree(f)).flatMap(n => Option(n.get("sf"))).map(_.asText())
     } catch { case _: Throwable => None }
 
   /** The artifact's recorded total, for the priors-replacement policy. */
   private[graft] def parsePriorTotal(f: java.io.File): Option[Double] =
     if (!f.exists) None
     else try {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
-      Option(node).flatMap(n => Option(n.get("value"))).map(_.asDouble())
+      Option(json.readTree(f)).flatMap(n => Option(n.get("value"))).map(_.asDouble())
     } catch { case _: Throwable => None }
 
   /** Priors are only comparable at the SAME scale factor — cross-sf
     * priors are treated as ABSENT for every consumer (round-11 ADVICE:
-    * the sf guard protected band_factor only, so a run at a larger sf
-    * than the committed priors flagged nearly every query as a stall
-    * suspect and paid one extra isolated run each). */
+    * a run at a larger sf than the committed priors flagged nearly
+    * every query as a stall suspect and paid one extra isolated run
+    * each). */
   private[graft] def sameSfPriors(prior: Map[String, Double],
       priorSf: Option[String], sfDir: String): Map[String, Double] =
     if (priorSf.forall(_ == sfDir)) prior else Map.empty
@@ -109,7 +108,7 @@ object Bench {
   /** Best-committed-recording priors policy (round-11 verdict #3: the
     * round-close overwrote the builder's 132.86 s priors map with the
     * driver's 157.2 s hot-band run, which would bias every future
-    * band_factor ~0.85 low). A fresh FULL, zero-failure run replaces
+    * set_factor ~0.85 low). A fresh FULL, zero-failure run replaces
     * the tracked BENCH_TOTAL.json only when the existing artifact is
     * unusable (missing/unparseable), was taken at a different sf,
     * covers FEWER queries (surface grew — new queries need priors), or
@@ -166,7 +165,7 @@ object Bench {
     * 1.388 — the reprobe mechanism worked, but nothing REFUSED such a
     * recording as priors if its total happened to beat). A run measured
     * on a hot host band carries medians inflated by that band; adopting
-    * them as priors poisons every future band_factor/set_factor and the
+    * them as priors poisons every future set_factor and the
     * budget-gate projection. So: a full run whose own set_factor vs the
     * committed priors exceeds [[MaxCommitSetFactor]], or that needed
     * more than [[MaxCommitReprobes]] stall reprobes, never touches
@@ -203,69 +202,13 @@ object Bench {
   private[graft] def heapOffProfile(heapMib: Long): Boolean =
     heapMib > 2 * TunedHeapMib || 2 * heapMib < TunedHeapMib
 
-  /** Fixed band canary: three band-sensitive queries with stable,
-    * re-audited plans and no internal persists, spanning the profile
-    * (string-heavy segment scan, small OLS agg, star-join top-K).
-    *
-    * Probed in isolation TWICE at run start, midpoint and end — the
-    * round-12 finding that closed the r11 "end-of-run drift": the FIRST
-    * probe of a query idle for minutes pays JIT recency (deopt/
-    * recompile recovery; measured +15–39% over the immediately
-    * following second probe at sf0.1), while second probes are FLAT
-    * across a full 15-minute run (mid 1.097 / end-second 1.107 on
-    * bpe_segment with gc/heap/metaspace/steal all benign). A
-    * single-probe canary therefore confounds host band with JIT
-    * recency — r11's "end canaries 1.2–1.6× start" was this artifact,
-    * not JVM aging. Both probes are recorded (`canary_*_cold` /
-    * `canary_*`); `band_factor` = median of (steady probe ÷ the PRIOR
-    * ARTIFACT's own steady canary values) so like compares with like —
-    * falling back to prior timed medians for pre-r12 artifacts. */
-  private[graft] val CanaryNames = Seq("bpe_segment", "quality_ols", "top_products")
-
-  /** Steady-state canary values of a prior artifact: per canary, the
-    * median of its recorded values across the canary_start/mid/end
-    * legs. None when the artifact predates canary blocks. */
-  private[graft] def parsePriorCanaries(f: java.io.File): Option[Map[String, Double]] =
-    if (!f.exists) None
-    else try {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
-      val env = Option(node).flatMap(n => Option(n.get("env"))).orNull
-      if (env == null) None
-      else {
-        val legs = Seq("canary_start", "canary_mid", "canary_end")
-          .flatMap(k => Option(env.get(k)))
-        val byName = CanaryNames.flatMap { name =>
-          val vs = legs.flatMap(l => Option(l.get(name)))
-            .map(_.asDouble()).filter(_ > 0).sorted
-          if (vs.isEmpty) None else Some(name -> vs((vs.size - 1) / 2))
-        }.toMap
-        if (byName.isEmpty) None else Some(byName)
-      }
-    } catch { case _: Throwable => None }
-
-  /** End-of-run in-set-vs-isolated probe targets: queries that showed a
-    * same-JVM in-set tax in past artifacts (dedup_clusters: driver r10
-    * in-set 4.09 s vs isolated re-probe 2.92 s). One extra isolated run
-    * each per full bench, recorded as `tax_probe` next to the official
-    * median. */
-  private[graft] val TaxProbeNames = Seq("dedup_clusters")
-  private[graft] def bandFactor(probes: Seq[(String, Double)],
-      prior: Map[String, Double]): Option[Double] = {
-    val ratios = probes.collect {
-      case (k, v) if v > 0 && prior.get(k).exists(_ > 0) => v / prior(k)
-    }.sorted
-    if (ratios.isEmpty) None else Some(ratios((ratios.size - 1) / 2))
-  }
-
   /** Whole-set band estimate: median of (fresh median ÷ prior median)
-    * over every query present in both runs. Round-12 finding: the
-    * 3-query canary's single isolated probes carry ±25–30% noise at
-    * ~1 s scale (one r12 run read band_factor 1.19 while its own
-    * medians ran 0.96× the same priors), while this estimator medians
-    * over 170+ median-of-3 values and is robust to a minority of
-    * queries genuinely changing between rounds (a plan change moves its
-    * own queries, not the median). Canary legs remain for WITHIN-run
-    * band timeline; set_factor is the run-vs-priors number to trust. */
+    * over every query present in both runs. It medians over 170+
+    * median-of-3 values, so it is robust to a minority of queries
+    * genuinely changing between rounds (a plan change moves its own
+    * queries, not the median) — the round-12 finding that retired the
+    * 3-query canary, whose single isolated probes carried ±25–30% noise
+    * at ~1 s scale. */
   private[graft] def setFactor(medians: Map[String, Double],
       prior: Map[String, Double]): Option[Double] = {
     val ratios = medians.collect {
@@ -274,123 +217,71 @@ object Bench {
     if (ratios.isEmpty) None else Some(ratios((ratios.size - 1) / 2))
   }
 
-  /** JVM + host telemetry for the env block: code-cache occupancy
-    * (sum over the segmented CodeHeap pools), metaspace, cumulative JIT
-    * compilation time, cumulative GC count/time, live heap, loaded
-    * classes, and host steal ticks. 178 queries × 4 executions generate
-    * thousands of Janino/whole-stage-codegen classes in ONE JVM; when
-    * the code cache saturates, the sweeper flushes hot methods and
-    * late-set iteration-heavy queries (the pagerank/LPA loops) degrade —
-    * the in-set tax that isolated re-probes of a fresh set don't show
-    * (found and fixed r11 via exactly this block). Round-12 adds the
-    * GC/heap/steal axes because the REMAINING end-of-run drift (end
-    * canaries 1.2–1.6× start on a quiet host, BOTH builder and driver
-    * r11 artifacts) must be bisected the same way: sampled at run
-    * start, midpoint and end, the deltas name the mechanism — growing
-    * gc_ms = heap aging, growing steal = host, growing jit alone = JIT
-    * churn. */
-  private[graft] def jitStats(): Map[String, Long] = {
-    import scala.jdk.CollectionConverters._
-    import java.lang.management.{ManagementFactory => mf}
-    val pools = mf.getMemoryPoolMXBeans.asScala
-    def usedMib(pred: String => Boolean): Long =
-      pools.filter(p => pred(p.getName)).map(_.getUsage.getUsed).sum / (1 << 20)
-    val comp = mf.getCompilationMXBean
-    val gcs = mf.getGarbageCollectorMXBeans.asScala
-    Map(
-      "codecache_used_mib" -> usedMib(n => n.contains("CodeHeap") || n.contains("Code Cache")),
-      "metaspace_used_mib" -> usedMib(_.contains("Metaspace")),
-      "jit_compile_ms" -> (if (comp != null && comp.isCompilationTimeMonitoringSupported)
-        comp.getTotalCompilationTime else -1L),
-      "gc_count" -> gcs.map(_.getCollectionCount).sum,
-      "gc_ms" -> gcs.map(_.getCollectionTime).sum,
-      "heap_used_mib" -> mf.getMemoryMXBean.getHeapMemoryUsage.getUsed / (1 << 20),
-      "classes_loaded" -> mf.getClassLoadingMXBean.getTotalLoadedClassCount,
-      "threads" -> mf.getThreadMXBean.getThreadCount.toLong,
-      "steal_ticks" -> stealTicks())
+  /** The run-provenance block (round-8 ADVICE #2): who, when and under
+    * what JVM shape the medians were taken, so two tracked totals for
+    * one round can never again be ambiguous. */
+  private[graft] def envBlock(heapMib: Long, cpus: String, passes: Int,
+      setFactor: Option[Double], recorder: String): ObjectNode = {
+    val env = json.createObjectNode()
+      .put("recorded_at", java.time.Instant.now().toString)
+      .put("heap_mib", heapMib)
+      .put("heap_off_profile", heapOffProfile(heapMib))
+    cpus.toIntOption.fold(env.put("cpus", cpus))(n => env.put("cpus", n))
+    env.put("passes", passes)
+    setFactor.fold(env.putNull("set_factor"))(f => env.put("set_factor", f))
+    env.put("recorded_by", recorder)
   }
 
-  /** Cumulative host steal ticks (/proc/stat cpu line, field 9) — the
-    * one host-band signal that actually moves under hypervisor steal
-    * (load-avg reads 0.00 through a 1.3× hot band, measured r11). -1
-    * where unreadable (non-Linux). */
-  private[graft] def stealTicks(): Long = try {
-    val src = scala.io.Source.fromFile("/proc/stat")
-    try {
-      val l = src.getLines().next().trim.split("\\s+")
-      if (l.length > 8) l(8).toLong else -1L
-    } finally src.close()
-  } catch { case _: Throwable => -1L }
-
-  /** Re-exec the bench in a fresh JVM at the tuned heap. The benchmark
-    * harness owns its measurement environment: a caller JVM >2× off the
-    * measured-optimal 16 GiB profile (round 10: an 89 GiB driver JVM —
-    * this host's G1 at that size let `triangle_counts` degrade 4.8→12 s
-    * ACROSS PASSES, measured r11) produces numbers that are not
-    * comparable to any tuned recording. Rather than merely warning, the
-    * harness relaunches itself with the same classpath, working dir and
-    * environment, and the tuned `-Xmx` — stdout/stderr are inherited so
-    * the caller's log parsing sees exactly the usual output, and the
-    * child's env block records BOTH heaps (`reexec_from_mib`) so the
-    * artifact is honest about how it was taken.
-    * `SPARK_GRAFT_BENCH_REEXEC=0` disables. Returns the child's exit
-    * code, or None if the relaunch could not start (caller then benches
-    * in-process as before). */
-  private def reexecTuned(parentHeapMib: Long): Option[Int] = try {
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val cp = System.getProperty("java.class.path")
-    // JDK17 module opens Spark needs outside spark-submit (build.sbt list)
-    val opens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = (Seq(javaBin) ++ opens ++ Seq(
-      s"-Xmx${TunedHeapMib}m", "-XX:ReservedCodeCacheSize=512m",
-      "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-      "-cp", cp, "graft.Bench")).toArray
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.environment().put("GRAFT_BENCH_CHILD", "1")
-    pb.environment().put("GRAFT_BENCH_PARENT_HEAP", parentHeapMib.toString)
-    pb.inheritIO()
-    System.err.println(s"[bench] heap ${parentHeapMib} MiB is >2x off the tuned " +
-      s"$TunedHeapMib MiB profile — re-exec'ing the bench in a tuned JVM " +
-      s"(SPARK_GRAFT_BENCH_REEXEC=0 to disable)")
-    Some(pb.start().waitFor())
-  } catch {
-    case e: Throwable =>
-      System.err.println(s"[bench] WARN: tuned re-exec failed to start " +
-        s"(${e.getClass.getSimpleName}: ${e.getMessage}) — benching in-process " +
-        "on the off-profile JVM")
-      None
+  private def secondsMap(kv: Seq[(String, Double)]): ObjectNode = {
+    val o = json.createObjectNode()
+    kv.foreach { case (k, v) => o.put(k, v) }
+    o
   }
+
+  private def total(queries: Seq[(String, Double)]): Double =
+    queries.map(_._2).filter(_ >= 0).sum
+
+  /** One bench line: the driver-read `metric`/`value`/`unit` head and
+    * `failed`/`sf` tail around the fields `body` adds. */
+  private def benchLine(queries: Seq[(String, Double)], failed: Seq[String],
+      sf: String)(body: ObjectNode => Unit): String = {
+    val o = json.createObjectNode()
+      .put("metric", "total").put("value", total(queries)).put("unit", "sec")
+    body(o)
+    val f = o.putArray("failed")
+    failed.foreach(n => f.add(n))
+    json.writeValueAsString(o.put("sf", sf))
+  }
+
+  /** The full artifact line — stdout and BENCH_TOTAL.json — carrying the
+    * per-query medians, the stall reprobes and the env block. `merged`
+    * marks a priors map that folded surface growth into committed
+    * medians. */
+  private[graft] def fullLine(queries: Seq[(String, Double)],
+      reprobe: Seq[(String, Double)], env: ObjectNode, failed: Seq[String],
+      sf: String, merged: Boolean = false): String =
+    benchLine(queries, failed, sf) { o =>
+      o.set[ObjectNode]("queries", secondsMap(queries))
+      if (merged) o.put("merged_with_prior", true)
+      o.set[ObjectNode]("reprobe", secondsMap(reprobe))
+      o.set[ObjectNode]("env", env)
+    }
+
+  /** The LAST stdout line: the full per-query line exceeds a 2000-char
+    * log tail at ~65+ queries (BENCH_r03 recorded parsed:null for exactly
+    * this reason), so the total is repeated in a form that always fits. */
+  private[graft] def compactLine(queries: Seq[(String, Double)],
+      failed: Seq[String], sf: String): String =
+    benchLine(queries, failed, sf)(_.put("n_queries", queries.size))
 
   def main(args: Array[String]): Unit = {
-    val startHeapMib = Runtime.getRuntime.maxMemory / (1 << 20)
-    // an EXPLICIT SPARK_DRIVER_MEM is an operator decision the harness
-    // must not override (round-11 ADVICE: the forced 16 GiB child can be
-    // OOM-killed in a small container, or shrink a deliberate >32g run)
-    if (heapOffProfile(startHeapMib) && sys.env.contains("SPARK_DRIVER_MEM") &&
-        !sys.env.contains("GRAFT_BENCH_CHILD"))
-      System.err.println(s"[bench] heap ${startHeapMib} MiB is >2x off the " +
-        s"tuned $TunedHeapMib MiB profile, but SPARK_DRIVER_MEM is explicitly " +
-        "set — honoring it (no re-exec); numbers are flagged off-profile")
-    if (heapOffProfile(startHeapMib) &&
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_REEXEC", "1") != "0" &&
-        !sys.env.contains("SPARK_DRIVER_MEM") &&
-        !sys.env.contains("GRAFT_BENCH_CHILD"))
-      reexecTuned(startHeapMib).foreach(sys.exit)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt.max(1)
     // optional comma-separated name filter for targeted probes while
     // iterating (the driver never sets it — full set by default)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').toSet)
-    def selected = SparkEntry.queries
+    val selected = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
     val spark = Sessions.localTune(
       SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
@@ -419,89 +310,37 @@ object Bench {
     }
     // Per-query isolation (round-4 finding: four queries regressed ≥2×
     // with zero code change once the set hit 91 queries) — mechanism in
-    // Sessions.releaseAll, pinned by SessionsSpec. Called between timed
-    // units so cleanup is charged to the gap, not the next query's timer.
-    // isolation drains the ContextCleaner by default (round-10 verdict
-    // #3: async broadcast/shuffle cleanup otherwise runs inside the NEXT
-    // query's timer — the in-set tax); SPARK_GRAFT_BENCH_DRAIN=0 keeps
-    // the old fire-and-forget isolation for A/B measurement
-    val drain = sys.env.getOrElse("SPARK_GRAFT_BENCH_DRAIN", "1") != "0"
-    def isolate(): Unit =
-      if (drain) Sessions.releaseAndDrain(spark) else Sessions.releaseAll(spark)
-    isolate()
-    // one isolated, warmed probe of a named query — the canary unit
-    def probeOnce(name: String): Option[(String, Double)] =
-      SparkEntry.queries.get(name).map { fn =>
-        val t0 = System.nanoTime()
-        val dt = try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-          catch { case _: Throwable => -1.0 }
-        isolate()
-        name -> dt
-      }
-    // each canary leg probes TWICE: the first probe pays JIT recency
-    // for code idle since its last execution, the second is the
-    // steady-state cost a host-band canary must measure (see CanaryNames)
-    def probeLeg(tag: String): (Seq[(String, Double)], Seq[(String, Double)]) =
-      if (only.nonEmpty) (Seq.empty, Seq.empty)
-      else {
-        val cold = CanaryNames.flatMap(probeOnce)
-        cold.foreach { case (n, t) =>
-          System.err.println(f"[bench] CANARY-$tag-COLD $n%-20s $t%8.3fs") }
-        val steady = CanaryNames.flatMap(probeOnce)
-        steady.foreach { case (n, t) =>
-          System.err.println(f"[bench] CANARY-$tag      $n%-20s $t%8.3fs") }
-        (cold, steady)
-      }
-    val (canaryStartCold, canaryStart) = probeLeg("START")
-    val jitStart = jitStats()
-    System.err.println(s"[bench] JIT-START $jitStart")
-    // band canary, MID leg (round-12 drift bisect): both r11 artifacts
-    // show end canaries 1.2–1.6× start on a quiet host while LATE-SET
-    // timed queries were fine — a midpoint sample localizes WHEN the
-    // degradation lands. Probes run between timed units, so the ~3 s
-    // cost is charged to the isolation gap, never a query's timer.
-    val sel = selected.toSeq
-    val midIdx = sel.size / 2
-    var canaryMidCold: Seq[(String, Double)] = Seq.empty
-    var canaryMid: Seq[(String, Double)] = Seq.empty
-    var jitMid: Map[String, Long] = Map.empty
-    val results = sel.zipWithIndex.map { case ((name, fn), idx) =>
-      if (only.isEmpty && sel.size > 8 && idx == midIdx) {
-        val (mc, ms) = probeLeg("MID")
-        canaryMidCold = mc
-        canaryMid = ms
-        jitMid = jitStats()
-        System.err.println(s"[bench] JIT-MID   $jitMid")
-      }
-      val times = (1 to passes).map { _ =>
-        val t0 = System.nanoTime()
-        // a failing query must be LOUD — a NaN pass poisons the median
-        // into the -1 sentinel instead of flattering the total
-        val ok =
-          try { fn(spark, sfDir).count(); true } catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-              false
-          }
-        val dt = if (ok) (System.nanoTime() - t0) / 1e9 else Double.NaN
-        // isolate BETWEEN passes too: queries that persist() internally
-        // must re-do their real work every timed pass, or the "median"
-        // measures pass 1 cold and passes 2..N warm-cache
-        isolate()
-        dt
-      }.sorted
-      name -> times
+    // Sessions.releaseAndDrain, pinned by SessionsSpec. It also drains
+    // the ContextCleaner (round-10 verdict #3: async broadcast/shuffle
+    // cleanup otherwise runs inside the NEXT query's timer). Every timed
+    // unit is followed by it, so cleanup is charged to the gap, never to
+    // a timer — and queries that persist() internally re-do their real
+    // work every pass instead of pass 1 cold, passes 2..N warm-cache.
+    Sessions.releaseAndDrain(spark)
+    // one timed run; a failing query must be LOUD and yields -1, which
+    // poisons its median into the -1 sentinel instead of flattering the
+    // total
+    def timeOnce(name: String, fn: (SparkSession, String) => DataFrame): Double = {
+      val t0 = System.nanoTime()
+      val dt =
+        try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 } catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
+            -1.0
+        }
+      Sessions.releaseAndDrain(spark)
+      dt
     }
     // lower-middle element for even pass counts — never the max; any
     // failed pass makes the whole query a -1 sentinel
-    def median(ts: Seq[Double]): Double =
-      if (ts.exists(_.isNaN)) -1.0 else ts((ts.size - 1) / 2)
-    results.foreach { case (name, ts) =>
-      System.err.println(f"[bench] $name%-28s median=${median(ts)}%8.3fs min=${ts.head}%8.3fs max=${ts.last}%8.3fs")
+    val medians = selected.map { case (name, fn) =>
+      val ts = (1 to passes).map(_ => timeOnce(name, fn)).sorted
+      val median = if (ts.head < 0) -1.0 else ts((ts.size - 1) / 2)
+      System.err.println(f"[bench] $name%-28s median=$median%8.3fs min=${ts.head}%8.3fs max=${ts.last}%8.3fs")
+      name -> median
     }
-    val medians = results.map { case (k, ts) => k -> median(ts) }
     val medianMap = medians.toMap
-    val failed = medians.collect { case (k, v) if v < 0 => k }.toSeq.sorted
+    val failed = medians.collect { case (k, v) if v < 0 => k }.sorted
     // Stall attribution IN the artifact (round-8 verdict #1): a query
     // whose fresh median at least doubles its committed prior-round
     // median gets ONE extra isolated re-probe, recorded next to the
@@ -510,64 +349,19 @@ object Bench {
     // from the tracked BENCH_TOTAL.json in the working directory.
     val priorsFile = new java.io.File("BENCH_TOTAL.json")
     val priorSf = parsePriorSf(priorsFile)
-    // cross-sf priors are treated as absent for stall re-probing too
-    // (round-11 ADVICE: a larger-sf run vs smaller-sf priors flags
-    // nearly every query and pays one extra isolated run each)
     val prior = sameSfPriors(parsePriors(priorsFile), priorSf, sfDir)
     if (prior.isEmpty && priorsFile.exists && !priorSf.contains(sfDir))
       System.err.println(s"[bench] priors recorded at ${priorSf.getOrElse("?")}, " +
-        s"this run is $sfDir — stall re-probing and band_factor disabled")
-    val suspects = stallSuspects(medianMap, prior)
-    val reprobes = suspects.flatMap { name =>
-      selected.get(name).map { fn =>
-        isolate()
-        val t0 = System.nanoTime()
-        val dt =
-          try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-          catch { case _: Throwable => -1.0 }
-        System.err.println(f"[bench] REPROBE $name%-20s median=${medianMap(name)}%8.3fs " +
-          f"prior=${prior(name)}%8.3fs isolated=$dt%8.3fs")
-        isolate()
-        name -> dt
-      }
+        s"this run is $sfDir — stall re-probing and set_factor disabled")
+    val reprobes = stallSuspects(medianMap, prior).map { name =>
+      val dt = timeOnce(name, SparkEntry.queries(name))
+      System.err.println(f"[bench] REPROBE $name%-20s median=${medianMap(name)}%8.3fs " +
+        f"prior=${prior(name)}%8.3fs isolated=$dt%8.3fs")
+      name -> dt
     }
-    // end leg — the same double probe after the whole timed set, so a
-    // band that shifted DURING the run shows up as start≠end on the
-    // steady probes (and JIT recency stays visible in the cold ones)
-    val (canaryEndCold, canaryEnd) = probeLeg("END")
-    // sf guard: priors from a different scale factor make the ratio
-    // fiction (a sf0.001 smoke vs sf0.1 priors reads ~0.1) — `prior` is
-    // already empty on a sf mismatch, so bandFactor yields None there.
-    // The denominator prefers the prior artifact's own steady canary
-    // values (like vs like); prior TIMED medians, the pre-r12 fallback,
-    // run ~1.1–1.2× steady (passes 2..3 of a consecutive triple carry a
-    // same-query re-execution tax), biasing the factor ~0.9 low.
-    val steadyBase =
-      if (prior.nonEmpty) parsePriorCanaries(priorsFile).getOrElse(prior)
-      else Map.empty[String, Double]
-    val band = bandFactor(canaryStart ++ canaryMid ++ canaryEnd, steadyBase)
-    band.foreach(b => System.err.println(f"[bench] band_factor=$b%.3f " +
-      "(canary median / committed prior; ~1.0 = the band the priors were recorded on)"))
     val setFac = setFactor(medianMap, prior)
     setFac.foreach(s => System.err.println(f"[bench] set_factor=$s%.3f " +
-      "(median per-query ratio vs priors over the whole common set — trust this over band_factor)"))
-    // in-set-vs-isolated TAX probe (round-10 verdict #3): the query most
-    // sensitive to residual session state (the RDD-fixpoint loop) gets
-    // one isolated re-probe at run end in EVERY full artifact, so the
-    // in-set tax is a recorded number, not a cross-artifact diff
-    val taxProbes =
-      if (only.isEmpty) TaxProbeNames.flatMap(probeOnce) else Seq.empty
-    taxProbes.foreach { case (n, t) =>
-      System.err.println(f"[bench] TAX-PROBE $n%-20s in_set=${medianMap.getOrElse(n, -1.0)}%8.3fs isolated=$t%8.3fs") }
-    val qs = medians.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val reprobeJson = reprobes.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = medians.map(_._2).filter(_ >= 0).sum
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // run provenance (round-8 ADVICE #2): the artifact itself records
-    // who/when/under what JVM shape the medians were taken, so two
-    // tracked totals for one round can never again be ambiguous
+      "(median per-query ratio vs priors over the whole common set)"))
     // recorder attribution: the builder's own runs set
     // SPARK_GRAFT_RECORDER=builder; unset means the run was NOT started by
     // the builder — i.e. the driver's contractual recording — so the
@@ -576,37 +370,8 @@ object Bench {
     // these are)
     val recorder = sys.env.getOrElse("SPARK_GRAFT_RECORDER",
       "driver-or-unset-" + sys.props.getOrElse("user.name", "unknown"))
-    val jitEnd = jitStats()
-    System.err.println(s"[bench] JIT-END   $jitEnd")
-    def canaryJson(ps: Seq[(String, Double)]) =
-      ps.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    def jitJson(m: Map[String, Long]) =
-      m.toSeq.sortBy(_._1).map { case (k, v) => s"\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-    val reexecFrom = sys.env.get("GRAFT_BENCH_PARENT_HEAP")
-      .map(h => s""""reexec_from_mib":$h,""").getOrElse("")
-    val env =
-      s"""{"recorded_at":"${java.time.Instant.now()}","heap_mib":$heapMib,""" +
-        s""""heap_off_profile":${heapOffProfile(heapMib)},$reexecFrom"cpus":$cpus,"passes":$passes,""" +
-        s""""band_factor":${band.map(_.toString).getOrElse("null")},""" +
-        s""""set_factor":${setFac.map(_.toString).getOrElse("null")},""" +
-        s""""canary_start":${canaryJson(canaryStart)},"canary_start_cold":${canaryJson(canaryStartCold)},""" +
-        s""""canary_mid":${canaryJson(canaryMid)},"canary_mid_cold":${canaryJson(canaryMidCold)},""" +
-        s""""canary_end":${canaryJson(canaryEnd)},"canary_end_cold":${canaryJson(canaryEndCold)},""" +
-        s""""jit_start":${jitJson(jitStart)},"jit_mid":${jitJson(jitMid)},"jit_end":${jitJson(jitEnd)},""" +
-        s""""recorded_by":"$recorder"}"""
-    val taxJson = taxProbes.map { case (k, v) =>
-      s"\"" + k + "\":{\"in_set\":" + medians.toMap.getOrElse(k, -1.0) +
-        ",\"isolated\":" + v + "}"
-    }.mkString("{", ",", "}")
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"reprobe":$reprobeJson,"tax_probe":$taxJson,"env":$env,"failed":$failedJson,"sf":"$sfDir"}"""
-    // The full per-query line exceeds a 2000-char log tail at ~65+ queries
-    // (BENCH_r03 recorded parsed:null for exactly this reason), so the
-    // LAST stdout line is a compact total that always fits the tail; the
-    // full per-query map goes to stdout above it and to BENCH_TOTAL.json.
-    val compact =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${medians.size},"failed":$failedJson,"sf":"$sfDir"}"""
+    val env = envBlock(heapMib, cpus, passes, setFac, recorder)
+    val line = fullLine(medians, reprobes, env, failed, sfDir)
     println(line)
     // best-committed-recording priors policy (see shouldReplacePriors /
     // priorsToCommit): only a full, zero-failure run that beats (or
@@ -621,24 +386,18 @@ object Bench {
       s"[bench] recording refused as priors: $r — medians stay on stdout; " +
         "re-record on a calm band (or SPARK_GRAFT_BENCH_FORCE_TOTAL=1)"))
     val commit: Option[(Map[String, Double], Boolean)] =
-      if (force) Some((medians.toMap, false))
+      if (force) Some((medianMap, false))
       else if (fullRun && bandRefusal.isEmpty)
-        priorsToCommit(priorsFile, sfDir, medians.toMap)
+        priorsToCommit(priorsFile, sfDir, medianMap)
       else None
     commit match {
       case Some((pm, merged)) =>
         try {
-          val pTotal = pm.values.filter(_ >= 0).sum
-          val outLine = if (!merged) line else {
-            val pQs = pm.toSeq.sortBy(_._1)
-              .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-            s"""{"metric":"total","value":$pTotal,"unit":"sec","queries":$pQs,""" +
-              s""""merged_with_prior":true,"reprobe":$reprobeJson,""" +
-              s""""tax_probe":$taxJson,"env":$env,"failed":$failedJson,"sf":"$sfDir"}"""
-          }
+          val outLine = if (!merged) line
+            else fullLine(pm.toSeq.sortBy(_._1), reprobes, env, failed, sfDir, merged = true)
           val w = new java.io.PrintWriter(priorsFile)
           try w.println(outLine) finally w.close()
-          System.err.println(s"[bench] BENCH_TOTAL.json updated (total=$pTotal" +
+          System.err.println(s"[bench] BENCH_TOTAL.json updated (total=${total(pm.toSeq)}" +
             (if (merged) s", surface growth merged into better committed priors" else "") + ")")
         } catch { case e: Throwable =>
           System.err.println(s"[bench] could not write BENCH_TOTAL.json: ${e.getMessage}")
@@ -646,11 +405,13 @@ object Bench {
       case None =>
         System.err.println(s"[bench] BENCH_TOTAL.json NOT updated: " +
           (if (!fullRun) "subset or failed run"
-           else s"existing priors are better (total=$total vs " +
+           else if (bandRefusal.nonEmpty) "refused on band"
+           else if (priorSf.exists(_ != sfDir)) s"priors are recorded at ${priorSf.get}"
+           else s"existing priors are better (total=${total(medians)} vs " +
              s"${parsePriorTotal(priorsFile).getOrElse(Double.NaN)})") +
           " — full line is on stdout; SPARK_GRAFT_BENCH_FORCE_TOTAL=1 to force")
     }
-    println(compact)
+    println(compactLine(medians, failed, sfDir))
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

@@ -13,9 +13,15 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val spark = Sessions.local("32")
     spark.sparkContext.setLogLevel("WARN")
-    def time(label: String)(f: => Long): Unit = {
+    // the one lap timer of every mode: `warm` runs `f` once untimed first
+    // (JIT + codegen + page cache) — pass false for operations that are
+    // not idempotent; every run is followed by releaseAll so cached and
+    // checkpointed blocks never carry into the next measurement
+    def timed(label: String, warm: Boolean = true)(f: => Long): Unit = {
+      if (warm) { f; Sessions.releaseAll(spark) }
       val t0 = System.nanoTime(); val n = f
-      println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.1f s ($n rows)")
+      println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
+      Sessions.releaseAll(spark)
     }
     // --families <baseDir>: ×1/×2/×4 replication probes for the heaviest
     // bench families (round-9 brief #4, round-10 brief #1/#6).
@@ -60,12 +66,6 @@ object ScaleProbe {
       // cc, mart, edit_dist. Absent = all.
       val onlyFam = args.lift(3).map(_.split(',').toSet)
       def want(fam: String): Boolean = onlyFam.forall(_.contains(fam))
-      def timed2(label: String)(f: => Long): Unit = {
-        f; Sessions.releaseAll(spark) // warm pass: JIT + codegen + page cache
-        val t0 = System.nanoTime(); val n = f
-        println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
-        Sessions.releaseAll(spark)
-      }
       for (m <- mults) {
         val root = s"/tmp/graft_scale_fam_x$m"
         val docs = Tables.documents(spark, base).select(col("doc_id"), col("text"))
@@ -159,9 +159,9 @@ object ScaleProbe {
         }
 
         if (want("minhash"))
-          timed2(f"minhash_pairs    x$m")(graft.dedup.Dedup.minhashPairs(spark, root).count())
+          timed(f"minhash_pairs    x$m")(graft.dedup.Dedup.minhashPairs(spark, root).count())
         if (want("triangles"))
-          timed2(f"triangle_counts  x$m")(
+          timed(f"triangle_counts  x$m")(
             graft.queries.Graphs.triangleCounts(spark, root).count())
         // kcore rides the triangles root: ×m disjoint co-purchase graph
         // copies (orderkey/partkey both shifted), so nodes, edges and the
@@ -169,7 +169,7 @@ object ScaleProbe {
         // value (each copy has the ×1 degree distribution) — per-round
         // join + aggregate must scale linearly
         if (want("kcore"))
-          timed2(f"part_kcore       x$m")(
+          timed(f"part_kcore       x$m")(
             graft.queries.Graphs.partKcore(spark, root).count())
         // containment rides the CC root: token-salted replicas keep the
         // shingle spaces DISJOINT (posting lists stay ×1-length, the
@@ -177,7 +177,7 @@ object ScaleProbe {
         // replicas would instead square the OUTPUT, which is the
         // operator's honest output-bound axis, same as minhash clones)
         if (want("containment"))
-          timed2(f"containment      x$m")(
+          timed(f"containment      x$m")(
             graft.dedup.Dedup.containmentPairs(spark, ccRoot).count())
         // CAPPED containment rides the CLONE root (minhash root — same
         // text, shifted doc_id): clones multiply every posting list's
@@ -188,11 +188,11 @@ object ScaleProbe {
         // is ≤ (#distinct shingles)·cap² independent of m — growth must
         // stay ≤ linear (the index build/window legs are ∝ m), never m²
         if (want("containment_capped"))
-          timed2(f"containment_cap  x$m")(
+          timed(f"containment_cap  x$m")(
             graft.dedup.Dedup.containmentPairs(spark, root,
               maxShingleFreq = Some(10)).count())
         if (want("knn_pq"))
-          timed2(f"knn_pq           x$m")(graft.sim.Similarity.knnPq(spark, root).count())
+          timed(f"knn_pq           x$m")(graft.sim.Similarity.knnPq(spark, root).count())
         // ivfpq rides the knn_pq embeddings root (corpus grows ×m; the
         // vec_id%100==0 query set stays FIXED at ×1 — replica ids are
         // odd by construction, so no replica is ever a query): the ADC
@@ -200,27 +200,27 @@ object ScaleProbe {
         // ∝ m/nClusters while knn_pq's full coded scan grows ∝ m — at a
         // fixed query set the composite's advantage should WIDEN with m
         if (want("ivfpq"))
-          timed2(f"knn_ivfpq        x$m")(graft.sim.Similarity.knnIvfPq(spark, root).count())
+          timed(f"knn_ivfpq        x$m")(graft.sim.Similarity.knnIvfPq(spark, root).count())
         // mmr on the same root: k fixed rounds, each one corpus scan —
         // expected linear in corpus size at fixed k
         if (want("mmr"))
-          timed2(f"mmr_select       x$m")(graft.sim.Similarity.mmrSelect(spark, root).count())
+          timed(f"mmr_select       x$m")(graft.sim.Similarity.mmrSelect(spark, root).count())
         if (want("cc"))
-          timed2(f"neardup_clusters x$m")(
+          timed(f"neardup_clusters x$m")(
             graft.dedup.Dedup.nearDupClusters(spark, ccRoot).count())
         if (want("mart"))
-          timed2(f"calendar_mart    x$m")(
+          timed(f"calendar_mart    x$m")(
             graft.queries.Marts.salesSummaryCalendar(spark, martRoot).count())
         if (want("edit_dist")) {
-          timed2(f"edit_dist clones x$m")(
+          timed(f"edit_dist clones x$m")(
             graft.dedup.Dedup.editDistancePairs(spark, edClone).count())
-          timed2(f"edit_dist langs  x$m")(
+          timed(f"edit_dist langs  x$m")(
             graft.dedup.Dedup.editDistancePairs(spark, edLang).count())
         }
         if (want("streaming"))
-          // replay of the same batch_id is idempotent, so timed2's
+          // replay of the same batch_id is idempotent, so timed's
           // warm+timed double-run measures the identical ingest twice
-          timed2(f"stream_ingest    x$m")(
+          timed(f"stream_ingest    x$m")(
             graft.streaming.ClusterMaintain.ingestBatch(
               docs.filter(col("doc_id") % 7 === 3), stRoot, 1L))
         // ANN-maintenance probe: the INDEX grows ×m (corpus replicated
@@ -242,16 +242,16 @@ object ScaleProbe {
           graft.engine.Fs.deleteDir(spark, idx)
           graft.sim.Similarity.buildIvfPqIndexOn(
             graft.sim.Similarity.preparedCk(spark, amRoot), idx, 10, 3, 8, 32, 2)
-          // thunks re-derive their inputs from parquet: timed2's
+          // thunks re-derive their inputs from parquet: timed's
           // releaseAll between runs evicts localCheckpoint blocks, so a
           // checkpointed frame must not outlive one thunk
-          timed2(f"ann_ingest       x$m")(
+          timed(f"ann_ingest       x$m")(
             graft.sim.Similarity.ingestIvfPqBatch(
               graft.sim.Similarity.prepared(spark, base)
                 .select((col("vec_id") + lit(900000000L)).as("vec_id"),
                   col("v"), col("norm2")),
               idx, 1L))
-          timed2(f"ann_serve_maint  x$m")(
+          timed(f"ann_serve_maint  x$m")(
             graft.sim.Similarity.knnIvfPqFromIndexOn(
               graft.sim.Similarity.prepared(spark, amRoot)
                 .select(col("vec_id"), col("v"), col("norm2")),
@@ -280,7 +280,7 @@ object ScaleProbe {
             col("vec_id") + lit(i * 80000000L)))
           embReps.reduce(_.unionByName(_))
             .write.mode("overwrite").parquet(s"$arRoot/embeddings.parquet")
-          timed2(f"ann_refit_e2e    x$m")(
+          timed(f"ann_refit_e2e    x$m")(
             graft.sim.Similarity.annStreamedRefit(spark, arRoot).count())
         }
         // incremental-containment probe: FIXED batch (replica-0 docs
@@ -290,7 +290,7 @@ object ScaleProbe {
         // map-only corpus posting scan grows ∝ m: growth must be gently
         // linear in the scan term, never in the pair term)
         if (want("containment_incr")) {
-          timed2(f"containment_incr x$m") {
+          timed(f"containment_incr x$m") {
             val docsIdx = graft.dedup.Dedup.shingleIndex(spark, ccRoot)
               .filter(col("n_sh") > 0)
               .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -317,11 +317,11 @@ object ScaleProbe {
               (col("id") + lit(1000000000L)).as("new_label"))
             .write.mode("overwrite").parquet(s"$czRoot/merges/batch_id=1")
           val batch = docs.filter(col("doc_id") % 7 === 3)
-          timed2(f"cz_ingest_forest ${m}k")(
+          timed(f"cz_ingest_forest ${m}k")(
             graft.streaming.ClusterMaintain.ingestBatch(batch, czRoot, 2L))
-          time(f"cz_compact       ${m}k")(
+          timed(f"cz_compact       ${m}k", warm = false)(
             graft.streaming.ClusterMaintain.compactMerges(spark, czRoot))
-          timed2(f"cz_ingest_after  ${m}k")(
+          timed(f"cz_ingest_after  ${m}k")(
             graft.streaming.ClusterMaintain.ingestBatch(batch, czRoot, 2L))
         }
         // partial-refit probe: corpus grows ×m; the claim is refit cost
@@ -355,18 +355,18 @@ object ScaleProbe {
                 lit(1L).as("batch_id"))
               .coalesce(1).write.mode("overwrite").parquet(s"$idx/stats_delta")
           freshIndex()
-          time(f"ar_full_rebuild  x$m") {
+          timed(f"ar_full_rebuild  x$m", warm = false) {
             graft.sim.Similarity.buildIvfPqIndexOn(
               graft.sim.Similarity.preparedCk(spark, arRoot), idx, 10, 3, 8, 32, 2)
             1L
           }
           freshIndex(); fakeDrift(Seq(3))
-          time(f"ar_refit_1of10   x$m") {
+          timed(f"ar_refit_1of10   x$m", warm = false) {
             graft.sim.Similarity.refitDriftedLists(
               graft.sim.Similarity.preparedCk(spark, arRoot), idx).toLong
           }
           freshIndex(); fakeDrift(0 until 10)
-          time(f"ar_refit_10of10  x$m") {
+          timed(f"ar_refit_10of10  x$m", warm = false) {
             graft.sim.Similarity.refitDriftedLists(
               graft.sim.Similarity.preparedCk(spark, arRoot), idx).toLong
           }
@@ -390,11 +390,11 @@ object ScaleProbe {
               (col("id") + lit(1000000000L)).as("new_label"))
             .write.mode("overwrite").parquet(s"$scRoot/merges/batch_id=1")
           val batch = docs.filter(col("doc_id") % 7 === 3)
-          timed2(f"cm_ingest_forest x$m")(
+          timed(f"cm_ingest_forest x$m")(
             graft.streaming.ClusterMaintain.ingestBatch(batch, scRoot, 2L))
-          time(f"cm_compact       x$m")(
+          timed(f"cm_compact       x$m", warm = false)(
             graft.streaming.ClusterMaintain.compactMerges(spark, scRoot))
-          timed2(f"cm_ingest_compact x$m")(
+          timed(f"cm_ingest_compact x$m")(
             graft.streaming.ClusterMaintain.ingestBatch(batch, scRoot, 2L))
         }
       }
@@ -404,16 +404,10 @@ object ScaleProbe {
     // queries (round-15 verdict #5) — time each query's NATURAL
     // components so the committed medians decompose into write-
     // primitive / gate / round-structure floors instead of opaque
-    // totals. Warm+timed double-run per component (the timed2 shape).
+    // totals. Warm+timed double-run per component (the timed shape).
     if (args.headOption.contains("--midtail")) {
       import org.apache.spark.sql.functions._
       val base = args(1)
-      def timed2(label: String)(f: => Long): Unit = {
-        f; Sessions.releaseAll(spark)
-        val t0 = System.nanoTime(); val n = f
-        println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
-        Sessions.releaseAll(spark)
-      }
       val src = Tables.orders(spark, base)
         .withColumn("ingestion_month",
           date_format(col("o_orderdate"), "yyyyMM").cast("int"))
@@ -421,25 +415,25 @@ object ScaleProbe {
       // one full-source partitioned load, its replace-partition retry,
       // the read-back aggregate — their floors are sums of these
       val wRoot = "/tmp/graft_midtail_w"
-      timed2("orders_part_write (fresh)") {
+      timed("orders_part_write (fresh)") {
         graft.engine.Fs.deleteDir(spark, wRoot)
         graft.engine.Layers.replacePartitionsPath(src, wRoot,
           Seq("ingestion_month")); 1L
       }
-      timed2("orders_part_retry (replace)") {
+      timed("orders_part_retry (replace)") {
         graft.engine.Layers.replacePartitionsPath(src, wRoot,
           Seq("ingestion_month")); 1L
       }
-      timed2("orders_readback_agg")(
+      timed("orders_readback_agg")(
         spark.read.parquet(wRoot).groupBy(col("ingestion_month"))
           .agg(count(lit(1))).count())
       val mRoot = "/tmp/graft_midtail_m"
-      timed2("manifest_write (fresh)") {
+      timed("manifest_write (fresh)") {
         graft.engine.Fs.deleteDir(spark, mRoot)
         graft.engine.Manifest.replacePartitions(src, mRoot,
           Seq("ingestion_month")); 1L
       }
-      timed2("manifest_retry+vacuum") {
+      timed("manifest_retry+vacuum") {
         graft.engine.Manifest.replacePartitions(src, mRoot,
           Seq("ingestion_month"))
         graft.engine.Manifest.vacuum(spark, mRoot); 1L
@@ -447,28 +441,28 @@ object ScaleProbe {
       // gate primitive: the one-aggregation-job expectation suite over
       // the full orders source (dq_gated_promotion pays this twice,
       // plus the clean batch's partitioned load)
-      timed2("full_query idempotent_reload")(
+      timed("full_query idempotent_reload")(
         graft.queries.Extras.idempotentReload(spark, base).count())
-      timed2("full_query manifest_reload")(
+      timed("full_query manifest_reload")(
         graft.queries.Extras.manifestReload(spark, base).count())
-      timed2("full_query dq_gated")(
+      timed("full_query dq_gated")(
         graft.queries.DataQuality.dqGatedPromotion(spark, base).count())
-      timed2("full_query scd2_gated")(
+      timed("full_query scd2_gated")(
         graft.queries.Scd2Queries.gated(spark, base).count())
       // basket_rules = basket_pairs' pair relation + two broadcast
       // count-attaches + the scalar basket count: the pairs leg is the
       // floor, the delta is the attach machinery
-      timed2("basket_pairs_leg")(
+      timed("basket_pairs_leg")(
         graft.queries.Extras.basketPairs(spark, base).count())
-      timed2("full_query basket_rules")(
+      timed("full_query basket_rules")(
         graft.queries.Analytics.basketRules(spark, base).count())
       // part_kcore: fixed-round peel loop — time at 3/6/12 rounds; a
       // ~linear fit in rounds pins the cost to round structure
       // (scheduler + per-round shuffle), not data volume
       Seq(3, 6, 12).foreach(r =>
-        timed2(f"part_kcore rounds=$r%2d")(
+        timed(f"part_kcore rounds=$r%2d")(
           graft.queries.Graphs.partKcore(spark, base, rounds = r).count()))
-      timed2("full_query dedup_threshold_curve")(
+      timed("full_query dedup_threshold_curve")(
         graft.dedup.Dedup.dedupThresholdCurve(spark, base).count())
       spark.stop(); return
     }
@@ -489,18 +483,14 @@ object ScaleProbe {
         // keeper join (count() alone prunes a unique-key left join away)
         def run(): Long = graft.text.TextAnalysis.spanDedup(spark, path)
           .agg(sum(col("n_kept")), max(col("clean_md5"))).head().getLong(0)
-        run(); Sessions.releaseAll(spark) // warm
-        time(f"span_dedup x$m")(run())
-        Sessions.releaseAll(spark)
+        timed(f"span_dedup x$m")(run())
       }
       spark.stop(); return
     }
     for (d <- args.toSeq) {
-      time(s"dup_spans    $d")(graft.text.TextAnalysis.dupSpans(spark, d).count())
-      time(s"source_quota $d")(graft.text.TextAnalysis.sourceQuota(spark, d).count())
-      time(s"quality_gate $d")(graft.text.TextAnalysis.qualityGatePerLang(spark, d).count())
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      timed(s"dup_spans    $d", warm = false)(graft.text.TextAnalysis.dupSpans(spark, d).count())
+      timed(s"source_quota $d", warm = false)(graft.text.TextAnalysis.sourceQuota(spark, d).count())
+      timed(s"quality_gate $d", warm = false)(graft.text.TextAnalysis.qualityGatePerLang(spark, d).count())
     }
     spark.stop()
   }

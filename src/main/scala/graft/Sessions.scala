@@ -37,7 +37,7 @@ object Sessions {
   /** [[tune]] plus LOCAL-MODE-ONLY perf flips that would be HARMFUL on a
     * real cluster — kept out of tune() so a deploy inheriting the shared
     * confs never ships them (round-7 ADVICE). Entry points that are
-    * local by construction (Bench, MiniBench, Verify, tests) use this.
+    * local by construction (Bench, ScaleProbe, Verify, tests) use this.
     *
     * Shuffle compression: shuffle blocks never cross a network in local
     * mode, so lz4 on the shuffle path is pure CPU overhead against the

@@ -405,8 +405,8 @@ object Dedup {
       .select(col("doc_id"), col("th"), col("sig"))
 
   /** MinHash band rows for a signature relation — shared by the pair
-    * pipeline, the streaming ingest index probe, and the perf probe so
-    * all measure the identical plan. */
+    * pipeline and the streaming ingest index probe so both run the
+    * identical plan. */
   private[graft] def bandRows(docs: DataFrame, carry: Seq[String] = Nil): DataFrame =
     docs.select(
       (col("doc_id") +: carry.map(col)) :+
@@ -419,30 +419,6 @@ object Dedup {
       .select(col("doc_id") +: carry.map(col) :+ col("bb.band").as("band") :+
         col("bb.k1").as("k1") :+ col("bb.k2").as("k2") :+ col("bb.k3").as("k3") :+
         col("bb.k4").as("k4"): _*)
-
-  /** Perf probes for MiniBench (not part of the query surface): cost of
-    * the signature stage alone, and of candidate generation. The
-    * signature probe SUMS a signature element — a bare count() would be
-    * column-pruned down to a parquet footer read and measure nothing. */
-  private[graft] def signatureProbe(spark: SparkSession, dir: String): Long = {
-    withSignature(Tables.documents(spark, dir))
-      .agg(sum(expr("element_at(sig, 1)"))).head().getLong(0)
-  }
-
-  private[graft] def candidateProbe(spark: SparkSession, dir: String): Long = {
-    // persisted exactly like the real pipeline, so the probe isolates the
-    // band join instead of re-running the signature stage per join side
-    val docs = withSignature(Tables.documents(spark, dir))
-      .select(col("doc_id"), col("sig"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val bands = bandRows(docs)
-      bands.as("a").join(bands.as("b"), Seq("band", "k1", "k2", "k3", "k4"))
-        .filter(col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .distinct().count()
-    } finally docs.unpersist()
-  }
 
   /** Unsorted per-doc fingerprints — shared by [[simhash]] (which adds
     * the output ordering) and [[simhashPairs]] (which must not pay for a

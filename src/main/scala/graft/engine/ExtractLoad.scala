@@ -82,26 +82,18 @@ object ExtractLoad {
   }
 
   /** S4: publish a new watermark doc (reference
-    * `extract_load_template.py:197-209`): temp write, rename to the next
-    * sequence number, then drop the older docs. The rename target must
-    * not exist — on HDFS rename refuses to overwrite, as
-    * [[Manifest.commit]] relies on — so two racing saves cannot both
-    * publish one number; the loser throws. The cleanup also sweeps the
-    * `_tmp-*` debris of saves that crashed before their rename. */
+    * `extract_load_template.py:197-209`) under the next sequence number
+    * through [[Fs.publishNew]] — the create-if-absent publish
+    * [[Manifest.commit]] uses, so two racing saves cannot both publish
+    * one number; the loser throws — then drop the older docs. The
+    * cleanup also sweeps the `_tmp-*` debris of saves that crashed
+    * before their rename. */
   def saveCheckpoint(spark: SparkSession, dir: String, ckpt: Checkpoint): Unit = {
     val (fs, d) = Fs.resolve(spark, dir)
     val old = docs(fs, d)
     val next = old.lastOption.fold(0L)(_._1 + 1).max(0L)
-    fs.mkdirs(d)
-    val tmp = new Path(d, s"_tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(mapper.writeValueAsBytes(ckpt)) finally out.close()
-    val target = new Path(d, f"ckpt-$next%020d.json")
-    if (fs.exists(target) || !fs.rename(tmp, target)) {
-      fs.delete(tmp, false)
-      throw new java.util.ConcurrentModificationException(
-        s"checkpoint save lost the race for doc $next at $dir")
-    }
+    Fs.publishNew(fs, new Path(d, f"ckpt-$next%020d.json"), mapper.writeValueAsBytes(ckpt),
+      s"checkpoint save lost the race for doc $next at $dir")
     (old.map(_._2) ++ files(fs, d).filter(_.getName.startsWith("_tmp-")))
       .foreach(fs.delete(_, false))
   }

@@ -156,6 +156,27 @@ object Fs {
     else fs.listStatus(p).toIndexedSeq.filter(_.isFile).map(_.getPath)
   }
 
+  /** Create-if-absent publish of one small document — the commit step of
+    * the manifest log and of the extract-load watermark: write `bytes` to
+    * a fresh `_tmp-<uuid>` file beside `target`, then rename it onto
+    * `target` unless `target` already exists. HDFS and local rename refuse
+    * to overwrite, so of two racing writers exactly one publishes; the
+    * loser deletes its temp file and throws
+    * ConcurrentModificationException(`lost`). A crash before the rename
+    * leaves only `_tmp-*` debris, which the callers' cleanup sweeps. */
+  def publishNew(fs: FileSystem, target: Path, bytes: Array[Byte],
+      lost: => String): Unit = {
+    val dir = target.getParent
+    fs.mkdirs(dir)
+    val tmp = new Path(dir, s"_tmp-${java.util.UUID.randomUUID()}")
+    val out = fs.create(tmp, false)
+    try out.write(bytes) finally out.close()
+    if (fs.exists(target) || !fs.rename(tmp, target)) {
+      fs.delete(tmp, false)
+      throw new java.util.ConcurrentModificationException(lost)
+    }
+  }
+
   /** Atomic directory move (HDFS/local rename; S3A's best-effort
     * equivalent). Creates the destination's parent first — Hadoop rename
     * fails, rather than creates, missing parents. */

@@ -66,15 +66,17 @@ object Manifest {
 
   private def logDir(path: String) = s"$path/_graft_log"
   private def fileFor(version: Long) = f"v$version%020d.json"
+  private def versionOf(name: String): Option[Long] =
+    if (name.startsWith("v") && name.endsWith(".json"))
+      Some(name.stripPrefix("v").stripSuffix(".json").toLong)
+    else None
 
   /** Newest committed version, None for a table with no log. */
   def currentVersion(spark: SparkSession, path: String): Option[Long] = {
     val (fs, p) = Fs.resolve(spark, logDir(path))
     if (!fs.exists(p)) None
     else {
-      val vs = fs.listStatus(p).toIndexedSeq.map(_.getPath.getName)
-        .collect { case n if n.startsWith("v") && n.endsWith(".json") =>
-          n.stripPrefix("v").stripSuffix(".json").toLong }
+      val vs = fs.listStatus(p).toIndexedSeq.flatMap(s => versionOf(s.getPath.getName))
       if (vs.isEmpty) None else Some(vs.max)
     }
   }
@@ -344,16 +346,9 @@ object Manifest {
 
   /** private[graft]: the crash/race specs drive the protocol directly. */
   private[graft] def commit(spark: SparkSession, path: String, st: State): Long = {
-    val tmp = s"${logDir(path)}/_tmp-${java.util.UUID.randomUUID().toString.take(8)}"
-    val (fs, tmpPath) = Fs.resolve(spark, tmp)
-    val out = fs.create(tmpPath, true)
-    try out.write(mapper.writeValueAsBytes(st)) finally out.close()
-    val target = s"${logDir(path)}/${fileFor(st.version)}"
-    if (Fs.exists(spark, target) || !Fs.rename(spark, tmp, target)) {
-      fs.delete(tmpPath, false)
-      throw new java.util.ConcurrentModificationException(
-        s"manifest commit lost the race for version ${st.version} at $path")
-    }
+    val (fs, target) = Fs.resolve(spark, s"${logDir(path)}/${fileFor(st.version)}")
+    Fs.publishNew(fs, target, mapper.writeValueAsBytes(st),
+      s"manifest commit lost the race for version ${st.version} at $path")
     st.version
   }
 
@@ -695,9 +690,8 @@ object Manifest {
     val (fs, lp) = Fs.resolve(spark, logDir(path))
     if (!fs.exists(lp))
       throw new IllegalArgumentException(s"no manifest log at $path")
-    val versions = fs.listStatus(lp).toIndexedSeq.map(_.getPath.getName)
-      .collect { case n if n.startsWith("v") && n.endsWith(".json") =>
-        n.stripPrefix("v").stripSuffix(".json").toLong }.sorted
+    val versions = fs.listStatus(lp).toIndexedSeq
+      .flatMap(s => versionOf(s.getPath.getName)).sorted
     if (versions.isEmpty)
       throw new IllegalArgumentException(s"no manifest log at $path")
     versions.flatMap { v =>
@@ -734,23 +728,28 @@ object Manifest {
   /** Drop manifests older than the newest `keepVersions` and delete every
     * `data-*` dir no kept manifest references — crashed commits' dangling
     * dirs and fully superseded commit dirs. With `keepVersions = 1` only
-    * the live snapshot survives (no more time travel). Run it like Delta's
+    * the live snapshot survives (no more time travel). Retained versions
+    * are counted from one log listing, as in [[history]]: epoch-keyed
+    * logs ([[writeVersioned]]) are sparse, so version-id arithmetic would
+    * keep fewer manifests than asked. Every kept manifest is read before
+    * anything is deleted, and an unreadable one aborts the vacuum — it
+    * must never count as referencing nothing. Run it like Delta's
     * VACUUM: out-of-band, never concurrently with a reader pinned to a
     * version about to be dropped. */
   def vacuum(spark: SparkSession, path: String, keepVersions: Int = 1): Unit = {
-    val cur = currentVersion(spark, path).getOrElse(return)
-    val floor = cur - (keepVersions - 1).max(0)
     val (fs, lp) = Fs.resolve(spark, logDir(path))
-    fs.listStatus(lp).toIndexedSeq.map(_.getPath).foreach { p =>
-      val n = p.getName
-      if (n.startsWith("v") && n.endsWith(".json") &&
-          n.stripPrefix("v").stripSuffix(".json").toLong < floor)
-        fs.delete(p, false)
-      if (n.startsWith("_tmp-")) fs.delete(p, false) // crashed commit debris
-    }
-    val live = (floor to cur)
-      .flatMap(v => scala.util.Try(state(spark, path, Some(v))).toOption.flatten)
+    if (!fs.exists(lp)) return
+    val logFiles = fs.listStatus(lp).toIndexedSeq.map(_.getPath)
+    val versions = logFiles.flatMap(p => versionOf(p.getName)).sorted
+    if (versions.isEmpty) return
+    val kept = versions.takeRight(keepVersions.max(1)).toSet
+    val live = kept.toSeq.flatMap(v => state(spark, path, Some(v)))
       .flatMap(_.entries.map(_.dir)).toSet
+    logFiles.foreach { p =>
+      if (versionOf(p.getName).exists(v => !kept.contains(v)) ||
+          p.getName.startsWith("_tmp-")) // crashed commit debris
+        fs.delete(p, false)
+    }
     Fs.listDirs(spark, path).map(_.getName)
       .filter(n => n.startsWith("data-") && !live.contains(n))
       .foreach(n => Fs.deleteDir(spark, s"$path/$n"))

@@ -40,7 +40,7 @@ object Similarity {
     * one scan + one v/norm2 derivation total, where the un-shared form
     * paid one per consumer. Pruning drops the raw float `embedding`
     * column so the checkpoint stores half the bytes. Blocks are freed by
-    * the context cleaner (or Bench's releaseAll) once the result is
+    * the context cleaner (or `Sessions.releaseAll`) once the result is
     * dereferenced — the knnPq checkpoint discipline. */
   private[graft] def preparedCk(spark: SparkSession, dir: String): DataFrame =
     prepared(spark, dir).select(col("vec_id"), col("v"), col("norm2"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
 import graft.dedup.Dedup
-import graft.engine.{Fs, Layers}
+import graft.engine.{Fs, Layers, Par}
 
 /** Incremental near-duplicate CLUSTER maintenance — the streaming
   * companion to [[graft.dedup.Dedup.dedupIncremental]] (round-11 brief
@@ -136,10 +136,15 @@ object ClusterMaintain {
     * the group-contraction checkpoint), (b) the broadcast guard
     * short-circuits on the raw count (`nGroups ≤ n` always — the group
     * count job only runs when the raw count alone can't prove the
-    * guard), and (c) the three store publishes run CONCURRENTLY on
-    * futures: the index publish depends only on the contraction and
-    * overlaps the whole candidate + fixpoint chain; the label and merge
-    * publishes overlap each other. Publish order never mattered for the
+    * guard), and (c) the three store publishes run CONCURRENTLY through
+    * [[graft.engine.Par]]: the index publish depends only on the
+    * contraction and overlaps the whole candidate + fixpoint chain; the
+    * label and merge publishes overlap each other. A failure anywhere
+    * surfaces only after every publish already started has finished, so
+    * no writer outlives the call (a replay racing one would meet a live
+    * `_staging-*` dir that the single-writer sweep of
+    * [[graft.engine.Layers.replacePartitionsAtomic]] treats as crash
+    * debris). Publish order never mattered for the
     * exactly-once contract — a replayed batch overwrites all three
     * batch-keyed partitions idempotently, and no reader consumes
     * batch-N partitions during ingest N (single-writer, readers see
@@ -148,9 +153,6 @@ object ClusterMaintain {
   def ingestBatch(batch: DataFrame, root: String, batchId: Long,
       threshold: Double = 0.9, maxBroadcastDocs: Long = 500000L): Long = {
     val spark = batch.sparkSession
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     val n = batch.select(col("doc_id")).count()
     val idxPath = s"$root/index"
     val labPath = s"$root/labels"
@@ -196,83 +198,79 @@ object ClusterMaintain {
     // read excludes batch_id=N rows anyway, so ordering it first costs
     // nothing.
     val stored = readOrEmpty(spark, idxPath, CorpusIngest.indexSchema, batchId)
-    // the index publish needs only the contraction — it rides a future
-    // across the entire candidate + fixpoint chain below
-    val idxPub = Future {
-      Layers.replacePartitionsPath(
-        gsig.withColumn("batch_id", lit(batchId)), idxPath, Seq("batch_id"))
-    }
-    // survivor-scale; feeds the touched-set, the graph and the merge legs
-    val cand = candidateEdges(gsig, stored, threshold, broadcastOk).localCheckpoint(true)
-    val cross = cand.filter(!col("in_batch"))
-    val inB = cand.filter(col("in_batch"))
-      .select(col("cdoc").as("bdoc"), col("bdoc").as("bdoc2"))
-    // touched corpus groups -> their stored labels: the label store
-    // scans MAP-ONLY against the broadcast survivor set. Labels arrive
-    // UNRESOLVED — the prior merge forest rides into the component
-    // graph as EDGES below, so stale-chain resolution happens inside
-    // the one fixpoint instead of in a second one (a separate per-batch
-    // mergeResolution fixpoint was measured ~0.4 s of pure fixed cost;
-    // CC-based resolution only needs SOME path from each stale label to
-    // the current min, so recording the touched labels' new components
-    // as merge rows keeps every future resolution correct without ever
-    // rewriting old rows). Checkpointed: feeds the graph leg and the
-    // new-merge leg.
-    val labStored = readOrEmpty(spark, labPath, labelSchema, batchId)
-    val crossLab = {
-      val c = cross.select(col("bdoc"), col("cdoc"))
-      val probe = if (broadcastOk) broadcast(c) else c
-      labStored.join(probe, labStored("doc_id") === probe("cdoc"))
-        .select(col("bdoc"), col("label")).localCheckpoint(true)
-    }
-    val priorMerges = readOrEmpty(spark, mrgPath, mergeSchema, batchId)
-    // the per-batch component graph: batch group reps + ONE node per
-    // touched cluster label + the (cluster-event-scale) merge forest —
-    // never the corpus. REBALANCE before the fixpoint: the legs are
-    // broadcast-join outputs arriving over the SCAN's partitioning, so
-    // the RDD loop would otherwise inherit dozens of near-empty
-    // partitions as its HashPartitioner width, paying rounds × stages ×
-    // empty-task scheduling; one survivor-scale AQE-coalesced shuffle
-    // right-sizes the loop to the data.
-    val edges = inB.select(col("bdoc").as("a"), col("bdoc2").as("b"))
-      .unionAll(crossLab.select(col("bdoc").as("a"), col("label").as("b")))
-      .unionAll(priorMerges.select(col("old_label").as("a"), col("new_label").as("b")))
-      .hint("rebalance")
-    val comp = Dedup.connectedComponents(edges, "a", "b") // checkpointed
-    // expand reps back to members: a group is a clique, so every member
-    // shares the rep's component (or the rep itself when untouched);
-    // empty-token docs have no rep and label themselves
-    val memRep = groups.select(col("doc_id").as("__rep"), explode(col("mem")).as("__m"))
-    val batchLabels = batch.select(col("doc_id"))
-      .join(memRep, col("doc_id") === col("__m"), "left")
-      .join(comp.withColumnRenamed("node", "__n"), col("__rep") === col("__n"), "left")
-      .select(col("doc_id"),
-        coalesce(col("component"), col("__rep"), col("doc_id")).as("label"))
-    // bridged clusters: a touched stored label whose component moved —
-    // one row (label -> new component min) is enough for all future
-    // CC-based resolutions, including of stale chain interiors
-    val newMerges = crossLab.select(col("label")).distinct()
-      .join(comp, col("label") === col("node"))
-      .filter(col("component") =!= col("label"))
-      .select(col("label").as("old_label"), col("component").as("new_label"))
-      .distinct()
-    // exactly-once batch-keyed publishes, label and merge legs
-    // concurrent (both derive from the checkpointed fixpoint); empty
-    // merge sets clear their partition explicitly via delete-then-write
-    // (an empty frame carries no partitions, so the delete IS the
-    // empty-case cleanup — one fs metadata op vs one extra Spark job)
-    val labPub = Future {
-      Layers.replacePartitionsPath(
-        batchLabels.withColumn("batch_id", lit(batchId)), labPath, Seq("batch_id"))
-    }
-    val mrgPub = Future {
-      Fs.deleteDir(spark, s"$mrgPath/batch_id=$batchId")
-      Layers.replacePartitionsPath(
-        newMerges.withColumn("batch_id", lit(batchId)), mrgPath, Seq("batch_id"))
-    }
-    Await.result(idxPub, Duration.Inf)
-    Await.result(labPub, Duration.Inf)
-    Await.result(mrgPub, Duration.Inf)
+    // the index publish needs only the contraction — it runs beside the
+    // entire candidate + fixpoint chain and that chain's two publishes
+    val idxPub = () => Layers.replacePartitionsPath(
+      gsig.withColumn("batch_id", lit(batchId)), idxPath, Seq("batch_id"))
+    Par.run(idxPub, () => {
+      // survivor-scale; feeds the touched-set, the graph and the merge legs
+      val cand = candidateEdges(gsig, stored, threshold, broadcastOk).localCheckpoint(true)
+      val cross = cand.filter(!col("in_batch"))
+      val inB = cand.filter(col("in_batch"))
+        .select(col("cdoc").as("bdoc"), col("bdoc").as("bdoc2"))
+      // touched corpus groups -> their stored labels: the label store
+      // scans MAP-ONLY against the broadcast survivor set. Labels arrive
+      // UNRESOLVED — the prior merge forest rides into the component
+      // graph as EDGES below, so stale-chain resolution happens inside
+      // the one fixpoint instead of in a second one (a separate per-batch
+      // mergeResolution fixpoint was measured ~0.4 s of pure fixed cost;
+      // CC-based resolution only needs SOME path from each stale label to
+      // the current min, so recording the touched labels' new components
+      // as merge rows keeps every future resolution correct without ever
+      // rewriting old rows). Checkpointed: feeds the graph leg and the
+      // new-merge leg.
+      val labStored = readOrEmpty(spark, labPath, labelSchema, batchId)
+      val crossLab = {
+        val c = cross.select(col("bdoc"), col("cdoc"))
+        val probe = if (broadcastOk) broadcast(c) else c
+        labStored.join(probe, labStored("doc_id") === probe("cdoc"))
+          .select(col("bdoc"), col("label")).localCheckpoint(true)
+      }
+      val priorMerges = readOrEmpty(spark, mrgPath, mergeSchema, batchId)
+      // the per-batch component graph: batch group reps + ONE node per
+      // touched cluster label + the (cluster-event-scale) merge forest —
+      // never the corpus. REBALANCE before the fixpoint: the legs are
+      // broadcast-join outputs arriving over the SCAN's partitioning, so
+      // the RDD loop would otherwise inherit dozens of near-empty
+      // partitions as its HashPartitioner width, paying rounds × stages ×
+      // empty-task scheduling; one survivor-scale AQE-coalesced shuffle
+      // right-sizes the loop to the data.
+      val edges = inB.select(col("bdoc").as("a"), col("bdoc2").as("b"))
+        .unionAll(crossLab.select(col("bdoc").as("a"), col("label").as("b")))
+        .unionAll(priorMerges.select(col("old_label").as("a"), col("new_label").as("b")))
+        .hint("rebalance")
+      val comp = Dedup.connectedComponents(edges, "a", "b") // checkpointed
+      // expand reps back to members: a group is a clique, so every member
+      // shares the rep's component (or the rep itself when untouched);
+      // empty-token docs have no rep and label themselves
+      val memRep = groups.select(col("doc_id").as("__rep"), explode(col("mem")).as("__m"))
+      val batchLabels = batch.select(col("doc_id"))
+        .join(memRep, col("doc_id") === col("__m"), "left")
+        .join(comp.withColumnRenamed("node", "__n"), col("__rep") === col("__n"), "left")
+        .select(col("doc_id"),
+          coalesce(col("component"), col("__rep"), col("doc_id")).as("label"))
+      // bridged clusters: a touched stored label whose component moved —
+      // one row (label -> new component min) is enough for all future
+      // CC-based resolutions, including of stale chain interiors
+      val newMerges = crossLab.select(col("label")).distinct()
+        .join(comp, col("label") === col("node"))
+        .filter(col("component") =!= col("label"))
+        .select(col("label").as("old_label"), col("component").as("new_label"))
+        .distinct()
+      // exactly-once batch-keyed publishes, label and merge legs
+      // concurrent (both derive from the checkpointed fixpoint); empty
+      // merge sets clear their partition explicitly via delete-then-write
+      // (an empty frame carries no partitions, so the delete IS the
+      // empty-case cleanup — one fs metadata op vs one extra Spark job)
+      Par.run(
+        () => Layers.replacePartitionsPath(
+          batchLabels.withColumn("batch_id", lit(batchId)), labPath, Seq("batch_id")),
+        () => {
+          Fs.deleteDir(spark, s"$mrgPath/batch_id=$batchId")
+          Layers.replacePartitionsPath(
+            newMerges.withColumn("batch_id", lit(batchId)), mrgPath, Seq("batch_id"))
+        })
+    })
     n
   }
 

@@ -52,32 +52,17 @@ class BenchPriorsSpec extends AnyFunSuite {
     assert(Bench.stallSuspects(Map("slow" -> 4.0), prior).isEmpty)
   }
 
-  test("bandFactor: median of probe/prior ratios; probes without a positive prior drop out") {
-    val prior = Map("a" -> 2.0, "b" -> 1.0, "c" -> 0.0)
-    // ratios: a->1.25, a->1.35, b->1.30; median = 1.30
-    val probes = Seq("a" -> 2.5, "a" -> 2.7, "b" -> 1.3,
-      "c" -> 9.0 /* zero prior: dropped */, "d" -> 5.0 /* no prior: dropped */,
-      "b" -> -1.0 /* failed probe: dropped */)
-    assert(Bench.bandFactor(probes, prior).contains(1.30))
-    // no usable ratio -> None, never NaN/0
-    assert(Bench.bandFactor(Seq("d" -> 5.0), prior).isEmpty)
-    assert(Bench.bandFactor(Seq.empty, prior).isEmpty)
-    // lower-middle median for even counts (consistent with the query median)
-    assert(Bench.bandFactor(Seq("a" -> 2.0, "b" -> 3.0), prior).contains(1.0))
-  }
-
   test("sameSfPriors: cross-sf priors are absent for EVERY consumer (stall suspects included)") {
     val prior = Map("q1" -> 2.5, "q2" -> 0.75)
     // same sf (or a legacy artifact with no sf field): priors usable
     assert(Bench.sameSfPriors(prior, Some("/root/testdata/sf0.1"), "/root/testdata/sf0.1") == prior)
     assert(Bench.sameSfPriors(prior, None, "/root/testdata/sf0.1") == prior)
     // sf mismatch: empty — a sf0.001 smoke against sf0.1 priors must
-    // neither fake a ~0.1 band_factor nor re-probe sub-scale "stalls",
+    // neither fake a sub-scale set_factor nor re-probe sub-scale "stalls",
     // and a LARGER-sf run must not re-probe every query as a stall
     val crossSf = Bench.sameSfPriors(prior, Some("/root/testdata/sf0.001"), "/root/testdata/sf0.1")
     assert(crossSf.isEmpty)
     assert(Bench.stallSuspects(Map("q1" -> 9.0), crossSf).isEmpty)
-    assert(Bench.bandFactor(Seq("q1" -> 9.0), crossSf).isEmpty)
   }
 
   test("shouldReplacePriors: best-committed-recording policy") {
@@ -100,26 +85,6 @@ class BenchPriorsSpec extends AnyFunSuite {
     assert(Bench.shouldReplacePriors(tmpJson("{not json"), 157.2, sf, 2))
     assert(Bench.parsePriorTotal(good).contains(132.9))
     assert(Bench.parsePriorTotal(tmpJson("{not json")).isEmpty)
-  }
-
-  test("parsePriorCanaries: per-canary median across the artifact's steady legs; absent blocks yield None") {
-    val f = tmpJson(
-      """{"metric":"total","value":10.0,"queries":{"bpe_segment":2.2},
-         "env":{"canary_start":{"bpe_segment":1.6,"quality_ols":0.36},
-                "canary_mid":{"bpe_segment":1.1,"quality_ols":0.27},
-                "canary_end":{"bpe_segment":1.3,"quality_ols":0.34,"top_products":1.0}},
-         "sf":"x"}""".replaceAll("\n\\s*", ""))
-    val got = Bench.parsePriorCanaries(f).get
-    // bpe: median(1.6, 1.1, 1.3) = 1.3; ols: median(.36,.27,.34) = .34;
-    // top: single leg -> itself
-    assert(got("bpe_segment") == 1.3 && got("quality_ols") == 0.34 &&
-      got("top_products") == 1.0)
-    // pre-r12 artifacts (no env/canary blocks) -> None, caller falls
-    // back to timed medians; malformed/missing files -> None
-    assert(Bench.parsePriorCanaries(tmpJson(
-      """{"metric":"total","value":10.0,"queries":{"q":1.0},"sf":"x"}""")).isEmpty)
-    assert(Bench.parsePriorCanaries(tmpJson("{not json")).isEmpty)
-    assert(Bench.parsePriorCanaries(new java.io.File("/nonexistent/B.json")).isEmpty)
   }
 
   test("setFactor: median per-query ratio over the common set; sentinels and fresh queries drop out") {

@@ -6,6 +6,31 @@ import org.apache.spark.sql.execution.FormattedMode
 import graft.dedup.Dedup
 import graft.streaming.ClusterMaintain
 
+/** Local-fs scheme for one [[ClusterMaintain.ingestBatch]] publishing its
+  * three stores at once: the rename that publishes an `index` partition
+  * fails (returns false, as Hadoop signals errors), while the one that
+  * publishes a `labels` partition is held back and stamps when it is
+  * done — so a spec can tell whether the index failure reached the
+  * caller before the label publish finished. */
+class HeldPublishFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("heldpub:///")
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean = {
+    val publish = dst.getName.startsWith("batch_id=")
+    dst.getParent.getName match {
+      case "index" if publish => false
+      case "labels" if publish =>
+        Thread.sleep(1500)
+        try super.rename(src, dst) finally HeldPublishFs.labelsDone = System.nanoTime()
+      case _ => super.rename(src, dst)
+    }
+  }
+}
+
+object HeldPublishFs {
+  @volatile var labelsDone = 0L
+}
+
 /** Pins [[graft.streaming.ClusterMaintain]] — incremental near-dup
   * cluster maintenance (round-11 brief #4). The pins, in order of
   * importance: (1) the incremental invariant — maintained labels equal
@@ -266,6 +291,27 @@ class ClusterMaintainSpec extends SparkSpec {
       val expected = docs.map(_._1).map(id => id -> comp.getOrElse(id, id)).toMap
       assert(got == expected,
         s"trial $trial (nBatches=$nBatches): got $got expected $expected")
+    }
+  }
+
+  test("a failing publish reaches the caller only after its sibling publishes finish, leaving no staging dirs") {
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration.set("fs.heldpub.impl", classOf[HeldPublishFs].getName)
+    val local = Files.createTempDirectory("cm_pubfail").toString + "/store"
+    val batch = Seq(10L -> "alpha beta gamma delta epsilon zeta eta theta iota kappa",
+      20L -> "one two three four five six seven eight nine ten").toDF("doc_id", "text")
+    HeldPublishFs.labelsDone = 0L
+    val e = intercept[java.io.IOException](
+      ClusterMaintain.ingestBatch(batch, s"heldpub://$local", 0L))
+    val caught = System.nanoTime()
+    assert(e.getMessage.contains("could not publish partition batch_id=0"), e.getMessage)
+    assert(HeldPublishFs.labelsDone != 0L && HeldPublishFs.labelsDone <= caught,
+      "the index failure surfaced while the label publish was still writing")
+    assert(Files.exists(java.nio.file.Paths.get(s"$local/labels/batch_id=0")))
+    for (store <- Seq("index", "labels", "merges")) {
+      val dir = new java.io.File(s"$local/$store")
+      val debris = Option(dir.list()).toSeq.flatten.filter(_.startsWith("_staging-"))
+      assert(debris.isEmpty, s"$store keeps $debris")
     }
   }
 

@@ -260,6 +260,34 @@ class ManifestSpec extends SparkSpec {
     assert(onDisk == refd)
   }
 
+  test("vacuum aborts before any delete when a kept manifest is unreadable") {
+    val path = Files.createTempDirectory("man_vac_corrupt").toString
+    Manifest.write(mk(0), path, Seq("p"))
+    Manifest.write(mk(1), path, Seq("p"))
+    val log = java.nio.file.Paths.get(path, "_graft_log")
+    val head = log.resolve(f"v${1L}%020d.json")
+    Files.write(head, "{\"version\": 1, \"entr".getBytes("UTF-8"))
+    Files.deleteIfExists(log.resolve(s".${head.getFileName}.crc"))
+    def tree() = Files.walk(java.nio.file.Paths.get(path)).toArray.map(_.toString).sorted.toSeq
+    val before = tree()
+    intercept[java.io.IOException](Manifest.vacuum(spark, path, keepVersions = 1))
+    assert(tree() == before, "an unreadable head must not count as referencing nothing")
+    assert(Manifest.read(spark, path, Some(0L)).count() == 60)
+  }
+
+  test("vacuum keeps the newest keepVersions manifests of a sparse epoch-keyed log") {
+    val path = Files.createTempDirectory("man_vac_sparse").toString
+    assert(Manifest.writeVersioned(mk(0), path, Seq("p"), 0L))
+    assert(Manifest.writeVersioned(mk(1), path, Seq("p"), 5L))
+    Manifest.vacuum(spark, path, keepVersions = 2)
+    assert(Manifest.history(spark, path).collect().map(_.getLong(0)).toSeq == Seq(0L, 5L))
+    assert(Manifest.read(spark, path, Some(0L)).filter(col("version") === 0).count() == 60)
+    assert(Manifest.read(spark, path).filter(col("version") === 1).count() == 60)
+    Manifest.vacuum(spark, path, keepVersions = 1)
+    assert(Manifest.history(spark, path).collect().map(_.getLong(0)).toSeq == Seq(5L))
+    assert(Fs.listDirs(spark, path).map(_.getName).count(_.startsWith("data-")) == 1)
+  }
+
   test("losing the commit race surfaces as ConcurrentModificationException, not silent overwrite") {
     val path = Files.createTempDirectory("man6").toString
     Manifest.write(mk(0), path, Seq("p"))
