@@ -348,7 +348,7 @@ object ScaleProbe {
               .coalesce(1).write.mode("overwrite").parquet(s"$idx/stats")
           }
           def fakeDrift(cids: Seq[Int]): Unit =
-            spark.read.parquet(s"$idx/stats")
+            graft.engine.Fs.readParquet(spark, s"$idx/stats")
               .filter(col("cid").isin(cids: _*))
               .select(col("cid"), col("n_fit").as("n_batch"),
                 (col("fit_mean_cos") - lit(1.0)).as("batch_mean_cos"),
@@ -425,7 +425,7 @@ object ScaleProbe {
           Seq("ingestion_month")); 1L
       }
       timed("orders_readback_agg")(
-        spark.read.parquet(wRoot).groupBy(col("ingestion_month"))
+        graft.engine.Fs.readParquet(spark, wRoot).groupBy(col("ingestion_month"))
           .agg(count(lit(1))).count())
       val mRoot = "/tmp/graft_midtail_m"
       timed("manifest_write (fresh)") {

@@ -88,10 +88,12 @@ object Sessions {
     * the ContextCleaner reap them, bleeding storage/execution memory
     * into whatever runs next (the round-4 bench interference). Safe to
     * call between queries: prior DataFrames are dead, so no live
-    * lineage can need the dropped blocks. */
+    * lineage can need the dropped blocks. Checkpointed RDDs are freed
+    * through the context, which skips the WARN `RDD.unpersist` logs for
+    * each of them. */
   def releaseAll(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    spark.sparkContext.getPersistentRDDs.values.foreach(org.apache.spark.rdd.RddRelease.unpersist)
     System.gc()
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.engine.Fs
 
 /** Fixture table access (TESTDATA.md): one parquet file per table under a
   * scale-factor directory. Mirrors the reference's catalog scans
@@ -15,7 +16,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Fs.readParquet(spark, s"$dir/$name.parquet")
 
   def region(spark: SparkSession, dir: String): DataFrame     = read(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame     = read(spark, dir, "nation")

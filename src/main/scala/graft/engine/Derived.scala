@@ -36,7 +36,7 @@ object Derived {
     * fresh path, exactly as it must for Spark's own file-index caches. */
   def cached(spark: SparkSession, name: String, dir: String)
       (build: => DataFrame): DataFrame =
-    spark.read.parquet(relPath(spark, name, dir)(build))
+    Fs.readParquet(spark, relPath(spark, name, dir)(build))
 
   private def relPath(spark: SparkSession, name: String, dir: String)
       (build: => DataFrame): String =

@@ -1,8 +1,8 @@
 package graft.engine
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Storage-portable filesystem primitives, resolved through the Hadoop
   * FileSystem API so every production path works identically on
@@ -113,6 +113,58 @@ object Fs {
       try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
       finally r.close()
     }.sum
+  }
+
+  /** `spark.read.parquet(path)` without its schema-inference job. Spark
+    * infers a parquet dir's schema from the footer of its first data file
+    * (by path) in a one-task job; this reads that same footer on the
+    * driver, through Spark's own converter, and hands the result to
+    * `spark.read.schema`. Partition columns are still discovered and
+    * appended by Spark, so the schema is the one Spark would infer.
+    * Where that equivalence is not plain (no data file at `path`, which
+    * also covers a glob; a partition column also stored in the file;
+    * schema merging on; an unreadable footer) the read is exactly
+    * `spark.read.parquet(path)`, so errors stay Spark's. */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val dataSchema =
+      if (spark.conf.get("spark.sql.parquet.mergeSchema") == "true") None
+      else firstDataFile(spark, path).flatMap { case (file, partKeys) =>
+        scala.util.Try(
+          org.apache.spark.sql.execution.datasources.parquet.FooterSchema.read(spark, file))
+          .toOption.flatten
+          .filterNot(_.fieldNames.exists(f => partKeys.exists(_.equalsIgnoreCase(f))))
+      }
+    dataSchema.fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
+
+  /** The first data file under `path` in full-path order — the file
+    * Spark's parquet inference reads — with the partition keys of the
+    * `k=v` dirs above it. Names Spark's file index hides (`_x`, `.x`,
+    * `x._COPYING_`; `_k=v` dirs stay) are skipped. Children sort by name
+    * with a `/` appended to dirs, which orders the walk exactly as full
+    * paths sort, so the walk stops at the first file found. */
+  private def firstDataFile(spark: SparkSession,
+      path: String): Option[(FileStatus, List[String])] = {
+    val (fs, p) = resolve(spark, path)
+    def hidden(name: String) =
+      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+        name.endsWith("._COPYING_")
+    def walk(dir: Path, keys: List[String]): Option[(FileStatus, List[String])] =
+      fs.listStatus(dir).toSeq.filterNot(s => hidden(s.getPath.getName))
+        .sortBy(s => if (s.isDirectory) s.getPath.getName + "/" else s.getPath.getName)
+        .iterator.flatMap { s =>
+          val name = s.getPath.getName
+          if (s.isDirectory) walk(s.getPath, name.split("=", 2) match {
+            case Array(k, _) =>
+              org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(k) :: keys
+            case _ => keys
+          })
+          else Some((s, keys))
+        }.nextOption()
+    try {
+      val root = fs.getFileStatus(p)
+      if (root.isDirectory) walk(p, Nil) else Some((root, Nil))
+    } catch { case _: java.io.FileNotFoundException => None }
   }
 
   /** Recursive directory copy — snapshot RESTORE for memoized store

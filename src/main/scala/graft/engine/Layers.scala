@@ -246,9 +246,9 @@ object Layers {
     * 100 TB). */
   def compact(spark: SparkSession, inPath: String, outPath: String,
       nFiles: Int): Long = {
-    val df = spark.read.parquet(inPath)
+    val df = Fs.readParquet(spark, inPath)
     df.repartition(nFiles).write.mode(SaveMode.Overwrite).parquet(outPath)
-    spark.read.parquet(outPath).count()
+    Fs.readParquet(spark, outPath).count()
   }
 
   /** Bucketed table write: co-locates join keys so repeated fact⋈fact

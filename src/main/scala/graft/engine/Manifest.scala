@@ -36,10 +36,14 @@ import org.apache.spark.sql.types.StructType
   *
   * Old manifests remain readable — `read(spark, path, Some(v))` is time
   * travel — until [[vacuum]] drops them. At 100 TB the manifest lists
-  * leaf partitions (thousands), not files (millions): listing cost stays
-  * flat, and scan planning reads one small JSON instead of a recursive
-  * directory walk of the table root (the object-store listing that kills
-  * large tables).
+  * leaf partitions (thousands), not files (millions), and scan planning
+  * starts from one small JSON instead of a recursive directory walk of
+  * the table root (the object-store listing that kills large tables):
+  * entries pruned by partition value or stats ([[readWhere]],
+  * [[readPoint]]) are never listed at all. The leaves a read keeps are
+  * still listed by Spark's file index, which runs that listing as a
+  * Spark job once a read keeps more than
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) leaves.
   */
 object Manifest {
 
@@ -135,13 +139,15 @@ object Manifest {
       .toIndexedSeq: _*)
   }
 
-  /** Stats-pruned range scan — the manifest-level half of Delta/Iceberg
-    * data skipping: entries whose recorded `[min, max]` for `column`
-    * cannot intersect `[lo, hi]` are dropped BEFORE the scan is planned,
-    * so their files are never listed or opened (at 100 TB that's the
-    * difference between touching 3 partitions and 3,000). Entries with no
-    * stats for the column are conservatively kept, and the residual
-    * filter is applied regardless, so the result always equals
+  /** Pruned range scan — the manifest-level half of Delta/Iceberg data
+    * skipping: entries that cannot hold a row with `column` in `[lo, hi]`
+    * are dropped BEFORE the scan is planned, so their files are never
+    * listed or opened (at 100 TB that's the difference between touching
+    * 3 partitions and 3,000). A partition column prunes on the exact
+    * value encoded in each entry's leaf path; any column prunes on the
+    * entry's recorded `[min, max]` stats. Entries with neither for the
+    * column are conservatively kept, and the residual filter is applied
+    * regardless, so the result always equals
     * `read(...).filter(lo <= col && col <= hi)` — pruning is purely an
     * I/O optimization, never a semantics change. Bounds compare
     * numerically for numeric columns and lexically on the string
@@ -187,11 +193,8 @@ object Manifest {
   private[graft] def bloomAdmits(spark: SparkSession, st: State,
       schema: StructType, column: String, value: Any,
       entries: Seq[Entry]): Seq[Entry] = {
-    import org.apache.spark.sql.functions.{lit, xxhash64}
     if (!st.bloomCols.exists(_.contains(column))) return entries
-    val h = spark.range(1)
-      .select(xxhash64(lit(value).cast(schema(column).dataType)))
-      .head().getLong(0)
+    val h = probeHash(spark, value, schema(column).dataType)
     entries.filter { e =>
       e.bloom.flatMap(_.get(column)) match {
         case None => true // no bloom recorded — cannot prune
@@ -205,8 +208,21 @@ object Manifest {
     }
   }
 
-  /** Entries whose stats admit a row in `[lo, hi]` (private[graft]: the
-    * skipping spec asserts the pruned set directly). */
+  /** `xxhash64(lit(value).cast(dataType))` evaluated on the driver — the
+    * same Catalyst expressions a query would run, without a Spark job. */
+  private[graft] def probeHash(spark: SparkSession, value: Any,
+      dataType: org.apache.spark.sql.types.DataType): Long = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, XxHash64}
+    new XxHash64(Seq(Cast(Literal.create(value), dataType,
+      Some(spark.conf.get("spark.sql.session.timeZone")))))
+      .eval().asInstanceOf[Long]
+  }
+
+  /** Entries that may hold a row with `column` in `[lo, hi]`: on a
+    * partition column, by the value in the entry's leaf path (exact; a
+    * null partition holds no row any bound admits); on any column, by
+    * the entry's stats. private[graft]: the skipping spec asserts the
+    * pruned set directly. */
   private[graft] def overlapping(st: State, schema: StructType,
       column: String, lo: Option[Any], hi: Option[Any]): Seq[Entry] = {
     val numeric = schema(column).dataType
@@ -215,13 +231,31 @@ object Manifest {
       if (numeric) BigDecimal(a).compare(BigDecimal(b)) else a.compareTo(b)
     val loS = lo.map(_.toString)
     val hiS = hi.map(_.toString)
+    // a value the rule cannot compare (e.g. a NaN partition) is kept
+    def admits(mn: String, mx: String): Boolean =
+      scala.util.Try(loS.forall(l => cmp(mx, l) >= 0) &&
+        hiS.forall(h => cmp(mn, h) <= 0)).getOrElse(true)
+    val level = st.partitionCols.indexOf(column)
     st.entries.filter { e =>
-      e.stats.flatMap(_.get(column)) match {
-        case Some(Seq(mn, mx)) =>
-          loS.forall(l => cmp(mx, l) >= 0) && hiS.forall(h => cmp(mn, h) <= 0)
+      val byPart = level < 0 || (partValue(e.part, level) match {
+        case Some(v) => admits(v, v)
+        case None => loS.isEmpty && hiS.isEmpty
+      })
+      byPart && (e.stats.flatMap(_.get(column)) match {
+        case Some(Seq(mn, mx)) => admits(mn, mx)
         case _ => true // no stats → cannot prune
-      }
+      })
     }
+  }
+
+  /** The value of the `level`-th partition column in a leaf path like
+    * `a=1/b=x%2Fy`, unescaped as Spark wrote it; None for the null
+    * partition. */
+  private def partValue(part: String, level: Int): Option[String] = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    val raw = part.split('/')(level).split("=", 2)(1)
+    if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) None
+    else Some(ExternalCatalogUtils.unescapePathName(raw))
   }
 
   /** Full-overwrite commit: the new snapshot is exactly `df`.
@@ -354,12 +388,15 @@ object Manifest {
 
   /** Leaf-dir name for a row's partition values — must render to the same
     * names Spark wrote (true for the int/string/date partition keys used
-    * across this engine; exotic types needing URI-escaping would need
-    * Spark's ExternalCatalogUtils escaping here). */
-  private def renderPart(pcols: Seq[String], r: org.apache.spark.sql.Row): String =
+    * across this engine, escaped as Spark escapes them; other types would
+    * need Spark's cast-to-string rendering here). */
+  private def renderPart(pcols: Seq[String], r: org.apache.spark.sql.Row): String = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils._
     pcols.map { c =>
-      s"$c=${Option(r.getAs[Any](c)).map(_.toString).getOrElse("__HIVE_DEFAULT_PARTITION__")}"
+      escapePathName(c) + "=" + Option(r.getAs[Any](c))
+        .map(v => escapePathName(v.toString)).getOrElse(DEFAULT_PARTITION_NAME)
     }.mkString("/")
+  }
 
   /** Per-entry min/max for `statsCols`, computed by reading back the
     * freshly written commit dir (so stats describe the actual files, and

@@ -110,8 +110,9 @@ object DataQuality {
       Fs.deleteDir(spark, ck); Fs.deleteDir(spark, out)
       val (_, report) = ExtractLoad.runGated(spark, src, "orders",
         "o_orderkey", "o_orderdate", ck, out, "2024-01-01", rules, ri)
-      // landed count comes off DISK — the end-to-end proof
-      val landed = scala.util.Try(spark.read.parquet(out).count()).getOrElse(0L)
+      // landed count comes off DISK — the end-to-end proof; a rejected
+      // batch never writes `out`
+      val landed = if (Fs.exists(spark, out)) Fs.readParquet(spark, out).count() else 0L
       report.withColumn("batch", lit(tag)).withColumn("rows_landed", lit(landed))
     }
     val clean = Tables.orders(spark, dir)

@@ -534,7 +534,7 @@ object Extras {
         date_format(col("o_orderdate"), "yyyyMM").cast("int"))
     graft.engine.Layers.replacePartitionsPath(src, out, Seq("ingestion_month"))
     graft.engine.Layers.replacePartitionsPath(src, out, Seq("ingestion_month")) // the retry
-    spark.read.parquet(out)
+    graft.engine.Fs.readParquet(spark, out)
       .groupBy(col("ingestion_month"))
       .agg(count(lit(1)).as("n_orders"),
         Fns.money(Fns.sumMoney(col("o_totalprice"))).as("total_value"))

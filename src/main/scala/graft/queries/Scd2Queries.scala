@@ -134,7 +134,7 @@ object Scd2Queries {
         .write.mode("overwrite").parquet(s"$root/v1"),
       () => batch.localCheckpoint(true))
     val b = results(1).asInstanceOf[DataFrame]
-    val dim0 = spark.read.parquet(s"$root/v1")
+    val dim0 = Fs.readParquet(spark, s"$root/v1")
     val (report, maxSk) = Scd2.gateBatchesWithMaxSk(dim0, Seq(tag -> b),
       cfg, rules, maxExpirePct = 50)
     val rows = report.collect()
@@ -145,7 +145,7 @@ object Scd2Queries {
         .coalesce(1).write.mode("overwrite").parquet(s"$root/v2")
     // landed state comes off DISK: the batch's v2 if its merge committed,
     // else the untouched v1
-    val landed = spark.read.parquet(
+    val landed = Fs.readParquet(spark,
         if (promoted) s"$root/v2" else s"$root/v1")
       .agg(count(lit(1)).as("__versions"),
         sum(when(col(cfg.currentCol), 1L).otherwise(0L)).as("__current"))

@@ -514,8 +514,8 @@ object Similarity {
   private[graft] def knnIvfFromIndexOn(e: DataFrame, indexPath: String,
       k: Int, nprobe: Int): DataFrame = {
     val spark = e.sparkSession
-    val centDf = spark.read.parquet(s"$indexPath/centroids")
-    val corpus = spark.read.parquet(s"$indexPath/lists")
+    val centDf = graft.engine.Fs.readParquet(spark, s"$indexPath/centroids")
+    val corpus = graft.engine.Fs.readParquet(spark, s"$indexPath/lists")
     val queries = e.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("query_id"), col("v").as("va"), col("norm2").as("na2"))
     probeSearch(corpus, probesFor(queries, centDf, nprobe), k)
@@ -806,7 +806,7 @@ object Similarity {
   /** The stored coarse quantizer back as driver state — O(nClusters)
     * metadata, the collect an index SERVER does once at startup. */
   private[graft] def readStoredCoarse(spark: SparkSession, indexPath: String): Seq[Centroid] =
-    spark.read.parquet(s"$indexPath/centroids").collect()
+    graft.engine.Fs.readParquet(spark, s"$indexPath/centroids").collect()
       .map(r => Centroid(r.getInt(0), r.getSeq[Double](1), r.getDouble(2)))
       .toSeq.sortBy(_.cid)
 
@@ -820,7 +820,7 @@ object Similarity {
     * spec pins the round trip. O(m·codes) metadata. */
   private[graft] def readStoredFits(spark: SparkSession, indexPath: String,
       m: Int): Seq[Seq[Centroid]] = {
-    val flat = spark.read.parquet(s"$indexPath/codebooks").collect()
+    val flat = graft.engine.Fs.readParquet(spark, s"$indexPath/codebooks").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2), r.getDouble(3)))
     (0 until m).map { s =>
       flat.filter(t => t._1 == s && (t._4 != 0.0 || t._3.exists(_ != 0.0)))
@@ -878,7 +878,7 @@ object Similarity {
     val subDim = 64 / m
     val coarse = readStoredCoarse(spark, indexPath)
     val fits = readStoredFits(spark, indexPath, m)
-    val cbFlat = spark.read.parquet(s"$indexPath/codebooks").collect()
+    val cbFlat = graft.engine.Fs.readParquet(spark, s"$indexPath/codebooks").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2), r.getDouble(3))).toSeq
     val cbDf = pqCodebookDf(spark, cbFlat)
     // the whole batch_id=N subtree clears BEFORE the write, so the
@@ -912,7 +912,7 @@ object Similarity {
     // publishes no partition dir, hence the exists guard.
     val statsDir = s"$indexPath/stats_delta/batch_id=$batchId"
     if (!graft.engine.Fs.exists(spark, statsDir)) 0L
-    else spark.read.parquet(statsDir)
+    else graft.engine.Fs.readParquet(spark, statsDir)
       .agg(sum(col("n_batch"))).collect()(0).getLong(0)
   }
 
@@ -954,8 +954,8 @@ object Similarity {
         d.stripPrefix("batch_id=").toLong }
       .filter(_ < belowBatchId)
     if (foldIds.isEmpty) return 0L
-    val base = spark.read.parquet(s"$indexPath/lists")
-    val delta = spark.read.parquet(deltaPath)
+    val base = graft.engine.Fs.readParquet(spark, s"$indexPath/lists")
+    val delta = graft.engine.Fs.readParquet(spark, deltaPath)
       .filter(col("batch_id") < belowBatchId).drop("batch_id")
       .select(base.columns.map(col).toIndexedSeq: _*)
       .localCheckpoint(true)
@@ -991,8 +991,8 @@ object Similarity {
     val deltaStats = s"$indexPath/stats_delta"
     if (!graft.engine.Fs.exists(spark, statsPath) ||
         !graft.engine.Fs.exists(spark, deltaStats)) return Seq.empty
-    val fit = spark.read.parquet(statsPath)
-    val bat = spark.read.parquet(deltaStats)
+    val fit = graft.engine.Fs.readParquet(spark, statsPath)
+    val bat = graft.engine.Fs.readParquet(spark, deltaStats)
     val latest = bat.withColumn("__rn",
         org.apache.spark.sql.functions.row_number().over(
           org.apache.spark.sql.expressions.Window.partitionBy(col("cid"))
@@ -1108,10 +1108,10 @@ object Similarity {
     if (drifted.isEmpty) return 0
     val listsPath = s"$indexPath/lists"
     val deltaPath = s"$indexPath/delta"
-    val base = spark.read.parquet(listsPath)
+    val base = graft.engine.Fs.readParquet(spark, listsPath)
     val withDelta =
       if (graft.engine.Fs.exists(spark, deltaPath))
-        base.unionByName(spark.read.parquet(deltaPath)
+        base.unionByName(graft.engine.Fs.readParquet(spark, deltaPath)
           .filter(col("batch_id") < belowBatchId).drop("batch_id")
           .select(base.columns.map(col).toIndexedSeq: _*))
       else base
@@ -1146,7 +1146,7 @@ object Similarity {
     // centroid store: D rows replaced, the rest verbatim (merged frame
     // materialized before the self-overwrite)
     val centPath = s"$indexPath/centroids"
-    val mergedCents = spark.read.parquet(centPath)
+    val mergedCents = graft.engine.Fs.readParquet(spark, centPath)
       .filter(!col("cid").isin(drifted: _*))
       .unionByName(relabeled.map(c => (c.cid, c.c, c.cn2))
         .toDF("cid", "centroid", "cnorm2"))
@@ -1171,7 +1171,7 @@ object Similarity {
         graft.engine.Fs.listDirs(spark, deltaPath).isEmpty)
       graft.engine.Fs.deleteDir(spark, deltaPath)
     val statsPath = s"$indexPath/stats"
-    val mergedStats = spark.read.parquet(statsPath)
+    val mergedStats = graft.engine.Fs.readParquet(spark, statsPath)
       .filter(!col("cid").isin(drifted: _*))
       .unionByName(dStats)
       .localCheckpoint(true)
@@ -1295,8 +1295,8 @@ object Similarity {
     val e = preparedCk(spark, dir)
     val batch = e.filter(col("vec_id") % 4 === 3)
     ingestIvfPqBatch(batch, idx, 1L, m)
-    val fit = spark.read.parquet(s"$idx/stats")
-    val bat = spark.read.parquet(s"$idx/stats_delta").drop("batch_id")
+    val fit = graft.engine.Fs.readParquet(spark, s"$idx/stats")
+    val bat = graft.engine.Fs.readParquet(spark, s"$idx/stats_delta").drop("batch_id")
     fit.join(bat, Seq("cid"), "left")
       .select(col("cid"), col("n_fit"), col("fit_mean_cos"),
         coalesce(col("n_batch"), lit(0L)).as("n_batch"),
@@ -1397,7 +1397,7 @@ object Similarity {
         .foreach(f => graft.engine.Fs.setMtime(spark, f.toString, t))
     val t0 = graft.engine.Fs.mtime(spark, s"$io/in/f0")
     touch(s"$io/in/f0", t0); touch(s"$io/in/f1", t0 + 60000)
-    val schema = spark.read.parquet(s"$io/in/f0").schema
+    val schema = graft.engine.Fs.readParquet(spark, s"$io/in/f0").schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$io/in/*")
     val q = ivfPqSink(stream, idx, s"$io/ckpt", m,
@@ -1426,17 +1426,17 @@ object Similarity {
       k: Int, nprobe: Int, m: Int, shortlist: Int): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
-    val centDf = spark.read.parquet(s"$indexPath/centroids")
-    val cbFlat = spark.read.parquet(s"$indexPath/codebooks")
+    val centDf = graft.engine.Fs.readParquet(spark, s"$indexPath/centroids")
+    val cbFlat = graft.engine.Fs.readParquet(spark, s"$indexPath/codebooks")
       .collect().map(r => (r.getInt(0), r.getInt(1),
         r.getSeq[Double](2), r.getDouble(3))).toSeq
     val cbDf = pqCodebookDf(spark, cbFlat)
-    val base = spark.read.parquet(s"$indexPath/lists")
+    val base = graft.engine.Fs.readParquet(spark, s"$indexPath/lists")
     val deltaPath = s"$indexPath/delta"
     val lists =
       if (graft.engine.Fs.exists(spark, deltaPath))
         base.unionByName(
-          spark.read.parquet(deltaPath).drop("batch_id")
+          graft.engine.Fs.readParquet(spark, deltaPath).drop("batch_id")
             .select(base.columns.map(col).toIndexedSeq: _*))
       else base
     ivfpqServe(lists, e, centDf, cbDf, k, nprobe, m, shortlist)

@@ -150,5 +150,5 @@ object CorpusIngest {
 
   /** The admitted corpus as one relation. */
   def corpus(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(s"$root/docs")
+    Fs.readParquet(spark, s"$root/docs")
 }

@@ -225,6 +225,6 @@ object EventStream {
       .flatMap(f => scala.util.Try(f.getName.drop(1).toLong).toOption)
       .filter(_ < beforeBatch)
     if (versions.isEmpty) None
-    else Some(spark.read.parquet(s"$dimBase/v${versions.max}"))
+    else Some(graft.engine.Fs.readParquet(spark, s"$dimBase/v${versions.max}"))
   }
 }

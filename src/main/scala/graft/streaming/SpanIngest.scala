@@ -107,5 +107,5 @@ object SpanIngest {
 
   /** The rewritten corpus as one relation. */
   def corpus(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(s"$root/docs")
+    Fs.readParquet(spark, s"$root/docs")
 }

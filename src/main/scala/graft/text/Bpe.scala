@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.engine.Fs
 
 /** Distributed byte-pair-encoding (BPE) merge training over the
   * `documents` corpus — the tokenizer-vocabulary learning step of an LLM
@@ -114,7 +115,7 @@ object Bpe {
   /** Learn `k` BPE merges; returns `(merge_rank, left, right, pair_count)`
     * in learned order. */
   def trainMerges(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
-    spark.read.parquet(s"${trainedStore(spark, dir, k)}/merges")
+    Fs.readParquet(spark, s"${trainedStore(spark, dir, k)}/merges")
       .orderBy(col("merge_rank"))
 
   /** DuckDB oracle for [[trainMerges]]: the training loop UNROLLED as a
@@ -194,7 +195,7 @@ object Bpe {
     * unique word with its final subword segmentation (for inspection and
     * the encode step of a downstream tokenizer). */
   def segmentedVocab(spark: SparkSession, dir: String, k: Int = 10): DataFrame =
-    spark.read.parquet(s"${trainedStore(spark, dir, k)}/words")
+    Fs.readParquet(spark, s"${trainedStore(spark, dir, k)}/words")
       .select(col("word"), col("cnt"),
         array_join(col("syms"), " ").as("segmentation"))
       .orderBy(col("cnt").desc, col("word"))

@@ -73,4 +73,37 @@ class FsSpec extends SparkSpec {
     new java.io.File(p3).mkdirs()
     intercept[IllegalArgumentException](Fs.parquetRowCount(spark, p3))
   }
+
+  test("readParquet: Spark's inferred schema, resolved without a Spark job") {
+    import spark.implicits._
+    val fixtures = new java.io.File(sf).listFiles().map(_.getPath)
+      .filter(_.endsWith(".parquet")).sorted.toSeq
+    assert(fixtures.exists(_.endsWith("events.parquet")), fixtures)
+    // a Spark-written dir: two partition levels, one value escaped,
+    // a null partition, _SUCCESS beside the data
+    val root = tmp("fs_readpq")
+    val parted = s"$root/parted"
+    Seq((1L, "a/b", 1, 0.5), (2L, null, 2, 1.5), (3L, "c", 2, 2.5)).toDF("id", "s", "n", "x")
+      .write.partitionBy("n", "s").parquet(parted)
+    (fixtures :+ parted).foreach { p =>
+      val want = spark.read.parquet(p).schema
+      val (got, work) = SparkWork.count(spark)(Fs.readParquet(spark, p).schema)
+      assert(got == want, p)
+      assert(work.jobs == 0, s"$p: $work")
+    }
+    assert(Fs.readParquet(spark, parted).orderBy("id").collect().toSeq ==
+      spark.read.parquet(parted).orderBy("id").collect().toSeq)
+  }
+
+  test("readParquet fails as spark.read.parquet does where there is no data file") {
+    val root = tmp("fs_readpq_err")
+    val empty = s"$root/empty"
+    new java.io.File(empty).mkdirs()
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$empty/_SUCCESS"), Array.empty[Byte])
+    Seq(empty, s"$root/missing").foreach { p =>
+      val want = intercept[Exception](spark.read.parquet(p)).getClass
+      val got = intercept[Exception](Fs.readParquet(spark, p)).getClass
+      assert(got == want, p)
+    }
+  }
 }

@@ -171,4 +171,109 @@ class ManifestStatsSpec extends SparkSpec {
     val schema = StructType.fromDDL(st2.schemaDdl)
     assert(Manifest.overlapping(st2, schema, "id", Some(400), None).map(_.part) == Seq("p=3"))
   }
+
+  /** Entry parts kept by `overlapping` for `column` in `[lo, hi]`. */
+  private def kept(path: String, column: String, lo: Option[Any],
+      hi: Option[Any]): Seq[String] = {
+    val st = Manifest.state(spark, path).get
+    Manifest.overlapping(st, StructType.fromDDL(st.schemaDdl), column, lo, hi)
+      .map(_.part)
+  }
+
+  /** `readWhere` equals `read` + the same filter, row for row. */
+  private def assertReadWhereExact(path: String, column: String,
+      lo: Option[Any], hi: Option[Any]): Unit = {
+    val all = Manifest.read(spark, path)
+    val cond = (lo.map(col(column) >= _) ++ hi.map(col(column) <= _))
+      .reduceOption(_ && _).getOrElse(lit(true))
+    val cols = all.columns.toSeq.map(col)
+    val want = all.filter(cond).orderBy(cols: _*).collect().toSeq
+    val got = Manifest.readWhere(spark, path, column, lo, hi)
+      .orderBy(cols: _*).collect().toSeq
+    assert(got == want, s"readWhere($column, $lo, $hi)")
+  }
+
+  test("partition values prune without stats: an int partition keeps exactly the matching part") {
+    val path = Files.createTempDirectory("mpart1").toString
+    Manifest.write(mk(), path, Seq("p"))
+    assert(Manifest.state(spark, path).get.entries.forall(_.stats.isEmpty))
+    assert(kept(path, "p", Some(2), Some(2)) == Seq("p=2"))
+    assert(kept(path, "p", Some(2), None) == Seq("p=2", "p=3"))
+    assert(kept(path, "p", None, Some(1)) == Seq("p=1"))
+    assert(kept(path, "p", Some(4), None).isEmpty)
+    // numeric, not lexical: 10 sorts after 9
+    assert(kept(path, "p", Some(10), None).isEmpty)
+    // a non-partition column without stats cannot prune
+    assert(kept(path, "id", Some(100), Some(110)).size == 3)
+    assertReadWhereExact(path, "p", Some(2), Some(2))
+    assertReadWhereExact(path, "p", Some(2), None)
+  }
+
+  test("partition values that need escaping and the null partition prune on their real values") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("mpart2").toString
+    val rows = Seq(("a/b", 1L), ("a/b", 2L), ("x=y%", 3L), ("plain", 4L),
+      (null, 5L), (null, 6L))
+    Manifest.write(rows.toDF("s", "id"), path, Seq("s"), statsCols = Seq("id"))
+    val parts = Manifest.state(spark, path).get.entries.map(_.part)
+    assert(parts.contains("s=a%2Fb") && parts.contains("s=__HIVE_DEFAULT_PARTITION__"),
+      s"unexpected leaf names: $parts")
+    // stats key by the escaped leaf name too
+    assert(Manifest.state(spark, path).get.entries.forall(_.stats.exists(_.contains("id"))))
+    assert(kept(path, "s", Some("a/b"), Some("a/b")) == Seq("s=a%2Fb"))
+    assert(kept(path, "s", Some("x=y%"), Some("x=y%")) == Seq("s=x%3Dy%25"))
+    // null holds no row any bound admits; with no bound it is kept
+    assert(!kept(path, "s", Some(""), None).contains("s=__HIVE_DEFAULT_PARTITION__"))
+    assert(!kept(path, "s", None, Some("zzz")).contains("s=__HIVE_DEFAULT_PARTITION__"))
+    assert(kept(path, "s", None, None).size == 4)
+    assertReadWhereExact(path, "s", Some("a/b"), Some("a/b"))
+    assertReadWhereExact(path, "s", Some("p"), None)
+    assert(Manifest.readWhere(spark, path, "s", None, None).count() == 6)
+    // DELETE on an escaped partition rewrites that partition only
+    Manifest.deleteWhere(spark, path, col("id") === 1L)
+    assert(Manifest.read(spark, path).orderBy("id").select("id").as[Long].collect().toSeq ==
+      Seq(2L, 3L, 4L, 5L, 6L))
+    assert(Manifest.state(spark, path).get.entries.count(_.part == "s=a%2Fb") == 1)
+  }
+
+  test("the second level of a two-level partition prunes by position") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("mpart3").toString
+    val rows = for (a <- 1 to 3; b <- Seq("x", "y", "z")) yield (a, b, a * 10L)
+    Manifest.write(rows.toDF("a", "b", "id"), path, Seq("a", "b"))
+    assert(kept(path, "b", Some("y"), Some("y")) == Seq("a=1/b=y", "a=2/b=y", "a=3/b=y"))
+    assert(kept(path, "a", Some(3), None) == Seq("a=3/b=x", "a=3/b=y", "a=3/b=z"))
+    assertReadWhereExact(path, "b", Some("y"), Some("y"))
+    assertReadWhereExact(path, "b", None, Some("x"))
+  }
+
+  test("a one-partition readWhere over 40 leaves plans without a Spark job") {
+    val path = Files.createTempDirectory("mpart4").toString
+    Manifest.write(spark.range(400).select((col("id") % 40).cast("int").as("p"), col("id")),
+      path, Seq("p"))
+    assert(Manifest.state(spark, path).get.entries.size == 40)
+    // 40 leaves is over Spark's 32-path parallel listing threshold: an
+    // unpruned scan lists them in a Spark job
+    val (df, work) = SparkWork.count(spark)(Manifest.readWhere(spark, path, "p", Some(7), Some(7)))
+    assert(work.jobs == 0, s"planning launched $work")
+    assert(df.count() == 10)
+  }
+
+  test("readPoint hashes its probe on the driver: equal to the Spark-computed xxhash64, no job") {
+    import org.apache.spark.sql.types._
+    Seq[(Any, DataType)](
+      (4L, LongType), (4, IntegerType), (4, LongType), ("needle", StringType),
+      (java.sql.Date.valueOf("2024-02-29"), DateType), ("2024-02-29", DateType)
+    ).foreach { case (v, dt) =>
+      val want = spark.range(1).select(xxhash64(lit(v).cast(dt))).head().getLong(0)
+      assert(Manifest.probeHash(spark, v, dt) == want, s"$v as $dt")
+    }
+    import spark.implicits._
+    val path = Files.createTempDirectory("mbloom2").toString
+    Manifest.write(Seq.tabulate(300)(i => (i % 3 + 1, i.toLong)).toDF("p", "id"), path,
+      Seq("p"), statsCols = Seq("id"), bloomCols = Seq("id"))
+    val (df, work) = SparkWork.count(spark)(Manifest.readPoint(spark, path, "id", 4L))
+    assert(work.jobs == 0, s"planning launched $work")
+    assert(df.collect().map(r => (r.getInt(0), r.getLong(1))).toSeq == Seq((2, 4L)))
+  }
 }

@@ -46,6 +46,33 @@ class SessionsSpec extends SparkSpec {
       s"still pinned: ${spark.sparkContext.getPersistentRDDs.keys}")
   }
 
+  test("releaseAll frees a materialized localCheckpoint without a WARN") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("releaseAll-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        warns.add(e.getMessage.getFormattedMessage); ()
+      }
+    }
+    capture.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(capture)
+    try {
+      val df = Tables.orders(spark, sf).limit(100).localCheckpoint(true)
+      df.count()
+      assert(spark.sparkContext.getRDDStorageInfo.nonEmpty)
+      Sessions.releaseAll(spark)
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+      assert(spark.sparkContext.getRDDStorageInfo.isEmpty)
+    } finally root.removeAppender(capture)
+    assert(!warns.toArray.exists(_.toString.contains("was locally checkpointed")),
+      warns.toArray.mkString("\n"))
+  }
+
   test("releaseAll also drops catalog-cached relations") {
     val df = Tables.customer(spark, sf).cache()
     df.count()
