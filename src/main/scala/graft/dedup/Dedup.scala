@@ -39,6 +39,12 @@ object Dedup {
   val K = 16; val B = 4; val R = 4
   val P = 1000000007L
 
+  /** Default of every broadcast guard (`maxBroadcastSets`,
+    * `maxBroadcastDocs`, `maxBroadcastLabels`): above this many rows a
+    * batch-side relation is not broadcast, and the operator degrades
+    * loudly to a shuffled join with the same rows. */
+  val maxBroadcastRows: Long = 500000L
+
   /** Exact dedup: group identical texts by md5, keep the smallest doc_id
     * (hash-groupBy — one shuffle keyed on the digest). */
   def exact(spark: SparkSession, dir: String): DataFrame =
@@ -327,7 +333,7 @@ object Dedup {
     * really a backfill: run [[minhashPairs]] over the union instead. */
   def dedupIncremental(spark: SparkSession, dir: String,
       threshold: Double = 0.9, batchMod: Int = 10,
-      maxBroadcastSets: Long = 500000L): DataFrame = {
+      maxBroadcastSets: Long = maxBroadcastRows): DataFrame = {
     val all = Tables.documents(spark, dir)
       .withColumn("th", expr(
         s"""array_sort(array_distinct(transform(array_distinct(split(text, ' ')),
@@ -957,9 +963,14 @@ object Dedup {
     * excerpt/reprint of something we already hold"). The batch's
     * asymmetric PREFIX index (the [[containmentPairs]] lossless cut —
     * only ~(1−τ) of each batch doc's shingles) BROADCASTS, and the
-    * corpus posting explode scans MAP-ONLY against it: the corpus never
-    * shuffles, which is the whole point at 100 TB where the corpus is
-    * the big side and the batch is the small one. Above
+    * corpus posting explode scans MAP-ONLY against it: candidate
+    * generation never shuffles the corpus, which is the whole point at
+    * 100 TB where the corpus is the big side and the batch is the small
+    * one. The exact re-verify joins the candidates back to their
+    * containers' full shingle sets, so where that join is not broadcast
+    * the corpus index IS shuffled (`ScalingSpec`: with broadcast off,
+    * candidate shuffle records stay flat as the corpus grows, while
+    * total shuffle records grow by one corpus index per copy). Above
     * `maxBroadcastDocs` batch docs the probe degrades loudly to a
     * shuffled join — same rows, the map-only promise traded for not
     * OOMing. Survivors re-verify exactly on full sorted sets
@@ -967,7 +978,7 @@ object Dedup {
     * lossless and the oracle replays plain inverted-index semantics on
     * the sliced pair space. */
   def containmentIncremental(spark: SparkSession, dir: String,
-      threshold: Double = 0.8, maxBroadcastDocs: Long = 500000L): DataFrame = {
+      threshold: Double = 0.8, maxBroadcastDocs: Long = maxBroadcastRows): DataFrame = {
     val docs = shingleIndex(spark, dir).filter(col("n_sh") > 0)
       .persist(StorageLevel.MEMORY_AND_DISK)
     containmentIncrementalOn(docs, col("doc_id") % 10 === 0, threshold,
@@ -976,8 +987,9 @@ object Dedup {
   }
 
   /** [[containmentIncremental]] over a caller-held `(doc_id, shh, n_sh)`
-    * shingle relation with an explicit batch predicate — the ScaleProbe
-    * entry (fixed batch against a growing corpus). `docsRowBound` is an
+    * shingle relation with an explicit batch predicate — the entry
+    * `ScalingSpec` "flat: incremental containment candidates against a
+    * growing corpus" drives with a fixed batch. `docsRowBound` is an
     * optional caller-known UPPER BOUND on |docs| (manifest / parquet
     * footer stats): when it already fits the broadcast cap, the guard
     * needs no `count()` action at all — a batch slice can only be

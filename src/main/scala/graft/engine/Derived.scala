@@ -31,7 +31,7 @@ object Derived {
     * after. Callers layer their own persist on the returned reader when
     * they consume it more than once. Contract: `dir`'s contents are
     * immutable for the JVM lifetime (true of every fixture, test temp
-    * dir and ScaleProbe replica root — each is written once, then
+    * dir and `ScalingSpec` replica root — each is written once, then
     * probed); a caller that rewrites its input in-process must use a
     * fresh path, exactly as it must for Spark's own file-index caches. */
   def cached(spark: SparkSession, name: String, dir: String)

@@ -56,9 +56,9 @@ object Layers {
     * Torn-write note: this variant rides Spark's dynamic partition
     * overwrite (delete-matching-then-move), so a mid-write crash can
     * briefly expose a partial partition to concurrent readers of the
-    * catalog table. [[replacePartitionsAtomic]] (the path variant's
-    * engine) closes that window with staged per-partition renames —
-    * prefer path-based tables where readers race writers. */
+    * catalog table. [[replacePartitionsPath]] closes that window with
+    * staged per-partition renames — prefer path-based tables where
+    * readers race writers. */
   def replacePartitions(df: DataFrame, table: String,
       partitionCol: String = "ingestion_date"): Unit = {
     val spark = df.sparkSession
@@ -89,16 +89,10 @@ object Layers {
   }
 
   /** Path variant of [[replacePartitions]]: only partitions present in
-    * `df` are rewritten — and each is published ATOMICALLY (see
-    * [[replacePartitionsAtomic]], which this delegates to). */
-  def replacePartitionsPath(df: DataFrame, path: String,
-      partitionCols: Seq[String]): Unit =
-    replacePartitionsAtomic(df, path, partitionCols)
-
-  /** Atomic dynamic partition overwrite — the minimal stand-in for the
-    * transactional commit the reference gets from Delta's log
-    * (`trino_scripts/dim_product.sql:35-36` `USING DELTA`; no Delta jars
-    * locally, SURVEY.md §7.5.3). Spark's own dynamic overwrite deletes
+    * `df` are rewritten, each published ATOMICALLY — the minimal
+    * stand-in for the transactional commit the reference gets from
+    * Delta's log (`trino_scripts/dim_product.sql:35-36` `USING DELTA`;
+    * no Delta jars locally, SURVEY.md §7.5.3). Spark's own dynamic overwrite deletes
     * matching partitions before moving new files in, so a mid-write crash
     * leaves a torn partition visible to concurrent readers. Here:
     *
@@ -137,7 +131,7 @@ object Layers {
     *
     * `beforePublish`/`onPublish` are failure-injection seams for the
     * crash-consistency spec (default no-ops). */
-  def replacePartitionsAtomic(df: DataFrame, path: String,
+  def replacePartitionsPath(df: DataFrame, path: String,
       partitionCols: Seq[String],
       beforePublish: () => Unit = () => (),
       onPublish: String => Unit = _ => ()): Unit = {
@@ -200,7 +194,7 @@ object Layers {
   }
 
   /** Restore-or-GC sweep over the commit debris a crashed
-    * [[replacePartitionsAtomic]] can leave under `path` (the `finally`
+    * [[replacePartitionsPath]] can leave under `path` (the `finally`
     * cleanup never runs on a hard JVM kill):
     *
     *  - a `_trash-*` leaf whose target partition is MISSING is the only
@@ -213,9 +207,9 @@ object Layers {
     *
     * A trash dir is only deleted once every needed restore succeeded;
     * a failed restore rename preserves the dir (still the only copy).
-    * Runs automatically at the start of every [[replacePartitionsAtomic]]
+    * Runs automatically at the start of every [[replacePartitionsPath]]
     * call; also callable standalone as a startup sweep. Assumes a single
-    * writer per table root (see [[replacePartitionsAtomic]]). */
+    * writer per table root (see [[replacePartitionsPath]]). */
   def sweepCommitDebris(spark: SparkSession, path: String,
       partitionDepth: Int): Unit = {
     val names = Fs.listDirs(spark, path).map(_.getName)

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.StructType
   * `trino_scripts/dim_product.sql:35-36` `USING DELTA LOCATION`; no Delta
   * jars in this environment, SURVEY.md §7.5.3).
   *
-  * [[Layers.replacePartitionsAtomic]] publishes by directory rename, which
+  * [[Layers.replacePartitionsPath]] publishes by directory rename, which
   * is per-partition atomic but leaves a brief window where a partition is
   * ABSENT between its two renames (and needs a debris sweep after a hard
   * crash). This layer removes that window entirely by never mutating live
@@ -102,6 +102,14 @@ object Manifest {
       }
     }
 
+  /** [[state]], or an IllegalArgumentException naming what is missing:
+    * "no manifest log at …" for the newest version, "no manifest version
+    * N at …" for an explicit one. */
+  private[graft] def stateOrThrow(spark: SparkSession, path: String,
+      version: Option[Long] = None): State =
+    state(spark, path, version).getOrElse(throw new IllegalArgumentException(
+      version.fold(s"no manifest log at $path")(v => s"no manifest version $v at $path")))
+
   /** An entry's commit-dir root: relative names resolve under the table
     * root; absolute URIs (written by [[clone]]) stand alone. */
   private def dirRoot(path: String, dir: String): String =
@@ -113,8 +121,7 @@ object Manifest {
     * within each scan. */
   def read(spark: SparkSession, path: String,
       version: Option[Long] = None): DataFrame = {
-    val st = state(spark, path, version).getOrElse(
-      throw new IllegalArgumentException(s"no manifest log at $path"))
+    val st = stateOrThrow(spark, path, version)
     readEntries(spark, path, StructType.fromDDL(st.schemaDdl), st.entries)
   }
 
@@ -156,8 +163,7 @@ object Manifest {
       lo: Option[Any], hi: Option[Any],
       version: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val st = state(spark, path, version).getOrElse(
-      throw new IllegalArgumentException(s"no manifest log at $path"))
+    val st = stateOrThrow(spark, path, version)
     val schema = StructType.fromDDL(st.schemaDdl)
     val base = readEntries(spark, path, schema,
       overlapping(st, schema, column, lo, hi))
@@ -178,8 +184,7 @@ object Manifest {
   def readPoint(spark: SparkSession, path: String, column: String, value: Any,
       version: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val st = state(spark, path, version).getOrElse(
-      throw new IllegalArgumentException(s"no manifest log at $path"))
+    val st = stateOrThrow(spark, path, version)
     val schema = StructType.fromDDL(st.schemaDdl)
     val admitted = bloomAdmits(spark, st, schema, column, value,
       overlapping(st, schema, column, Some(value), Some(value)))
@@ -455,8 +460,7 @@ object Manifest {
   def deleteWhere(spark: SparkSession, path: String,
       cond: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions.col
-    val prev = state(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no manifest log at $path"))
+    val prev = stateOrThrow(spark, path)
     val pcols = prev.partitionCols
     val snap = read(spark, path)
     val affected = snap.filter(cond).select(pcols.map(col): _*).distinct()
@@ -497,8 +501,7 @@ object Manifest {
   def upsert(src: DataFrame, path: String, keyCols: Seq[String]): Long = {
     import org.apache.spark.sql.functions.col
     val spark = src.sparkSession
-    val prev = state(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no manifest log at $path"))
+    val prev = stateOrThrow(spark, path)
     val pcols = prev.partitionCols
     require(pcols.nonEmpty, "upsert targets partitioned tables; use write() for full rewrites")
     val tgt = read(spark, path)
@@ -522,8 +525,7 @@ object Manifest {
     * [[vacuum]]. The micro-batch-sink maintenance job
     * ([[Layers.compact]]'s transactional sibling). */
   def compact(spark: SparkSession, path: String): Long = {
-    val prev = state(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no manifest log at $path"))
+    val prev = stateOrThrow(spark, path)
     if (prev.partitionCols.isEmpty) write(read(spark, path), path)
     else replacePartitions(read(spark, path), path, prev.partitionCols)
   }
@@ -541,8 +543,7 @@ object Manifest {
     * within partitions at write time via the rebalance hint. */
   def optimizeZOrder(spark: SparkSession, path: String,
       xCol: String, yCol: String, nFiles: Int): Long = {
-    val prev = state(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"no manifest log at $path"))
+    val prev = stateOrThrow(spark, path)
     require(prev.partitionCols.isEmpty,
       "optimizeZOrder rewrites whole snapshots; partitioned tables cluster per partition on write")
     commitData(Layout.zorderBy(read(spark, path), xCol, yCol, nFiles), path,
@@ -557,8 +558,7 @@ object Manifest {
     * still references (the clone's own vacuum never touches absolute
     * entries — it only deletes `data-*` under its root). */
   def shallowClone(spark: SparkSession, src: String, dst: String): Long = {
-    val st = state(spark, src).getOrElse(
-      throw new IllegalArgumentException(s"no manifest log at $src"))
+    val st = stateOrThrow(spark, src)
     require(state(spark, dst).isEmpty, s"clone target $dst already has a log")
     commit(spark, dst, State(0L, st.partitionCols, st.schemaDdl,
       st.entries.map(e => e.copy(dir = dirRoot(src, e.dir))), st.statsCols,
@@ -584,10 +584,8 @@ object Manifest {
     import org.apache.spark.sql.functions.lit
     require(fromVersion <= toVersion,
       s"changeFeed: fromVersion $fromVersion > toVersion $toVersion")
-    val st0 = state(spark, path, Some(fromVersion)).getOrElse(
-      throw new IllegalArgumentException(s"no manifest version $fromVersion at $path"))
-    val st1 = state(spark, path, Some(toVersion)).getOrElse(
-      throw new IllegalArgumentException(s"no manifest version $toVersion at $path"))
+    val st0 = stateOrThrow(spark, path, Some(fromVersion))
+    val st1 = stateOrThrow(spark, path, Some(toVersion))
     def key(e: Entry) = (e.part, e.dir)
     val keys0 = st0.entries.map(key).toSet
     val keys1 = st1.entries.map(key).toSet
@@ -634,10 +632,8 @@ object Manifest {
     import org.apache.spark.sql.functions.{col, lit, when, struct, coalesce, not}
     require(fromVersion <= toVersion,
       s"snapshotDiff: fromVersion $fromVersion > toVersion $toVersion")
-    val st0 = state(spark, path, Some(fromVersion)).getOrElse(
-      throw new IllegalArgumentException(s"no manifest version $fromVersion at $path"))
-    val st1 = state(spark, path, Some(toVersion)).getOrElse(
-      throw new IllegalArgumentException(s"no manifest version $toVersion at $path"))
+    val st0 = stateOrThrow(spark, path, Some(fromVersion))
+    val st1 = stateOrThrow(spark, path, Some(toVersion))
     def key(e: Entry) = (e.part, e.dir)
     val keys0 = st0.entries.map(key).toSet
     val keys1 = st1.entries.map(key).toSet

@@ -626,8 +626,7 @@ object Extras {
     * from the manifest log's entry list — driver-side metadata (the log
     * is one JSON file), zero Spark jobs. */
   private def latestMonth(spark: SparkSession, path: String): Int =
-    graft.engine.Manifest.state(spark, path)
-      .getOrElse(throw new IllegalArgumentException(s"no manifest log at $path"))
+    graft.engine.Manifest.stateOrThrow(spark, path)
       .entries.map(_.part.stripPrefix("ingestion_month=").toInt).max
 
   /** The two-version orders store (v0 = orders committed by month, v1 =

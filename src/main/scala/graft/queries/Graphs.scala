@@ -362,9 +362,10 @@ object Graphs {
     * Determinism over a FIXED horizon: alive sets shrink monotonically
     * (alive₀ = all nodes; a node peeled at round i has alive-degree < k
     * against a superset of every later alive set, so it can never
-    * re-qualify), which makes round `rounds` a pure function of the edge
-    * set whatever the convergence point — the unrolled DuckDB oracle and
-    * this loop agree by construction, converged or not. 12 rounds is
+    * re-qualify), which makes the alive set after round 12 a pure
+    * function of the edge set whatever the convergence point — the
+    * unrolled DuckDB oracle and this loop agree by construction,
+    * converged or not. 12 rounds is
     * fixpoint + ≥3 rounds of margin on every tested fixture (sf0.001
     * converges by round 2, sf0.01 by 6, sf0.1 by 9; `GraphsSpec` pins
     * fixpoint-at-horizon on the fixture).
@@ -375,11 +376,11 @@ object Graphs {
     * pipelined explode into one hash aggregate with map-side partials,
     * the [[partCommunities]] shape; the alive relation only shrinks.
     * Driver state is the two scalars; labels never leave the cluster. */
-  def partKcore(spark: SparkSession, dir: String, rounds: Int = 12): DataFrame = {
+  def partKcore(spark: SparkSession, dir: String): DataFrame = {
     val adj = coPurchaseAdjacency(spark, dir)
     val firstRow = adj.agg(sum(col("outdeg")).as("s"), count(lit(1)).as("n")).head()
     val k = (7L * firstRow.getLong(0)) / (10L * firstRow.getLong(1))
-    kcoreAdj(adj, k, rounds)
+    kcoreAdj(adj, k, 12)
   }
 
   /** The peel loop over a symmetric `(src, nbrs)` adjacency relation —

@@ -143,7 +143,7 @@ object ClusterMaintain {
     * surfaces only after every publish already started has finished, so
     * no writer outlives the call (a replay racing one would meet a live
     * `_staging-*` dir that the single-writer sweep of
-    * [[graft.engine.Layers.replacePartitionsAtomic]] treats as crash
+    * [[graft.engine.Layers.replacePartitionsPath]] treats as crash
     * debris). Publish order never mattered for the
     * exactly-once contract — a replayed batch overwrites all three
     * batch-keyed partitions idempotently, and no reader consumes
@@ -151,7 +151,7 @@ object ClusterMaintain {
     * strictly-earlier batches only). Measured 3.0 → 2.0 s/batch at
     * sf0.1/local[32]. */
   def ingestBatch(batch: DataFrame, root: String, batchId: Long,
-      threshold: Double = 0.9, maxBroadcastDocs: Long = 500000L): Long = {
+      threshold: Double = 0.9, maxBroadcastDocs: Long = Dedup.maxBroadcastRows): Long = {
     val spark = batch.sparkSession
     val n = batch.select(col("doc_id")).count()
     val idxPath = s"$root/index"
@@ -303,8 +303,9 @@ object ClusterMaintain {
     * degrades loudly to a shuffled join) — then deletes the forest.
     * After compaction the per-batch fixpoint input is batch + touched
     * roots ONLY: per-ingest cost is flat in the number of PRIOR merges
-    * (ScaleProbe `streaming_compact` family), at the amortized price of
-    * one label-store rewrite per compaction.
+    * (`ScalingSpec` "flat: cluster ingest after compactMerges of a
+    * growing merge chain": same shuffle records at ×1/×2/×4 chains), at
+    * the amortized price of one label-store rewrite per compaction.
     *
     * Crash-safety (the replay/exactly-once contract is preserved):
     *  1. every label partition is rewritten with resolved labels via
@@ -327,7 +328,7 @@ object ClusterMaintain {
     * label rows that are already final — equivalent inputs, identical
     * outputs (spec-pinned). Returns the number of forest edges folded. */
   def compactMerges(spark: SparkSession, root: String,
-      maxBroadcastLabels: Long = 500000L): Long = {
+      maxBroadcastLabels: Long = Dedup.maxBroadcastRows): Long = {
     val mrgPath = s"$root/merges"
     val labPath = s"$root/labels"
     if (!Fs.exists(spark, mrgPath)) return 0L

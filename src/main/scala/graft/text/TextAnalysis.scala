@@ -538,11 +538,13 @@ object TextAnalysis {
     * shuffle instead of a global sort, the right trade at 100 TB where
     * the suffix array itself would be petabyte-scale.
     *
-    * Measured (ScaleProbe, corpus replicated with distinct doc_ids,
-    * warm JVM): ×2→×4 corpus = 2.3 s → 3.6 s — 1.6× time for 2× tokens,
-    * while the output stays constant (bounded by DISTINCT span hashes,
-    * not copies), confirming the cost tracks the explode volume and the
-    * aggregate state does not grow with duplication depth. */
+    * Pinned (`ScalingSpec` "linear: dup_spans and span_dedup on clones,
+    * their distinct output constant", corpus cloned ×1/×2/×4 under new
+    * doc_ids): shuffle records stay within linear in the explode volume
+    * (sf0.001: 48.7k → 95.2k → 144.1k), while the output is the same
+    * from ×2 on (23,172 span hashes — bounded by DISTINCT span hashes,
+    * not copies): the aggregate state does not grow with duplication
+    * depth. */
   def dupSpans(spark: SparkSession, dir: String, k: Int = 8): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"), expr("split(text, ' ')").as("toks"))
@@ -714,12 +716,12 @@ object TextAnalysis {
     * path is "more partitions". Reassembled text leaves the operator as
     * an md5 so the diff never hauls document bodies.
     *
-    * Measured (`ScaleProbe --span`, sf0.1 corpus replicated with
-    * distinct doc_ids, warm JVM): ×64→×128→×256 corpus = 4.6 → 7.4 →
-    * 13.6 s — ~1.7-1.8× per doubling once past fixed overhead (×1-×16
-    * all ~1.6 s), while Σ n_kept stays constant at the distinct-chunk
-    * count (30 220) at every duplication depth: cost tracks corpus
-    * volume, output and aggregate state track distinct content only.
+    * Pinned (`ScalingSpec` "linear: dup_spans and span_dedup on clones,
+    * their distinct output constant", corpus cloned ×1/×2/×4 under new
+    * doc_ids): shuffle records stay within linear in the corpus, while
+    * Σ n_kept stays at the distinct-chunk count (3,109 at sf0.001) at
+    * every duplication depth: cost tracks corpus volume, output and
+    * aggregate state track distinct content only.
     * Idempotence (dedup∘dedup = dedup, exact fixpoint) is a spec
     * (`CorpusAuditSpec`). */
   def spanDedup(spark: SparkSession, dir: String, k: Int = 8): DataFrame =

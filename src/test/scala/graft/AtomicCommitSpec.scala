@@ -4,13 +4,6 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.engine.{ExtractLoad, Fs, Layers}
 
-/** A fake URI scheme backed by the local filesystem — proves the engine's
-  * filesystem ops resolve through the Hadoop FileSystem API by scheme
-  * (the way `s3a://` would) instead of assuming `java.io.File`. */
-class FakeScheme extends org.apache.hadoop.fs.RawLocalFileSystem {
-  override def getUri: java.net.URI = java.net.URI.create("fake:///")
-}
-
 /** Local-fs scheme whose rename FAILS (returns false, as Hadoop
   * signals errors) for marked partition values, but only at the
   * publish position (dst directly under the table root): `p=soft`
@@ -41,9 +34,9 @@ class AtomicCommitSpec extends SparkSpec {
 
   test("crash BEFORE publish: target completely untouched, no debris visible to readers") {
     val out = Files.createTempDirectory("atomic1").toString
-    Layers.replacePartitionsAtomic(mk(0), out, Seq("p"))
+    Layers.replacePartitionsPath(mk(0), out, Seq("p"))
     val boom = intercept[RuntimeException] {
-      Layers.replacePartitionsAtomic(mk(1), out, Seq("p"),
+      Layers.replacePartitionsPath(mk(1), out, Seq("p"),
         beforePublish = () => throw new RuntimeException("crash before publish"))
     }
     assert(boom.getMessage.contains("crash before publish"))
@@ -56,9 +49,9 @@ class AtomicCommitSpec extends SparkSpec {
 
   test("crash MID-publish: every partition fully old or fully new, never a mix; retry converges") {
     val out = Files.createTempDirectory("atomic2").toString
-    Layers.replacePartitionsAtomic(mk(0), out, Seq("p"))
+    Layers.replacePartitionsPath(mk(0), out, Seq("p"))
     intercept[RuntimeException] {
-      Layers.replacePartitionsAtomic(mk(1), out, Seq("p"),
+      Layers.replacePartitionsPath(mk(1), out, Seq("p"),
         onPublish = rel => if (rel == "p=2") throw new RuntimeException("killed mid-publish"))
     }
     // p=1 published (sorted order), p=2 and p=3 still old — each complete
@@ -69,7 +62,7 @@ class AtomicCommitSpec extends SparkSpec {
     assert(byP.values.forall { case (n, nv, _) => n == 20 && nv == 1 }) // complete + unmixed
     assert(byP(1)._3 == 1 && byP(2)._3 == 0 && byP(3)._3 == 0)
     // the batch retry (same keys) converges to all-new
-    Layers.replacePartitionsAtomic(mk(1), out, Seq("p"))
+    Layers.replacePartitionsPath(mk(1), out, Seq("p"))
     val after = spark.read.parquet(out)
     assert(after.count() == 60 && after.filter(col("version") =!= 1).count() == 0)
   }
@@ -81,13 +74,13 @@ class AtomicCommitSpec extends SparkSpec {
     // staging-debris filter must not treat it as debris
     val df = Seq((Some(1), 10L), (Some(2), 20L), (None, 30L), (None, 31L))
       .toDF("p", "id")
-    Layers.replacePartitionsAtomic(df, out, Seq("p"))
+    Layers.replacePartitionsPath(df, out, Seq("p"))
     val got = spark.read.parquet(out)
     assert(got.count() == 4)
     assert(got.filter(col("p").isNull).count() == 2)
     // redelivering the null partition replaces exactly it
     val redo = Seq((Option.empty[Int], 99L)).toDF("p", "id")
-    Layers.replacePartitionsAtomic(redo, out, Seq("p"))
+    Layers.replacePartitionsPath(redo, out, Seq("p"))
     val after = spark.read.parquet(out)
     assert(after.count() == 3)
     assert(after.filter(col("p").isNull).count() == 1)
@@ -98,11 +91,11 @@ class AtomicCommitSpec extends SparkSpec {
     import spark.implicits._
     val out = Files.createTempDirectory("atomic3").toString
     val df = Seq.tabulate(40)(i => (i % 2, i % 5, i.toLong)).toDF("a", "b", "id")
-    Layers.replacePartitionsAtomic(df, out, Seq("a", "b"))
+    Layers.replacePartitionsPath(df, out, Seq("a", "b"))
     assert(spark.read.parquet(out).count() == 40)
     // only the redelivered leaf (a=0,b=1) changes
     val redo = Seq((0, 1, 999L)).toDF("a", "b", "id")
-    Layers.replacePartitionsAtomic(redo, out, Seq("a", "b"))
+    Layers.replacePartitionsPath(redo, out, Seq("a", "b"))
     val got = spark.read.parquet(out)
     assert(got.count() == 37) // 40 - 4 + 1
     assert(got.filter(col("a") === 0 && col("b") === 1).count() == 1)
@@ -132,7 +125,7 @@ class AtomicCommitSpec extends SparkSpec {
     Seq(("ok", 1L, 0), ("soft", 2L, 0)).toDF("p", "id", "v")
       .write.mode("overwrite").partitionBy("p").parquet(tmp)
     val e = intercept[java.io.IOException] {
-      Layers.replacePartitionsAtomic(
+      Layers.replacePartitionsPath(
         Seq(("ok", 10L, 1), ("soft", 20L, 1)).toDF("p", "id", "v"),
         s"flaky://$tmp", Seq("p"))
     }
@@ -154,7 +147,7 @@ class AtomicCommitSpec extends SparkSpec {
     Seq(("hard", 2L, 0)).toDF("p", "id", "v")
       .write.mode("overwrite").partitionBy("p").parquet(tmp)
     val e = intercept[java.io.IOException] {
-      Layers.replacePartitionsAtomic(
+      Layers.replacePartitionsPath(
         Seq(("hard", 20L, 1)).toDF("p", "id", "v"),
         s"flaky://$tmp", Seq("p"))
     }
@@ -168,14 +161,14 @@ class AtomicCommitSpec extends SparkSpec {
 
   test("sweep restores a partition stranded in trash by a crash between move-aside and publish") {
     val out = Files.createTempDirectory("sweep1").toString
-    Layers.replacePartitionsAtomic(mk(0), out, Seq("p"))
+    Layers.replacePartitionsPath(mk(0), out, Seq("p"))
     // simulate a hard JVM kill inside the two-rename window: p=2 moved
     // aside to trash, publish rename never ran, staging still present
     assert(Fs.rename(spark, s"$out/p=2", s"$out/_trash-dead/p=2"))
     mk(1).filter(col("p") === 2).write.partitionBy("p").parquet(s"$out/_staging-dead")
     assert(spark.read.parquet(out).count() == 40) // reader sees p=2 absent, not torn
     // the next write on the same root heals the absence before its own work
-    Layers.replacePartitionsAtomic(mk(1).filter(col("p") === 1), out, Seq("p"))
+    Layers.replacePartitionsPath(mk(1).filter(col("p") === 1), out, Seq("p"))
     val rows = spark.read.parquet(out)
     assert(rows.count() == 60)
     assert(rows.filter(col("p") === 2 && col("version") =!= 0).count() == 0) // restored old copy
@@ -185,7 +178,7 @@ class AtomicCommitSpec extends SparkSpec {
 
   test("standalone sweep GCs stale trash (target exists) without touching live partitions") {
     val out = Files.createTempDirectory("sweep2").toString
-    Layers.replacePartitionsAtomic(mk(0), out, Seq("p"))
+    Layers.replacePartitionsPath(mk(0), out, Seq("p"))
     // stale trash: the new copy won before the crash — target exists
     mk(1).filter(col("p") === 3).write.partitionBy("p").parquet(s"$out/_trash-dead")
     Layers.sweepCommitDebris(spark, out, 1)
@@ -195,16 +188,19 @@ class AtomicCommitSpec extends SparkSpec {
     assert(Fs.listDirs(spark, out).forall(_.getName.startsWith("p=")))
   }
 
-  test("filesystem ops resolve by URI scheme (fake:// scheme honored)") {
+  // the unarmed crashat:// test FS is a local FS reached by scheme: the
+  // engine's filesystem ops must resolve through the Hadoop FileSystem
+  // API by scheme (the way s3a:// would), not assume java.io.File
+  test("filesystem ops resolve by URI scheme (crashat:// scheme honored)") {
     spark.sparkContext.hadoopConfiguration
-      .set("fs.fake.impl", classOf[FakeScheme].getName)
-    val tmp = Files.createTempDirectory("fake").toString
+      .set("fs.crashat.impl", classOf[CrashAtFs].getName)
+    val tmp = Files.createTempDirectory("crashat").toString
     Files.createDirectory(java.nio.file.Paths.get(tmp, "v1"))
     Files.createDirectory(java.nio.file.Paths.get(tmp, "v2"))
-    val dirs = Fs.listDirs(spark, s"fake://$tmp")
+    val dirs = Fs.listDirs(spark, s"crashat://$tmp")
     assert(dirs.map(_.getName).toSet == Set("v1", "v2"))
-    assert(Fs.deleteDir(spark, s"fake://$tmp/v2"))
-    assert(!Fs.exists(spark, s"fake://$tmp/v2"))
+    assert(Fs.deleteDir(spark, s"crashat://$tmp/v2"))
+    assert(!Fs.exists(spark, s"crashat://$tmp/v2"))
     assert(new java.io.File(s"$tmp/v1").exists()) // really the local dir underneath
   }
 }

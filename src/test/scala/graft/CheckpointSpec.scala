@@ -1,41 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import graft.engine.{ExtractLoad, Fs}
-
-/** Local-fs scheme that crashes (throws, without doing the call) at the
-  * first `crashOp` mutation after it is armed, and logs every mutation it
-  * sees — drives a checkpoint save to each of its crash points. */
-class CrashAtFs extends org.apache.hadoop.fs.RawLocalFileSystem {
-  override def getUri: java.net.URI = java.net.URI.create("crashat:///")
-  override def mkdirs(p: Path): Boolean = {
-    CrashAtFs.step("mkdirs"); super.mkdirs(p)
-  }
-  override def create(p: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
-      blockSize: Long, progress: org.apache.hadoop.util.Progressable) = {
-    CrashAtFs.step("create"); super.create(p, overwrite, bufferSize, replication, blockSize, progress)
-  }
-  override def rename(src: Path, dst: Path): Boolean = {
-    CrashAtFs.step("rename"); super.rename(src, dst)
-  }
-  override def delete(p: Path, recursive: Boolean): Boolean = {
-    CrashAtFs.step("delete"); super.delete(p, recursive)
-  }
-}
-
-object CrashAtFs {
-  @volatile var crashOp: Option[String] = None
-  val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  def step(op: String): Unit = {
-    if (crashOp.contains(op)) {
-      crashOp = None
-      throw new java.io.IOException(s"injected crash at $op")
-    }
-    seen.add(op); ()
-  }
-}
 
 /** The extract-load watermark doc: driver-side, crash-safe, and strict —
   * a checkpoint it cannot read is an error, never a silent full reload. */
