@@ -127,14 +127,9 @@ object Layers {
     * through ONE task, and hash-clustering alone leaves skewed values as
     * one giant file; the rebalance hint lets AQE split oversized values
     * across tasks while still clustering — no tasks×partitions small
-    * files, no single-task writes.
-    *
-    * `beforePublish`/`onPublish` are failure-injection seams for the
-    * crash-consistency spec (default no-ops). */
+    * files, no single-task writes. */
   def replacePartitionsPath(df: DataFrame, path: String,
-      partitionCols: Seq[String],
-      beforePublish: () => Unit = () => (),
-      onPublish: String => Unit = _ => ()): Unit = {
+      partitionCols: Seq[String]): Unit = {
     val spark = df.sparkSession
     val uuid = java.util.UUID.randomUUID().toString.take(8)
     val staging = s"$path/_staging-$uuid"
@@ -147,9 +142,7 @@ object Layers {
         .write.mode(SaveMode.Overwrite)
         .partitionBy(partitionCols: _*)
         .parquet(staging)
-      beforePublish()
       for (rel <- leafDirs(spark, staging, partitionCols.size).sorted) { // deterministic publish order
-        onPublish(rel)
         val leaf = s"$staging/$rel"
         val target = s"$path/$rel"
         // Hadoop rename signals failure by RETURNING FALSE, not throwing

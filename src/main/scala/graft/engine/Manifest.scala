@@ -11,11 +11,16 @@ import org.apache.spark.sql.types.StructType
   * `trino_scripts/dim_product.sql:35-36` `USING DELTA LOCATION`; no Delta
   * jars in this environment, SURVEY.md §7.5.3).
   *
-  * [[Layers.replacePartitionsPath]] publishes by directory rename, which
-  * is per-partition atomic but leaves a brief window where a partition is
-  * ABSENT between its two renames (and needs a debris sweep after a hard
-  * crash). This layer removes that window entirely by never mutating live
-  * data:
+  * It is the commit protocol of the materialized views ([[Mv]]) and of
+  * the epoch-keyed streaming sinks (`CorpusIngest`, `SpanIngest`,
+  * `StreamingMv`, `EventStream`'s fact and SCD2 sinks), which commit
+  * epoch k as version k ([[writeVersioned]],
+  * [[replacePartitionsVersioned]]). [[Layers.replacePartitionsPath]], the
+  * directory-rename publish left where a commit is not named by an
+  * epoch, is per-partition atomic but leaves a brief window where a
+  * partition is ABSENT between its two renames (and needs a debris sweep
+  * after a hard crash). This layer has no such window because it never
+  * mutates live data:
   *
   *  - data files are IMMUTABLE: each commit writes a fresh
   *    `data-<uuid>/` dir under the table root and never touches others;
@@ -281,7 +286,9 @@ object Manifest {
     * recomputes the same deterministic snapshot, so skipping IS the
     * exactly-once behavior. The pre-write short-circuit just saves the
     * data write; the atomic manifest rename remains the real guard
-    * against two writers racing the same epoch. */
+    * against two writers racing the same epoch. An uncommitted `version`
+    * at or below the head throws IllegalStateException: readers serve
+    * the head, so such a commit would be lost. */
   def writeVersioned(df: DataFrame, path: String, partitionCols: Seq[String],
       version: Long): Boolean = {
     val spark = df.sparkSession
@@ -299,7 +306,9 @@ object Manifest {
     * an epoch's partitions land under a version named by the epoch, so a
     * redelivered epoch is detected (returns false, log untouched, staged
     * data removed) instead of re-applied. The atomic manifest rename
-    * remains the real guard against two writers racing the same epoch. */
+    * remains the real guard against two writers racing the same epoch.
+    * An uncommitted `version` at or below the head throws, as in
+    * [[writeVersioned]]. */
   def replacePartitionsVersioned(df: DataFrame, path: String,
       partitionCols: Seq[String], version: Long): Boolean = {
     val spark = df.sparkSession
@@ -330,6 +339,12 @@ object Manifest {
       bloomCols: Seq[String] = Seq.empty): Long = {
     val spark = df.sparkSession
     val prev = state(spark, path)
+    // a version at or below the head would never be read (readers serve
+    // the head), and a partition replace there would carry the head's
+    // later entries into the older version
+    for (v <- at; st <- prev if v <= st.version)
+      throw new IllegalStateException(
+        s"cannot commit version $v at $path: not above the head version ${st.version}")
     prev.foreach { st =>
       require(st.partitionCols == partitionCols,
         s"partitionCols ${partitionCols.mkString(",")} != committed ${st.partitionCols.mkString(",")}")
@@ -671,8 +686,8 @@ object Manifest {
     * the checkpoint untouched, so the next run redelivers the SAME
     * deterministic feed (at-least-once transport; consumers that apply
     * feeds idempotently — partition replace, keyed upsert — get
-    * exactly-once end to end, the same contract foreachBatch gives).
-    * Single consumer per checkpoint path by design (the ack is
+    * exactly-once end to end, the contract the streaming sinks get from
+    * [[graft.streaming.EpochSink]]). Single consumer per checkpoint path by design (the ack is
     * last-writer-wins, not CAS). Returns the (from, to] version range
     * processed, or None when already caught up. */
   def consumeChanges(spark: SparkSession, path: String, checkpointPath: String)

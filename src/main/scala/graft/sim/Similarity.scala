@@ -1229,26 +1229,19 @@ object Similarity {
       m: Int = 8, compactEvery: Int = 0, availableNow: Boolean = true,
       refitCorpus: Option[() => DataFrame] = None,
       driftTol: Double = 0.05)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val writer = batches.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the epoch bound makes the compact+ingest pair replay-safe: a
-        // crashed epoch N re-runs the compaction WITHOUT folding its own
-        // batch_id=N delta (left from the crashed attempt), so the
-        // re-ingest replaces that partition idempotently instead of
-        // duplicating its rows across base and delta
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-          compactIvfPqDelta(batch.sparkSession, indexPath, batchId)
-        ingestIvfPqBatch(batch, indexPath, batchId, m)
-        refitCorpus.foreach(c => refitDriftedLists(c(), indexPath,
-          driftTol = driftTol, belowBatchId = batchId))
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    graft.streaming.EpochSink.start(batches, checkpoint, availableNow) { (batch, epoch) =>
+      // the epoch bound makes the compact+ingest pair replay-safe: a
+      // crashed epoch N re-runs the compaction WITHOUT folding its own
+      // batch_id=N delta (left from the crashed attempt), so the
+      // re-ingest replaces that partition idempotently instead of
+      // duplicating its rows across base and delta
+      if (compactEvery > 0 && epoch > 0 && epoch % compactEvery == 0)
+        compactIvfPqDelta(batch.sparkSession, indexPath, epoch)
+      ingestIvfPqBatch(batch, indexPath, epoch, m)
+      refitCorpus.foreach(c => refitDriftedLists(c(), indexPath,
+        driftTol = driftTol, belowBatchId = epoch))
+    }
 
   /** The `ann_index_maintain` query surface: build the IVF-PQ index on
     * the 75% base slice (`vec_id % 4 ≠ 3`) with fit-time per-list
@@ -1403,7 +1396,7 @@ object Similarity {
     val q = ivfPqSink(stream, idx, s"$io/ckpt", m,
       refitCorpus = Some(() => e), driftTol = driftTol)
     // fail LOUDLY on a stalled stream: awaitTermination(timeout) returns
-    // false instead of throwing, and serving while foreachBatch is still
+    // false instead of throwing, and serving while the sink is still
     // mutating the store would be a nondeterministic read racing the
     // maintenance writer (AvailableNow terminates on its own, so a calm
     // run never waits this long)

@@ -55,7 +55,8 @@ import graft.engine.{Fs, Layers, Par}
   * Exactly-once: all three stores are batch-keyed partition replaces
   * ([[graft.engine.Layers.replacePartitionsPath]]), and a batch reads
   * only strictly-earlier partitions — a replayed batch re-derives its
-  * original output bit-for-bit (the [[CorpusIngest]] replay contract).
+  * original output bit-for-bit (the decision basis [[CorpusIngest]] gets
+  * from index version k-1, rebuilt here by a `batch_id` filter).
   * Caller contract: doc_ids globally unique; batch_ids dense-ordered.
   */
 object ClusterMaintain {
@@ -321,7 +322,7 @@ object ClusterMaintain {
     *     roots they already carry.
     *
     * Call at a batch boundary with every ingested batch committed —
-    * e.g. [[sink]]'s `compactEvery` runs it inside `foreachBatch`
+    * e.g. [[sink]]'s `compactEvery` runs it inside the micro-batch
     * BEFORE the epoch's ingest, so a crash-replay of that epoch re-runs
     * the (idempotent) compaction and then re-derives the ingest from
     * the same resolved basis. Batches ingested AFTER a compaction read
@@ -414,19 +415,13 @@ object ClusterMaintain {
   def sink(docs: DataFrame, root: String, checkpoint: String,
       threshold: Double = 0.9, availableNow: Boolean = true,
       compactEvery: Int = 0, compactAtEdges: Long = 2000L)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    val writer = docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val due = batchId > 0 &&
-          ((compactEvery > 0 && batchId % compactEvery == 0) ||
-            (compactAtEdges > 0 && forestEdges(spark, root) >= compactAtEdges))
-        if (due) compactMerges(spark, root)
-        ingestBatch(batch, root, batchId, threshold); ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    EpochSink.start(docs, checkpoint, availableNow) { (batch, epoch) =>
+      val spark = batch.sparkSession
+      val due = epoch > 0 &&
+        ((compactEvery > 0 && epoch % compactEvery == 0) ||
+          (compactAtEdges > 0 && forestEdges(spark, root) >= compactAtEdges))
+      if (due) compactMerges(spark, root)
+      ingestBatch(batch, root, epoch, threshold); ()
+    }
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import graft.engine.{Manifest, Scd2}
 
 /** Structured Streaming redesign of the reference's hand-rolled
   * micro-batch incrementality (SURVEY.md §2.9): the reference tracks a
@@ -168,63 +169,40 @@ object EventStream {
       .trigger(Trigger.AvailableNow())
       .start()
 
-  /** Streaming SCD Type 2 maintenance: every micro-batch of dimension
-    * updates is merged into the stored dimension with
-    * [[graft.engine.Scd2.applyChanges]] inside `foreachBatch` — the
-    * streaming replacement for the reference's re-run-the-DAG batch SCD2
-    * (`dags/product.py`). Each batch writes a new immutable version dir
-    * (`v<batchId>`), so reads never race the write and failed batches
-    * retry idempotently (exactly-once via the checkpointed batch id).
-    */
-  def scd2Sink(updates: DataFrame, cfg: graft.engine.Scd2.Config,
-      dimBase: String, asOfDates: Long => String,
-      availableNow: Boolean = true): StreamingQuery = {
-    val writer = updates.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val prev = latestDimVersion(spark, dimBase, batchId)
-        val next = prev match {
-          case Some(dim) =>
-            graft.engine.Scd2.applyChanges(dim, batch, cfg, asOfDates(batchId))
-          case None =>
-            graft.engine.Scd2.initialLoad(batch, cfg, asOfDates(batchId))
-        }
-        next.write.mode("overwrite").parquet(s"$dimBase/v$batchId")
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
-  }
+  /** Streaming SCD Type 2 maintenance: epoch k merges its dimension
+    * updates into the stored dimension at manifest version k-1 with
+    * [[graft.engine.Scd2.applyChanges]] (epoch 0 is the
+    * [[graft.engine.Scd2.initialLoad]]) and commits the result as version
+    * k of the manifest table at `dimBase` — the streaming replacement for
+    * the reference's re-run-the-DAG batch SCD2 (`dags/product.py`).
+    * Readers resolve one committed version ([[graft.engine.Manifest.read]]),
+    * so they never race the write; a replayed epoch re-merges against
+    * the same base and its commit is refused, and a restart resumes at
+    * the checkpointed epoch. A missing base version fails loudly. */
+  def scd2Sink(updates: DataFrame, cfg: Scd2.Config, dimBase: String,
+      checkpoint: String, asOfDates: Long => String,
+      availableNow: Boolean = true): StreamingQuery =
+    EpochSink.start(updates, checkpoint, availableNow) { (batch, epoch) =>
+      val next =
+        if (epoch == 0) Scd2.initialLoad(batch, cfg, asOfDates(epoch))
+        else Scd2.applyChanges(Manifest.read(batch.sparkSession, dimBase, Some(epoch - 1)),
+          batch, cfg, asOfDates(epoch))
+      Manifest.writeVersioned(next, dimBase, Seq.empty, epoch); ()
+    }
 
-  /** Exactly-once streaming FACT load: every micro-batch lands in its
-    * own `batch_id=<epoch>` partition through the idempotent dynamic
-    * overwrite ([[graft.engine.Layers.replacePartitionsPath]]). After a
-    * crash between the data write and the checkpoint commit, the engine
-    * replays the same epoch — which REPLACES its own partition instead
-    * of appending, so the at-least-once replay becomes exactly-once
+  /** Exactly-once streaming FACT load: epoch k lands in its own
+    * `batch_id=k` partition, committed as manifest version k of the
+    * table at `outDir`. After a crash between the commit and the
+    * checkpoint, the engine replays the same epoch, whose commit is
+    * refused ([[graft.engine.Manifest.replacePartitionsVersioned]]
+    * returns false), so the at-least-once replay becomes exactly-once
     * output. The streaming twin of the batch loader's
     * (ingestion_date, batch_id) contract, and the streaming fix for the
     * reference's fact append-duplication (`dags/sales.py:102-106`). */
   def factSink(events: DataFrame, outDir: String, checkpoint: String,
-      availableNow: Boolean = true): StreamingQuery = {
-    val writer = events.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.engine.Layers.replacePartitionsPath(
-          batch.withColumn("batch_id", lit(batchId)), outDir, Seq("batch_id"))
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
-  }
-
-  /** Latest dimension version strictly before `beforeBatch` (None if no
-    * version exists yet). */
-  def latestDimVersion(spark: SparkSession, dimBase: String,
-      beforeBatch: Long = Long.MaxValue): Option[DataFrame] = {
-    val versions = graft.engine.Fs.listDirs(spark, dimBase)
-      .filter(_.getName.startsWith("v"))
-      .flatMap(f => scala.util.Try(f.getName.drop(1).toLong).toOption)
-      .filter(_ < beforeBatch)
-    if (versions.isEmpty) None
-    else Some(graft.engine.Fs.readParquet(spark, s"$dimBase/v${versions.max}"))
-  }
+      availableNow: Boolean = true): StreamingQuery =
+    EpochSink.start(events, checkpoint, availableNow) { (batch, epoch) =>
+      Manifest.replacePartitionsVersioned(batch.withColumn("batch_id", lit(epoch)),
+        outDir, Seq("batch_id"), epoch); ()
+    }
 }

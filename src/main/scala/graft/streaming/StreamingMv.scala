@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.engine.{Manifest, Mv}
 
 /** Streaming incremental materialized view: each micro-batch folds its
@@ -10,8 +10,8 @@ import graft.engine.{Manifest, Mv}
   * snapshot and commits the result as a manifest version NAMED BY THE
   * EPOCH (`Manifest.writeVersioned(batchId)`).
   *
-  * Exactly-once under foreachBatch's at-least-once replay falls out of
-  * two facts, with no sink-side dedup state at all:
+  * Exactly-once under the micro-batch sink's at-least-once replay falls
+  * out of two facts, with no sink-side dedup state at all:
   *  - batch k always merges against the snapshot at version k-1 — the
   *    version is pinned by the epoch id, so a replay re-reads the same
   *    base it used the first time, never a snapshot that already
@@ -34,22 +34,15 @@ object StreamingMv {
 
   def sink(rows: DataFrame, path: String, checkpoint: String,
       keys: Seq[String], measureCol: String,
-      availableNow: Boolean = true): StreamingQuery = {
-    val writer = rows.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val delta = Mv.state(batch, keys, col(measureCol))
-        val merged =
-          if (batchId == 0L) delta
-          else Mv.merge(Seq(
-            Manifest.read(spark, path, Some(batchId - 1)), delta), keys)
-        Manifest.writeVersioned(merged, path, Seq.empty, batchId)
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
-  }
+      availableNow: Boolean = true): StreamingQuery =
+    EpochSink.start(rows, checkpoint, availableNow) { (batch, epoch) =>
+      val delta = Mv.state(batch, keys, col(measureCol))
+      val merged =
+        if (epoch == 0L) delta
+        else Mv.merge(Seq(
+          Manifest.read(batch.sparkSession, path, Some(epoch - 1)), delta), keys)
+      Manifest.writeVersioned(merged, path, Seq.empty, epoch); ()
+    }
 
   /** The served MV off the newest committed snapshot. */
   def serve(spark: SparkSession, path: String, keys: Seq[String]): DataFrame =

@@ -32,14 +32,26 @@ class AtomicCommitSpec extends SparkSpec {
       .toDF("p", "id", "version")
   }
 
+  // arms the shared crashat:// FS to throw at the rename whose source is
+  // `leaf` — for a live partition, the move-aside that starts its
+  // publish — and returns `root` on that scheme
+  private def crashAtRenameOf(root: String, leaf: String): String = {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.crashat.impl", classOf[CrashAtFs].getName)
+    CrashAtFs.crashPath = _.toUri.getPath == s"$root/$leaf"
+    CrashAtFs.crashOp = Some("rename")
+    s"crashat://$root"
+  }
+
   test("crash BEFORE publish: target completely untouched, no debris visible to readers") {
     val out = Files.createTempDirectory("atomic1").toString
     Layers.replacePartitionsPath(mk(0), out, Seq("p"))
-    val boom = intercept[RuntimeException] {
-      Layers.replacePartitionsPath(mk(1), out, Seq("p"),
-        beforePublish = () => throw new RuntimeException("crash before publish"))
+    // p=1 is the first partition published: crashing at its move-aside
+    // leaves the batch fully staged and nothing published
+    val boom = intercept[java.io.IOException] {
+      Layers.replacePartitionsPath(mk(1), crashAtRenameOf(out, "p=1"), Seq("p"))
     }
-    assert(boom.getMessage.contains("crash before publish"))
+    assert(boom.getMessage == "injected crash at rename")
     val rows = spark.read.parquet(out)
     assert(rows.count() == 60)
     assert(rows.filter(col("version") =!= 0).count() == 0) // all old
@@ -50,10 +62,10 @@ class AtomicCommitSpec extends SparkSpec {
   test("crash MID-publish: every partition fully old or fully new, never a mix; retry converges") {
     val out = Files.createTempDirectory("atomic2").toString
     Layers.replacePartitionsPath(mk(0), out, Seq("p"))
-    intercept[RuntimeException] {
-      Layers.replacePartitionsPath(mk(1), out, Seq("p"),
-        onPublish = rel => if (rel == "p=2") throw new RuntimeException("killed mid-publish"))
+    val boom = intercept[java.io.IOException] {
+      Layers.replacePartitionsPath(mk(1), crashAtRenameOf(out, "p=2"), Seq("p"))
     }
+    assert(boom.getMessage == "injected crash at rename")
     // p=1 published (sorted order), p=2 and p=3 still old — each complete
     val byP = spark.read.parquet(out)
       .groupBy("p").agg(count(lit(1)).as("n"), count_distinct(col("version")).as("nv"),

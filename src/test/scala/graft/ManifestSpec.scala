@@ -288,6 +288,23 @@ class ManifestSpec extends SparkSpec {
     assert(Fs.listDirs(spark, path).map(_.getName).count(_.startsWith("data-")) == 1)
   }
 
+  test("a versioned commit below the head is refused, naming both versions; nothing is published") {
+    val path = Files.createTempDirectory("man_below").toString
+    assert(Manifest.writeVersioned(mk(0), path, Seq("p"), 5L))
+    // readers serve the head: a v3 written after v5 would never be read,
+    // and a partition replace at v3 would carry v5's entries back in time
+    val e1 = intercept[IllegalStateException](Manifest.writeVersioned(mk(1), path, Seq("p"), 3L))
+    assert(e1.getMessage.contains("version 3") && e1.getMessage.contains("head version 5"), e1.getMessage)
+    val e2 = intercept[IllegalStateException](
+      Manifest.replacePartitionsVersioned(mk(1).filter(col("p") === 1), path, Seq("p"), 4L))
+    assert(e2.getMessage.contains("version 4") && e2.getMessage.contains("head version 5"), e2.getMessage)
+    // the head itself is still the replay short-circuit, not an error
+    assert(!Manifest.writeVersioned(mk(1), path, Seq("p"), 5L))
+    assert(Manifest.history(spark, path).collect().map(_.getLong(0)).toSeq == Seq(5L))
+    assert(Manifest.read(spark, path).filter(col("version") =!= 0).count() == 0)
+    assert(Fs.listDirs(spark, path).map(_.getName).count(_.startsWith("data-")) == 1)
+  }
+
   test("losing the commit race surfaces as ConcurrentModificationException, not silent overwrite") {
     val path = Files.createTempDirectory("man6").toString
     Manifest.write(mk(0), path, Seq("p"))

@@ -62,31 +62,34 @@ object SparkWork {
 /** The shared test filesystem: a local FS reached by the `crashat://`
   * scheme (register it as `fs.crashat.impl`). Unarmed it is the local FS
   * plus a log of every mutation it sees; armed with `crashOp`, it throws
-  * (without doing the call) at the first such mutation — drives a write
-  * path to each of its crash points. */
+  * (without doing the call) at the first such mutation whose path — the
+  * source, for a rename — satisfies `crashPath`: drives a write path to
+  * each of its crash points. */
 class CrashAtFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("crashat:///")
   override def mkdirs(p: Path): Boolean = {
-    CrashAtFs.step("mkdirs"); super.mkdirs(p)
+    CrashAtFs.step("mkdirs", p); super.mkdirs(p)
   }
   override def create(p: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
       blockSize: Long, progress: org.apache.hadoop.util.Progressable) = {
-    CrashAtFs.step("create"); super.create(p, overwrite, bufferSize, replication, blockSize, progress)
+    CrashAtFs.step("create", p); super.create(p, overwrite, bufferSize, replication, blockSize, progress)
   }
   override def rename(src: Path, dst: Path): Boolean = {
-    CrashAtFs.step("rename"); super.rename(src, dst)
+    CrashAtFs.step("rename", src); super.rename(src, dst)
   }
   override def delete(p: Path, recursive: Boolean): Boolean = {
-    CrashAtFs.step("delete"); super.delete(p, recursive)
+    CrashAtFs.step("delete", p); super.delete(p, recursive)
   }
 }
 
 object CrashAtFs {
   @volatile var crashOp: Option[String] = None
+  @volatile var crashPath: Path => Boolean = _ => true
   val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  def step(op: String): Unit = {
-    if (crashOp.contains(op)) {
+  def step(op: String, p: Path): Unit = {
+    if (crashOp.contains(op) && crashPath(p)) {
       crashOp = None
+      crashPath = _ => true
       throw new java.io.IOException(s"injected crash at $op")
     }
     seen.add(op); ()

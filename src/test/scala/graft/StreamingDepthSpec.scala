@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import graft.engine.Manifest
 import graft.streaming.EventStream
 import java.sql.Timestamp
 
@@ -118,22 +119,21 @@ class StreamingDepthSpec extends SparkSpec {
     val q1 = EventStream.factSink(
       EventStream.readEventsStream(spark, in, spark.read.parquet(in).schema), out, ckpt)
     q1.awaitTermination()
-    assert(spark.read.parquet(out).count() == n)
+    assert(Manifest.read(spark, out).count() == n)
 
     // restart against the SAME checkpoint with no new input: all epochs
     // already committed → nothing is re-emitted
     val q2 = EventStream.factSink(
       EventStream.readEventsStream(spark, in, spark.read.parquet(in).schema), out, ckpt)
     q2.awaitTermination()
-    assert(spark.read.parquet(out).count() == n)
+    assert(Manifest.read(spark, out).count() == n)
 
-    // simulated crash-replay of a committed epoch: re-running its write
-    // REPLACES the batch partition, so output is unchanged (an append
-    // sink would double it)
-    val batch0 = spark.read.parquet(out).filter(col("batch_id") === 0)
+    // simulated crash-replay of a committed epoch: its version-0 commit
+    // is refused, so output is unchanged (an append sink would double it)
+    val batch0 = Manifest.read(spark, out).filter(col("batch_id") === 0)
     assert(batch0.count() > 0)
-    graft.engine.Layers.replacePartitionsPath(batch0, out, Seq("batch_id"))
-    assert(spark.read.parquet(out).count() == n)
+    assert(!Manifest.replacePartitionsVersioned(batch0, out, Seq("batch_id"), 0L))
+    assert(Manifest.read(spark, out).count() == n)
   }
 
   test("stream-stream join on the fixture produces attributable purchases") {
