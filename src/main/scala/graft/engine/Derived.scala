@@ -60,7 +60,11 @@ object Derived {
     * every later caller gets the same path back. Contract: the store's
     * content is a pure function of (name, dir) and callers treat it as
     * READ-ONLY after the build — queries whose measured semantics ARE
-    * writes (reload/retry proofs) must keep building their own stores. */
+    * writes (reload/retry proofs) must keep building their own stores.
+    * A caller that maintains a template (the IVF-PQ maintenance
+    * surfaces) clones its manifest tables with [[Manifest.shallowClone]]
+    * and commits to the clone: zero-copy, and safe because nothing
+    * commits to the template. */
   def store(spark: SparkSession, name: String, dir: String)
       (populate: String => Unit): String =
     built(s"store:$name|$dir") {

@@ -167,25 +167,6 @@ object Fs {
     } catch { case _: java.io.FileNotFoundException => None }
   }
 
-  /** Recursive directory copy — snapshot RESTORE for memoized store
-    * templates ([[Derived.store]]) that callers then mutate: cloning a
-    * built index/table directory is file-IO-scale (the compressed store
-    * bytes), where rebuilding it is compute-scale. */
-  def copyDir(spark: SparkSession, from: String, to: String): Unit = {
-    val (srcFs, src) = resolve(spark, from)
-    // the destination resolves its OWN FileSystem (a template on local
-    // disk may clone to an object store), and is cleared first: Hadoop
-    // FileUtil.copy's checkDest otherwise lands the clone in
-    // to/<srcBasename> when `to` already exists as a directory —
-    // silently mislaying it
-    val (dstFs, dst) = resolve(spark, to)
-    if (dstFs.exists(dst)) dstFs.delete(dst, true)
-    dstFs.mkdirs(dst.getParent)
-    org.apache.hadoop.fs.FileUtil.copy(srcFs, src, dstFs, dst,
-      false, true, spark.sparkContext.hadoopConfiguration)
-    ()
-  }
-
   /** Set a file's modification time through the FileSystem API —
     * `java.io.File.setLastModified` silently no-ops on object stores,
     * exactly the failure mode [[Fs]] exists to close. `atime = -1`

@@ -145,25 +145,27 @@ object Layers {
       for (rel <- leafDirs(spark, staging, partitionCols.size).sorted) { // deterministic publish order
         val leaf = s"$staging/$rel"
         val target = s"$path/$rel"
-        // Hadoop rename signals failure by RETURNING FALSE, not throwing
-        // — ignoring it here would delete the trash copy in the finally
-        // and lose the partition entirely, or nest the new dir inside a
-        // still-present target. Check both renames; restore from trash
-        // before surfacing a failed publish so the partition is never
-        // left missing.
+        // Hadoop rename signals failure by RETURNING FALSE, while object
+        // stores THROW — ignoring either here would delete the trash copy
+        // in the finally and lose the partition entirely, or nest the new
+        // dir inside a still-present target. Check both renames; restore
+        // from trash before surfacing a failed publish so the partition
+        // is never left missing.
         if (Fs.exists(spark, target) && !Fs.rename(spark, target, s"$trash/$rel"))
           throw new java.io.IOException(
             s"atomic publish: could not move aside existing partition $target")
-        if (!Fs.rename(spark, leaf, target)) {
+        val published = scala.util.Try(Fs.rename(spark, leaf, target))
+        if (!published.getOrElse(false)) {
           // restore the old copy; if even the restore fails, the trash
           // dir is the ONLY surviving copy — preserve it and say where
           val restored = !Fs.exists(spark, s"$trash/$rel") ||
-            Fs.rename(spark, s"$trash/$rel", target)
+            scala.util.Try(Fs.rename(spark, s"$trash/$rel", target)).getOrElse(false)
           if (!restored) preserveTrash = true
           throw new java.io.IOException(
             s"atomic publish: could not publish partition $rel" +
               (if (restored) " (old copy restored)"
-               else s" AND restore failed — old data preserved at $trash/$rel"))
+               else s" AND restore failed — old data preserved at $trash/$rel"),
+            published.failed.toOption.orNull)
         }
       }
     } finally {

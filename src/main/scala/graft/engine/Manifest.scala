@@ -11,16 +11,18 @@ import org.apache.spark.sql.types.StructType
   * `trino_scripts/dim_product.sql:35-36` `USING DELTA LOCATION`; no Delta
   * jars in this environment, SURVEY.md §7.5.3).
   *
-  * It is the commit protocol of the materialized views ([[Mv]]) and of
+  * It is the commit protocol of the materialized views ([[Mv]]), of
   * the epoch-keyed streaming sinks (`CorpusIngest`, `SpanIngest`,
   * `StreamingMv`, `EventStream`'s fact and SCD2 sinks), which commit
   * epoch k as version k ([[writeVersioned]],
-  * [[replacePartitionsVersioned]]). [[Layers.replacePartitionsPath]], the
-  * directory-rename publish left where a commit is not named by an
-  * epoch, is per-partition atomic but leaves a brief window where a
-  * partition is ABSENT between its two renames (and needs a debris sweep
-  * after a hard crash). This layer has no such window because it never
-  * mutates live data:
+  * [[replacePartitionsVersioned]]), and of the persisted IVF-PQ index
+  * (`Similarity.buildIvfPqIndexOn`: six tables whose builds, ingests,
+  * compactions, refits and retrains commit at the head version).
+  * [[Layers.replacePartitionsPath]], the directory-rename publish left
+  * on the remaining path-keyed tables, is per-partition atomic but
+  * leaves a brief window where a partition is ABSENT between its two
+  * renames (and needs a debris sweep after a hard crash). This layer has
+  * no such window because it never mutates live data:
   *
   *  - data files are IMMUTABLE: each commit writes a fresh
   *    `data-<uuid>/` dir under the table root and never touches others;

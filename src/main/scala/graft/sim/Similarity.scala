@@ -3,6 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Fns, Tables}
+import graft.engine.Manifest
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (64-dim float vectors).
@@ -783,50 +784,79 @@ object Similarity {
     * shortlist re-rank. Serving reads probed lists via partition
     * pruning on `cid` — at production list counts that is
     * nprobe/nClusters of the INDEX bytes, which are themselves ~100×
-    * smaller than the vectors [[buildIvfIndex]] serves. */
+    * smaller than the vectors [[buildIvfIndex]] serves.
+    *
+    * Every store under `indexPath` is a [[graft.engine.Manifest]] table
+    * committed at its head version: `centroids`, `codebooks` and the
+    * fit-time `stats` unpartitioned, `lists` by `cid`, the maintained
+    * appends `delta` by (`batch_id`, `cid`) and their drift stats
+    * `stats_delta` by `batch_id`. The build commits `delta` and
+    * `stats_delta` EMPTY (an empty commit records the schema), so every
+    * reader and maintenance step finds all of them. `stats` is the
+    * caller's: [[commitFitStats]]. */
   def buildIvfPqIndexOn(e: DataFrame, indexPath: String, nClusters: Int,
       ivfIters: Int, m: Int, codes: Int, pqIters: Int,
       fitKey: Option[String] = None)
       : (Seq[Centroid], Seq[Seq[Centroid]]) = {
+    val built = commitIvfPqStores(e, indexPath, nClusters, ivfIters, m,
+      codes, pqIters, fitKey)
+    commitEmpty(batchStats(e, built._1, 0L), s"$indexPath/stats_delta", Seq("batch_id"))
+    built
+  }
+
+  /** The build's commits minus the empty `stats_delta`: [[retrainIfDrifted]]
+    * clears that one only after its `stats` commit. */
+  private def commitIvfPqStores(e: DataFrame, indexPath: String,
+      nClusters: Int, ivfIters: Int, m: Int, codes: Int, pqIters: Int,
+      fitKey: Option[String]): (Seq[Centroid], Seq[Seq[Centroid]]) = {
     import e.sparkSession.implicits._
     val subDim = 64 / m
     val coarse = coarseFit(e, fitKey, nClusters, ivfIters)
-    coarse.map(c => (c.cid, c.c, c.cn2)).toDF("cid", "centroid", "cnorm2")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/centroids")
+    Manifest.write(coarse.map(c => (c.cid, c.c, c.cn2)).toDF("cid", "centroid", "cnorm2"),
+      s"$indexPath/centroids")
     val fits = pqFitCached(e, fitKey, m, subDim, codes, pqIters)
     val padded = pqPaddedRows(fits, m, codes, subDim)
-    padded.toDF("s", "cid", "c", "cn2")
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/codebooks")
-    val cbDf = pqCodebookDf(e.sparkSession, padded)
-    pqEncodeCoded(e, coarse, fits, m, subDim, cbDf)
-      .write.mode("overwrite").partitionBy("cid").parquet(s"$indexPath/lists")
+    Manifest.write(padded.toDF("s", "cid", "c", "cn2"), s"$indexPath/codebooks")
+    val coded = pqEncodeCoded(e, coarse, fits, m, subDim,
+      pqCodebookDf(e.sparkSession, padded))
+    Manifest.write(coded, s"$indexPath/lists", Seq("cid"))
+    commitEmpty(coded.withColumn("batch_id", lit(0L)), s"$indexPath/delta",
+      Seq("batch_id", "cid"))
     (coarse, fits)
   }
+
+  /** An empty snapshot with `rows`' schema: `limit(0)` plans no scan. */
+  private def commitEmpty(rows: DataFrame, path: String, partitionCols: Seq[String]): Long =
+    Manifest.write(rows.limit(0), path, partitionCols)
 
   /** The stored coarse quantizer back as driver state — O(nClusters)
     * metadata, the collect an index SERVER does once at startup. */
   private[graft] def readStoredCoarse(spark: SparkSession, indexPath: String): Seq[Centroid] =
-    graft.engine.Fs.readParquet(spark, s"$indexPath/centroids").collect()
+    Manifest.read(spark, s"$indexPath/centroids").collect()
       .map(r => Centroid(r.getInt(0), r.getSeq[Double](1), r.getDouble(2)))
       .toSeq.sortBy(_.cid)
 
-  /** The stored per-subspace codebooks back as the UNPADDED fit
-    * sequences `pqEncodeCoded` assigns against — zero-pad rows (dead
-    * codewords, written for dense LUT indexing) are dropped by their
-    * exact (cn2 = 0 ∧ c ≡ 0) signature. A SURVIVING codeword with that
+  /** The stored padded codebook rows `(s, cid, c, cn2)` — O(m·codes)
+    * metadata, collected once per ingest or serve. */
+  private def readStoredCodebook(spark: SparkSession,
+      indexPath: String): Seq[(Int, Int, Seq[Double], Double)] =
+    Manifest.read(spark, s"$indexPath/codebooks").collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2), r.getDouble(3))).toSeq
+
+  /** The stored codebook rows as the UNPADDED fit sequences
+    * `pqEncodeCoded` assigns against — zero-pad rows (dead codewords,
+    * written for dense LUT indexing) are dropped by their exact
+    * (cn2 = 0 ∧ c ≡ 0) signature. A SURVIVING codeword with that
     * signature is indistinguishable from padding, but cannot arise from
     * money-rounded means of non-degenerate embedding slices (and its
     * assignment cosine is 0/0 = NaN either way); the encode-equivalence
-    * spec pins the round trip. O(m·codes) metadata. */
-  private[graft] def readStoredFits(spark: SparkSession, indexPath: String,
-      m: Int): Seq[Seq[Centroid]] = {
-    val flat = graft.engine.Fs.readParquet(spark, s"$indexPath/codebooks").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2), r.getDouble(3)))
+    * spec pins the round trip. */
+  private def storedFits(flat: Seq[(Int, Int, Seq[Double], Double)],
+      m: Int): Seq[Seq[Centroid]] =
     (0 until m).map { s =>
       flat.filter(t => t._1 == s && (t._4 != 0.0 || t._3.exists(_ != 0.0)))
-        .map(t => Centroid(t._2, t._3, t._4)).toSeq.sortBy(_.cid)
+        .map(t => Centroid(t._2, t._3, t._4)).sortBy(_.cid)
     }
-  }
 
   /** Coarse assignment WITH its money-rounded cosine — the semanticDedup
     * `scored` shape factored for the maintenance stats. */
@@ -850,6 +880,20 @@ object Similarity {
       .agg(count(lit(1)).as(nCol),
         Fns.money(Fns.sumMoney(col("ccos")) / count(lit(1))).as(meanCol))
 
+  /** The fit-time per-list stats of `e` under `coarse`, committed as
+    * the index's `stats` table — the baseline the drift trigger compares
+    * each batch's `stats_delta` rows against. */
+  private[graft] def commitFitStats(e: DataFrame, coarse: Seq[Centroid],
+      indexPath: String): Long =
+    Manifest.write(cidStats(assignScored(e, coarse), "n_fit", "fit_mean_cos"),
+      s"$indexPath/stats")
+
+  /** One batch's per-list assignment stats, keyed by `batchId` — the
+    * `stats_delta` rows. */
+  private def batchStats(batchE: DataFrame, coarse: Seq[Centroid], batchId: Long): DataFrame =
+    cidStats(assignScored(batchE, coarse), "n_batch", "batch_mean_cos")
+      .withColumn("batch_id", lit(batchId))
+
   /** INCREMENTAL index maintenance — the streaming companion to
     * [[buildIvfPqIndexOn]], completing the CorpusIngest philosophy for
     * the ANN family (round-12 brief #4; the reference's incremental-
@@ -858,128 +902,97 @@ object Similarity {
     * the index): a new batch is ENCODED MAP-ONLY against the stored
     * quantizers (centroids + codebooks arrive as O(nClusters + m·codes)
     * driver metadata and broadcast-attach; no fit, no corpus scan, no
-    * shuffle in the encode) and appended as `delta/batch_id=N/cid=…`
-    * partitions — serving unions them under the same `cid` partition
-    * pruning, and the base `lists/` store is never touched (spec-pinned
-    * by file listing). Alongside the codes, the ingest tracks PER-LIST
-    * DRIFT: the batch's per-cid assignment-cosine stats land in
-    * `stats_delta/batch_id=N`, to be compared against the fit-time
-    * `stats` store — the retrain trigger ([[annIndexMaintain]]) — so
-    * re-training happens when the data moved, not on a schedule.
+    * shuffle in the encode) and committed as `delta` partitions
+    * (`batch_id` = N, per `cid`) — serving unions them under the same
+    * `cid` partition pruning, and the base `lists` table is never
+    * committed to (spec-pinned by its version and entries). Alongside
+    * the codes, the ingest tracks PER-LIST DRIFT: the batch's per-cid
+    * assignment-cosine stats land in `stats_delta` (`batch_id` = N), to
+    * be compared against the fit-time `stats` table — the retrain
+    * trigger ([[annIndexMaintain]]) — so re-training happens when the
+    * data moved, not on a schedule.
     *
-    * Exactly-once: both writes are batch-keyed partition replaces
-    * ([[graft.engine.Layers.replacePartitionsPath]]); a replayed batch
-    * re-encodes against the same stored quantizers and overwrites its
-    * own partitions bit-for-bit. Returns the batch row count (one job
-    * over the batch — the only action besides the two writes). */
+    * Exactly-once: both writes are batch-keyed partition-replace
+    * commits; a replayed batch re-encodes against the same stored
+    * quantizers and re-commits its own partitions with the same rows.
+    * Returns the batch row count. */
   def ingestIvfPqBatch(batchE: DataFrame, indexPath: String, batchId: Long,
       m: Int = 8): Long = {
     val spark = batchE.sparkSession
     val subDim = 64 / m
     val coarse = readStoredCoarse(spark, indexPath)
-    val fits = readStoredFits(spark, indexPath, m)
-    val cbFlat = graft.engine.Fs.readParquet(spark, s"$indexPath/codebooks").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2), r.getDouble(3))).toSeq
+    val cbFlat = readStoredCodebook(spark, indexPath)
+    val fits = storedFits(cbFlat, m)
     val cbDf = pqCodebookDf(spark, cbFlat)
-    // the whole batch_id=N subtree clears BEFORE the write, so the
-    // replace is truly BATCH-keyed, not (batch, cid)-keyed: a replayed
-    // ingest that runs after an intervening refit ([[refitDriftedLists]]
-    // may move the coarse centroids) can assign a row to a DIFFERENT cid
-    // than the crashed attempt did, and a per-(batch,cid) replace would
-    // leave the old attempt's stale cid partition serving that row twice.
-    // Crash between the delete and the publish leaves batch N absent —
-    // healed by the stream's own replay of the batch.
-    graft.engine.Fs.deleteDir(spark, s"$indexPath/delta/batch_id=$batchId")
-    // r16 (opt guide §2.6): the two publishes are independent jobs over
-    // the same batch with disjoint output roots (each stages under its
-    // own _staging-<uuid>) — submit them from two driver threads so the
-    // smaller stats job's tasks back-fill the encode job's straggler
-    // tail instead of running strictly after it.
+    val deltaPath = s"$indexPath/delta"
+    val statsPath = s"$indexPath/stats_delta"
+    // a replay clears batch N's delta BEFORE the write, so the replace
+    // is truly BATCH-keyed, not (batch, cid)-keyed: a replayed ingest
+    // that runs after an intervening refit ([[refitDriftedLists]] may
+    // move the coarse centroids) can assign a row to a DIFFERENT cid
+    // than the first attempt did, and a per-(batch, cid) replace would
+    // leave the first attempt's stale cid partition serving that row
+    // twice. A crash between the clear and the delta commit leaves
+    // batch N absent until the stream replays it. The manifest entries
+    // say whether batch N is there, so a first delivery pays no Spark
+    // job for the clear.
+    val deltaSt = Manifest.stateOrThrow(spark, deltaPath)
+    if (Manifest.overlapping(deltaSt, org.apache.spark.sql.types.StructType.fromDDL(
+        deltaSt.schemaDdl), "batch_id", Some(batchId), Some(batchId)).nonEmpty)
+      Manifest.deleteWhere(spark, deltaPath, col("batch_id") === batchId)
+    // r16 (opt guide §2.6): the two commits are independent jobs over
+    // the same batch into different tables — submit them from two
+    // driver threads so the smaller stats job's tasks back-fill the
+    // encode job's straggler tail instead of running strictly after it.
     graft.engine.Par.run(
-      () => graft.engine.Layers.replacePartitionsPath(
+      () => Manifest.replacePartitions(
         pqEncodeCoded(batchE, coarse, fits, m, subDim, cbDf)
           .withColumn("batch_id", lit(batchId)),
-        s"$indexPath/delta", Seq("batch_id", "cid")),
-      () => graft.engine.Layers.replacePartitionsPath(
-        cidStats(assignScored(batchE, coarse), "n_batch", "batch_mean_cos")
-          .withColumn("batch_id", lit(batchId)),
-        s"$indexPath/stats_delta", Seq("batch_id")))
-    // the batch size is the sum of the per-list counts just published —
-    // a ~nClusters-row metadata read replaces what was a third full
-    // batch recompute + scan (guide §1.4: don't pay a corpus pass for a
-    // scalar the index already holds). Every batch row is assigned to
-    // exactly one list, so the sum IS the batch count; an empty batch
-    // publishes no partition dir, hence the exists guard.
-    val statsDir = s"$indexPath/stats_delta/batch_id=$batchId"
-    if (!graft.engine.Fs.exists(spark, statsDir)) 0L
-    else graft.engine.Fs.readParquet(spark, statsDir)
-      .agg(sum(col("n_batch"))).collect()(0).getLong(0)
+        deltaPath, Seq("batch_id", "cid")),
+      () => Manifest.replacePartitions(batchStats(batchE, coarse, batchId),
+        statsPath, Seq("batch_id")))
+    // the batch size is the sum of the per-list counts just committed —
+    // a ~nClusters-row read replaces a third full batch recompute + scan
+    // (guide §1.4: don't pay a corpus pass for a scalar the index already
+    // holds). Every batch row is assigned to exactly one list, so the sum
+    // IS the batch count; an empty batch commits no partition.
+    Manifest.readWhere(spark, statsPath, "batch_id", Some(batchId), Some(batchId))
+      .agg(coalesce(sum(col("n_batch")), lit(0L))).collect()(0).getLong(0)
   }
 
-  /** COMPACT a maintained index: fold every `delta/batch_id=N` append
-    * back into the base `lists/` store (one rewrite partitioned by
-    * `cid`) and drop the delta — the [[graft.streaming.ClusterMaintain
+  /** COMPACT a maintained index: fold every `delta` row back into the
+    * base `lists` table (one partition-replace commit by `cid`) and
+    * commit `delta` empty — the [[graft.streaming.ClusterMaintain
     * .compactMerges]] philosophy applied to the ANN index. Without it a
     * long-lived index accumulates one small parquet directory per
     * (batch, cid) forever: serving stays CORRECT (the union reads them
     * all) but each probe pays nBatches × file-open overhead per probed
-    * list. Crash-safe ordering: the rewritten lists publish FIRST
-    * (atomic per-cid partition replace, content = old lists ∪ deltas),
-    * and the delta is deleted only after. A crash between the two
-    * leaves delta rows duplicated in base+delta — single-writer
-    * maintenance contract (the [[graft.streaming.ClusterMaintain]]
-    * epoch discipline): on restart, RE-RUN the compaction before
-    * serving; it is idempotent and heals the duplication exactly,
-    * because the fold deduplicates on `neighbor_id` and codes are a
-    * pure function of the stored codebooks (duplicates are
-    * bit-identical, so dropping either copy is exact — spec-pinned).
-    * Caller contract: vec_ids unique across base and all batches.
-    *
-    * `belowBatchId` bounds the fold to delta partitions with
-    * `batch_id < belowBatchId` — REQUIRED when a crash-replayable
-    * caller compacts and then ingests inside one epoch
-    * ([[ivfPqSink]] passes its epoch id): an unbounded replay would
-    * fold the crashed attempt's OWN `batch_id=N` delta into base and
-    * then re-append the identical rows as delta, serving every batch-N
-    * vector twice until the next compaction. Bounded, the replayed
-    * epoch's delta stays batch-keyed and the re-ingest replaces it
-    * idempotently (spec-pinned). Returns the number of delta rows
+    * list. Order: `lists` commits FIRST (content = old lists ∪ delta),
+    * then `delta` empties. A crash between the two commits leaves delta
+    * rows duplicated in base + delta — single-writer maintenance
+    * contract (the [[graft.streaming.ClusterMaintain]] epoch
+    * discipline): on restart, RE-RUN the compaction before serving; it
+    * is idempotent and heals the duplication exactly, because the fold
+    * deduplicates on `neighbor_id` and codes are a pure function of the
+    * stored codebooks (duplicates are bit-identical, so dropping either
+    * copy is exact — spec-pinned). Caller contract: vec_ids unique
+    * across base and all batches. Returns the number of delta rows
     * folded. */
-  def compactIvfPqDelta(spark: SparkSession, indexPath: String,
-      belowBatchId: Long = Long.MaxValue): Long = {
+  def compactIvfPqDelta(spark: SparkSession, indexPath: String): Long = {
     val deltaPath = s"$indexPath/delta"
-    if (!graft.engine.Fs.exists(spark, deltaPath)) return 0L
-    val foldIds = graft.engine.Fs.listDirs(spark, deltaPath).map(_.getName)
-      .collect { case d if d.startsWith("batch_id=") =>
-        d.stripPrefix("batch_id=").toLong }
-      .filter(_ < belowBatchId)
-    if (foldIds.isEmpty) return 0L
-    val base = graft.engine.Fs.readParquet(spark, s"$indexPath/lists")
-    val delta = graft.engine.Fs.readParquet(spark, deltaPath)
-      .filter(col("batch_id") < belowBatchId).drop("batch_id")
-      .select(base.columns.map(col).toIndexedSeq: _*)
-      .localCheckpoint(true)
+    val listsPath = s"$indexPath/lists"
+    if (Manifest.stateOrThrow(spark, deltaPath).entries.isEmpty) return 0L
+    val delta = Manifest.read(spark, deltaPath)
+    val base = Manifest.read(spark, listsPath)
     val n = delta.count()
-    val merged = base.unionByName(delta)
-      .dropDuplicates("neighbor_id")
-    graft.engine.Layers.replacePartitionsPath(merged, s"$indexPath/lists", Seq("cid"))
-    foldIds.foreach(b => graft.engine.Fs.deleteDir(spark, s"$deltaPath/batch_id=$b"))
-    if (graft.engine.Fs.listDirs(spark, deltaPath).isEmpty)
-      graft.engine.Fs.deleteDir(spark, deltaPath)
+    Manifest.replacePartitions(
+      base.unionByName(delta.select(base.columns.map(col).toIndexedSeq: _*))
+        .dropDuplicates("neighbor_id"),
+      listsPath, Seq("cid"))
+    commitEmpty(delta, deltaPath, Seq("batch_id", "cid"))
     n
   }
 
-  /** Execute the drift loop's decision: if any list's latest batch
-    * stats sit more than `driftTol` below its fit-time mean (the
-    * [[annIndexMaintain]] trigger), RE-TRAIN — rebuild the whole index
-    * over `corpusE` (the caller owns the vectors; the index stores only
-    * codes), refresh the fit stats, and clear the delta + batch stats
-    * (their rows are superseded by the new base encode). Otherwise do
-    * nothing. This is "re-train only on a drift trigger" as an
-    * executable maintenance step instead of a report: schedule-free,
-    * the rebuild cost is paid exactly when the data moved. Returns
-    * true iff a retrain ran. Single-writer maintenance contract, like
-    * [[compactIvfPqDelta]]. */
   /** The drifted-list set: cids whose LATEST batch assignment quality
     * sits more than `driftTol` below their fit-time mean — the shared
     * trigger of [[retrainIfDrifted]] (global reset) and
@@ -987,12 +1000,8 @@ object Similarity {
     * metadata; money values compare exactly on both engines. */
   private def driftedCids(spark: SparkSession, indexPath: String,
       driftTol: Double): Seq[Int] = {
-    val statsPath = s"$indexPath/stats"
-    val deltaStats = s"$indexPath/stats_delta"
-    if (!graft.engine.Fs.exists(spark, statsPath) ||
-        !graft.engine.Fs.exists(spark, deltaStats)) return Seq.empty
-    val fit = graft.engine.Fs.readParquet(spark, statsPath)
-    val bat = graft.engine.Fs.readParquet(spark, deltaStats)
+    val fit = Manifest.read(spark, s"$indexPath/stats")
+    val bat = Manifest.read(spark, s"$indexPath/stats_delta")
     val latest = bat.withColumn("__rn",
         org.apache.spark.sql.functions.row_number().over(
           org.apache.spark.sql.expressions.Window.partitionBy(col("cid"))
@@ -1003,35 +1012,42 @@ object Similarity {
       .select(col("cid")).collect().map(_.getInt(0)).toSeq.sorted
   }
 
+  /** Execute the drift loop's decision: if any list's latest batch
+    * stats sit more than `driftTol` below its fit-time mean (the
+    * [[annIndexMaintain]] trigger), RE-TRAIN — rebuild the whole index
+    * over `corpusE` (the caller owns the vectors; the index stores only
+    * codes): the build's commits, `delta` committed empty (its codes
+    * were encoded against the OLD codebooks — serving them under the
+    * NEW codebook LUTs would be silently wrong ADC distances), the
+    * refreshed fit `stats` as the commit point, and `stats_delta`
+    * committed empty LAST (the trigger clear). Otherwise do nothing.
+    * This is "re-train only on a drift trigger" as an executable
+    * maintenance step instead of a report: schedule-free, the rebuild
+    * cost is paid exactly when the data moved. Returns true iff a
+    * retrain ran.
+    *
+    * Crash windows (single-writer re-run contract, like
+    * [[compactIvfPqDelta]]) lie only between two tables' commits; every
+    * table always reads a complete snapshot, old or new. Before the
+    * `stats` commit the trigger's inputs are exactly the old ones, so
+    * the re-run re-fires the same deterministic trigger and the
+    * idempotent rebuild converges (spec-pinned for a failure inside the
+    * `stats` commit); until then the serve may meet new codebooks with
+    * old lists or delta, which is why the re-run comes before serving.
+    * A crash between the `stats` commit and the clear leaves the whole
+    * new index and compares the old batch stats against the refreshed
+    * fit: at worst one more rebuild. */
   def retrainIfDrifted(corpusE: DataFrame, indexPath: String,
       nClusters: Int = 10, ivfIters: Int = 3, m: Int = 8, codes: Int = 32,
       pqIters: Int = 2, driftTol: Double = 0.05): Boolean = {
     val spark = corpusE.sparkSession
-    val statsPath = s"$indexPath/stats"
-    val deltaStats = s"$indexPath/stats_delta"
     val triggered = driftedCids(spark, indexPath, driftTol).nonEmpty
     if (triggered) {
-      val (coarse, _) = buildIvfPqIndexOn(corpusE, indexPath, nClusters,
-        ivfIters, m, codes, pqIters)
-      // delta deletes come BEFORE the stats publish — the stats write is
-      // the commit point. The stale delta's codes were encoded against
-      // the OLD codebooks; serving them under the NEW codebook LUTs
-      // would be silently wrong ADC distances. Crash windows:
-      //  - after the rebuild, before the deletes: stats_delta and stats
-      //    both survive unchanged, so a restart re-evaluates the SAME
-      //    deterministic trigger, re-triggers, and the idempotent
-      //    rebuild + deletes heal (single-writer contract, like
-      //    [[compactIvfPqDelta]]: re-run the maintenance step before
-      //    serving after a crash);
-      //  - between the deletes and the stats publish: serving is already
-      //    consistent (new index, no delta); stats keep the old fit's
-      //    basis, so the NEXT ingest's drift comparison may spuriously
-      //    re-trigger one rebuild — which refreshes stats. Fails safe
-      //    (one wasted rebuild), never serves mixed-epoch codes.
-      graft.engine.Fs.deleteDir(spark, s"$indexPath/delta")
-      graft.engine.Fs.deleteDir(spark, deltaStats)
-      cidStats(assignScored(corpusE, coarse), "n_fit", "fit_mean_cos")
-        .coalesce(1).write.mode("overwrite").parquet(statsPath)
+      val (coarse, _) = commitIvfPqStores(corpusE, indexPath, nClusters,
+        ivfIters, m, codes, pqIters, None)
+      commitFitStats(corpusE, coarse, indexPath)
+      commitEmpty(batchStats(corpusE, coarse, 0L), s"$indexPath/stats_delta",
+        Seq("batch_id"))
     }
     triggered
   }
@@ -1039,66 +1055,61 @@ object Similarity {
   /** PARTIAL refit — the 100 TB scale path for the drift trigger
     * (round-13 verdict #3: [[retrainIfDrifted]]'s full rebuild pays a
     * whole-corpus fit when drift is typically localized). Re-clusters
-    * ONLY the drifted lists' members, in place:
+    * ONLY the drifted lists' members:
     *
     *  1. drifted cids D from the shared trigger ([[driftedCids]]);
-    *  2. their member rows — base `lists/cid∈D` (partition-pruned) plus
-    *     any `delta/…/cid∈D` rows — and ONLY those members' vectors,
-    *     fetched by one join against the caller's corpus;
+    *  2. their member rows — base `lists` rows with cid∈D (partition-
+    *     pruned) plus any `delta` rows with cid∈D — and ONLY those
+    *     members' vectors, fetched by one join against the caller's
+    *     corpus;
     *  3. a local deterministic Lloyd over that slice with k = |D| (the
     *     SAME seed/assign/update rules as the global fit; surviving
     *     centroid i takes over drifted cid D(i) — cids are labels);
-    *  4. members reassign among the NEW D-centroids and their list
-    *     partitions rewrite; every other list, the codebooks, and every
-    *     code byte stay BIT-UNTOUCHED — PQ codes are a pure function of
-    *     the codebooks, so reassignment moves rows between lists without
-    *     re-encoding, and no mixed-epoch ADC mismatch can exist (the
-    *     correctness axis of the full path's crash argument); coarse-
-    *     centroid changes affect only probe routing, i.e. recall;
-    *  5. the folded `delta/…/cid∈D` partitions delete (their rows now
-    *     live in base), the FOLDED batches' `stats_delta` partitions
-    *     clear (their drift signal is consumed; an unfolded epoch's
-    *     stats survive so the next trigger re-evaluates them against
-    *     the refreshed baseline), and the refreshed D-list fit stats
-    *     MERGE into `stats` as the commit point — the
-    *     [[retrainIfDrifted]] ordering.
+    *  4. members reassign among the NEW D-centroids and `lists` commits
+    *     their partitions (a D-cid left without members is deleted);
+    *     every other list, the codebooks, and every code byte stay
+    *     BIT-UNTOUCHED — PQ codes are a pure function of the codebooks,
+    *     so reassignment moves rows between lists without re-encoding,
+    *     and no mixed-epoch ADC mismatch can exist (the correctness axis
+    *     of the full path's crash argument); coarse-centroid changes
+    *     affect only probe routing, i.e. recall. `centroids` commits
+    *     with the D rows replaced;
+    *  5. the folded `delta` rows (cid∈D) are deleted (they now live in
+    *     base), the refreshed D-list fit stats MERGE into `stats` as the
+    *     commit point, and LAST the FOLDED batches' `stats_delta` rows
+    *     are deleted (their drift signal is consumed; an unfolded epoch's
+    *     stats survive so the next trigger re-evaluates them against the
+    *     refreshed baseline).
     *
     * Cost ∝ the drifted fraction: one pruned list read, one Lloyd over
-    * the drifted members, one |D|-partition rewrite — never a corpus
+    * the drifted members, one |D|-partition commit — never a corpus
     * fit. When EVERY list drifts, the member slice is the indexed
     * corpus and k = the fit's list count, so the coarse re-fit is
     * bit-identical to the full rebuild's (spec-pinned); the codebooks
     * are the one thing only [[retrainIfDrifted]] refreshes.
     *
     * Crash windows (single-writer re-run contract, as everywhere in
-    * this family): reassignment PERMUTES members within D — a crash
-    * mid-rewrite leaves some member duplicated across two D-partitions,
-    * and the re-run's member collection dedups on `neighbor_id`, so it
-    * re-derives the identical refit and the final rewrite + stale-
-    * partition deletes heal exactly. The trigger survives every window
-    * before the final stats MERGE (the commit point): the `stats_delta`
-    * clear runs strictly AFTER the merge — and is bounded to the FOLDED
-    * batches (`batch_id < belowBatchId`): an epoch-bounded caller's
-    * current batch keeps its stats row, so its still-delta-resident
-    * assignments keep a live trigger for the next epoch instead of
-    * having their drift signal silently consumed — so a crash between
-    * merge and clear leaves a live trigger that re-fires and re-runs
-    * the idempotent refit — the fail-safe direction
-    * ([[retrainIfDrifted]]'s ordering) — never a silently stale fit
-    * baseline.
+    * this family) lie only between two commits; no store is ever absent
+    * or torn. A crash between the `lists` commit and the emptied-list
+    * delete leaves a member in two D-partitions, and the re-run's member
+    * collection dedups on `neighbor_id`, so it re-derives the identical
+    * refit. The trigger survives every window before the final
+    * `stats_delta` delete, so a crash anywhere leaves a live trigger that
+    * re-fires the idempotent refit — never a silently stale fit baseline.
     *
-    * `belowBatchId` bounds the delta fold to `batch_id < belowBatchId`,
-    * exactly as for [[compactIvfPqDelta]] — REQUIRED when a crash-
-    * replayable caller ingests and refits inside one epoch
-    * ([[ivfPqSink]] passes its epoch id): an unbounded refit would fold
-    * the epoch's OWN just-ingested `batch_id=N` delta into the base
-    * lists, and the replayed epoch's re-ingest would re-write that
-    * delta partition — those vectors then live in BOTH base and delta,
-    * served twice forever (the union in [[knnIvfPqFromIndexOn]] does
-    * not dedup, by design — a healthy store never duplicates). Bounded,
-    * the current epoch's delta stays batch-keyed and the re-ingest
-    * replaces it idempotently; its rows fold at the next compaction or
-    * a later epoch's refit. Returns |D| (0 = no drift). */
+    * `belowBatchId` bounds the delta fold AND the `stats_delta` delete
+    * to `batch_id < belowBatchId` — REQUIRED when a crash-replayable
+    * caller ingests and refits inside one epoch ([[ivfPqSink]] passes
+    * its epoch id): an unbounded refit would fold the epoch's OWN
+    * just-ingested delta into the base lists, and the replayed epoch's
+    * re-ingest would re-commit that delta — those vectors then live in
+    * BOTH base and delta, served twice forever (the union in
+    * [[knnIvfPqFromIndexOn]] does not dedup, by design — a healthy store
+    * never duplicates). Bounded, the current epoch's delta stays
+    * batch-keyed and the re-ingest replaces it idempotently; its rows
+    * and its stats row stay for a later epoch's refit (at worst one
+    * extra bounded refit, never a silently dropped live signal).
+    * Returns |D| (0 = no drift). */
   def refitDriftedLists(corpusE: DataFrame, indexPath: String,
       ivfIters: Int = 3, driftTol: Double = 0.05,
       belowBatchId: Long = Long.MaxValue): Int = {
@@ -1108,19 +1119,16 @@ object Similarity {
     if (drifted.isEmpty) return 0
     val listsPath = s"$indexPath/lists"
     val deltaPath = s"$indexPath/delta"
-    val base = graft.engine.Fs.readParquet(spark, listsPath)
-    val withDelta =
-      if (graft.engine.Fs.exists(spark, deltaPath))
-        base.unionByName(graft.engine.Fs.readParquet(spark, deltaPath)
-          .filter(col("batch_id") < belowBatchId).drop("batch_id")
-          .select(base.columns.map(col).toIndexedSeq: _*))
-      else base
+    val folded = col("batch_id") < belowBatchId
+    val base = Manifest.read(spark, listsPath)
+    val withDelta = base.unionByName(
+      Manifest.readWhere(spark, deltaPath, "batch_id", None, Some(belowBatchId - 1))
+        .select(base.columns.map(col).toIndexedSeq: _*))
     // drifted members, deduped (a prior crashed refit can leave a member
     // in two D-partitions; either copy is bit-identical)
     val dRows = withDelta.filter(col("cid").isin(drifted: _*))
       .select(col("neighbor_id"), col("codes"), col("recon_n2"))
       .dropDuplicates("neighbor_id")
-      .localCheckpoint(true)
     val memVec = corpusE
       .join(dRows.select(col("neighbor_id").as("vec_id")), "vec_id")
       .select(col("vec_id"), col("v"), col("norm2"))
@@ -1132,67 +1140,27 @@ object Similarity {
       .join(dRows, "neighbor_id")
       .select(base.columns.map(col).toIndexedSeq: _*)
       .localCheckpoint(true)
-    // refreshed stats for the refit region, materialized BEFORE any
-    // store mutation (they read the pre-rewrite checkpoints anyway)
-    val dStats = cidStats(assignScored(memVec, relabeled), "n_fit", "fit_mean_cos")
-      .localCheckpoint(true)
-    // (4) rewrite the D list partitions, then clear D-cids that lost
+    // (4) commit the D list partitions, then delete D-cids that lost
     // every member (their rows now live in sibling D-partitions)
-    graft.engine.Layers.replacePartitionsPath(reassigned, listsPath, Seq("cid"))
-    val live = reassigned.select(col("cid")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    (drifted.toSet -- live).foreach(c =>
-      graft.engine.Fs.deleteDir(spark, s"$listsPath/cid=$c"))
-    // centroid store: D rows replaced, the rest verbatim (merged frame
-    // materialized before the self-overwrite)
+    Manifest.replacePartitions(reassigned, listsPath, Seq("cid"))
+    val emptied = drifted.toSet -- reassigned.select(col("cid")).distinct()
+      .collect().map(_.getInt(0))
+    if (emptied.nonEmpty)
+      Manifest.deleteWhere(spark, listsPath, col("cid").isin(emptied.toSeq: _*))
     val centPath = s"$indexPath/centroids"
-    val mergedCents = graft.engine.Fs.readParquet(spark, centPath)
+    Manifest.write(Manifest.read(spark, centPath)
       .filter(!col("cid").isin(drifted: _*))
-      .unionByName(relabeled.map(c => (c.cid, c.c, c.cn2))
-        .toDF("cid", "centroid", "cnorm2"))
-      .localCheckpoint(true)
-    mergedCents.coalesce(1).write.mode("overwrite").parquet(centPath)
-    // (5) fold-source deletes (ONLY the folded batches — the epoch
-    // bound keeps the current epoch's delta batch-keyed), then the
-    // stats MERGE as the commit point, then the trigger clear LAST: a
-    // crash anywhere before the clear leaves a live trigger that
-    // re-fires the idempotent refit — never a stale baseline
-    graft.engine.Fs.listDirs(spark, deltaPath)
-      .filter(b => b.getName.startsWith("batch_id=") &&
-        b.getName.stripPrefix("batch_id=").toLong < belowBatchId)
-      .foreach { b =>
-        graft.engine.Fs.listDirs(spark, b.toString)
-          .filter(c => drifted.map(d => s"cid=$d").contains(c.getName))
-          .foreach(c => graft.engine.Fs.deleteDir(spark, c.toString))
-        if (graft.engine.Fs.listDirs(spark, b.toString).isEmpty)
-          graft.engine.Fs.deleteDir(spark, b.toString)
-      }
-    if (graft.engine.Fs.exists(spark, deltaPath) &&
-        graft.engine.Fs.listDirs(spark, deltaPath).isEmpty)
-      graft.engine.Fs.deleteDir(spark, deltaPath)
+      .unionByName(relabeled.map(c => (c.cid, c.c, c.cn2)).toDF("cid", "centroid", "cnorm2")),
+      centPath)
+    // (5) the folded delta rows, then the stats MERGE as the commit
+    // point, then the trigger clear LAST
+    Manifest.deleteWhere(spark, deltaPath, col("cid").isin(drifted: _*) && folded)
     val statsPath = s"$indexPath/stats"
-    val mergedStats = graft.engine.Fs.readParquet(spark, statsPath)
+    Manifest.write(Manifest.read(spark, statsPath)
       .filter(!col("cid").isin(drifted: _*))
-      .unionByName(dStats)
-      .localCheckpoint(true)
-    mergedStats.coalesce(1).write.mode("overwrite").parquet(statsPath)
-    // the trigger clear is bounded EXACTLY like the delta fold: only
-    // batches whose rows this refit folded (`batch_id < belowBatchId`)
-    // consumed their drift signal. The current epoch's batch stayed
-    // delta-resident under pre-refit cids — its stats row survives so
-    // the NEXT epoch's trigger re-evaluates it against the refreshed
-    // fit baseline and folds it then (the fail-safe direction: at worst
-    // one extra bounded refit, never a silently dropped live signal —
-    // an unbounded clear would leave those stale assignments
-    // re-trigger-less forever on a quiet stream)
-    val sdPath = s"$indexPath/stats_delta"
-    graft.engine.Fs.listDirs(spark, sdPath)
-      .filter(b => b.getName.startsWith("batch_id=") &&
-        b.getName.stripPrefix("batch_id=").toLong < belowBatchId)
-      .foreach(b => graft.engine.Fs.deleteDir(spark, b.toString))
-    if (graft.engine.Fs.exists(spark, sdPath) &&
-        graft.engine.Fs.listDirs(spark, sdPath).isEmpty)
-      graft.engine.Fs.deleteDir(spark, sdPath)
+      .unionByName(cidStats(assignScored(memVec, relabeled), "n_fit", "fit_mean_cos")),
+      statsPath)
+    Manifest.deleteWhere(spark, s"$indexPath/stats_delta", folded)
     drifted.size
   }
 
@@ -1200,12 +1168,8 @@ object Similarity {
     * [[graft.streaming.ClusterMaintain.sink]] shape for the ANN index:
     * each micro-batch ingests via [[ingestIvfPqBatch]] keyed by its
     * epoch id (checkpoint replay is idempotent through the batch-keyed
-    * delta partitions), and every `compactEvery > 0` epochs the delta
-    * folds into the base lists BEFORE the epoch's ingest (crash-replay
-    * re-runs the idempotent compaction, then re-derives the ingest —
-    * the exactly-once contract holds through compaction). The batch
-    * relation must already carry `(vec_id, v, norm2)` — compose with
-    * the caller's prepare step.
+    * delta partitions). The batch relation must already carry
+    * `(vec_id, v, norm2)` — compose with the caller's prepare step.
     *
     * `refitCorpus` closes the drift loop IN the stream: when set, each
     * epoch's ingest is followed by [[refitDriftedLists]] — the trigger
@@ -1215,33 +1179,57 @@ object Similarity {
     * the CURRENT full corpus (base + every ingested batch) because the
     * index stores only codes — the caller owns the vectors, exactly as
     * for [[retrainIfDrifted]]. Replay note: the refit is EPOCH-BOUNDED
-    * exactly like the compaction (`belowBatchId = batchId`) — it never
-    * folds the epoch's own just-ingested delta, so a crash-replayed
-    * epoch's re-ingest replaces that delta batch-keyed and exactly-once
-    * (an unbounded fold would leave the batch's vectors in BOTH base
-    * and delta on replay, served twice forever — pinned by
-    * IvfMaintainSpec's epoch-bounded refit test). A replayed epoch may
-    * find the refit applied and its trigger cleared, or re-trigger
-    * against the refreshed stats — either way the refit is the same
-    * idempotent single-writer maintenance step it is standalone, and
-    * every vector stays exactly-once across base ∪ delta. */
+    * (`belowBatchId = batchId`) — it never folds the epoch's own
+    * just-ingested delta, so a crash-replayed epoch's re-ingest replaces
+    * that delta batch-keyed and exactly-once (pinned by IvfMaintainSpec's
+    * epoch-bounded refit test). A replayed epoch may find the refit
+    * applied and its trigger cleared, or re-trigger against the
+    * refreshed stats — either way the refit is the same idempotent
+    * single-writer maintenance step it is standalone, and every vector
+    * stays exactly-once across base ∪ delta. */
   def ivfPqSink(batches: DataFrame, indexPath: String, checkpoint: String,
-      m: Int = 8, compactEvery: Int = 0, availableNow: Boolean = true,
+      m: Int = 8, availableNow: Boolean = true,
       refitCorpus: Option[() => DataFrame] = None,
       driftTol: Double = 0.05)
       : org.apache.spark.sql.streaming.StreamingQuery =
     graft.streaming.EpochSink.start(batches, checkpoint, availableNow) { (batch, epoch) =>
-      // the epoch bound makes the compact+ingest pair replay-safe: a
-      // crashed epoch N re-runs the compaction WITHOUT folding its own
-      // batch_id=N delta (left from the crashed attempt), so the
-      // re-ingest replaces that partition idempotently instead of
-      // duplicating its rows across base and delta
-      if (compactEvery > 0 && epoch > 0 && epoch % compactEvery == 0)
-        compactIvfPqDelta(batch.sparkSession, indexPath, epoch)
       ingestIvfPqBatch(batch, indexPath, epoch, m)
       refitCorpus.foreach(c => refitDriftedLists(c(), indexPath,
         driftTol = driftTol, belowBatchId = epoch))
     }
+
+  /** The built 75%-base-slice IVF-PQ index (lists + centroids +
+    * codebooks + fit stats) as a memoized STORE TEMPLATE
+    * ([[graft.engine.Derived.store]]): the build is a pure function of
+    * (dir, params) shared by the three maintenance query surfaces
+    * (`ann_index_maintain`, `ann_compacted_serve`, `ann_streamed_refit`)
+    * — each clones it ([[cloneIvfPqIndex]]) into its own scratch before
+    * mutating, the production shape: an index is built by the (rare)
+    * build step and maintenance runs against a restored snapshot, not a
+    * per-query rebuild. The fit itself already flows through the
+    * quantizer registry; this memoizes the encode + store commits around
+    * it. */
+  private def ivfPqBase75Store(spark: SparkSession, dir: String,
+      nClusters: Int, ivfIters: Int, m: Int, codes: Int, pqIters: Int): String =
+    graft.engine.Derived.store(spark,
+      s"ivfpq_base75_${nClusters}_${ivfIters}_${m}_${codes}_$pqIters", dir) { p =>
+      val e = preparedCk(spark, dir)
+      val base = e.filter(col("vec_id") % 4 =!= 3)
+      val (coarse, _) = buildIvfPqIndexOn(base, p, nClusters, ivfIters, m,
+        codes, pqIters, fitKey = Some(s"$dir|base75"))
+      commitFitStats(base, coarse, p)
+    }
+
+  /** A fresh index at `idx` whose six tables are zero-copy
+    * [[graft.engine.Manifest.shallowClone]]s of the `template` index:
+    * their first commits reference the template's data dirs, and every
+    * later commit writes under `idx`, so maintaining the clone never
+    * touches the (read-only) template. */
+  private def cloneIvfPqIndex(spark: SparkSession, template: String, idx: String): Unit = {
+    graft.engine.Fs.deleteDir(spark, idx)
+    Seq("centroids", "codebooks", "lists", "delta", "stats", "stats_delta")
+      .foreach(t => Manifest.shallowClone(spark, s"$template/$t", s"$idx/$t"))
+  }
 
   /** The `ann_index_maintain` query surface: build the IVF-PQ index on
     * the 75% base slice (`vec_id % 4 ≠ 3`) with fit-time per-list
@@ -1255,41 +1243,17 @@ object Similarity {
     * batch never touches report `n_batch = 0` with no drift. Every
     * number is money-rounded/decimal-accumulated, so the DuckDB oracle
     * replays fit, both assignments, and the report exactly. */
-  /** The built 75%-base-slice IVF-PQ index (lists + centroids +
-    * codebooks + fit stats) as a memoized STORE TEMPLATE
-    * ([[graft.engine.Derived.store]]): the build is a pure function of
-    * (dir, params) shared by the three maintenance query surfaces
-    * (`ann_index_maintain`, `ann_compacted_serve`, `ann_streamed_refit`)
-    * — each CLONES it ([[graft.engine.Fs.copyDir]], file-IO-scale) into
-    * its own scratch before mutating, the production shape: an index is
-    * built by the (rare) build step and maintenance runs against a
-    * restored snapshot, not a per-query rebuild. The fit itself already
-    * flows through the quantizer registry; this memoizes the encode +
-    * store write around it. */
-  private def ivfPqBase75Store(spark: SparkSession, dir: String,
-      nClusters: Int, ivfIters: Int, m: Int, codes: Int, pqIters: Int): String =
-    graft.engine.Derived.store(spark,
-      s"ivfpq_base75_${nClusters}_${ivfIters}_${m}_${codes}_$pqIters", dir) { p =>
-      val e = preparedCk(spark, dir)
-      val base = e.filter(col("vec_id") % 4 =!= 3)
-      val (coarse, _) = buildIvfPqIndexOn(base, p, nClusters, ivfIters, m,
-        codes, pqIters, fitKey = Some(s"$dir|base75"))
-      cidStats(assignScored(base, coarse), "n_fit", "fit_mean_cos")
-        .coalesce(1).write.mode("overwrite").parquet(s"$p/stats")
-    }
-
   def annIndexMaintain(spark: SparkSession, dir: String, nClusters: Int = 10,
       ivfIters: Int = 3, m: Int = 8, codes: Int = 32, pqIters: Int = 2,
       driftTol: Double = 0.05): DataFrame = {
     val idx = graft.engine.Fs.scratch("graft_ivfpq_maint", dir)
-    graft.engine.Fs.deleteDir(spark, idx)
-    graft.engine.Fs.copyDir(spark,
+    cloneIvfPqIndex(spark,
       ivfPqBase75Store(spark, dir, nClusters, ivfIters, m, codes, pqIters), idx)
     val e = preparedCk(spark, dir)
     val batch = e.filter(col("vec_id") % 4 === 3)
     ingestIvfPqBatch(batch, idx, 1L, m)
-    val fit = graft.engine.Fs.readParquet(spark, s"$idx/stats")
-    val bat = graft.engine.Fs.readParquet(spark, s"$idx/stats_delta").drop("batch_id")
+    val fit = Manifest.read(spark, s"$idx/stats")
+    val bat = Manifest.read(spark, s"$idx/stats_delta").drop("batch_id")
     fit.join(bat, Seq("cid"), "left")
       .select(col("cid"), col("n_fit"), col("fit_mean_cos"),
         coalesce(col("n_batch"), lit(0L)).as("n_batch"),
@@ -1316,8 +1280,7 @@ object Similarity {
       nprobe: Int = 2, nClusters: Int = 10, ivfIters: Int = 3, m: Int = 8,
       codes: Int = 32, pqIters: Int = 2, shortlist: Int = 50): DataFrame = {
     val idx = graft.engine.Fs.scratch("graft_ivfpq_compact", dir)
-    graft.engine.Fs.deleteDir(spark, idx)
-    graft.engine.Fs.copyDir(spark,
+    cloneIvfPqIndex(spark,
       ivfPqBase75Store(spark, dir, nClusters, ivfIters, m, codes, pqIters), idx)
     val e = preparedCk(spark, dir)
     val batch = e.filter(col("vec_id") % 4 === 3)
@@ -1356,7 +1319,6 @@ object Similarity {
       driftTol: Double = 0.15): DataFrame = {
     val idx = graft.engine.Fs.scratch("graft_ivfpq_stream", dir)
     val io = graft.engine.Fs.scratch("graft_ivfpq_streamio", dir)
-    graft.engine.Fs.deleteDir(spark, idx)
     graft.engine.Fs.deleteDir(spark, io)
     // the CURRENT corpus: epoch 1 arrives drifted (negated vectors —
     // norm2 is negation-invariant, so the prepared norms carry over);
@@ -1368,7 +1330,7 @@ object Similarity {
           .otherwise(col("v")).as("v"),
         col("norm2"))
       .localCheckpoint(true)
-    graft.engine.Fs.copyDir(spark,
+    cloneIvfPqIndex(spark,
       ivfPqBase75Store(spark, dir, nClusters, ivfIters, m, codes, pqIters), idx)
     // r16 (opt guide §2.6): the two epoch files are independent slices
     // of the checkpointed corpus with disjoint destinations — write them
@@ -1411,27 +1373,18 @@ object Similarity {
   /** Serve IVF-PQ from a persisted index: probe routing against stored
     * centroids, ADC over the stored coded lists (partition-pruned on
     * `cid`), exact re-rank against the caller's corpus relation. A
-    * maintained index's `delta/batch_id=N/cid=…` appends
-    * ([[ingestIvfPqBatch]]) are unioned in under the SAME `cid`
-    * partition pruning — per probe, a list read is the base `cid`
-    * directory plus that `cid`'s slice of each batch directory. */
+    * maintained index's `delta` rows ([[ingestIvfPqBatch]]) are unioned
+    * in under the SAME `cid` partition pruning — per probe, a list read
+    * is the base `cid` partition plus that `cid`'s partition of each
+    * ingested batch. */
   private[graft] def knnIvfPqFromIndexOn(e: DataFrame, indexPath: String,
       k: Int, nprobe: Int, m: Int, shortlist: Int): DataFrame = {
     val spark = e.sparkSession
-    import spark.implicits._
-    val centDf = graft.engine.Fs.readParquet(spark, s"$indexPath/centroids")
-    val cbFlat = graft.engine.Fs.readParquet(spark, s"$indexPath/codebooks")
-      .collect().map(r => (r.getInt(0), r.getInt(1),
-        r.getSeq[Double](2), r.getDouble(3))).toSeq
-    val cbDf = pqCodebookDf(spark, cbFlat)
-    val base = graft.engine.Fs.readParquet(spark, s"$indexPath/lists")
-    val deltaPath = s"$indexPath/delta"
-    val lists =
-      if (graft.engine.Fs.exists(spark, deltaPath))
-        base.unionByName(
-          graft.engine.Fs.readParquet(spark, deltaPath).drop("batch_id")
-            .select(base.columns.map(col).toIndexedSeq: _*))
-      else base
+    val centDf = Manifest.read(spark, s"$indexPath/centroids")
+    val cbDf = pqCodebookDf(spark, readStoredCodebook(spark, indexPath))
+    val base = Manifest.read(spark, s"$indexPath/lists")
+    val lists = base.unionByName(Manifest.read(spark, s"$indexPath/delta")
+      .select(base.columns.map(col).toIndexedSeq: _*))
     ivfpqServe(lists, e, centDf, cbDf, k, nprobe, m, shortlist)
   }
 

@@ -322,7 +322,7 @@ object ClusterMaintain {
     *     roots they already carry.
     *
     * Call at a batch boundary with every ingested batch committed —
-    * e.g. [[sink]]'s `compactEvery` runs it inside the micro-batch
+    * e.g. [[sink]]'s size trigger runs it inside the micro-batch
     * BEFORE the epoch's ingest, so a crash-replay of that epoch re-runs
     * the (idempotent) compaction and then re-derives the ingest from
     * the same resolved basis. Batches ingested AFTER a compaction read
@@ -405,8 +405,6 @@ object ClusterMaintain {
     * already repays itself within ONE batch (per-batch forest tax
     * 4.1 s) — i.e. by the time the trigger fires, compacting is
     * strictly cheaper than carrying the forest even once. 0 disables.
-    * `compactEvery = k > 0` additionally forces every k-th epoch (the
-    * fixed-cadence lever, kept for operators who want determinism).
     * Replay note: a crash-replayed epoch may see the already-compacted
     * store and skip the trigger its first attempt took — harmless, as
     * compaction is semantics-preserving and idempotent (labels resolve
@@ -414,14 +412,12 @@ object ClusterMaintain {
     * itself stays batch-keyed exactly-once. */
   def sink(docs: DataFrame, root: String, checkpoint: String,
       threshold: Double = 0.9, availableNow: Boolean = true,
-      compactEvery: Int = 0, compactAtEdges: Long = 2000L)
+      compactAtEdges: Long = 2000L)
       : org.apache.spark.sql.streaming.StreamingQuery =
     EpochSink.start(docs, checkpoint, availableNow) { (batch, epoch) =>
       val spark = batch.sparkSession
-      val due = epoch > 0 &&
-        ((compactEvery > 0 && epoch % compactEvery == 0) ||
-          (compactAtEdges > 0 && forestEdges(spark, root) >= compactAtEdges))
-      if (due) compactMerges(spark, root)
+      if (epoch > 0 && compactAtEdges > 0 && forestEdges(spark, root) >= compactAtEdges)
+        compactMerges(spark, root)
       ingestBatch(batch, root, epoch, threshold); ()
     }
 }

@@ -151,6 +151,31 @@ class AtomicCommitSpec extends SparkSpec {
     assert(Fs.listDirs(spark, tmp).forall(_.getName.startsWith("p=")))
   }
 
+  test("a publish rename that THROWS restores the old partition from trash") {
+    val out = Files.createTempDirectory("atomicthrow").toString
+    Layers.replacePartitionsPath(mk(0), out, Seq("p"))
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.crashat.impl", classOf[CrashAtFs].getName)
+    // the rename that publishes the staged p=2 throws, as an object
+    // store's does; p=2's old copy is already in trash at that point
+    CrashAtFs.crashPath = p =>
+      p.getName == "p=2" && p.getParent.getName.startsWith("_staging-")
+    CrashAtFs.crashOp = Some("rename")
+    val boom = intercept[java.io.IOException] {
+      Layers.replacePartitionsPath(mk(1), s"crashat://$out", Seq("p"))
+    }
+    assert(CrashAtFs.crashOp.isEmpty, "no publish rename of p=2 ran")
+    assert(boom.getMessage.contains("could not publish partition p=2 (old copy restored)"),
+      boom.getMessage)
+    assert(boom.getCause.getMessage == "injected crash at rename")
+    // p=1 published new, p=2 restored old, p=3 untouched old: all present
+    val byP = spark.read.parquet(out).groupBy("p")
+      .agg(count(lit(1)).as("n"), max("version").as("v"))
+      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getInt(2))).toMap
+    assert(byP == Map(1 -> (20L, 1), 2 -> (20L, 0), 3 -> (20L, 0)), byP)
+    assert(Fs.listDirs(spark, out).forall(_.getName.startsWith("p=")))
+  }
+
   test("publish AND restore failing preserves the trash copy and says where") {
     import spark.implicits._
     spark.sparkContext.hadoopConfiguration

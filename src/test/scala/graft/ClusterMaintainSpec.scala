@@ -204,6 +204,50 @@ class ClusterMaintainSpec extends SparkSpec {
     assert(labelMap() == before)
   }
 
+  test("broadcast guards at 0: the chain plus a compaction degrades to shuffled joins, same labels") {
+    import spark.implicits._
+    val t1 = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    val t2 = "one two three four five six seven eight nine ten"
+    def batch(rows: (Long, String)*) = rows.toSeq.toDF("doc_id", "text")
+    val batches = Seq(batch(10L -> t1, 20L -> t2), batch(30L -> t1, 40L -> t2),
+      batch(5L -> t1, 15L -> t2), batch(3L -> t1))
+    def chain(root: String, guard: Long): Map[Long, (Long, Long)] = {
+      batches.zipWithIndex.foreach { case (b, i) =>
+        ClusterMaintain.ingestBatch(b, root, i.toLong, maxBroadcastDocs = guard)
+      }
+      assert(ClusterMaintain.compactMerges(spark, root, maxBroadcastLabels = guard) > 0L)
+      ClusterMaintain.labels(spark, root).collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    }
+    val broadcastRun = chain(Files.createTempDirectory("cm_guard_b").toString + "/store",
+      Dedup.maxBroadcastRows)
+    // no size-based broadcast either, so any BroadcastHashJoin left in
+    // the degraded run would come from a guard that did not degrade
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = { plans.add(qe.executedPlan.toString); () }
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    spark.listenerManager.register(listener)
+    val degraded =
+      try chain(Files.createTempDirectory("cm_guard_0").toString + "/store", 0L)
+      finally {
+        org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+        spark.conf.set(key, saved)
+      }
+    assert(degraded == broadcastRun)
+    val all = plans.toArray.map(_.toString)
+    assert(all.exists(_.contains("SortMergeJoin")), "no shuffled join ran")
+    val broadcasts = all.filter(_.contains("BroadcastHashJoin"))
+    assert(broadcasts.isEmpty, broadcasts.mkString("\n"))
+  }
+
   test("compaction: ingest after compacting equals ingest without, and new merges still resolve") {
     import spark.implicits._
     val rootA = Files.createTempDirectory("cm_cmpA").toString + "/store"
@@ -235,7 +279,7 @@ class ClusterMaintainSpec extends SparkSpec {
     (0L to 1L).foreach { b =>
       ClusterMaintain.ingestBatch(docs.filter(col("doc_id") % 3 === b), root, b)
     }
-    // epoch 2 with compact-before-ingest (the sink's compactEvery shape)
+    // epoch 2 with compact-before-ingest (the sink's size-trigger shape)
     def epoch2(): Unit = {
       ClusterMaintain.compactMerges(spark, root)
       ClusterMaintain.ingestBatch(docs.filter(col("doc_id") % 3 === 2), root, 2L)

@@ -4,11 +4,8 @@ import org.apache.spark.sql.functions._
 
 /** Pins [[graft.engine.Fs]]'s portability helpers — the file plumbing
   * every derived store, manifest and maintenance query routes through:
-  * copyDir clones INTO the named destination even when it already
-  * exists (Hadoop FileUtil.copy's checkDest would otherwise nest the
-  * clone under to/<srcBasename>), setMtime round-trips through the
-  * FileSystem API (the object-store-safe form of File.setLastModified),
-  * and parquetRowCount counts footer metadata per path SEGMENT (an
+  * setMtime round-trips through the FileSystem API (the object-store-
+  * safe form of File.setLastModified), and parquetRowCount counts footer metadata per path SEGMENT (an
   * underscore-valued partition is data; a _SUCCESS-only empty relation
   * is a true 0, not a blind spot). */
 class FsSpec extends SparkSpec {
@@ -16,26 +13,6 @@ class FsSpec extends SparkSpec {
 
   private def tmp(tag: String): String =
     java.nio.file.Files.createTempDirectory(tag).toString
-
-  test("copyDir lands the clone at the destination, even when it already exists") {
-    import spark.implicits._
-    val root = tmp("fs_copy")
-    val src = s"$root/src"
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(src)
-    // fresh destination
-    val d1 = s"$root/clone1"
-    Fs.copyDir(spark, src, d1)
-    assert(spark.read.parquet(d1).count() == 2)
-    // EXISTING destination with stale content: the clone must replace
-    // it at d2 itself, never nest under d2/src (the checkDest trap) or
-    // merge with the stale files
-    val d2 = s"$root/clone2"
-    Seq((99L, "stale")).toDF("id", "v").write.parquet(d2)
-    Fs.copyDir(spark, src, d2)
-    assert(!new java.io.File(s"$d2/src").exists, "clone nested under to/<srcBasename>")
-    assert(spark.read.parquet(d2).select("id").collect().map(_.getLong(0)).toSet ==
-      Set(1L, 2L), "stale destination content survived the clone")
-  }
 
   test("setMtime/mtime round-trip through the FileSystem API") {
     val root = tmp("fs_mtime")
