@@ -56,9 +56,9 @@ object Layers {
     * Torn-write note: this variant rides Spark's dynamic partition
     * overwrite (delete-matching-then-move), so a mid-write crash can
     * briefly expose a partial partition to concurrent readers of the
-    * catalog table. [[replacePartitionsPath]] closes that window with
-    * staged per-partition renames — prefer path-based tables where
-    * readers race writers. */
+    * catalog table. [[Manifest.replacePartitions]] has no such window
+    * (immutable data dirs, one log rename per commit) — prefer
+    * `Manifest` tables where readers race writers. */
   def replacePartitions(df: DataFrame, table: String,
       partitionCol: String = "ingestion_date"): Unit = {
     val spark = df.sparkSession

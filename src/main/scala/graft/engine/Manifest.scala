@@ -15,9 +15,10 @@ import org.apache.spark.sql.types.StructType
   * the epoch-keyed streaming sinks (`CorpusIngest`, `SpanIngest`,
   * `StreamingMv`, `EventStream`'s fact and SCD2 sinks), which commit
   * epoch k as version k ([[writeVersioned]],
-  * [[replacePartitionsVersioned]]), and of the persisted IVF-PQ index
-  * (`Similarity.buildIvfPqIndexOn`: six tables whose builds, ingests,
-  * compactions, refits and retrains commit at the head version).
+  * [[replacePartitionsVersioned]]), and of two stores whose every
+  * write commits at the head version: the persisted IVF-PQ index
+  * (`Similarity.buildIvfPqIndexOn`: six tables) and the cluster
+  * maintenance tables (`ClusterMaintain`: `index`, `labels`, `merges`).
   * [[Layers.replacePartitionsPath]], the directory-rename publish left
   * on the remaining path-keyed tables, is per-partition atomic but
   * leaves a brief window where a partition is ABSENT between its two
@@ -334,11 +335,14 @@ object Manifest {
     commitData(df, path, partitionCols, replaceAll = false,
       statsCols = statsCols, bloomCols = bloomCols)
 
+  /** `dropParts`: leaf partitions leaving the snapshot even when `df`
+    * holds no row for them ([[deleteWhere]]'s emptied partitions). */
   private def commitData(df: DataFrame, path: String,
       partitionCols: Seq[String], replaceAll: Boolean,
       at: Option[Long] = None, rebalance: Boolean = true,
       statsCols: Seq[String] = Seq.empty,
-      bloomCols: Seq[String] = Seq.empty): Long = {
+      bloomCols: Seq[String] = Seq.empty,
+      dropParts: Set[String] = Set.empty): Long = {
     val spark = df.sparkSession
     val prev = state(spark, path)
     // a version at or below the head would never be read (readers serve
@@ -360,11 +364,14 @@ object Manifest {
       else prev.flatMap(_.bloomCols).getOrElse(Seq.empty)
     val dir = s"data-${java.util.UUID.randomUUID().toString.take(8)}"
     // rebalance=false preserves a caller-arranged clustering (Z-order):
-    // the AQE rebalance shuffle would redistribute it
+    // the AQE rebalance shuffle would redistribute it. A driver-built
+    // unpartitioned frame is small: one task, one file, no shuffle
     val shaped =
-      if (rebalance)
-        df.hint("rebalance", partitionCols.map(org.apache.spark.sql.functions.col): _*)
-      else df
+      if (!rebalance) df
+      else if (partitionCols.isEmpty && df.queryExecution.optimizedPlan
+          .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+        df.coalesce(1)
+      else df.hint("rebalance", partitionCols.map(org.apache.spark.sql.functions.col): _*)
     val writer = shaped.write.mode(SaveMode.ErrorIfExists)
     (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
       .parquet(s"$path/$dir")
@@ -387,8 +394,8 @@ object Manifest {
       partitionCols, effStats, effBlooms, bare)
     val kept =
       if (replaceAll) Seq.empty
-      else prev.map(_.entries.filterNot(e => fresh.exists(_.part == e.part)))
-        .getOrElse(Seq.empty)
+      else prev.map(_.entries.filterNot(e =>
+        dropParts(e.part) || fresh.exists(_.part == e.part))).getOrElse(Seq.empty)
     try
       commit(spark, path, State(at.getOrElse(prev.map(_.version + 1).getOrElse(0L)),
         partitionCols, df.schema.toDDL, kept ++ fresh,
@@ -473,31 +480,39 @@ object Manifest {
     * outright (partition-replace alone cannot express that: an empty
     * frame carries no partitions). Old versions still read the
     * pre-delete rows — retention until [[vacuum]], exactly Delta's
-    * model. */
+    * model. When no row matches, nothing is written or committed and
+    * the head version is returned. */
   def deleteWhere(spark: SparkSession, path: String,
       cond: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions.col
     val prev = stateOrThrow(spark, path)
     val pcols = prev.partitionCols
     val snap = read(spark, path)
-    val affected = snap.filter(cond).select(pcols.map(col): _*).distinct()
-    // survivors of affected partitions only — a partition-keyed semi join,
-    // not a full-table rewrite
-    val rewritten = snap.join(affected, pcols).filter(!cond)
-    val dir = s"data-${java.util.UUID.randomUUID().toString.take(8)}"
-    rewritten.hint("rebalance", pcols.map(col): _*)
-      .write.mode(SaveMode.ErrorIfExists).partitionBy(pcols: _*).parquet(s"$path/$dir")
-    val fresh = collectStats(spark, s"$path/$dir",
-      StructType.fromDDL(prev.schemaDdl), pcols,
-      prev.statsCols.getOrElse(Seq.empty),
-      prev.bloomCols.getOrElse(Seq.empty),
-      Layers.leafDirs(spark, s"$path/$dir", pcols.size).sorted.map(Entry(_, dir)))
-    // O(affected partitions) driver rows
-    val affectedParts = affected.collect().map(renderPart(pcols, _)).toSet
-    val kept = prev.entries.filterNot(e => affectedParts.contains(e.part))
-    commit(spark, path, State(prev.version + 1, pcols, prev.schemaDdl,
-      kept ++ fresh, prev.statsCols, prev.bloomCols))
+    // O(affected partitions) driver rows; unpartitioned is one partition
+    val affected = snap.filter(cond).select(pcols.map(col): _*).distinct().collect()
+      .map(renderPart(pcols, _)).toSet
+    if (affected.isEmpty) return prev.version
+    val hit = prev.entries.map(_.part).filter(p => pcols.isEmpty || affected(p)).toSet
+    // survivors of affected partitions only, not a full-table rewrite
+    commitData(readEntries(spark, path, snap.schema, prev.entries.filter(e => hit(e.part)))
+      .filter(!cond), path, pcols, replaceAll = false, dropParts = hit)
   }
+
+  /** Delta's metadata-only DELETE on a partition column: entries whose
+    * `column` value lies in `[lo, hi]` (as [[overlapping]] prunes; no
+    * bound = all) leave the snapshot in one commit, with no data read or
+    * written and no Spark job. None, committing nothing, when no entry
+    * matches or the table has no log. */
+  def dropPartitions(spark: SparkSession, path: String, column: String,
+      lo: Option[Any], hi: Option[Any]): Option[Long] =
+    state(spark, path).flatMap { st =>
+      require(st.partitionCols.contains(column),
+        s"$column is not a partition column of $path")
+      val hit = overlapping(st, StructType.fromDDL(st.schemaDdl), column, lo, hi).toSet
+      if (hit.isEmpty) None
+      else Some(commit(spark, path,
+        st.copy(version = st.version + 1, entries = st.entries.filterNot(hit))))
+    }
 
   /** Copy-on-write MERGE (SCD1 upsert) — Delta `MERGE INTO … WHEN
     * MATCHED UPDATE WHEN NOT MATCHED INSERT` for whole rows: `src` rows

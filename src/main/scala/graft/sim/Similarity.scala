@@ -933,13 +933,10 @@ object Similarity {
     // than the first attempt did, and a per-(batch, cid) replace would
     // leave the first attempt's stale cid partition serving that row
     // twice. A crash between the clear and the delta commit leaves
-    // batch N absent until the stream replays it. The manifest entries
-    // say whether batch N is there, so a first delivery pays no Spark
-    // job for the clear.
-    val deltaSt = Manifest.stateOrThrow(spark, deltaPath)
-    if (Manifest.overlapping(deltaSt, org.apache.spark.sql.types.StructType.fromDDL(
-        deltaSt.schemaDdl), "batch_id", Some(batchId), Some(batchId)).nonEmpty)
-      Manifest.deleteWhere(spark, deltaPath, col("batch_id") === batchId)
+    // batch N absent until the stream replays it. The clear drops batch
+    // N's manifest entries without a Spark job, and a first delivery
+    // commits nothing.
+    Manifest.dropPartitions(spark, deltaPath, "batch_id", Some(batchId), Some(batchId))
     // r16 (opt guide §2.6): the two commits are independent jobs over
     // the same batch into different tables — submit them from two
     // driver threads so the smaller stats job's tasks back-fill the
@@ -1160,7 +1157,8 @@ object Similarity {
       .filter(!col("cid").isin(drifted: _*))
       .unionByName(cidStats(assignScored(memVec, relabeled), "n_fit", "fit_mean_cos")),
       statsPath)
-    Manifest.deleteWhere(spark, s"$indexPath/stats_delta", folded)
+    Manifest.dropPartitions(spark, s"$indexPath/stats_delta", "batch_id", None,
+      Some(belowBatchId - 1))
     drifted.size
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
 import graft.dedup.Dedup
-import graft.engine.{Fs, Layers, Par}
+import graft.engine.{Fs, Manifest, Par}
 
 /** Incremental near-duplicate CLUSTER maintenance — the streaming
   * companion to [[graft.dedup.Dedup.dedupIncremental]] (round-11 brief
@@ -15,13 +15,14 @@ import graft.engine.{Fs, Layers, Par}
   * (`dags/utils/extract_load_template.py:126-159` — process only the
   * new slice against persistent state) applied to the dedup family.
   *
-  * Layout under `root`:
-  *  - `index/batch_id=N/`  (doc_id, th, sig) MinHash signatures of ALL
-  *    batch-N docs — the LSH index future batches probe
-  *  - `labels/batch_id=N/` (doc_id, label) labels assigned to batch-N
-  *    docs at ingest time
-  *  - `merges/batch_id=N/` (old_label, new_label) cluster merges batch
-  *    N caused — the union-find forest, kept as data
+  * Layout under `root`: three [[graft.engine.Manifest]] tables, each
+  * partitioned by `batch_id`:
+  *  - `index`  (doc_id, th, sig) MinHash signatures of ALL batch-N docs
+  *    — the LSH index future batches probe
+  *  - `labels` (doc_id, label) labels assigned to batch-N docs at
+  *    ingest time
+  *  - `merges` (old_label, new_label) cluster merges batch N caused —
+  *    the union-find forest, kept as data
   *
   * The incremental invariant (induction over batches): a stored label,
   * resolved through the merge chain, is ALWAYS the minimum doc_id of
@@ -52,11 +53,12 @@ import graft.engine.{Fs, Layers, Par}
   *    store at a batch boundary so per-ingest cost stays flat in the
   *    number of historical merges.
   *
-  * Exactly-once: all three stores are batch-keyed partition replaces
-  * ([[graft.engine.Layers.replacePartitionsPath]]), and a batch reads
+  * Exactly-once: every write is a Manifest commit at the head version
+  * (an ingest replaces its own `batch_id` partitions), and a batch reads
   * only strictly-earlier partitions — a replayed batch re-derives its
   * original output bit-for-bit (the decision basis [[CorpusIngest]] gets
-  * from index version k-1, rebuilt here by a `batch_id` filter).
+  * from index version k-1, rebuilt here by a `batch_id` bound). A crash
+  * leaves each store at its old or new snapshot; a re-run converges.
   * Caller contract: doc_ids globally unique; batch_ids dense-ordered.
   */
 object ClusterMaintain {
@@ -115,14 +117,17 @@ object ClusterMaintain {
     Dedup.connectedComponents(merges, "old_label", "new_label")
       .select(col("node").as("__l"), col("component").as("__final"))
 
+  /** The store at `path` from batches below `before` (all with None),
+    * pruned by `batch_id` in the manifest; None while it has no entry. */
+  private def stored(spark: SparkSession, path: String,
+      before: Option[Long] = None): Option[DataFrame] =
+    Manifest.state(spark, path).filter(_.entries.nonEmpty).map(st =>
+      Manifest.readWhere(spark, path, "batch_id", None, before.map(_ - 1), Some(st.version)))
+
   private def readOrEmpty(spark: SparkSession, path: String,
-      schema: StructType, beforeBatch: Long): DataFrame =
-    if (Fs.exists(spark, path))
-      spark.read.schema(schema.add("batch_id", LongType)).parquet(path)
-        .filter(col("batch_id") < beforeBatch)
-        .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      schema: StructType, before: Option[Long] = None): DataFrame =
+    stored(spark, path, before).map(_.select(schema.fieldNames.map(col).toIndexedSeq: _*))
+      .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
 
   /** Ingest one batch, maintaining labels incrementally. Returns the
     * number of batch docs. `maxBroadcastDocs` is the dedupIncremental
@@ -137,16 +142,13 @@ object ClusterMaintain {
     * the group-contraction checkpoint), (b) the broadcast guard
     * short-circuits on the raw count (`nGroups ≤ n` always — the group
     * count job only runs when the raw count alone can't prove the
-    * guard), and (c) the three store publishes run CONCURRENTLY through
-    * [[graft.engine.Par]]: the index publish depends only on the
+    * guard), and (c) the three store commits run CONCURRENTLY through
+    * [[graft.engine.Par]]: the index commit depends only on the
     * contraction and overlaps the whole candidate + fixpoint chain; the
-    * label and merge publishes overlap each other. A failure anywhere
-    * surfaces only after every publish already started has finished, so
-    * no writer outlives the call (a replay racing one would meet a live
-    * `_staging-*` dir that the single-writer sweep of
-    * [[graft.engine.Layers.replacePartitionsPath]] treats as crash
-    * debris). Publish order never mattered for the
-    * exactly-once contract — a replayed batch overwrites all three
+    * label and merge commits overlap each other. A failure anywhere
+    * surfaces only after every commit already started has finished, so
+    * no writer outlives the call. Commit order never mattered for the
+    * exactly-once contract — a replayed batch re-commits all three
     * batch-keyed partitions idempotently, and no reader consumes
     * batch-N partitions during ingest N (single-writer, readers see
     * strictly-earlier batches only). Measured 3.0 → 2.0 s/batch at
@@ -158,9 +160,11 @@ object ClusterMaintain {
     val idxPath = s"$root/index"
     val labPath = s"$root/labels"
     val mrgPath = s"$root/merges"
+    // a manifest-only commit, and none while the store holds no batch N
+    def clear(path: String) =
+      Manifest.dropPartitions(spark, path, "batch_id", Some(batchId), Some(batchId))
     if (n == 0) {
-      Seq(idxPath, labPath, mrgPath)
-        .foreach(p => Fs.deleteDir(spark, s"$p/batch_id=$batchId"))
+      Seq(idxPath, labPath, mrgPath).foreach(clear)
       return 0L
     }
     // TOKEN-SET CONTRACTION (the dedupIncremental bGroups discipline —
@@ -190,22 +194,15 @@ object ClusterMaintain {
       ok
     }
     // the stored index is GROUP rows of prior batches (one per distinct
-    // token set) — the probe surface a clone-heavy corpus wants. Read
-    // (and its eager file listing) happens BEFORE the index publish
-    // launches: on a batch replay the publish atomically replaces this
-    // path's batch_id=N partition, and a concurrent recursive listing
-    // can catch the rename window as a transient FileNotFoundException —
-    // in exactly the replay path the exactly-once contract covers. The
-    // read excludes batch_id=N rows anyway, so ordering it first costs
-    // nothing.
-    val stored = readOrEmpty(spark, idxPath, CorpusIngest.indexSchema, batchId)
-    // the index publish needs only the contraction — it runs beside the
-    // entire candidate + fixpoint chain and that chain's two publishes
-    val idxPub = () => Layers.replacePartitionsPath(
+    // token set) — the probe surface a clone-heavy corpus wants
+    val idxStored = readOrEmpty(spark, idxPath, CorpusIngest.indexSchema, Some(batchId))
+    // the index commit needs only the contraction — it runs beside the
+    // entire candidate + fixpoint chain and that chain's two commits
+    val idxPub = () => Manifest.replacePartitions(
       gsig.withColumn("batch_id", lit(batchId)), idxPath, Seq("batch_id"))
     Par.run(idxPub, () => {
       // survivor-scale; feeds the touched-set, the graph and the merge legs
-      val cand = candidateEdges(gsig, stored, threshold, broadcastOk).localCheckpoint(true)
+      val cand = candidateEdges(gsig, idxStored, threshold, broadcastOk).localCheckpoint(true)
       val cross = cand.filter(!col("in_batch"))
       val inB = cand.filter(col("in_batch"))
         .select(col("cdoc").as("bdoc"), col("bdoc").as("bdoc2"))
@@ -220,14 +217,14 @@ object ClusterMaintain {
       // as merge rows keeps every future resolution correct without ever
       // rewriting old rows). Checkpointed: feeds the graph leg and the
       // new-merge leg.
-      val labStored = readOrEmpty(spark, labPath, labelSchema, batchId)
+      val labStored = readOrEmpty(spark, labPath, labelSchema, Some(batchId))
       val crossLab = {
         val c = cross.select(col("bdoc"), col("cdoc"))
         val probe = if (broadcastOk) broadcast(c) else c
         labStored.join(probe, labStored("doc_id") === probe("cdoc"))
           .select(col("bdoc"), col("label")).localCheckpoint(true)
       }
-      val priorMerges = readOrEmpty(spark, mrgPath, mergeSchema, batchId)
+      val priorMerges = readOrEmpty(spark, mrgPath, mergeSchema, Some(batchId))
       // the per-batch component graph: batch group reps + ONE node per
       // touched cluster label + the (cluster-event-scale) merge forest —
       // never the corpus. REBALANCE before the fixpoint: the legs are
@@ -258,17 +255,16 @@ object ClusterMaintain {
         .filter(col("component") =!= col("label"))
         .select(col("label").as("old_label"), col("component").as("new_label"))
         .distinct()
-      // exactly-once batch-keyed publishes, label and merge legs
-      // concurrent (both derive from the checkpointed fixpoint); empty
-      // merge sets clear their partition explicitly via delete-then-write
-      // (an empty frame carries no partitions, so the delete IS the
-      // empty-case cleanup — one fs metadata op vs one extra Spark job)
+      // exactly-once batch-keyed commits, label and merge legs
+      // concurrent (both derive from the checkpointed fixpoint); an empty
+      // merge set carries no partition, so batch N's earlier merges are
+      // cleared first
       Par.run(
-        () => Layers.replacePartitionsPath(
+        () => Manifest.replacePartitions(
           batchLabels.withColumn("batch_id", lit(batchId)), labPath, Seq("batch_id")),
         () => {
-          Fs.deleteDir(spark, s"$mrgPath/batch_id=$batchId")
-          Layers.replacePartitionsPath(
+          clear(mrgPath)
+          Manifest.replacePartitions(
             newMerges.withColumn("batch_id", lit(batchId)), mrgPath, Seq("batch_id"))
         })
     })
@@ -281,14 +277,13 @@ object ClusterMaintain {
     * [[graft.dedup.Dedup.nearDupClusters]] shape:
     * (doc_id, cluster_id, cluster_size). */
   def labels(spark: SparkSession, root: String): DataFrame = {
-    val lab = readOrEmpty(spark, s"$root/labels", labelSchema, Long.MaxValue)
-    val assigned =
-      if (Fs.exists(spark, s"$root/merges")) {
-        val fin = mergeResolution(
-          readOrEmpty(spark, s"$root/merges", mergeSchema, Long.MaxValue))
-        lab.join(fin, col("label") === col("__l"), "left")
-          .select(col("doc_id"), coalesce(col("__final"), col("label")).as("cluster_id"))
-      } else lab.select(col("doc_id"), col("label").as("cluster_id"))
+    val lab = readOrEmpty(spark, s"$root/labels", labelSchema)
+    val assigned = stored(spark, s"$root/merges").fold(
+        lab.select(col("doc_id"), col("label").as("cluster_id"))) { forest =>
+      val fin = mergeResolution(forest)
+      lab.join(fin, col("label") === col("__l"), "left")
+        .select(col("doc_id"), coalesce(col("__final"), col("label")).as("cluster_id"))
+    }
     val sizes = assigned.groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("cluster_size"))
     assigned.join(sizes, "cluster_id")
@@ -298,28 +293,23 @@ object ClusterMaintain {
   /** COMPACT the merge forest (round-12 verdict #3: `priorMerges` rides
     * into EVERY per-batch fixpoint and grows monotonically with lifetime
     * cluster-merge events). Folds the forest's transitive resolutions
-    * into the label store — each batch-keyed label partition is
-    * rewritten MAP-ONLY (the forest resolution is cluster-event scale
-    * and broadcast-attaches; above `maxBroadcastLabels` forest edges it
-    * degrades loudly to a shuffled join) — then deletes the forest.
+    * into the label store — the label table is rewritten MAP-ONLY as
+    * one commit (the forest resolution is cluster-event scale and
+    * broadcast-attaches; above `maxBroadcastLabels` forest edges it
+    * degrades loudly to a shuffled join) — then clears the forest.
     * After compaction the per-batch fixpoint input is batch + touched
     * roots ONLY: per-ingest cost is flat in the number of PRIOR merges
     * (`ScalingSpec` "flat: cluster ingest after compactMerges of a
     * growing merge chain": same shuffle records at ×1/×2/×4 chains), at
     * the amortized price of one label-store rewrite per compaction.
     *
-    * Crash-safety (the replay/exactly-once contract is preserved):
-    *  1. every label partition is rewritten with resolved labels via
-    *     [[graft.engine.Layers.replacePartitionsPath]] — atomic per
-    *     partition; a crash mid-way leaves a MIX of resolved and stale
-    *     partitions, which is safe while the forest is intact because
-    *     resolution is idempotent (resolving an already-final label is
-    *     the identity);
-    *  2. only after ALL partitions are rewritten is the forest deleted.
-    *     A crash mid-delete leaves leftover edges that are strictly
-    *     intra-component (a merge edge never links two distinct final
-    *     components), so a later fixpoint re-resolves them to the same
-    *     roots they already carry.
+    * Crash-safety (the replay/exactly-once contract is preserved): two
+    * commits, the resolved label table first, then the forest clear (a
+    * manifest-only commit). A crash before the first leaves both stores
+    * as they were; a crash between them leaves final labels beside the
+    * intact forest, which is safe because resolution is idempotent
+    * (resolving an already-final label is the identity), and re-running
+    * the compaction folds and clears it.
     *
     * Call at a batch boundary with every ingested batch committed —
     * e.g. [[sink]]'s size trigger runs it inside the micro-batch
@@ -332,11 +322,8 @@ object ClusterMaintain {
       maxBroadcastLabels: Long = Dedup.maxBroadcastRows): Long = {
     val mrgPath = s"$root/merges"
     val labPath = s"$root/labels"
-    if (!Fs.exists(spark, mrgPath)) return 0L
-    val forest = readOrEmpty(spark, mrgPath, mergeSchema, Long.MaxValue)
-      .localCheckpoint(true)
+    val forest = stored(spark, mrgPath).getOrElse(return 0L).localCheckpoint(true)
     val nEdges = forest.count()
-    if (nEdges == 0L) { Fs.deleteDir(spark, mrgPath); return 0L }
     val fin = mergeResolution(forest)
     val finSide = if (nEdges <= maxBroadcastLabels) broadcast(fin) else {
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -344,13 +331,12 @@ object ClusterMaintain {
           s"$maxBroadcastLabels — degrading to a shuffled resolution join")
       fin
     }
-    val lab = spark.read.schema(labelSchema.add("batch_id", LongType))
-      .parquet(labPath)
-    val resolved = lab.join(finSide, col("label") === col("__l"), "left")
+    val resolved = Manifest.read(spark, labPath)
+      .join(finSide, col("label") === col("__l"), "left")
       .select(col("doc_id"),
         coalesce(col("__final"), col("label")).as("label"), col("batch_id"))
-    Layers.replacePartitionsPath(resolved, labPath, Seq("batch_id"))
-    Fs.deleteDir(spark, mrgPath)
+    Manifest.write(resolved, labPath, Seq("batch_id"))
+    Manifest.dropPartitions(spark, mrgPath, "batch_id", None, None)
     nEdges
   }
 
@@ -366,7 +352,7 @@ object ClusterMaintain {
     * [[graft.dedup.Dedup.minhashPairs]]).
     *
     * Default 2 batches: each ingest is a ~20-job composite (signature +
-    * contraction + probe + fixpoint + three store publishes), measured
+    * contraction + probe + fixpoint + three store commits), measured
     * ~2.4 s of fixed cost per batch at sf0.1/local[32] — the bench entry
     * exercises probe, in-batch, backward-merge and store-replay at 2;
     * the 3-batch CHAIN path (merge-of-merge resolution) is pinned by
@@ -384,12 +370,10 @@ object ClusterMaintain {
   }
 
   /** Current merge-forest size — one footer-metadata count over the
-    * (cluster-event-scale) merges store; 0 when absent. */
+    * (cluster-event-scale) merges store; 0, with no Spark job, while it
+    * has no entry. */
   private[graft] def forestEdges(spark: SparkSession, root: String): Long =
-    if (Fs.exists(spark, s"$root/merges"))
-      spark.read.schema(mergeSchema.add("batch_id", LongType))
-        .parquet(s"$root/merges").count()
-    else 0L
+    stored(spark, s"$root/merges").fold(0L)(_.count())
 
   /** Streaming form: each micro-batch maintains the cluster store via
     * [[ingestBatch]] keyed by its epoch id — checkpoint replay is

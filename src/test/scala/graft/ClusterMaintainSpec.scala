@@ -4,32 +4,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FormattedMode
 import graft.dedup.Dedup
+import graft.engine.Manifest
 import graft.streaming.ClusterMaintain
-
-/** Local-fs scheme for one [[ClusterMaintain.ingestBatch]] publishing its
-  * three stores at once: the rename that publishes an `index` partition
-  * fails (returns false, as Hadoop signals errors), while the one that
-  * publishes a `labels` partition is held back and stamps when it is
-  * done — so a spec can tell whether the index failure reached the
-  * caller before the label publish finished. */
-class HeldPublishFs extends org.apache.hadoop.fs.RawLocalFileSystem {
-  override def getUri: java.net.URI = java.net.URI.create("heldpub:///")
-  override def rename(src: org.apache.hadoop.fs.Path,
-      dst: org.apache.hadoop.fs.Path): Boolean = {
-    val publish = dst.getName.startsWith("batch_id=")
-    dst.getParent.getName match {
-      case "index" if publish => false
-      case "labels" if publish =>
-        Thread.sleep(1500)
-        try super.rename(src, dst) finally HeldPublishFs.labelsDone = System.nanoTime()
-      case _ => super.rename(src, dst)
-    }
-  }
-}
-
-object HeldPublishFs {
-  @volatile var labelsDone = 0L
-}
 
 /** Pins [[graft.streaming.ClusterMaintain]] — incremental near-dup
   * cluster maintenance (round-11 brief #4). The pins, in order of
@@ -37,8 +13,9 @@ object HeldPublishFs {
   * ONE full connected-components run over the complete MinHash pair
   * graph; (2) the merge mechanics on a deterministic micro-corpus
   * (backward-moving minimum, CHAINED merges that need transitive
-  * resolution); (3) replay determinism under the batch-keyed stores;
-  * (4) the 100 TB shape — the stored-index probe keeps the corpus side
+  * resolution); (3) replay determinism under the batch-keyed stores,
+  * and a crash at any of their Manifest commits leaves no torn snapshot
+  * and re-runs to a clean twin's state; (4) the 100 TB shape — the stored-index probe keeps the corpus side
   * map-only (batch bands broadcast; the only shuffle is the
   * survivor-scale distinct). */
 class ClusterMaintainSpec extends SparkSpec {
@@ -88,8 +65,8 @@ class ClusterMaintainSpec extends SparkSpec {
       s"got $got")
     // label store rows for batch-0 docs still carry their ORIGINAL
     // labels — merges are recorded, old members never rewritten
-    val raw = spark.read.parquet(s"$root/labels")
-      .filter(col("batch_id") === 0L)
+    val raw = Manifest.read(spark, s"$root/labels")
+      .filter(col("batch_id") === 0L).select(col("doc_id"), col("label"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(raw == Map(10L -> 10L, 20L -> 20L),
       s"batch-0 label rows were rewritten: $raw")
@@ -193,8 +170,8 @@ class ClusterMaintainSpec extends SparkSpec {
     assert(folded == 4L, s"expected 4 forest edges folded, got $folded")
     assert(labelMap() == before, "compaction changed resolved labels")
     // forest gone; every stored label row is now FINAL (self-resolved)
-    assert(!graft.engine.Fs.exists(spark, s"$root/merges"))
-    val raw = spark.read.parquet(s"$root/labels")
+    assert(Manifest.state(spark, s"$root/merges").get.entries.isEmpty)
+    val raw = Manifest.read(spark, s"$root/labels")
       .select(col("doc_id"), col("label"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(raw == Map(10L -> 3L, 5L -> 3L, 3L -> 3L, 20L -> 15L, 15L -> 15L),
@@ -338,24 +315,81 @@ class ClusterMaintainSpec extends SparkSpec {
     }
   }
 
-  test("a failing publish reaches the caller only after its sibling publishes finish, leaving no staging dirs") {
+  // the crash matrix: one ingest commits the index, labels and merges
+  // logs; one compactMerges commits labels, then the merges clear. Each
+  // case arms the shared crashat:// FS to throw at the log rename of one
+  // store, then checks the caller's error, that every store's head is
+  // its old or its new snapshot, and that re-running the call ends equal
+  // to a clean twin.
+  private val stores = Seq("index", "labels", "merges")
+  private val t1 = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+  private val t2 = "one two three four five six seven eight nine ten"
+  private def microBatch(rows: (Long, String)*) = {
     import spark.implicits._
-    spark.sparkContext.hadoopConfiguration.set("fs.heldpub.impl", classOf[HeldPublishFs].getName)
-    val local = Files.createTempDirectory("cm_pubfail").toString + "/store"
-    val batch = Seq(10L -> "alpha beta gamma delta epsilon zeta eta theta iota kappa",
-      20L -> "one two three four five six seven eight nine ten").toDF("doc_id", "text")
-    HeldPublishFs.labelsDone = 0L
-    val e = intercept[java.io.IOException](
-      ClusterMaintain.ingestBatch(batch, s"heldpub://$local", 0L))
-    val caught = System.nanoTime()
-    assert(e.getMessage.contains("could not publish partition batch_id=0"), e.getMessage)
-    assert(HeldPublishFs.labelsDone != 0L && HeldPublishFs.labelsDone <= caught,
-      "the index failure surfaced while the label publish was still writing")
-    assert(Files.exists(java.nio.file.Paths.get(s"$local/labels/batch_id=0")))
-    for (store <- Seq("index", "labels", "merges")) {
-      val dir = new java.io.File(s"$local/$store")
-      val debris = Option(dir.list()).toSeq.flatten.filter(_.startsWith("_staging-"))
-      assert(debris.isEmpty, s"$store keeps $debris")
+    rows.toSeq.toDF("doc_id", "text")
+  }
+  // batch 1 pulls both clusters' minima backward (merges 10->5, 20->15);
+  // batch 2 chains t1's cluster on to 3
+  private def chain = Seq(microBatch(10L -> t1, 20L -> t2),
+    microBatch(5L -> t1, 15L -> t2), microBatch(3L -> t1))
+
+  private def heads(root: String): Map[String, Seq[String]] = stores.map { s =>
+    s -> Manifest.read(spark, s"$root/$s").collect().map(_.toString).sorted.toSeq
+  }.toMap
+  private def labelSet(root: String) = ClusterMaintain.labels(spark, root)
+    .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+
+  /** A fresh store root on crashat://, a local twin root, and the thunk
+    * that arms the FS to throw at the rename committing a version of
+    * `store`. */
+  private def armedPair(tag: String, store: String): (String, String, () => Unit) = {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.crashat.impl", classOf[CrashAtFs].getName)
+    val local = Files.createTempDirectory(tag).toString + "/store"
+    val twin = Files.createTempDirectory(s"${tag}_twin").toString + "/store"
+    val arm = () => {
+      CrashAtFs.crashPath = _.toUri.getPath.startsWith(s"$local/$store/_graft_log/")
+      CrashAtFs.crashOp = Some("rename")
+    }
+    (s"crashat://$local", twin, arm)
+  }
+
+  private def crashThenRerun(root: String, twin: String, arm: () => Unit)(
+      call: String => Unit): Unit = {
+    val before = heads(root)
+    arm()
+    val e = intercept[java.io.IOException](call(root))
+    assert(e.getMessage == "injected crash at rename")
+    assert(CrashAtFs.crashOp.isEmpty, "the call made no commit to the armed store")
+    call(twin)
+    val after = heads(twin)
+    val torn = heads(root).filter { case (s, rows) => rows != before(s) && rows != after(s) }
+    assert(torn.isEmpty, s"torn snapshots after the crash: ${torn.keys}")
+    call(root)
+    assert(heads(root) == after, "the re-run did not converge on the clean twin's stores")
+    assert(labelSet(root) == labelSet(twin))
+  }
+
+  for (store <- stores) {
+    test(s"crash matrix: an ingest failing at its $store commit leaves no torn store and re-runs clean") {
+      val (root, twin, arm) = armedPair(s"cm_crash_ingest_$store", store)
+      chain.take(2).zipWithIndex.foreach { case (b, i) =>
+        ClusterMaintain.ingestBatch(b, root, i.toLong)
+        ClusterMaintain.ingestBatch(b, twin, i.toLong)
+      }
+      crashThenRerun(root, twin, arm)(r => ClusterMaintain.ingestBatch(chain(2), r, 2L))
+    }
+  }
+
+  for (store <- Seq("labels", "merges")) {
+    test(s"crash matrix: a compactMerges failing at its $store commit leaves no torn store and re-runs clean") {
+      val (root, twin, arm) = armedPair(s"cm_crash_compact_$store", store)
+      chain.zipWithIndex.foreach { case (b, i) =>
+        ClusterMaintain.ingestBatch(b, root, i.toLong)
+        ClusterMaintain.ingestBatch(b, twin, i.toLong)
+      }
+      crashThenRerun(root, twin, arm) { r => ClusterMaintain.compactMerges(spark, r); () }
+      assert(Manifest.state(spark, s"$root/merges").get.entries.isEmpty)
     }
   }
 

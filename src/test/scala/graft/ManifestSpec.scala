@@ -344,6 +344,54 @@ class ManifestSpec extends SparkSpec {
     assert(Manifest.read(spark, path, Some(0L)).count() == 60)
   }
 
+  private def dataDirs(path: String) =
+    Fs.listDirs(spark, path).map(_.getName).filter(_.startsWith("data-"))
+
+  test("deleteWhere matching no row commits nothing and writes no data dir") {
+    val path = Files.createTempDirectory("mandel0").toString
+    Manifest.write(mk(0).filter(col("p") <= 2), path, Seq("p"))
+    assert(Manifest.deleteWhere(spark, path, col("p") === 9) == 0L)
+    assert(Manifest.currentVersion(spark, path).contains(0L))
+    assert(dataDirs(path).size == 1, dataDirs(path))
+    assert(Manifest.read(spark, path).count() == 40)
+  }
+
+  test("dropPartitions drops whole partitions from the manifest alone; a miss commits nothing") {
+    val path = Files.createTempDirectory("mandrop").toString
+    Manifest.write(mk(0), path, Seq("p"))
+    val (v, work) = SparkWork.count(spark)(
+      Manifest.dropPartitions(spark, path, "p", Some(2), Some(2)))
+    assert(v.contains(1L))
+    assert(work.jobs == 0, work)
+    assert(Manifest.state(spark, path).get.entries.map(_.part) == Seq("p=1", "p=3"))
+    assert(Manifest.read(spark, path).collect().toSet ==
+      mk(0).filter(col("p") =!= 2).collect().toSet)
+    assert(dataDirs(path).size == 1, "a drop writes no data")
+    // no entry holds p=9, and a path with no log has nothing to drop
+    assert(Manifest.dropPartitions(spark, path, "p", Some(9), Some(9)).isEmpty)
+    assert(Manifest.dropPartitions(spark, s"$path-none", "p", Some(2), Some(2)).isEmpty)
+    assert(Manifest.currentVersion(spark, path).contains(1L))
+    // no bound drops every entry; the empty snapshot keeps its schema
+    assert(Manifest.dropPartitions(spark, path, "p", None, None).contains(2L))
+    val empty = Manifest.read(spark, path)
+    assert(empty.count() == 0 && empty.columns.toSeq == Seq("p", "id", "version"))
+    assert(Manifest.read(spark, path, Some(0L)).count() == 60, "time travel keeps the rows")
+    intercept[IllegalArgumentException](
+      Manifest.dropPartitions(spark, path, "id", Some(1), Some(1)))
+  }
+
+  test("a driver-built unpartitioned frame commits as one job and one parquet file") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("manlocal").toString
+    val (_, work) = SparkWork.count(spark)(
+      Manifest.write(Seq((1L, "a")).toDF("id", "s"), path))
+    assert(work.jobs == 1, work)
+    val files = dataDirs(path).flatMap(d => Fs.listFiles(spark, s"$path/$d"))
+      .map(_.getName).filter(_.endsWith(".parquet"))
+    assert(files.size == 1, files)
+    assert(Manifest.read(spark, path).as[(Long, String)].collect().toSeq == Seq((1L, "a")))
+  }
+
   test("compact folds a fragmented partitioned table into one commit, content identical") {
     val path = Files.createTempDirectory("mancomp").toString
     // one commit per partition → entries scattered over 3 dirs

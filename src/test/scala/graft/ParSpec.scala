@@ -42,4 +42,16 @@ class ParSpec extends AnyFunSuite {
     assert(e.getMessage == "first")
     assert(ran.get == 3)
   }
+
+  test("a failure surfaces only after every sibling thunk has finished") {
+    @volatile var siblingDone = 0L
+    intercept[IllegalStateException] {
+      Par.run(
+        () => throw new IllegalStateException("fails at once"),
+        () => { Thread.sleep(500); siblingDone = System.nanoTime() })
+    }
+    val caught = System.nanoTime()
+    assert(siblingDone != 0L && siblingDone <= caught,
+      "the failure reached the caller while a sibling was still running")
+  }
 }

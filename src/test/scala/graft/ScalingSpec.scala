@@ -10,6 +10,7 @@ import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
+import graft.engine.Manifest
 import graft.queries.{Graphs, Marts}
 import graft.sim.Similarity
 import graft.streaming.ClusterMaintain
@@ -282,9 +283,10 @@ class ScalingSpec extends SparkSpec {
     val obs = observe("cluster_ingest/compacted") { m =>
       val st = store(s"scaling_compact_x$m")
       ClusterMaintain.ingestBatch(docs(sf).filter(col("doc_id") % 50 =!= 3), st, 0L)
-      spark.range(2000L * m).select((col("id") + lit(1000000001L)).as("old_label"),
-          (col("id") + lit(1000000000L)).as("new_label"))
-        .coalesce(1).write.parquet(s"$st/merges/batch_id=1")
+      Manifest.replacePartitions(
+        spark.range(2000L * m).select((col("id") + lit(1000000001L)).as("old_label"),
+          (col("id") + lit(1000000000L)).as("new_label"), lit(1L).as("batch_id")),
+        s"$st/merges", Seq("batch_id"))
       ClusterMaintain.compactMerges(spark, st)
       () => (ClusterMaintain.ingestBatch(batch, st, 2L), 0L)
     }
