@@ -966,11 +966,10 @@ object Dedup {
     * corpus posting explode scans MAP-ONLY against it: candidate
     * generation never shuffles the corpus, which is the whole point at
     * 100 TB where the corpus is the big side and the batch is the small
-    * one. The exact re-verify joins the candidates back to their
-    * containers' full shingle sets, so where that join is not broadcast
-    * the corpus index IS shuffled (`ScalingSpec`: with broadcast off,
-    * candidate shuffle records stay flat as the corpus grows, while
-    * total shuffle records grow by one corpus index per copy). Above
+    * one. The exact re-verify meets the corpus shingle sets with the
+    * batch-scale candidate pairs as the broadcast side, so it too scans
+    * the corpus map-only (`ScalingSpec`: with broadcast off, candidate
+    * and total shuffle records stay flat as the corpus grows). Above
     * `maxBroadcastDocs` batch docs the probe degrades loudly to a
     * shuffled join — same rows, the map-only promise traded for not
     * OOMing. Survivors re-verify exactly on full sorted sets
@@ -1018,9 +1017,14 @@ object Dedup {
           col("nb") >= lit(threshold) * col("n_sh"))
       .select(col("doc_id"), col("container_id"))
       .distinct()
-    cand
-      .join(docs.select(col("doc_id"), col("shh").as("sh_a"), col("n_sh").as("na")), "doc_id")
-      .join(docs.select(col("doc_id").as("container_id"), col("shh").as("sh_b")), "container_id")
+    // the verify meets the corpus shingle relation with the batch-scale
+    // candidates as the broadcast side, behind the same guard: the corpus
+    // scans map-only and only candidate containers go on, where a
+    // shuffled join would move the whole corpus index every batch
+    val pairs = cand
+      .join(batchD.select(col("doc_id"), col("shh").as("sh_a"), col("n_sh").as("na")), "doc_id")
+    corpusD.select(col("doc_id").as("container_id"), col("shh").as("sh_b"))
+      .join(if (broadcastOk) broadcast(pairs) else pairs, "container_id")
       .withColumn("c_raw",
         expr("sorted_intersect_size(sh_a, sh_b)") / col("na"))
       .filter(col("c_raw") >= threshold)

@@ -327,7 +327,9 @@ object Manifest {
     * `INSERT OVERWRITE … PARTITION` / Delta `replaceWhere` semantics
     * with snapshot isolation. Re-committing the same batch converges
     * (same partitions re-pointed), so at-least-once loaders stay
-    * exactly-once. */
+    * exactly-once. A frame with no rows replaces no partition, so it
+    * commits nothing and returns the head version (the first commit of
+    * a table still lands, recording its schema). */
   def replacePartitions(df: DataFrame, path: String,
       partitionCols: Seq[String],
       statsCols: Seq[String] = Seq.empty,
@@ -392,18 +394,28 @@ object Manifest {
       }
     val fresh = collectStats(spark, s"$path/$dir", df.schema,
       partitionCols, effStats, effBlooms, bare)
-    val kept =
-      if (replaceAll) Seq.empty
-      else prev.map(_.entries.filterNot(e =>
-        dropParts(e.part) || fresh.exists(_.part == e.part))).getOrElse(Seq.empty)
-    try
-      commit(spark, path, State(at.getOrElse(prev.map(_.version + 1).getOrElse(0L)),
-        partitionCols, df.schema.toDDL, kept ++ fresh,
-        Some(effStats).filter(_.nonEmpty), Some(effBlooms).filter(_.nonEmpty)))
-    catch {
-      case e: java.util.ConcurrentModificationException =>
-        Fs.deleteDir(spark, s"$path/$dir") // unreferenced; don't wait for vacuum
-        throw e
+    prev match {
+      // a partition replace that brings no partition changes nothing:
+      // the head stays, and the dir (only `_SUCCESS`) goes. A first
+      // commit records the schema and a versioned one its epoch, so
+      // those commit even when empty
+      case Some(st) if fresh.isEmpty && !replaceAll && at.isEmpty && dropParts.isEmpty =>
+        Fs.deleteDir(spark, s"$path/$dir")
+        st.version
+      case _ =>
+        val kept =
+          if (replaceAll) Seq.empty
+          else prev.map(_.entries.filterNot(e =>
+            dropParts(e.part) || fresh.exists(_.part == e.part))).getOrElse(Seq.empty)
+        try
+          commit(spark, path, State(at.getOrElse(prev.map(_.version + 1).getOrElse(0L)),
+            partitionCols, df.schema.toDDL, kept ++ fresh,
+            Some(effStats).filter(_.nonEmpty), Some(effBlooms).filter(_.nonEmpty)))
+        catch {
+          case e: java.util.ConcurrentModificationException =>
+            Fs.deleteDir(spark, s"$path/$dir") // unreferenced; don't wait for vacuum
+            throw e
+        }
     }
   }
 

@@ -1,9 +1,12 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructType}
+import scala.jdk.CollectionConverters._
 import graft.{Fns, Tables}
 import graft.engine.Manifest
+import graft.functions.TopKByAgg
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (64-dim float vectors).
@@ -400,6 +403,12 @@ object Similarity {
     kmeansFit(spark, dir, k, iters).map(c => (c.cid, c.c)).toDF("cid", "centroid")
   }
 
+  /** A query's routing score against one centroid, over `va`/`na2`
+    * and `vb`/`cnorm2` columns — ONE expression for [[probesFor]] and the
+    * driver route of [[routeProbes]], so the two cannot drift. */
+  private val centroidCos: Column =
+    Fns.money(expr(dotExpr) / sqrt(col("na2") * col("cnorm2")))
+
   /** Query vectors routed to their `nprobe` nearest centroids. The
     * routing rank is a [[graft.functions.TopKByAgg]] heap, not a window:
     * each query's candidate rows (one per centroid, replicated in-place
@@ -413,11 +422,36 @@ object Similarity {
   private def probesFor(queries: DataFrame, centDf: DataFrame, nprobe: Int): DataFrame = {
     queries.crossJoin(broadcast(centDf))
       .withColumn("vb", col("centroid"))
-      .withColumn("ccos", Fns.money(expr(dotExpr) / sqrt(col("na2") * col("cnorm2"))))
+      .withColumn("ccos", centroidCos)
       .groupBy(col("query_id"), col("va"), col("na2"))
       .agg(expr(s"topk_by(ccos, CAST(cid AS BIGINT), $nprobe)").as("tk"))
       .select(col("query_id"), col("va"), col("na2"),
         explode(expr("transform(tk, s -> CAST(s.payload AS INT))")).as("cid"))
+  }
+
+  /** [[probesFor]] on the driver, for a request's collected query rows
+    * `(query_id, va, na2)` against the collected centroid rows
+    * `(cid, centroid, cnorm2)`: the same probes, as `(query_id, va, na2,
+    * cid)` rows. It runs the Spark route's own code rather than a copy of
+    * it — [[centroidCos]] evaluated over a local relation (the optimizer
+    * folds a projection of one on the driver, so no job runs; a zero
+    * divisor fails under ANSI and is null without it, exactly as in the
+    * scan), then each query's best `nprobe` kept in the heap `topk_by`
+    * aggregates with, so ties (ccos DESC, cid ASC) resolve as there. */
+  private def routeProbes(spark: SparkSession, queries: Seq[Row], cents: Seq[Row],
+      nprobe: Int): Seq[Row] = {
+    val qs = queries.distinct // probesFor groups on (query_id, va, na2)
+    val pairs = for ((q, qi) <- qs.zipWithIndex; c <- cents)
+      yield Row(qi, q.get(1), q.get(2), c.get(0), c.get(1), c.get(2))
+    val schema = new StructType().add("qi", IntegerType).add("va", ArrayType(DoubleType))
+      .add("na2", DoubleType).add("cid", IntegerType).add("vb", ArrayType(DoubleType))
+      .add("cnorm2", DoubleType)
+    val heaps = Array.fill(qs.size)(new TopKByAgg.Heap(nprobe))
+    spark.createDataFrame(pairs.asJava, schema)
+      .select(col("qi"), col("cid"), centroidCos).collect()
+      .foreach(r => if (!r.isNullAt(2)) heaps(r.getInt(0)).offer(r.getDouble(2), r.getInt(1).toLong))
+    for ((q, h) <- qs.zip(heaps); (_, cid) <- h.sortedDesc.toSeq)
+      yield Row(q.get(0), q.get(1), q.get(2), cid.toInt)
   }
 
   /** Exact top-k within the probed inverted lists. The rank step is the
@@ -428,7 +462,6 @@ object Similarity {
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cosine", Fns.money(expr(dotExpr) / sqrt(col("na2") * col("nb2"))))
       .transform(topKPerQuery("query_id", k))
-      .orderBy(col("query_id"), col("rank"))
   }
 
   /** IVF probe search over k-means lists: route each query to its `nprobe`
@@ -459,6 +492,7 @@ object Similarity {
       .select(col("vec_id").as("neighbor_id"), col("v").as("vb"),
         col("norm2").as("nb2"), col("cid"))
     probeSearch(corpus, probesFor(queries, centDf, nprobe), k)
+      .orderBy(col("query_id"), col("rank"))
   }
 
   /** PERSIST the IVF index: centroids + the corpus pre-assigned to its
@@ -502,24 +536,53 @@ object Similarity {
   }
 
   /** Serve kNN from a [[buildIvfIndex]]-written index: probe routing
-    * against the stored centroids, exact top-k within the stored lists.
-    * Bit-identical to [[knnIvf]] at the same fit parameters (parquet
-    * round-trips doubles exactly). */
+    * against the stored centroids, exact top-k within the stored lists,
+    * of which only the probed ones are read. Bit-identical to [[knnIvf]]
+    * at the same fit parameters (parquet round-trips doubles exactly).
+    * A small-request read: see [[knnIvfFromIndexOn]] for its shape and
+    * the driver bound. */
   def knnIvfFromIndex(spark: SparkSession, dir: String, indexPath: String,
       k: Int = 5, nprobe: Int = 2): DataFrame =
     knnIvfFromIndexOn(prepared(spark, dir), indexPath, k, nprobe)
 
   /** [[knnIvfFromIndex]] with the query slice taken from a caller-held
     * prepared relation — [[knnIvfServed]] passes its build-phase
-    * checkpoint so serving re-reads materialized rows, not parquet. */
+    * checkpoint so serving re-reads materialized rows, not parquet.
+    *
+    * A served read answers a small top-k request in five Spark jobs,
+    * pruning before the scan and merging on the driver instead of
+    * through extra shuffle stages: collect the stored centroids (at most
+    * nClusters rows) and the query slice concurrently, route each query
+    * on the driver ([[routeProbes]]), scan only the probed lists through
+    * a static `cid IN (…)` partition filter joined to the broadcast
+    * probes, rank with `topk_by` as [[knnIvf]] does, then collect the
+    * answer (at most nq·k rows) and order it by (query_id, rank) on the
+    * driver. The result is a local relation.
+    *
+    * Driver bound, for nq queries in the slice: the nClusters stored
+    * centroids, nq × nClusters routing rows (each carrying the query and
+    * the centroid vector, 2·dim values), nq × nprobe probe rows (each
+    * carrying its query vector) and nq·k answer rows, so
+    * O(nq · nClusters · dim) values per read. It is built for requests of
+    * a few vectors up to [[knnIvfServed]]'s 1% slice (20 queries on a
+    * 2000-vector corpus); a corpus-scale query set belongs on [[knnIvf]]. */
   private[graft] def knnIvfFromIndexOn(e: DataFrame, indexPath: String,
       k: Int, nprobe: Int): DataFrame = {
     val spark = e.sparkSession
-    val centDf = graft.engine.Fs.readParquet(spark, s"$indexPath/centroids")
-    val corpus = graft.engine.Fs.readParquet(spark, s"$indexPath/lists")
     val queries = e.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("query_id"), col("v").as("va"), col("norm2").as("na2"))
-    probeSearch(corpus, probesFor(queries, centDf, nprobe), k)
+    // independent reads: overlapping the two collects saves one job's latency
+    val Seq(cents, qRows) = graft.engine.Par.runAll(
+      () => graft.engine.Fs.readParquet(spark, s"$indexPath/centroids")
+        .select(col("cid"), col("centroid"), col("cnorm2")).collect().toSeq,
+      () => queries.collect().toSeq)
+    val probes = routeProbes(spark, qRows, cents, nprobe)
+    val probed = probes.map(_.getInt(3)).distinct.sorted
+    val ranked = probeSearch(
+      graft.engine.Fs.readParquet(spark, s"$indexPath/lists").filter(col("cid").isin(probed: _*)),
+      spark.createDataFrame(probes.asJava, queries.schema.add("cid", IntegerType)), k)
+    val rows = if (probes.isEmpty) Seq.empty[Row] else ranked.collect().toSeq
+    spark.createDataFrame(rows.sortBy(r => (r.getLong(0), r.getInt(1))).asJava, ranked.schema)
   }
 
   /** Product-quantization kNN (Jégou et al. 2011): split each 64-dim
@@ -1958,9 +2021,11 @@ object Similarity {
     * [[knnIvfFromIndex]] at query time) exercised end-to-end. Results
     * are bit-identical to [[knnIvf]] — parquet round-trips doubles
     * exactly — so the in-memory variant's oracle verifies this one too,
-    * while the plan differs where it matters: the lists scan carries
-    * PartitionFilters on `cid`, reading nprobe/nClusters of the corpus
-    * from disk. */
+    * while the read differs where it matters: only the probed lists are
+    * read from disk. The serve is [[knnIvfFromIndexOn]]'s driver-merged
+    * read over the corpus's 1% query slice (20 queries at 2000 vectors),
+    * holding O(nq · nClusters · dim) values on the driver; a memo hit
+    * runs the corpus checkpoint and that read's five jobs. */
   def knnIvfServed(spark: SparkSession, dir: String, k: Int = 5, nprobe: Int = 2,
       nClusters: Int = 10, iters: Int = 3): DataFrame = {
     // ONE checkpointed corpus feeds the whole round trip: the fit, the

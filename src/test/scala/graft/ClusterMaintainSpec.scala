@@ -210,6 +210,8 @@ class ClusterMaintainSpec extends SparkSpec {
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val saved = spark.conf.get(key)
     spark.conf.set(key, "-1")
+    // the broadcast run's last query events are still on the bus
+    org.apache.spark.TestListenerBus.drain(spark.sparkContext)
     spark.listenerManager.register(listener)
     val degraded =
       try chain(Files.createTempDirectory("cm_guard_0").toString + "/store", 0L)

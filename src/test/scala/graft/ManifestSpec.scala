@@ -356,6 +356,23 @@ class ManifestSpec extends SparkSpec {
     assert(Manifest.read(spark, path).count() == 40)
   }
 
+  test("replacePartitions of an empty frame commits nothing and leaves no data dir; first and versioned commits still land") {
+    val path = Files.createTempDirectory("manrepl0").toString
+    // a first commit of an empty frame records the table's schema
+    assert(Manifest.replacePartitions(mk(0).limit(0), path, Seq("p")) == 0L)
+    assert(Manifest.read(spark, path).schema.fieldNames.toSeq == Seq("p", "id", "version"))
+    assert(Manifest.replacePartitions(mk(1), path, Seq("p")) == 1L)
+    val dirs = dataDirs(path)
+    assert(Manifest.replacePartitions(mk(2).limit(0), path, Seq("p")) == 1L)
+    assert(Manifest.currentVersion(spark, path).contains(1L))
+    assert(dataDirs(path) == dirs, dataDirs(path))
+    assert(Manifest.read(spark, path).filter(col("version") === 1).count() == 60)
+    // an empty epoch still records its version
+    assert(Manifest.replacePartitionsVersioned(mk(3).limit(0), path, Seq("p"), 5L))
+    assert(Manifest.currentVersion(spark, path).contains(5L))
+    assert(Manifest.read(spark, path).count() == 60)
+  }
+
   test("dropPartitions drops whole partitions from the manifest alone; a miss commits nothing") {
     val path = Files.createTempDirectory("mandrop").toString
     Manifest.write(mk(0), path, Seq("p"))

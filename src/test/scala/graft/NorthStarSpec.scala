@@ -442,19 +442,38 @@ class SimilaritySpec extends SparkSpec {
       .collect().toSeq
     val served = Similarity.knnIvfFromIndex(spark, sf, idx, k = 5, nprobe = 2)
     assert(served.collect().toSeq == live)
-    // lists are partition dirs → the probe join prunes unprobed lists
-    // (dynamic partition pruning on cid, or static after AQE): assert the
-    // index layout actually partitions by cid
+    // lists are partition dirs, so a read can skip the unprobed ones
     val listDirs = graft.engine.Fs.listDirs(spark, s"$idx/lists")
       .map(_.getName).filter(_.startsWith("cid="))
     assert(listDirs.size == 10, s"expected 10 list partitions, got $listDirs")
-    // and the lists scan carries a dynamic-pruning PartitionFilter on cid
-    // — the serve reads nprobe/nClusters of the corpus from disk, which
-    // is the entire point of a persisted IVF index at scale
-    val plan = served.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
-    assert(plan.contains("PartitionFilters") &&
-      plan.toLowerCase.contains("dynamicpruning"), plan)
+    // a warm read of a small request runs five jobs (centroids, queries,
+    // probe broadcast, top-k map stage, result) and reads the request,
+    // the centroids and the probed lists — no other list row
+    val req = java.nio.file.Files.createTempDirectory("ivfreq").toString
+    Tables.embeddings(spark, sf).filter(col("vec_id").isin(7L, 100L, 300L, 400L))
+      .coalesce(1).write.parquet(s"$req/embeddings.parquet")
+    Similarity.knnIvfFromIndex(spark, req, idx, k = 5, nprobe = 2).collect()
+    val (got, work) = SparkWork.count(spark)(
+      Similarity.knnIvfFromIndex(spark, req, idx, k = 5, nprobe = 2).collect())
+    assert(work.jobs <= 5, s"$work")
+    assert(got.map(_.getLong(0)).distinct.toSeq == Seq(100L, 300L, 400L))
+    // the probed lists, replayed: money-rounded cosine, (ccos DESC, cid ASC)
+    def money(x: Double) = math.floor(x * 10000 + 0.5) / 10000
+    val cents = graft.engine.Fs.readParquet(spark, s"$idx/centroids")
+      .select(col("cid"), col("centroid"), col("cnorm2")).collect()
+      .map(r => (r.getInt(0), r.getSeq[Double](1), r.getDouble(2)))
+    val probed = Similarity.prepared(spark, req).filter(col("vec_id") % 100 === 0)
+      .select(col("v"), col("norm2")).collect().toSeq.flatMap { q =>
+        val (v, n2) = (q.getSeq[Double](0), q.getDouble(1))
+        cents.map { case (cid, c, cn2) =>
+          (money(v.zip(c).foldLeft(0.0) { case (s, (x, y)) => s + x * y } / math.sqrt(n2 * cn2)), cid)
+        }.sortBy { case (s, cid) => (-s, cid) }.take(2).map(_._2)
+      }.distinct
+    val lists = graft.engine.Fs.readParquet(spark, s"$idx/lists")
+    val probedRows = lists.filter(col("cid").isin(probed: _*)).count()
+    assert(probedRows < lists.count(), s"probes $probed cover every list")
+    assert(work.inputRecords == 4 + cents.length + probedRows,
+      s"$work: expected 4 request + ${cents.length} centroid + $probedRows probed-list rows")
   }
 
   test("kmeans quantizer: 10 non-empty clusters, exhaustive cover, no label read") {

@@ -317,5 +317,7 @@ class ScalingSpec extends SparkSpec {
       }
     }
     flat("containment_incr", "candidate shuffle records", obs)(_.extra)
+    // the verify reads the candidates' containers, not the corpus index
+    flat("containment_incr", "shuffle records", obs)(_.work.shuffleRecords)
   }
 }
