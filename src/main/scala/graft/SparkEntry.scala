@@ -946,11 +946,11 @@ object SparkEntry {
     // replayed exactly
     Query("ann_index_maintain", (s, d) => Similarity.annIndexMaintain(s, d),
       ivfBasePrefix + s"""fasg AS (
-        SELECT pb.vec_id, c.cid, ${centroidCos("pb")} AS cos
+        SELECT pb.vec_id, c.cid, ${Similarity.centroidCosSql("pb")} AS cos
         FROM pb CROSS JOIN centn c
         QUALIFY row_number() OVER (PARTITION BY pb.vec_id ORDER BY cos DESC, c.cid) = 1),
       basg AS (
-        SELECT px.vec_id, c.cid, ${centroidCos("px")} AS cos
+        SELECT px.vec_id, c.cid, ${Similarity.centroidCosSql("px")} AS cos
         FROM (SELECT vec_id, v, norm2 FROM p WHERE vec_id % 4 = 3) px CROSS JOIN centn c
         QUALIFY row_number() OVER (PARTITION BY px.vec_id ORDER BY cos DESC, c.cid) = 1),
       fs AS (
@@ -1801,7 +1801,7 @@ object SparkEntry {
     // fit ⟹ identical clusters) like semantic_dedup, then assignment +
     // cluster-level TF-IDF
     Query("cluster_topics", (s, d) => Similarity.clusterTopics(s, d),
-      ivfPrefix + nearestCentroid("assigned", "p.vec_id", "vec_id, cid") + """,
+      ivfPrefix + Similarity.nearestCidSql("assigned", "vec_id, cid") + """,
       tfm AS (
         SELECT a.cid, d.term, count(*) AS tf
         FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents) d
@@ -2116,7 +2116,7 @@ object SparkEntry {
     // generated SQL: prototype-distance outliers over knn_ivf's fit;
     // per-cluster farthest-3 as a rank cut
     Query("embedding_outliers", (s, d) => Similarity.embeddingOutliers(s, d),
-      ivfPrefix + nearestCentroid("assigned", "p.vec_id", "vec_id, cid, cos") + """
+      ivfPrefix + Similarity.nearestCidSql("assigned", "vec_id, cid, cos") + """
       SELECT cid,
              CAST(row_number() OVER (PARTITION BY cid ORDER BY cos ASC, vec_id) AS INT) AS rank,
              vec_id, cos AS ccos
@@ -3446,7 +3446,7 @@ object SparkEntry {
     // generated SQL: IVF list-balance audit over knn_ivf's fit
     // (identical fit ⟹ identical lists), then a |lists|-row rollup
     Query("ivf_balance", (s, d) => Similarity.ivfBalance(s, d),
-      ivfPrefix + nearestCentroid("assigned", "p.vec_id", "vec_id, cid") + """,
+      ivfPrefix + Similarity.nearestCidSql("assigned", "vec_id, cid") + """,
       tot AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM assigned)
       SELECT cid, count(*) AS n_vecs,
              floor((count(*) / t.n) * 10000 + 0.5) / 10000 AS share,
@@ -3633,33 +3633,14 @@ object SparkEntry {
     * the exact fit graft.sim.Similarity.kmeansFit runs. Ends in `centn`
     * (cid, centroid, cnorm2) plus a trailing comma for the consumer's
     * next CTE. */
-  private def ivfFit(rel: String): String = {
-    val rounds = (1 to 3).map { i =>
-      s"""b$i AS (
-        SELECT $rel.vec_id, $rel.v, c.cid,
-               floor((list_reduce(list_transform(range(1, len($rel.v) + 1), j -> $rel.v[j] * c.centroid[j]), (x, y) -> x + y)
-                 / sqrt($rel.norm2 * list_reduce(list_transform(range(1, len(c.centroid) + 1), j -> c.centroid[j] * c.centroid[j]), (x, y) -> x + y))) * 10000 + 0.5) / 10000 AS cos
-        FROM $rel CROSS JOIN cent${i - 1} c),
-      a$i AS (SELECT vec_id, v, cid FROM b$i QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cid) = 1),
-      m$i AS (
-        SELECT cid, i.i AS pos,
-               floor((CAST(sum(CAST(floor(v[i.i + 1] * 10000 + 0.5) / 10000 AS DECIMAL(38,8))) AS DOUBLE) / count(*)) * 10000 + 0.5) / 10000 AS c
-        FROM a$i CROSS JOIN (SELECT unnest(range(0, 64)) AS i) i
-        GROUP BY 1, 2),
-      cent$i AS (SELECT cid, list(c ORDER BY pos) AS centroid FROM m$i GROUP BY cid)"""
-    }.mkString(",\n      ")
-    s"""cent0 AS (
-        SELECT CAST(row_number() OVER (ORDER BY ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT, vec_id) - 1 AS INT) AS cid,
-               v AS centroid
-        FROM $rel
-        QUALIFY cid < 10),
-      $rounds,
+  private def ivfFit(rel: String): String =
+    s"""${Similarity.lloydSeedSql("cent0", "v", rel, "10")},
+      ${Similarity.lloydRoundsSql(rel, "", "cent", 3)},
       centn AS (
         SELECT cid, centroid,
                list_reduce(list_transform(range(1, len(centroid) + 1), j -> centroid[j] * centroid[j]), (x, y) -> x + y) AS cnorm2
         FROM cent3),
       """
-  }
 
   /** The corpus `p` and the quantizer fitted on all of it. */
   private val ivfPrefix = s"""
@@ -3672,27 +3653,6 @@ object SparkEntry {
       pb AS MATERIALIZED (SELECT vec_id, v, norm2 FROM p WHERE vec_id % 4 <> 3),
       ${ivfFit("pb")}"""
 
-  /** Money-rounded cosine of `rel`'s vector to centroid row `c` of `centn`. */
-  private def centroidCos(rel: String): String =
-    s"""floor((list_reduce(list_transform(range(1, len($rel.v) + 1), j -> $rel.v[j] * c.centroid[j]), (x, y) -> x + y)
-                 / sqrt($rel.norm2 * c.cnorm2)) * 10000 + 0.5) / 10000"""
-
-  /** `bf`: every corpus vector (carrying `carry`) scored against every
-    * fitted centroid. */
-  private def centroidScores(carry: String): String =
-    s"""bf AS (
-        SELECT $carry, c.cid,
-               ${centroidCos("p")} AS cos
-        FROM p CROSS JOIN centn c)"""
-
-  /** [[centroidScores]], then `name` keeps `keep` of each vector's
-    * nearest centroid (ties to the lower cid). */
-  private def nearestCentroid(name: String, carry: String, keep: String): String =
-    s"""${centroidScores(carry)},
-      $name AS (
-        SELECT $keep FROM bf
-        QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cid) = 1)"""
-
   private val knnIvfSql = ivfPrefix + s"""q AS (SELECT vec_id AS query_id, v AS va, norm2 AS na2 FROM p WHERE vec_id % 100 = 0),
       probes AS (
         SELECT query_id, va, na2, cid
@@ -3703,7 +3663,7 @@ object SparkEntry {
                      / sqrt(q.na2 * c.cnorm2)) * 10000 + 0.5) / 10000 DESC, c.cid) AS pr
           FROM q CROSS JOIN centn c)
         WHERE pr <= 2),
-      ${centroidScores("p.vec_id, p.v, p.norm2")},
+      ${Similarity.centroidScoresSql(extra = ", p.v, p.norm2")},
       corp AS (SELECT vec_id, v, norm2, cid FROM bf QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cid) = 1),
       s AS (
         SELECT pr.query_id, corp.vec_id AS neighbor_id,
@@ -3734,7 +3694,8 @@ object SparkEntry {
         FROM scored s JOIN sz z USING (cid)),
       """, "sub", " AND a.sb = b.sb")
     }
-    ivfPrefix + nearestCentroid("scored", "p.vec_id, p.v, p.norm2", "vec_id, v, norm2, cid, cos AS ccos") + s""",
+    ivfPrefix + Similarity.nearestCidSql("scored", "vec_id, v, norm2, cid, cos AS ccos",
+      extra = ", p.v, p.norm2") + s""",
       ${buckets}cand AS (
         SELECT a.cid, a.vec_id AS ia, b.vec_id AS ib, a.ccos AS ca, b.ccos AS cb,
                floor((list_reduce(list_transform(range(1, len(a.v) + 1), j -> a.v[j] * b.v[j]), (x, y) -> x + y)

@@ -65,6 +65,12 @@ object Dedup {
       // interpreted at K x |th| lambda calls per row
       .withColumn("sig", expr("minhash_sig(th)"))
 
+  /** A document's sorted distinct token-hash set: each distinct token's
+    * md5-derived hash mod [[P]] — the exact-Jaccard and MinHash input. */
+  private val tokenHashSet: Column = expr(
+    s"""array_sort(array_distinct(transform(array_distinct(split(text, ' ')),
+        t -> CAST(conv(substr(md5(t), 1, 15), 16, 10) AS BIGINT) % $P)))""")
+
   /** MinHash+LSH near-duplicate pairs: band-bucket candidate join, then
     * exact distinct-token Jaccard ≥ `threshold`.
     *
@@ -215,9 +221,7 @@ object Dedup {
   private def minhashGroups(spark: SparkSession, dir: String): DataFrame =
     graft.engine.Derived.cached(spark, "minhash_groups", dir) {
       Tables.documents(spark, dir)
-        .withColumn("th", expr(
-          s"""array_sort(array_distinct(transform(array_distinct(split(text, ' ')),
-              t -> CAST(conv(substr(md5(t), 1, 15), 16, 10) AS BIGINT) % $P)))"""))
+        .withColumn("th", tokenHashSet)
         .select(col("doc_id"), col("th"))
         .groupBy(col("th"))
         .agg(min(col("doc_id")).as("rep"), collect_list(col("doc_id")).as("members"))
@@ -335,9 +339,7 @@ object Dedup {
       threshold: Double = 0.9, batchMod: Int = 10,
       maxBroadcastSets: Long = maxBroadcastRows): DataFrame = {
     val all = Tables.documents(spark, dir)
-      .withColumn("th", expr(
-        s"""array_sort(array_distinct(transform(array_distinct(split(text, ' ')),
-            t -> CAST(conv(substr(md5(t), 1, 15), 16, 10) AS BIGINT) % $P)))"""))
+      .withColumn("th", tokenHashSet)
       .select(col("doc_id"), col("th"))
     val isBatch = col("doc_id") % batchMod === 0
     // batch side, contracted + checkpointed: feeds the band probe, the
@@ -1113,10 +1115,21 @@ object Dedup {
     * [[nearDupClustersUnsorted]]. */
   private[graft] def embeddingPairsUnsorted(spark: SparkSession, dir: String,
       threshold: Double = 0.2, nPlanes: Int = 8): DataFrame = {
+    val e = hyperplaneBuckets(spark, dir, nPlanes)
+    val a = e.select(col("vec_id").as("id_a"), col("v").as("va"),
+      col("bucket"), col("norm2").as("na2"))
+    val b = e.select(col("vec_id").as("id_b"), col("v").as("vb"),
+      col("bucket"), col("norm2").as("nb2"))
+    cosinePairs(a, b, "bucket", threshold)
+  }
+
+  /** The embedding corpus keyed by its `nPlanes` hyperplane sign bits:
+    * `(vec_id, v, bucket, norm2)`. */
+  private def hyperplaneBuckets(spark: SparkSession, dir: String, nPlanes: Int): DataFrame = {
     require(nPlanes >= 1 && nPlanes <= 64,
       s"nPlanes must be in [1, 64] (embedding dim; got $nPlanes) — " +
         "element_at past the vector end throws under ANSI mode")
-    val e = Tables.embeddings(spark, dir)
+    Tables.embeddings(spark, dir)
       .withColumn("v", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
       .withColumn("bucket", expr(
         s"""aggregate(sequence(0, ${nPlanes - 1}), CAST(0 AS BIGINT),
@@ -1124,17 +1137,18 @@ object Dedup {
                                   shiftleft(CAST(1 AS BIGINT), j), CAST(0 AS BIGINT)))"""))
       .withColumn("norm2", expr("aggregate(v, CAST(0 AS DOUBLE), (acc, x) -> acc + x * x)"))
       .select(col("vec_id"), col("v"), col("bucket"), col("norm2"))
+  }
 
-    val a = e.select(col("vec_id").as("id_a"), col("v").as("va"),
-      col("bucket"), col("norm2").as("na2"))
-    val b = e.select(col("vec_id").as("id_b"), col("v").as("vb"),
-      col("bucket"), col("norm2").as("nb2"))
-    a.join(b, Seq("bucket")).filter(col("id_a") < col("id_b"))
+  /** The `(id_a, id_b, cosine)` pairs of `a ⋈ b` on `key` with `id_a <
+    * id_b` and exact cosine ≥ `threshold`, money-rounded after the
+    * threshold compares the raw cosine. */
+  private def cosinePairs(a: DataFrame, b: DataFrame, key: String,
+      threshold: Double): DataFrame =
+    a.join(b, Seq(key)).filter(col("id_a") < col("id_b"))
       .withColumn("dot", expr("dot_double(va, vb)"))
       .withColumn("cos_raw", col("dot") / sqrt(col("na2") * col("nb2")))
       .filter(col("cos_raw") >= threshold)
       .select(col("id_a"), col("id_b"), Fns.money(col("cos_raw")).as("cosine"))
-  }
 
   /** Multi-probe variant of [[embeddingPairs]]: each vector probes its
     * own bucket plus the `nPlanes` buckets at Hamming distance 1 (one
@@ -1149,17 +1163,7 @@ object Dedup {
     * symmetric, the join is not. */
   def embeddingPairsMultiProbe(spark: SparkSession, dir: String,
       threshold: Double = 0.2, nPlanes: Int = 8): DataFrame = {
-    require(nPlanes >= 1 && nPlanes <= 64,
-      s"nPlanes must be in [1, 64] (embedding dim; got $nPlanes) — " +
-        "element_at past the vector end throws under ANSI mode")
-    val e = Tables.embeddings(spark, dir)
-      .withColumn("v", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-      .withColumn("bucket", expr(
-        s"""aggregate(sequence(0, ${nPlanes - 1}), CAST(0 AS BIGINT),
-             (acc, j) -> acc + IF(element_at(v, j + 1) > CAST(0 AS DOUBLE),
-                                  shiftleft(CAST(1 AS BIGINT), j), CAST(0 AS BIGINT)))"""))
-      .withColumn("norm2", expr("aggregate(v, CAST(0 AS DOUBLE), (acc, x) -> acc + x * x)"))
-
+    val e = hyperplaneBuckets(spark, dir, nPlanes)
     val a = e
       .withColumn("pbucket", explode(expr(
         s"""array_union(array(bucket), transform(sequence(0, ${nPlanes - 1}),
@@ -1168,11 +1172,7 @@ object Dedup {
         col("pbucket"), col("norm2").as("na2"))
     val b = e.select(col("vec_id").as("id_b"), col("v").as("vb"),
       col("bucket").as("pbucket"), col("norm2").as("nb2"))
-    a.join(b, Seq("pbucket")).filter(col("id_a") < col("id_b"))
-      .withColumn("dot", expr("dot_double(va, vb)"))
-      .withColumn("cos_raw", col("dot") / sqrt(col("na2") * col("nb2")))
-      .filter(col("cos_raw") >= threshold)
-      .select(col("id_a"), col("id_b"), Fns.money(col("cos_raw")).as("cosine"))
+    cosinePairs(a, b, "pbucket", threshold)
       .orderBy(col("id_a"), col("id_b"))
   }
 
@@ -1379,9 +1379,7 @@ object Dedup {
   def simhashPrecision(spark: SparkSession, dir: String,
       threshold: Double = 0.9): DataFrame = {
     val th = Tables.documents(spark, dir)
-      .select(col("doc_id"), expr(
-        s"""array_sort(array_distinct(transform(array_distinct(split(text, ' ')),
-            t -> CAST(conv(substr(md5(t), 1, 15), 16, 10) AS BIGINT) % $P)))""").as("hs"))
+      .select(col("doc_id"), tokenHashSet.as("hs"))
     simhashPairs(spark, dir)
       .join(th.select(col("doc_id").as("doc_a"), col("hs").as("hs_a")), "doc_a")
       .join(th.select(col("doc_id").as("doc_b"), col("hs").as("hs_b")), "doc_b")

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.SparkThrowable
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.sim.Similarity
 
@@ -11,7 +11,7 @@ import graft.sim.Similarity
   * the routing order is decided by its edge cases: duplicated vectors
   * and same-direction vectors give tied centroid scores (ties go to the
   * smaller cid), and a zero-norm query vector gives a zero divisor
-  * (an error under ANSI, a null score without it). */
+  * (a null score, with or without ANSI). */
 class IvfServeSpec extends SparkSpec {
 
   // 4-dim directions; (1,1,0,0) and (2,2,0,0) score alike against any query
@@ -73,23 +73,25 @@ class IvfServeSpec extends SparkSpec {
     }
   }
 
-  test("a zero-norm query vector: served fails like knnIvf under ANSI and answers like it without") {
+  test("a zero-norm query vector scores null: under ANSI served == knnIvf == the ANSI-off answer") {
     val dir = corpus("ivfserve_zero", Map(200L -> Seq.fill(4)(0f)))
     val idx = Files.createTempDirectory("ivfserve_zero_idx").toString
     Similarity.buildIvfIndex(spark, dir, idx, 6, 2)
-    def condition(body: => Any): Option[String] =
-      Iterator.iterate[Throwable](intercept[Exception](body))(_.getCause).takeWhile(_ != null)
-        .collectFirst { case t: SparkThrowable => t.getCondition }
+    // served == knnIvf at each nprobe, then knnIvf's rows and brute force's
+    def answers(): (Map[Int, Seq[Long]], Seq[Seq[Row]]) =
+      (servedEqualsLive(dir, idx, 6, 2),
+        Seq(1, 2, 6).map(Similarity.knnIvf(spark, dir, 5, _, 6, 2).collect().toSeq) :+
+          Similarity.knnBruteForce(spark, dir, 5).collect().toSeq)
     assert(spark.conf.get("spark.sql.ansi.enabled") == "true", "the session runs ANSI")
-    assert(condition(Similarity.knnIvf(spark, dir, 5, 2, 6, 2).collect()).contains("DIVIDE_BY_ZERO"))
-    assert(condition(Similarity.knnIvfFromIndex(spark, dir, idx, 5, 2).collect())
-      .contains("DIVIDE_BY_ZERO"))
+    val ansi = answers()
+    // a null score routes nowhere and ranks nowhere: the zero query gets
+    // no answer rows, and every other query still gets its neighbours
+    assert(ansi._1.values.forall(_ == Seq(0L, 100L, 300L)), ansi._1)
+    assert(ansi._2.last.map(_.getLong(0)).distinct.sorted == Seq(0L, 100L, 300L))
     val saved = spark.conf.getOption("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "false")
-    try {
-      // a null score routes nowhere: the zero query gets no answer rows
-      assert(servedEqualsLive(dir, idx, 6, 2).values.forall(_ == Seq(0L, 100L, 300L)))
-    } finally saved.fold(spark.conf.unset("spark.sql.ansi.enabled"))(
+    try assert(answers() == ansi)
+    finally saved.fold(spark.conf.unset("spark.sql.ansi.enabled"))(
       spark.conf.set("spark.sql.ansi.enabled", _))
   }
 

@@ -365,6 +365,24 @@ class SimilaritySpec extends SparkSpec {
     assert(served === inline)
   }
 
+  test("knn ivfpq probing every list equals knn_pq row for row: one ADC semantics") {
+    // knn_pq is IVFADC without the coarse routing: with every list
+    // probed, the composite's candidates, ADC scores, shortlist and
+    // re-rank are knn_pq's at the shared defaults
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "rank", "neighbor_id", "adc_cosine", "cosine").collect().toSeq
+    val pq = rows(Similarity.knnPq(spark, sf))
+    assert(pq.nonEmpty)
+    assert(rows(Similarity.knnIvfPq(spark, sf, nprobe = 10, nClusters = 10)) == pq)
+  }
+
+  test("a warm knn_ivf_served read (a Derived memo hit) runs at most 5 jobs — no corpus checkpoint") {
+    Similarity.knnIvfServed(spark, sf).collect() // builds the store on a miss
+    val (got, work) = SparkWork.count(spark)(Similarity.knnIvfServed(spark, sf).collect())
+    assert(work.jobs <= 5, s"$work")
+    assert(got.nonEmpty)
+  }
+
   test("mmr select: greedy picks match a brute-force replay and diversify vs pure relevance") {
     def money(x: Double) = math.floor(x * 10000 + 0.5) / 10000
     val got = Similarity.mmrSelect(spark, sf).collect()
