@@ -2,44 +2,12 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.types._
-
-/** Typed exact top-K aggregator (`Aggregator[IN, BUF, OUT]`): keeps the K
-  * largest (value, id) pairs per group, ordered value-desc then id-asc —
-  * a bounded-state alternative to sort+limit when K ≪ group size (the
-  * buffer is O(K), merged associatively across partitions; no per-group
-  * global sort). The Dataset-typed sibling of [[TopKByAgg]] (which is the
-  * Catalyst/SQL-registrable form).
-  */
-class TopKAgg(k: Int)
-    extends Aggregator[(Double, Long), Seq[(Double, Long)], Seq[(Double, Long)]] {
-
-  private def ord: Ordering[(Double, Long)] =
-    Ordering.by { case (v, id) => (-v, id) }
-
-  override def zero: Seq[(Double, Long)] = Seq.empty
-
-  override def reduce(buf: Seq[(Double, Long)], in: (Double, Long)): Seq[(Double, Long)] =
-    (in +: buf).sorted(ord).take(k)
-
-  override def merge(a: Seq[(Double, Long)], b: Seq[(Double, Long)]): Seq[(Double, Long)] =
-    (a ++ b).sorted(ord).take(k)
-
-  override def finish(buf: Seq[(Double, Long)]): Seq[(Double, Long)] = buf
-
-  override def bufferEncoder: Encoder[Seq[(Double, Long)]] =
-    ExpressionEncoder[Seq[(Double, Long)]]()
-  override def outputEncoder: Encoder[Seq[(Double, Long)]] =
-    ExpressionEncoder[Seq[(Double, Long)]]()
-}
 
 /** Per-key top-k as a BOUNDED-HEAP AGGREGATE — the scale-correct form of
   * `row_number() OVER (PARTITION BY key ORDER BY ord DESC) <= k`.

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{ArrayDistinct, ArrayIntersect, ArraySort, Expression, LambdaFunction, Size}
+import org.apache.spark.sql.catalyst.expressions.{And, ArrayDistinct, ArrayIntersect, ArraySort, Expression, If, IsNull, LambdaFunction, Size}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{ArrayType, LongType}
@@ -25,10 +25,21 @@ object IntersectRewrite extends Rule[LogicalPlan] {
     * `ArraySort.defaultComparator` never holds post-resolution; instead
     * rebuild the canonical comparator over THIS lambda's bound variables
     * and compare semantically. Null ELEMENTS are fine: the merge scan
-    * handles them (null = +infinity, null==null matches). */
+    * handles them (null = +infinity, null==null matches). On non-null
+    * elements the optimizer has already folded the comparator's null
+    * branches away (this rule runs after NullPropagation), so there the
+    * body is matched against the canonical comparator without them. */
   private def isDefaultComparator(f: Expression): Boolean = f match {
-    case LambdaFunction(body, Seq(a, b), _) => body.semanticEquals(ArraySort.comparator(a, b))
+    case LambdaFunction(body, Seq(a, b), _) =>
+      val canonical = ArraySort.comparator(a, b)
+      body.semanticEquals(canonical) ||
+        (!a.nullable && !b.nullable && body.semanticEquals(withoutNullBranches(canonical)))
     case _ => f == ArraySort.defaultComparator
+  }
+
+  private def withoutNullBranches(e: Expression): Expression = e match {
+    case If(IsNull(_) | And(IsNull(_), IsNull(_)), _, rest) => withoutNullBranches(rest)
+    case _ => e
   }
 
   private def sortedDistinctLongs(e: Expression): Boolean = e match {

@@ -143,26 +143,20 @@ object Extras {
     """)
   }
 
-  /** Exact top-3 orders per priority via the typed [[graft.functions.TopKAgg]]
-    * Aggregator — O(K) state per group instead of a per-group sort. */
-  def topOrdersPerPriority(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    import spark.implicits._
+  /** Exact top-3 orders per priority via the bounded-heap `topk_by`
+    * aggregate ([[graft.functions.TopKByAgg]]) — O(K) state per group
+    * instead of a per-group sort, ordered value DESC then id ASC. */
+  def topOrdersPerPriority(spark: SparkSession, dir: String, k: Int = 3): DataFrame =
     Tables.orders(spark, dir)
-      .select(col("o_orderpriority").as("priority"),
-        col("o_totalprice"), col("o_orderkey"))
-      .as[(String, Double, Long)]
-      .groupByKey(_._1)
-      .mapValues(t => (t._2, t._3))
-      .agg(new graft.functions.TopKAgg(k).toColumn)
-      .toDF("priority", "topk")
+      .groupBy(col("o_orderpriority").as("priority"))
+      .agg(expr(s"topk_by(o_totalprice, o_orderkey, $k)").as("topk"))
       .select(col("priority"), posexplode(col("topk")).as(Seq("idx", "entry")))
       .select(
         col("priority"),
         (col("idx") + 1).as("rank"),
-        col("entry._2").as("order_key"),
-        Fns.money(col("entry._1")).as("total_price"))
+        col("entry.payload").as("order_key"),
+        Fns.money(col("entry.ord")).as("total_price"))
       .orderBy(col("priority"), col("rank"))
-  }
 
   /** Exact interpolated percentiles of order value per priority. */
   def orderValuePercentiles(spark: SparkSession, dir: String): DataFrame =

@@ -2,7 +2,7 @@ package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, StructField, StructType}
 import scala.jdk.CollectionConverters._
 import graft.{Fns, Tables}
 import graft.engine.Manifest
@@ -235,14 +235,25 @@ object Similarity {
   private def dotCol(a: Column, b: Column): Column =
     call_function("dot_double", a, b)
 
-  /** The centroid set collapsed to ONE row holding an array of
-    * (cid, c, cn2) structs — the broadcast-distributable form of the
-    * quantizer. */
-  private def centArrayDf(spark: SparkSession, cents: Seq[Centroid]): DataFrame = {
-    import spark.implicits._
-    cents.map(c => (c.cid, c.c, c.cn2)).toDF("cid", "c", "cn2")
-      .agg(collect_list(struct(col("cid"), col("c"), col("cn2"))).as("cents"))
-  }
+  /** A 1-row relation of one non-null column, built on the driver: a
+    * local relation, so broadcasting it runs no aggregate job. */
+  private def oneRow(spark: SparkSession, name: String, dataType: DataType,
+      value: Any): DataFrame =
+    spark.createDataFrame(java.util.List.of(Row(value)),
+      StructType(Seq(StructField(name, dataType, nullable = false))))
+
+  /** Array of `fields ++ (c, cn2)` structs: the element type both 1-row
+    * relations hold, with the nullability their aggregate form had. */
+  private def codeword(fields: StructField*): ArrayType =
+    ArrayType(StructType(fields ++ Seq(
+      StructField("c", ArrayType(DoubleType, containsNull = false)),
+      StructField("cn2", DoubleType, nullable = false))), containsNull = false)
+
+  /** The centroid set as ONE row holding an array of (cid, c, cn2)
+    * structs — the broadcast-distributable form of the quantizer. */
+  private def centArrayDf(spark: SparkSession, cents: Seq[Centroid]): DataFrame =
+    oneRow(spark, "cents", codeword(StructField("cid", IntegerType, nullable = false)),
+      cents.map(c => Row(c.cid, c.c, c.cn2)))
 
   /** Assign every row its nearest centroid by money-rounded cosine (ties
     * → smallest cid) as a new `cid` column. The centroids arrive through
@@ -729,15 +740,13 @@ object Similarity {
         .getOrElse((s, cid, Seq.fill(subDim)(0.0), 0.0))
 
   /** The flat padded rows nested into the 1-row `cb` relation every ADC
-    * consumer broadcast-attaches. */
+    * consumer broadcast-attaches: `cb[s][cid]` = (c, cn2). */
   private[graft] def pqCodebookDf(spark: SparkSession,
-      padded: Seq[(Int, Int, Seq[Double], Double)]): DataFrame = {
-    import spark.implicits._
-    padded.toDF("s", "cid", "c", "cn2")
-      .groupBy(col("s"))
-      .agg(expr("transform(array_sort(collect_list(struct(cid, c, cn2))), x -> struct(x.c AS c, x.cn2 AS cn2))").as("row"))
-      .agg(expr("transform(array_sort(collect_list(struct(s, row))), x -> x.row)").as("cb"))
-  }
+      padded: Seq[(Int, Int, Seq[Double], Double)]): DataFrame =
+    oneRow(spark, "cb", ArrayType(codeword(), containsNull = false),
+      padded.groupBy(_._1).toSeq.sortBy(_._1).map { case (_, rows) =>
+        rows.sortBy(_._2).map { case (_, _, c, cn2) => Row(c, cn2) }
+      })
 
   /** The PQ encode of a `(vec_id, v, norm2)` relation: `m` narrow
     * sub-code assignments against the broadcast `fits`, kept as `codes`,

@@ -1,8 +1,23 @@
 package graft
 
+import java.nio.file.Files
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 class ArrayOpsSpec extends SparkSpec {
+
+  /** `df` and a parquet copy of it: a select over the local relation is
+    * evaluated interpreted (the optimizer folds it into a new local
+    * relation), the same select over the copy's scan runs in whole-stage
+    * generated code. The copy is one file, so both keep `df`'s row order. */
+  private def bothPaths(df: DataFrame): Seq[DataFrame] = {
+    val dir = Files.createTempDirectory("arrayops").toString + "/t"
+    df.coalesce(1).write.parquet(dir)
+    Seq(df, spark.read.parquet(dir))
+  }
 
   test("sorted_intersect_size matches size(array_intersect) on sorted distinct arrays") {
     import spark.implicits._
@@ -12,10 +27,12 @@ class ArrayOpsSpec extends SparkSpec {
       (Seq(7L), Seq(7L)),                          // identical
       (Seq.empty[Long], Seq(1L))                   // empty side
     ).toDF("a", "b")
-    val out = df.select(
-      expr("sorted_intersect_size(a, b)").as("fast"),
-      expr("size(array_intersect(a, b))").as("ref")).collect()
-    assert(out.forall(r => r.getInt(0) == r.getInt(1)))
+    for (d <- bothPaths(df)) {
+      val out = d.select(
+        expr("sorted_intersect_size(a, b)").as("fast"),
+        expr("size(array_intersect(a, b))").as("ref")).collect()
+      assert(out.forall(r => r.getInt(0) == r.getInt(1)))
+    }
   }
 
   test("null ELEMENTS match array_intersect semantics (null==null counts, sorted to tail)") {
@@ -24,10 +41,12 @@ class ArrayOpsSpec extends SparkSpec {
          |  sorted_intersect_size(array(1L, 3L, NULL), array(3L, 5L, NULL)) AS both_null,
          |  sorted_intersect_size(array(1L, 3L, NULL), array(3L, 5L)) AS one_null,
          |  size(array_intersect(array(1L, 3L, NULL), array(3L, 5L, NULL))) AS ref_both,
-         |  size(array_intersect(array(1L, 3L, NULL), array(3L, 5L))) AS ref_one
+         |  size(array_intersect(array(1L, 3L, NULL), array(3L, 5L))) AS ref_one,
+         |  sorted_intersect(array(1L, 3L, NULL), array(3L, 5L, NULL)) AS si_both
          |""".stripMargin).collect()(0)
     assert(rows.getInt(0) == 2 && rows.getInt(0) == rows.getInt(2))
     assert(rows.getInt(1) == 1 && rows.getInt(1) == rows.getInt(3))
+    assert(rows.getSeq[Any](4) == Seq(3L, null))
   }
 
   test("dot_double equals the HOF zip_with fold bit-for-bit, incl. null/length semantics") {
@@ -38,12 +57,12 @@ class ArrayOpsSpec extends SparkSpec {
       (Seq.empty[Double], Seq.empty[Double]),        // empty -> 0.0
       (Seq(1e300, 1.0), Seq(1e300, -1.0))            // extreme magnitudes
     ).toDF("a", "b")
-    val out = df.select(
+    def fastAndRef(d: DataFrame) = d.select(
       expr("dot_double(a, b)").as("fast"),
       expr("aggregate(zip_with(a, b, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, x) -> acc + x)").as("ref"))
       .collect()
     // exact double equality — same sequential fold, same IEEE ops
-    out.foreach(r => assert(
+    for (d <- bothPaths(df)) fastAndRef(d).foreach(r => assert(
       java.lang.Double.doubleToLongBits(r.getDouble(0)) ==
         java.lang.Double.doubleToLongBits(r.getDouble(1)), r.toString))
     // unequal lengths and null elements poison to null, as the HOF does
@@ -52,11 +71,8 @@ class ArrayOpsSpec extends SparkSpec {
       (Some(Seq(Some(1.0), None)), Some(Seq(Some(1.0), Some(2.0)))),
       (None, Some(Seq(Some(1.0)))))
       .toDF("a", "b")
-      .select(
-        expr("dot_double(a, b)").as("fast"),
-        expr("aggregate(zip_with(a, b, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, x) -> acc + x)").as("ref"))
-      .collect()
-    edge.foreach(r => assert(r.isNullAt(0) && r.isNullAt(1), r.toString))
+    for (d <- bothPaths(edge))
+      fastAndRef(d).foreach(r => assert(r.isNullAt(0) && r.isNullAt(1), r.toString))
   }
 
   test("minhash_sig equals the nested-HOF signature, incl. empty input -> 16 nulls") {
@@ -68,43 +84,64 @@ class ArrayOpsSpec extends SparkSpec {
       Seq(999999999L),
       Seq.empty[Long]
     ).toDF("th")
-    val out = df.select(
-      expr("minhash_sig(th)").as("fast"),
-      expr(s"""transform(sequence(0, 15), i ->
-        array_min(transform(th, h -> ((2 * i + 1) * h + 7 * i + 3) % $P)))""").as("ref"))
-      .collect()
-    out.foreach { r =>
-      assert(r.getSeq[Any](0) == r.getSeq[Any](1), r.toString)
+    for (d <- bothPaths(df)) {
+      val out = d.select(
+        expr("minhash_sig(th)").as("fast"),
+        expr(s"""transform(sequence(0, 15), i ->
+          array_min(transform(th, h -> ((2 * i + 1) * h + 7 * i + 3) % $P)))""").as("ref"))
+        .collect()
+      out.foreach { r =>
+        assert(r.getSeq[Any](0) == r.getSeq[Any](1), r.toString)
+      }
+      // empty input: all 16 positions null (array_min of empty transform)
+      val empty = out.last.getSeq[Any](0)
+      assert(empty.length == 16 && empty.forall(_ == null))
     }
-    // empty input: all 16 positions null (array_min of empty transform)
-    val empty = out.last.getSeq[Any](0)
-    assert(empty.length == 16 && empty.forall(_ == null))
   }
 
   test("native expressions COMPILE under codegen — no silent interpreter fallback") {
     import spark.implicits._
     // with fallback disabled a Janino error in any doGenCode THROWS
     // instead of quietly degrading to interpreted eval (which would pass
-    // every value-equality pin while losing the whole-stage span)
+    // every value-equality pin while losing the whole-stage span). The
+    // rows come from a parquet scan: over a local relation the optimizer
+    // evaluates the select interpreted and no generated code is compiled
+    val df = Seq((Seq(12345L, 42L), Seq(1.5, 2.5), Seq(2.0, -1.0), Seq(0, 1),
+        Seq(Seq(2.5), Seq(1.0, 4.5)), Seq(1.0, 0.0), 1.0,
+        Seq((2, Seq(1.0, 0.0), 1.0), (1, Seq(0.0, 1.0), 1.0))))
+      .toDF("th", "a", "b", "codes", "lut", "v", "norm2", "cents")
+    def native(d: DataFrame) = d.select(
+      expr("minhash_sig(th)").as("sig"),
+      expr("dot_double(a, b)").as("dot"),
+      expr("simhash64(th, th)").as("sh"),
+      expr("sorted_intersect_size(th, th)").as("sis"),
+      expr("sorted_intersect_atleast(th, th, 2)").as("sia"),
+      expr("sorted_intersect(th, th)").as("si"),
+      expr("lut_sum(codes, lut)").as("ls"),
+      expr("assign_cid(v, norm2, cents)").as("cid"))
+    val Seq(local, scanned) = bothPaths(df).map(native)
     spark.conf.set("spark.sql.codegen.fallback", "false")
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     try {
-      val r = Seq((Seq(12345L, 42L), Seq(1.5, 2.5), Seq(2.0, -1.0)))
-        .toDF("th", "a", "b")
-        .select(
-          expr("minhash_sig(th)").as("sig"),
-          expr("dot_double(a, b)").as("dot"),
-          expr("simhash64(th, th)").as("sh"),
-          expr("sorted_intersect_size(th, th)").as("sis"),
-          expr("sorted_intersect_atleast(th, th, 2)").as("sia"),
-          expr("sorted_intersect(th, th)").as("si"),
-          expr("lut_sum(array(0, 1), array(array(CAST(2.5 AS DOUBLE)), array(CAST(1.0 AS DOUBLE), CAST(4.5 AS DOUBLE))))").as("ls"))
-        .collect()(0)
+      val r = scanned.collect()(0)
       assert(r.getSeq[Long](0).length == 16)
       assert(r.getDouble(1) == 1.5 * 2.0 + 2.5 * -1.0)
       assert(r.getInt(3) == 2 && r.getBoolean(4))
       assert(r.getSeq[Long](5) == Seq(12345L, 42L))
       assert(r.getDouble(6) == 2.5 + 4.5)
+      assert(r.getInt(7) == 2)
+      assert(r == local.collect()(0))
+      val plan = scanned.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      val generated = plan.collect { case w: WholeStageCodegenExec =>
+        w.child.collect { case p => p.expressions.flatMap(_.collect { case e => e.getClass }) }.flatten
+      }.flatten.toSet
+      Seq(classOf[functions.MinhashSig], classOf[functions.DotDouble], classOf[functions.Simhash64],
+        classOf[functions.SortedIntersectSize], classOf[functions.SortedIntersectAtLeast],
+        classOf[functions.SortedIntersect], classOf[functions.LutSum], classOf[functions.AssignCid])
+        .foreach(c => assert(generated(c), s"${c.getSimpleName} not under WholeStageCodegenExec:\n$plan"))
     } finally {
       spark.conf.set("spark.sql.codegen.fallback", "true")
       spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
@@ -118,13 +155,15 @@ class ArrayOpsSpec extends SparkSpec {
       (Seq(2, 2, 2), Seq(Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0), Seq(7.0, 8.0, 9.0))),
       (Seq(0, 0), Seq(Seq(1.5, 2.5), Seq(3.5, 4.5), Seq(9.9, 9.9))) // length mismatch -> null
     ).toDF("codes", "lut")
-    val rows = df.select(
-      expr("lut_sum(codes, lut)").as("mine"),
-      expr("aggregate(zip_with(codes, lut, (cd, l) -> element_at(l, cd + 1)), CAST(0 AS DOUBLE), (a, x) -> a + x)").as("ref"))
-      .collect()
-    rows.foreach { r =>
-      assert(r.isNullAt(0) == r.isNullAt(1), r.toString)
-      if (!r.isNullAt(0)) assert(r.getDouble(0) == r.getDouble(1), r.toString)
+    for (d <- bothPaths(df)) {
+      val rows = d.select(
+        expr("lut_sum(codes, lut)").as("mine"),
+        expr("aggregate(zip_with(codes, lut, (cd, l) -> element_at(l, cd + 1)), CAST(0 AS DOUBLE), (a, x) -> a + x)").as("ref"))
+        .collect()
+      rows.foreach { r =>
+        assert(r.isNullAt(0) == r.isNullAt(1), r.toString)
+        if (!r.isNullAt(0)) assert(r.getDouble(0) == r.getDouble(1), r.toString)
+      }
     }
   }
 
@@ -133,7 +172,7 @@ class ArrayOpsSpec extends SparkSpec {
     // equivalence vs the HOF form on the production domain (cn2 > 0):
     // cid 0 duplicates cid 2 so the cosine TIES and the smaller cid
     // must win on both paths; cid 1 is a distinct direction
-    val rows = Seq(
+    val df = Seq(
       (Seq(1.0, 0.0), 1.0),
       (Seq(0.6, 0.8), 1.0),
       (Seq(-1.0, 0.0), 1.0),
@@ -143,31 +182,33 @@ class ArrayOpsSpec extends SparkSpec {
         """array(named_struct('cid', 2, 'c', array(CAST(1.0 AS DOUBLE), CAST(0.0 AS DOUBLE)), 'cn2', CAST(1.0 AS DOUBLE)),
                  named_struct('cid', 1, 'c', array(CAST(0.0 AS DOUBLE), CAST(1.0 AS DOUBLE)), 'cn2', CAST(1.0 AS DOUBLE)),
                  named_struct('cid', 0, 'c', array(CAST(1.0 AS DOUBLE), CAST(0.0 AS DOUBLE)), 'cn2', CAST(1.0 AS DOUBLE)))"""))
-    val out = rows.select(
-      expr("assign_cid(v, norm2, cents)").as("mine"),
-      expr("""-array_max(transform(cents, s -> named_struct(
-          'cos', floor((aggregate(zip_with(v, s.c, (x, y) -> x * y), CAST(0 AS DOUBLE), (a, x) -> a + x)
-                 / sqrt(norm2 * s.cn2)) * 10000 + 0.5) / 10000,
-          'ncid', -s.cid))).ncid""").as("ref")).collect()
-    out.foreach(r => assert(r.getInt(0) == r.getInt(1), r.toString))
-    // tie between cid 0 and cid 2 resolves to 0 for the x-axis vector;
-    // the y-leaning vectors pick the y-axis centroid
-    assert(out(0).getInt(0) == 0)
-    assert(out(1).getInt(0) == 1 && out(3).getInt(0) == 1)
-    // degenerate cn2 = 0 (a dead/zero codeword): the NaN cosine wins
-    // under Spark's NaN-greatest double ordering — pinned native-only,
-    // since constant-folding the HOF reference trips ANSI on the 0/0
-    val nan = rows.select(expr(
-      """assign_cid(v, norm2, array(
-           named_struct('cid', 5, 'c', array(CAST(1.0 AS DOUBLE), CAST(0.0 AS DOUBLE)), 'cn2', CAST(1.0 AS DOUBLE)),
-           named_struct('cid', 9, 'c', array(CAST(0.0 AS DOUBLE), CAST(0.0 AS DOUBLE)), 'cn2', CAST(0.0 AS DOUBLE))))"""))
-      .collect().map(_.getInt(0))
-    assert(nan.forall(_ == 9), nan.toSeq.toString)
-    // empty centroid set -> null (array_max of empty is null)
-    val empty = rows.limit(1).select(expr(
-      "assign_cid(v, norm2, CAST(array() AS array<struct<cid:int,c:array<double>,cn2:double>>))"))
-      .collect()(0)
-    assert(empty.isNullAt(0))
+    for (rows <- bothPaths(df)) {
+      val out = rows.select(
+        expr("assign_cid(v, norm2, cents)").as("mine"),
+        expr("""-array_max(transform(cents, s -> named_struct(
+            'cos', floor((aggregate(zip_with(v, s.c, (x, y) -> x * y), CAST(0 AS DOUBLE), (a, x) -> a + x)
+                   / sqrt(norm2 * s.cn2)) * 10000 + 0.5) / 10000,
+            'ncid', -s.cid))).ncid""").as("ref")).collect()
+      out.foreach(r => assert(r.getInt(0) == r.getInt(1), r.toString))
+      // tie between cid 0 and cid 2 resolves to 0 for the x-axis vector;
+      // the y-leaning vectors pick the y-axis centroid
+      assert(out(0).getInt(0) == 0)
+      assert(out(1).getInt(0) == 1 && out(3).getInt(0) == 1)
+      // degenerate cn2 = 0 (a dead/zero codeword): the NaN cosine wins
+      // under Spark's NaN-greatest double ordering — pinned native-only,
+      // since constant-folding the HOF reference trips ANSI on the 0/0
+      val nan = rows.select(expr(
+        """assign_cid(v, norm2, array(
+             named_struct('cid', 5, 'c', array(CAST(1.0 AS DOUBLE), CAST(0.0 AS DOUBLE)), 'cn2', CAST(1.0 AS DOUBLE)),
+             named_struct('cid', 9, 'c', array(CAST(0.0 AS DOUBLE), CAST(0.0 AS DOUBLE)), 'cn2', CAST(0.0 AS DOUBLE))))"""))
+        .collect().map(_.getInt(0))
+      assert(nan.forall(_ == 9), nan.toSeq.toString)
+      // empty centroid set -> null (array_max of empty is null)
+      val empty = rows.limit(1).select(expr(
+        "assign_cid(v, norm2, CAST(array() AS array<struct<cid:int,c:array<double>,cn2:double>>))"))
+        .collect()(0)
+      assert(empty.isNullAt(0))
+    }
   }
 
   test("sorted_intersect matches array_intersect on sorted distinct arrays") {
@@ -179,13 +220,15 @@ class ArrayOpsSpec extends SparkSpec {
       (Seq.empty[Long], Seq(1L)),
       (Seq(1L, 2L, 3L), Seq(1L, 2L, 3L))
     ).toDF("a", "b")
-    val rows = df.select(
-      expr("sorted_intersect(a, b)").as("mine"),
-      array_intersect(col("a"), col("b")).as("ref"),
-      expr("sorted_intersect_size(a, b)").as("n")).collect()
-    rows.foreach { r =>
-      assert(r.getSeq[Long](0) == r.getSeq[Long](1), r.toString)
-      assert(r.getSeq[Long](0).length == r.getInt(2))
+    for (d <- bothPaths(df)) {
+      val rows = d.select(
+        expr("sorted_intersect(a, b)").as("mine"),
+        array_intersect(col("a"), col("b")).as("ref"),
+        expr("sorted_intersect_size(a, b)").as("n")).collect()
+      rows.foreach { r =>
+        assert(r.getSeq[Long](0) == r.getSeq[Long](1), r.toString)
+        assert(r.getSeq[Long](0).length == r.getInt(2))
+      }
     }
   }
 
@@ -198,8 +241,8 @@ class ArrayOpsSpec extends SparkSpec {
       (Seq.empty[Long], Seq(1L)),
       (Seq(1L, 2L, 3L, 4L, 5L), Seq(1L, 2L, 3L, 4L, 5L))
     ).toDF("a", "b")
-    (0 to 6).foreach { t =>
-      val out = df.select(
+    for (d <- bothPaths(df); t <- 0 to 6) {
+      val out = d.select(
         expr(s"sorted_intersect_atleast(a, b, $t)").as("fast"),
         (expr("sorted_intersect_size(a, b)") >= t).as("ref")).collect()
       out.foreach(r => assert(r.getBoolean(0) == r.getBoolean(1), s"t=$t $r"))
@@ -209,13 +252,13 @@ class ArrayOpsSpec extends SparkSpec {
   test("null-LEADING arrays (sort_array order) are rejected loudly, never a wrong count") {
     // sort_array(asc) places the null FIRST — the merge's null-as-+infinity
     // assumption would silently skip every real match; the guard throws
-    for (fn <- Seq("sorted_intersect_size(a, b)", "sorted_intersect(a, b)",
+    import spark.implicits._
+    val raw = Seq((Seq(Some(3L), Some(1L), None), Seq(Some(5L), Some(3L), None))).toDF("ra", "rb")
+    for (d <- bothPaths(raw); fn <- Seq("sorted_intersect_size(a, b)", "sorted_intersect(a, b)",
         "sorted_intersect_atleast(a, b, 1)")) {
       val e = intercept[Exception] {
-        spark.sql(
-          s"""SELECT $fn AS x FROM (SELECT
-             |  sort_array(array(3L, 1L, NULL)) AS a,
-             |  sort_array(array(5L, 3L, NULL)) AS b)""".stripMargin).collect()
+        d.select(expr("sort_array(ra)").as("a"), expr("sort_array(rb)").as("b"))
+          .select(expr(fn).as("x")).collect()
       }
       def msgs(t: Throwable): Seq[String] =
         Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
@@ -237,20 +280,21 @@ class ArrayOpsSpec extends SparkSpec {
 
   test("assign_cid skips null centroid SLOTS; all-null slots yield null like empty") {
     import spark.implicits._
-    val rows = Seq((Seq(1.0, 0.0), 1.0)).toDF("v", "norm2")
-    // a null slot between two real centroids: the real argmax must win
-    val mixed = rows.select(expr(
-      """assign_cid(v, norm2, array(
-           named_struct('cid', 4, 'c', array(CAST(0.0 AS DOUBLE), CAST(1.0 AS DOUBLE)), 'cn2', CAST(1.0 AS DOUBLE)),
-           CAST(NULL AS struct<cid:int,c:array<double>,cn2:double>),
-           named_struct('cid', 7, 'c', array(CAST(1.0 AS DOUBLE), CAST(0.0 AS DOUBLE)), 'cn2', CAST(1.0 AS DOUBLE))))"""))
-      .collect()(0)
-    assert(mixed.getInt(0) == 7, mixed.toString)
-    // an array of ONLY null slots degenerates like the empty array: null
-    val allNull = rows.select(expr(
-      "assign_cid(v, norm2, array(CAST(NULL AS struct<cid:int,c:array<double>,cn2:double>)))"))
-      .collect()(0)
-    assert(allNull.isNullAt(0))
+    for (rows <- bothPaths(Seq((Seq(1.0, 0.0), 1.0)).toDF("v", "norm2"))) {
+      // a null slot between two real centroids: the real argmax must win
+      val mixed = rows.select(expr(
+        """assign_cid(v, norm2, array(
+             named_struct('cid', 4, 'c', array(CAST(0.0 AS DOUBLE), CAST(1.0 AS DOUBLE)), 'cn2', CAST(1.0 AS DOUBLE)),
+             CAST(NULL AS struct<cid:int,c:array<double>,cn2:double>),
+             named_struct('cid', 7, 'c', array(CAST(1.0 AS DOUBLE), CAST(0.0 AS DOUBLE)), 'cn2', CAST(1.0 AS DOUBLE))))"""))
+        .collect()(0)
+      assert(mixed.getInt(0) == 7, mixed.toString)
+      // an array of ONLY null slots degenerates like the empty array: null
+      val allNull = rows.select(expr(
+        "assign_cid(v, norm2, array(CAST(NULL AS struct<cid:int,c:array<double>,cn2:double>)))"))
+        .collect()(0)
+      assert(allNull.isNullAt(0))
+    }
   }
 
   test("null inputs propagate null") {
@@ -276,16 +320,17 @@ class ArrayOpsSpec extends SparkSpec {
         (Seq.fill(n)(rnd.nextLong() & 0xFFFFFFFFL), Seq.fill(n)(rnd.nextLong() & 0xFFFFFFFFL))
       })
     import spark.implicits._
-    val df = rows.toDF("lo", "hi")
-    val out = df.select(
-      expr("simhash64(lo, hi)").as("fast"),
-      expr("""aggregate(
-                transform(sequence(0, 63), j ->
-                  IF(aggregate(zip_with(lo, hi, (l, h) -> named_struct('lo', l, 'hi', h)), 0,
-                       (acc, x) -> acc + IF((shiftright(IF(j < 32, x.lo, x.hi), j % 32) & 1) = 1, 1, -1)) > 0,
-                     shiftleft(CAST(1 AS BIGINT), j), CAST(0 AS BIGINT))),
-                CAST(0 AS BIGINT), (acc, v) -> acc + v)""").as("ref")).collect()
-    assert(out.forall(r => r.getLong(0) == r.getLong(1)))
+    for (df <- bothPaths(rows.toDF("lo", "hi"))) {
+      val out = df.select(
+        expr("simhash64(lo, hi)").as("fast"),
+        expr("""aggregate(
+                  transform(sequence(0, 63), j ->
+                    IF(aggregate(zip_with(lo, hi, (l, h) -> named_struct('lo', l, 'hi', h)), 0,
+                         (acc, x) -> acc + IF((shiftright(IF(j < 32, x.lo, x.hi), j % 32) & 1) = 1, 1, -1)) > 0,
+                       shiftleft(CAST(1 AS BIGINT), j), CAST(0 AS BIGINT))),
+                  CAST(0 AS BIGINT), (acc, v) -> acc + v)""").as("ref")).collect()
+      assert(out.forall(r => r.getLong(0) == r.getLong(1)))
+    }
   }
 
   test("extensions class registers the function in a fresh session") {
@@ -338,6 +383,25 @@ class IntersectRewriteSpec extends SparkSpec {
       assert(!custom.queryExecution.optimizedPlan.toString
         .toLowerCase.contains("sortedintersectsize"),
         custom.queryExecution.optimizedPlan.toString)
+    } finally {
+      spark.experimental.extraOptimizations = Nil
+    }
+  }
+  test("the rewrite also fires on non-null elements, whose comparator the optimizer folds") {
+    spark.experimental.extraOptimizations = Seq(graft.plans.IntersectRewrite)
+    try {
+      // spark.range ids are non-null: array(...) has containsNull = false,
+      // so NullPropagation drops the default comparator's null branches
+      def shaped = spark.range(0, 40).select(
+        expr("array_sort(array_distinct(array(id, 40 - id, 2 * id, 5L)))").as("sa"),
+        expr("array_sort(array_distinct(array(id + 1, 39 - id, 6L)))").as("sb"))
+      val df = shaped.select(expr("size(array_intersect(sa, sb))").as("n"))
+      val plan = df.queryExecution.optimizedPlan.toString
+      assert(shaped.schema.forall(!_.dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType].containsNull))
+      assert(plan.toLowerCase.contains("sortedintersectsize"), plan)
+      val rewritten = df.collect().map(_.getInt(0)).toSeq
+      spark.experimental.extraOptimizations = Nil
+      assert(rewritten == shaped.select(expr("size(array_intersect(sa, sb))")).collect().map(_.getInt(0)).toSeq)
     } finally {
       spark.experimental.extraOptimizations = Nil
     }
