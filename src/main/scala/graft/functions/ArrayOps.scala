@@ -4,6 +4,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType, IntegerType, LongType, StructType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 
 /** Intersection size of two SORTED, DISTINCT long arrays via a linear
@@ -30,7 +31,7 @@ case class SortedIntersectSize(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
-    ArrayOps.checkLongArrays("sorted_intersect_size", Seq(left, right))
+    ArrayOps.checkLongArrays("sorted_intersect_size", left, right)
   override def dataType: DataType = IntegerType
 
   override def nullSafeEval(a: Any, b: Any): Any =
@@ -49,8 +50,8 @@ case class SortedIntersectSize(left: Expression, right: Expression)
   * ELEMENTS (sorted, distinct — the order both inputs share). The
   * triangle-counting hot loop needs the sinks themselves, not just the
   * count; Spark's generic `array_intersect` builds a hash set per call,
-  * while this merge allocates only the single result buffer and runs
-  * inside whole-stage codegen. Null elements must sort to the tail
+  * while this merge allocates only the result array and runs inside
+  * whole-stage codegen. Null elements must sort to the tail
   * (array_sort order — NOT sort_array, which leads with nulls; a
   * null-leading input is rejected with a descriptive error, see
   * [[SortedIntersectSize]]) and match only each other, exactly
@@ -59,14 +60,17 @@ case class SortedIntersect(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
-    ArrayOps.checkLongArrays("sorted_intersect", Seq(left, right))
+    ArrayOps.checkLongArrays("sorted_intersect", left, right)
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
 
   override def nullSafeEval(a: Any, b: Any): Any =
-    ArrayOps.intersect(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    ArrayOps.intersect(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
+      new Array[Array[Long]](1))
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"${ArrayOps.Static}.intersect($a, $b)")
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val buf = ctx.addMutableState("long[][]", "buf", v => s"$v = new long[1][];")
+    defineCodeGen(ctx, ev, (a, b) => s"${ArrayOps.Static}.intersect($a, $b, $buf)")
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SortedIntersect =
@@ -91,8 +95,14 @@ case class SortedIntersectAtLeast(first: Expression, second: Expression,
     third: Expression)
     extends TernaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    ArrayOps.checkLongArrays("sorted_intersect_atleast", Seq(first, second), Some(third))
+  override def checkInputDataTypes(): TypeCheckResult = third.dataType match {
+    case LongType | IntegerType
+        if ArrayOps.checkLongArrays("sorted_intersect_atleast", first, second).isSuccess =>
+      TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"sorted_intersect_atleast expects (array<bigint>, array<bigint>, int/bigint), " +
+        s"got (${first.dataType.simpleString}, ${second.dataType.simpleString}, ${t.simpleString})")
+  }
   override def dataType: DataType = BooleanType
 
   override def nullSafeEval(a: Any, b: Any, t: Any): Any =
@@ -213,7 +223,7 @@ case class Simhash64(left: Expression, right: Expression)
     extends BinaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
-    ArrayOps.checkLongArrays("simhash64", Seq(left, right))
+    ArrayOps.checkLongArrays("simhash64", left, right)
   override def dataType: DataType = LongType
 
   override def nullSafeEval(a: Any, b: Any): Any =
@@ -331,19 +341,12 @@ object ArrayOps {
   private[functions] final val K = 16
   private final val P = 1000000007L
 
-  /** Type check of the `(array<bigint>, array<bigint>)` functions; the
-    * threshold variant also passes its int/bigint `threshold`. */
-  private[functions] def checkLongArrays(fn: String, arrays: Seq[Expression],
-      threshold: Option[Expression] = None): TypeCheckResult = {
-    val longs = arrays.forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })
-    val numeric = threshold.forall(t => t.dataType == LongType || t.dataType == IntegerType)
-    if (longs && numeric) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$fn expects (${(arrays.map(_ => "array<bigint>") ++ threshold.map(_ => "int/bigint")).mkString(", ")}), " +
-        s"got (${(arrays ++ threshold).map(_.dataType.simpleString).mkString(", ")})")
+  /** Type check of the `(array<bigint>, array<bigint>)` functions. */
+  private[functions] def checkLongArrays(fn: String, left: Expression,
+      right: Expression): TypeCheckResult = (left.dataType, right.dataType) match {
+    case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
+    case (l, r) => TypeCheckResult.TypeCheckFailure(
+      s"$fn expects (array<bigint>, array<bigint>), got (${l.simpleString}, ${r.simpleString})")
   }
 
   /** Generated code for a kernel with a nullable primitive result: the
@@ -353,25 +356,6 @@ object ArrayOps {
     val out = ctx.addMutableState(s"$javaType[]", "out", v => s"$v = new $javaType[1];")
     s"""${ev.isNull} = !$Static.$kernel(${(args :+ out).mkString(", ")});
        |${ev.value} = $out[0];""".stripMargin
-  }
-
-  // Every stage calls these kernels, so a plain ArrayData call in them
-  // sees all three implementations the plans hand over (row arrays,
-  // scan batches' arrays, computed arrays) and the JIT compiles it as a
-  // megamorphic virtual call. Testing for the final row-array class
-  // first leaves the fallback call at most two receiver classes, which
-  // the JIT still inlines.
-  private def isNull(a: ArrayData, i: Int): Boolean = a match {
-    case u: UnsafeArrayData => u.isNullAt(i)
-    case _ => a.isNullAt(i)
-  }
-  private def long(a: ArrayData, i: Int): Long = a match {
-    case u: UnsafeArrayData => u.getLong(i)
-    case _ => a.getLong(i)
-  }
-  private def double(a: ArrayData, i: Int): Double = a match {
-    case u: UnsafeArrayData => u.getDouble(i)
-    case _ => a.getDouble(i)
   }
 
   /** Error raised by the sorted-merge expressions when a null-LEADING
@@ -386,29 +370,26 @@ object ArrayOps {
         "array — sort_array(asc) places nulls first and is not supported")
 
   /** The sorted merge of two nulls-last long arrays: counts the matches
-    * (null == null included) and, when `out` is given, stores them there
-    * in order. The scan stops as soon as `needed` matches are out of
-    * reach; `needed = 0` walks to the end. The null-order checks live
-    * INSIDE the null branches, so the all-non-null hot path pays nothing
-    * for them (a per-call entry guard was measured at +20% on
-    * `dedup_minhash`): nulls-last order means a null head implies a null
-    * tail, anything else is sort_array order. */
+    * (null == null included) and, when `out` is given, stores each value
+    * match at its position in the match order. The scan stops as soon as
+    * `needed` matches are out of reach; `needed = 0` walks to the end.
+    * The null-order checks live INSIDE the null branches, so the
+    * all-non-null hot path pays nothing for them (a per-call entry guard
+    * was measured at +20% on `dedup_minhash`): nulls-last order means a
+    * null head implies a null tail, anything else is sort_array order. */
   private[functions] def merge(fn: String, x: ArrayData, y: ArrayData, needed: Long,
-      out: Array[Any]): Int = {
+      out: Array[Long]): Int = {
     val nx = x.numElements(); val ny = y.numElements()
     var i = 0; var j = 0; var n = 0
     while (i < nx && j < ny && n + math.min(nx - i, ny - j) >= needed) {
-      val xNull = isNull(x, i); val yNull = isNull(y, j)
-      if (xNull && i == 0 && !isNull(x, nx - 1)) nullLeadingError(fn)
-      if (yNull && j == 0 && !isNull(y, ny - 1)) nullLeadingError(fn)
-      if (xNull && yNull) {
-        if (out != null) out(n) = null
-        n += 1; i += 1; j += 1
-      }
+      val xNull = x.isNullAt(i); val yNull = y.isNullAt(j)
+      if (xNull && i == 0 && !x.isNullAt(nx - 1)) nullLeadingError(fn)
+      if (yNull && j == 0 && !y.isNullAt(ny - 1)) nullLeadingError(fn)
+      if (xNull && yNull) { n += 1; i += 1; j += 1 }
       else if (xNull) j += 1 // null sorts after every value
       else if (yNull) i += 1
       else {
-        val xi = long(x, i); val yj = long(y, j)
+        val xi = x.getLong(i); val yj = y.getLong(j)
         if (xi == yj) {
           if (out != null) out(n) = xi
           n += 1; i += 1; j += 1
@@ -426,10 +407,21 @@ object ArrayOps {
   def atLeast(x: ArrayData, y: ArrayData, needed: Long): Boolean =
     merge("sorted_intersect_atleast", x, y, needed, null) >= needed
 
-  def intersect(x: ArrayData, y: ArrayData): ArrayData = {
-    val buf = new Array[Any](math.min(x.numElements(), y.numElements()))
-    val n = merge("sorted_intersect", x, y, 0L, buf)
-    new GenericArrayData(java.util.Arrays.copyOf(buf.asInstanceOf[Array[AnyRef]], n))
+  /** [[SortedIntersect]]: the matches, gathered in `buf(0)`, a scratch
+    * grown to the shorter input. In nulls-last inputs every null match
+    * follows every value match, and their number is the count of
+    * trailing null pairs; the result is a primitive array unless a null
+    * pair matched. */
+  def intersect(x: ArrayData, y: ArrayData, buf: Array[Array[Long]]): ArrayData = {
+    val nx = x.numElements(); val ny = y.numElements()
+    val m = math.min(nx, ny)
+    if (buf(0) == null || buf(0).length < m) buf(0) = new Array[Long](m)
+    val out = buf(0)
+    val n = merge("sorted_intersect", x, y, 0L, out)
+    var nulls = 0
+    while (nulls < n && x.isNullAt(nx - 1 - nulls) && y.isNullAt(ny - 1 - nulls)) nulls += 1
+    if (nulls == 0) UnsafeArrayData.fromPrimitiveArray(out, Platform.LONG_ARRAY_OFFSET, n, 8)
+    else new GenericArrayData(Array.tabulate[Any](n)(k => if (k < n - nulls) out(k) else null))
   }
 
   /** [[LutSum]]: `Σ_s lut[s][codes[s]]`, undefined on a length mismatch
@@ -440,13 +432,13 @@ object ArrayOps {
     var acc = 0.0
     var s = 0
     while (s < n) {
-      if (isNull(codes, s) || isNull(lut, s)) return false
+      if (codes.isNullAt(s) || lut.isNullAt(s)) return false
       val row = lut.getArray(s)
       val cd = codes.getInt(s)
       if (cd < 0 || cd >= row.numElements())
         throw new ArrayIndexOutOfBoundsException(cd)
-      if (isNull(row, cd)) return false
-      acc += double(row, cd)
+      if (row.isNullAt(cd)) return false
+      acc += row.getDouble(cd)
       s += 1
     }
     out(0) = acc
@@ -461,8 +453,8 @@ object ArrayOps {
     var acc = 0.0
     var i = 0
     while (i < n) {
-      if (isNull(x, i) || isNull(y, i)) return false
-      acc += double(x, i) * double(y, i)
+      if (x.isNullAt(i) || y.isNullAt(i)) return false
+      acc += x.getDouble(i) * y.getDouble(i)
       i += 1
     }
     out(0) = acc
@@ -477,7 +469,7 @@ object ArrayOps {
     var bestValid = false; var bestCos = 0.0; var bestCid = 0; var haveBest = false
     var s = 0
     while (s < k) {
-      if (!isNull(cents, s)) {
+      if (!cents.isNullAt(s)) {
         val row = cents.getStruct(s, 3)
         val cid = row.getInt(0)
         // cosine (undefined when the dot is) with the exact
@@ -490,8 +482,8 @@ object ArrayOps {
           else {
             var dot = 0.0; var i = 0
             while (cosValid && i < dim) {
-              if (isNull(v, i) || isNull(carr, i)) cosValid = false
-              else { dot += double(v, i) * double(carr, i); i += 1 }
+              if (v.isNullAt(i) || carr.isNullAt(i)) cosValid = false
+              else { dot += v.getDouble(i) * carr.getDouble(i); i += 1 }
             }
             if (cosValid) {
               val x = dot / math.sqrt(n2 * row.getDouble(2))
@@ -522,8 +514,8 @@ object ArrayOps {
     val n = math.min(lo.numElements(), hi.numElements())
     var i = 0
     while (i < n) {
-      if (!isNull(lo, i) && !isNull(hi, i)) {
-        val l = long(lo, i); val h = long(hi, i)
+      if (!lo.isNullAt(i) && !hi.isNullAt(i)) {
+        val l = lo.getLong(i); val h = hi.getLong(i)
         var j = 0
         while (j < 32) {
           votes(j) += (if (((l >> j) & 1L) == 1L) 1 else -1)
@@ -547,9 +539,9 @@ object ArrayOps {
     var any = false
     var i = 0
     while (i < n) {
-      if (!isNull(th, i)) {
+      if (!th.isNullAt(i)) {
         any = true
-        val h = long(th, i)
+        val h = th.getLong(i)
         var k = 0
         while (k < K) {
           val v = ((2L * k + 1L) * h + 7L * k + 3L) % P

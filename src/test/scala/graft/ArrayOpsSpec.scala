@@ -9,14 +9,23 @@ import org.apache.spark.sql.functions._
 
 class ArrayOpsSpec extends SparkSpec {
 
-  /** `df` and a parquet copy of it: a select over the local relation is
-    * evaluated interpreted (the optimizer folds it into a new local
-    * relation), the same select over the copy's scan runs in whole-stage
-    * generated code. The copy is one file, so both keep `df`'s row order. */
-  private def bothPaths(df: DataFrame): Seq[DataFrame] = {
-    val dir = Files.createTempDirectory("arrayops").toString + "/t"
-    df.coalesce(1).write.parquet(dir)
-    Seq(df, spark.read.parquet(dir))
+  /** `f` over a one-file parquet copy of `df` (so it keeps `df`'s row
+    * order), deleted afterwards. */
+  private def withParquetCopy[T](df: DataFrame)(f: DataFrame => T): T = {
+    val dir = Files.createTempDirectory("arrayops").toString
+    try {
+      df.coalesce(1).write.parquet(dir + "/t")
+      f(spark.read.parquet(dir + "/t"))
+    } finally graft.engine.Fs.deleteDir(spark, dir)
+  }
+
+  /** Runs `check` on `df` and on its parquet copy: a select over the
+    * local relation is evaluated interpreted (the optimizer folds it into
+    * a new local relation), the same select over the copy's scan runs in
+    * whole-stage generated code. */
+  private def bothPaths(df: DataFrame)(check: DataFrame => Unit): Unit = {
+    check(df)
+    withParquetCopy(df)(check)
   }
 
   test("sorted_intersect_size matches size(array_intersect) on sorted distinct arrays") {
@@ -27,7 +36,7 @@ class ArrayOpsSpec extends SparkSpec {
       (Seq(7L), Seq(7L)),                          // identical
       (Seq.empty[Long], Seq(1L))                   // empty side
     ).toDF("a", "b")
-    for (d <- bothPaths(df)) {
+    bothPaths(df) { d =>
       val out = d.select(
         expr("sorted_intersect_size(a, b)").as("fast"),
         expr("size(array_intersect(a, b))").as("ref")).collect()
@@ -36,17 +45,24 @@ class ArrayOpsSpec extends SparkSpec {
   }
 
   test("null ELEMENTS match array_intersect semantics (null==null counts, sorted to tail)") {
-    val rows = spark.sql(
-      """SELECT
-         |  sorted_intersect_size(array(1L, 3L, NULL), array(3L, 5L, NULL)) AS both_null,
-         |  sorted_intersect_size(array(1L, 3L, NULL), array(3L, 5L)) AS one_null,
-         |  size(array_intersect(array(1L, 3L, NULL), array(3L, 5L, NULL))) AS ref_both,
-         |  size(array_intersect(array(1L, 3L, NULL), array(3L, 5L))) AS ref_one,
-         |  sorted_intersect(array(1L, 3L, NULL), array(3L, 5L, NULL)) AS si_both
-         |""".stripMargin).collect()(0)
-    assert(rows.getInt(0) == 2 && rows.getInt(0) == rows.getInt(2))
-    assert(rows.getInt(1) == 1 && rows.getInt(1) == rows.getInt(3))
-    assert(rows.getSeq[Any](4) == Seq(3L, null))
+    import spark.implicits._
+    val df = Seq((Seq(Some(1L), Some(3L), None), Seq(Some(3L), Some(5L), None), Seq(3L, 5L)))
+      .toDF("a", "b", "c")
+    bothPaths(df) { d =>
+      val rows = d.select(
+        expr("sorted_intersect_size(a, b)").as("both_null"),
+        expr("sorted_intersect_size(a, c)").as("one_null"),
+        expr("size(array_intersect(a, b))").as("ref_both"),
+        expr("size(array_intersect(a, c))").as("ref_one"),
+        expr("sorted_intersect(a, b)").as("si_both"),
+        expr("sorted_intersect(a, c)").as("si_one"),
+        expr("sorted_intersect(a, a)").as("si_self")).collect()(0)
+      assert(rows.getInt(0) == 2 && rows.getInt(0) == rows.getInt(2))
+      assert(rows.getInt(1) == 1 && rows.getInt(1) == rows.getInt(3))
+      assert(rows.getSeq[Any](4) == Seq(3L, null))
+      assert(rows.getSeq[Any](5) == Seq(3L))
+      assert(rows.getSeq[Any](6) == Seq(1L, 3L, null))
+    }
   }
 
   test("dot_double equals the HOF zip_with fold bit-for-bit, incl. null/length semantics") {
@@ -62,17 +78,16 @@ class ArrayOpsSpec extends SparkSpec {
       expr("aggregate(zip_with(a, b, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, x) -> acc + x)").as("ref"))
       .collect()
     // exact double equality — same sequential fold, same IEEE ops
-    for (d <- bothPaths(df)) fastAndRef(d).foreach(r => assert(
+    bothPaths(df)(fastAndRef(_).foreach(r => assert(
       java.lang.Double.doubleToLongBits(r.getDouble(0)) ==
-        java.lang.Double.doubleToLongBits(r.getDouble(1)), r.toString))
+        java.lang.Double.doubleToLongBits(r.getDouble(1)), r.toString)))
     // unequal lengths and null elements poison to null, as the HOF does
     val edge = Seq(
       (Some(Seq(Some(1.0), Some(2.0))), Some(Seq(Some(1.0)))),
       (Some(Seq(Some(1.0), None)), Some(Seq(Some(1.0), Some(2.0)))),
       (None, Some(Seq(Some(1.0)))))
       .toDF("a", "b")
-    for (d <- bothPaths(edge))
-      fastAndRef(d).foreach(r => assert(r.isNullAt(0) && r.isNullAt(1), r.toString))
+    bothPaths(edge)(fastAndRef(_).foreach(r => assert(r.isNullAt(0) && r.isNullAt(1), r.toString)))
   }
 
   test("minhash_sig equals the nested-HOF signature, incl. empty input -> 16 nulls") {
@@ -84,7 +99,7 @@ class ArrayOpsSpec extends SparkSpec {
       Seq(999999999L),
       Seq.empty[Long]
     ).toDF("th")
-    for (d <- bothPaths(df)) {
+    bothPaths(df) { d =>
       val out = d.select(
         expr("minhash_sig(th)").as("fast"),
         expr(s"""transform(sequence(0, 15), i ->
@@ -119,32 +134,35 @@ class ArrayOpsSpec extends SparkSpec {
       expr("sorted_intersect(th, th)").as("si"),
       expr("lut_sum(codes, lut)").as("ls"),
       expr("assign_cid(v, norm2, cents)").as("cid"))
-    val Seq(local, scanned) = bothPaths(df).map(native)
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-    try {
-      val r = scanned.collect()(0)
-      assert(r.getSeq[Long](0).length == 16)
-      assert(r.getDouble(1) == 1.5 * 2.0 + 2.5 * -1.0)
-      assert(r.getInt(3) == 2 && r.getBoolean(4))
-      assert(r.getSeq[Long](5) == Seq(12345L, 42L))
-      assert(r.getDouble(6) == 2.5 + 4.5)
-      assert(r.getInt(7) == 2)
-      assert(r == local.collect()(0))
-      val plan = scanned.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
+    val expected = native(df).collect()(0)
+    withParquetCopy(df) { copy =>
+      spark.conf.set("spark.sql.codegen.fallback", "false")
+      spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+      try {
+        val scanned = native(copy)
+        val r = scanned.collect()(0)
+        assert(r.getSeq[Long](0).length == 16)
+        assert(r.getDouble(1) == 1.5 * 2.0 + 2.5 * -1.0)
+        assert(r.getInt(3) == 2 && r.getBoolean(4))
+        assert(r.getSeq[Long](5) == Seq(12345L, 42L))
+        assert(r.getDouble(6) == 2.5 + 4.5)
+        assert(r.getInt(7) == 2)
+        assert(r == expected)
+        val plan = scanned.queryExecution.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.executedPlan
+          case p => p
+        }
+        val generated = plan.collect { case w: WholeStageCodegenExec =>
+          w.child.collect { case p => p.expressions.flatMap(_.collect { case e => e.getClass }) }.flatten
+        }.flatten.toSet
+        Seq(classOf[functions.MinhashSig], classOf[functions.DotDouble], classOf[functions.Simhash64],
+          classOf[functions.SortedIntersectSize], classOf[functions.SortedIntersectAtLeast],
+          classOf[functions.SortedIntersect], classOf[functions.LutSum], classOf[functions.AssignCid])
+          .foreach(c => assert(generated(c), s"${c.getSimpleName} not under WholeStageCodegenExec:\n$plan"))
+      } finally {
+        spark.conf.set("spark.sql.codegen.fallback", "true")
+        spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
       }
-      val generated = plan.collect { case w: WholeStageCodegenExec =>
-        w.child.collect { case p => p.expressions.flatMap(_.collect { case e => e.getClass }) }.flatten
-      }.flatten.toSet
-      Seq(classOf[functions.MinhashSig], classOf[functions.DotDouble], classOf[functions.Simhash64],
-        classOf[functions.SortedIntersectSize], classOf[functions.SortedIntersectAtLeast],
-        classOf[functions.SortedIntersect], classOf[functions.LutSum], classOf[functions.AssignCid])
-        .foreach(c => assert(generated(c), s"${c.getSimpleName} not under WholeStageCodegenExec:\n$plan"))
-    } finally {
-      spark.conf.set("spark.sql.codegen.fallback", "true")
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
     }
   }
 
@@ -155,7 +173,7 @@ class ArrayOpsSpec extends SparkSpec {
       (Seq(2, 2, 2), Seq(Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0), Seq(7.0, 8.0, 9.0))),
       (Seq(0, 0), Seq(Seq(1.5, 2.5), Seq(3.5, 4.5), Seq(9.9, 9.9))) // length mismatch -> null
     ).toDF("codes", "lut")
-    for (d <- bothPaths(df)) {
+    bothPaths(df) { d =>
       val rows = d.select(
         expr("lut_sum(codes, lut)").as("mine"),
         expr("aggregate(zip_with(codes, lut, (cd, l) -> element_at(l, cd + 1)), CAST(0 AS DOUBLE), (a, x) -> a + x)").as("ref"))
@@ -182,7 +200,7 @@ class ArrayOpsSpec extends SparkSpec {
         """array(named_struct('cid', 2, 'c', array(CAST(1.0 AS DOUBLE), CAST(0.0 AS DOUBLE)), 'cn2', CAST(1.0 AS DOUBLE)),
                  named_struct('cid', 1, 'c', array(CAST(0.0 AS DOUBLE), CAST(1.0 AS DOUBLE)), 'cn2', CAST(1.0 AS DOUBLE)),
                  named_struct('cid', 0, 'c', array(CAST(1.0 AS DOUBLE), CAST(0.0 AS DOUBLE)), 'cn2', CAST(1.0 AS DOUBLE)))"""))
-    for (rows <- bothPaths(df)) {
+    bothPaths(df) { rows =>
       val out = rows.select(
         expr("assign_cid(v, norm2, cents)").as("mine"),
         expr("""-array_max(transform(cents, s -> named_struct(
@@ -220,7 +238,7 @@ class ArrayOpsSpec extends SparkSpec {
       (Seq.empty[Long], Seq(1L)),
       (Seq(1L, 2L, 3L), Seq(1L, 2L, 3L))
     ).toDF("a", "b")
-    for (d <- bothPaths(df)) {
+    bothPaths(df) { d =>
       val rows = d.select(
         expr("sorted_intersect(a, b)").as("mine"),
         array_intersect(col("a"), col("b")).as("ref"),
@@ -241,11 +259,13 @@ class ArrayOpsSpec extends SparkSpec {
       (Seq.empty[Long], Seq(1L)),
       (Seq(1L, 2L, 3L, 4L, 5L), Seq(1L, 2L, 3L, 4L, 5L))
     ).toDF("a", "b")
-    for (d <- bothPaths(df); t <- 0 to 6) {
-      val out = d.select(
-        expr(s"sorted_intersect_atleast(a, b, $t)").as("fast"),
-        (expr("sorted_intersect_size(a, b)") >= t).as("ref")).collect()
-      out.foreach(r => assert(r.getBoolean(0) == r.getBoolean(1), s"t=$t $r"))
+    bothPaths(df) { d =>
+      for (t <- 0 to 6) {
+        val out = d.select(
+          expr(s"sorted_intersect_atleast(a, b, $t)").as("fast"),
+          (expr("sorted_intersect_size(a, b)") >= t).as("ref")).collect()
+        out.foreach(r => assert(r.getBoolean(0) == r.getBoolean(1), s"t=$t $r"))
+      }
     }
   }
 
@@ -254,15 +274,17 @@ class ArrayOpsSpec extends SparkSpec {
     // assumption would silently skip every real match; the guard throws
     import spark.implicits._
     val raw = Seq((Seq(Some(3L), Some(1L), None), Seq(Some(5L), Some(3L), None))).toDF("ra", "rb")
-    for (d <- bothPaths(raw); fn <- Seq("sorted_intersect_size(a, b)", "sorted_intersect(a, b)",
-        "sorted_intersect_atleast(a, b, 1)")) {
-      val e = intercept[Exception] {
-        d.select(expr("sort_array(ra)").as("a"), expr("sort_array(rb)").as("b"))
-          .select(expr(fn).as("x")).collect()
+    bothPaths(raw) { d =>
+      for (fn <- Seq("sorted_intersect_size(a, b)", "sorted_intersect(a, b)",
+          "sorted_intersect_atleast(a, b, 1)")) {
+        val e = intercept[Exception] {
+          d.select(expr("sort_array(ra)").as("a"), expr("sort_array(rb)").as("b"))
+            .select(expr(fn).as("x")).collect()
+        }
+        def msgs(t: Throwable): Seq[String] =
+          Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
+        assert(msgs(e).exists(_.contains("array_sort order")), e.toString)
       }
-      def msgs(t: Throwable): Seq[String] =
-        Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
-      assert(msgs(e).exists(_.contains("array_sort order")), e.toString)
     }
     // tail nulls (array_sort order) still work
     val ok = spark.sql(
@@ -280,7 +302,7 @@ class ArrayOpsSpec extends SparkSpec {
 
   test("assign_cid skips null centroid SLOTS; all-null slots yield null like empty") {
     import spark.implicits._
-    for (rows <- bothPaths(Seq((Seq(1.0, 0.0), 1.0)).toDF("v", "norm2"))) {
+    bothPaths(Seq((Seq(1.0, 0.0), 1.0)).toDF("v", "norm2")) { rows =>
       // a null slot between two real centroids: the real argmax must win
       val mixed = rows.select(expr(
         """assign_cid(v, norm2, array(
@@ -320,7 +342,7 @@ class ArrayOpsSpec extends SparkSpec {
         (Seq.fill(n)(rnd.nextLong() & 0xFFFFFFFFL), Seq.fill(n)(rnd.nextLong() & 0xFFFFFFFFL))
       })
     import spark.implicits._
-    for (df <- bothPaths(rows.toDF("lo", "hi"))) {
+    bothPaths(rows.toDF("lo", "hi")) { df =>
       val out = df.select(
         expr("simhash64(lo, hi)").as("fast"),
         expr("""aggregate(
