@@ -136,30 +136,10 @@ object SparkEntry {
       GROUP BY 1, 2, 3, 4
       ORDER BY part_key, supplier_nation
     """),
-    Query("latest_ship", (s, d) => Marts.latestShipmentPerPart(s, d), """
-      SELECT l_partkey AS part_key, l_orderkey AS order_key,
-             l_linenumber AS line_number,
-             CAST(strftime(l_shipdate, '%Y%m%d') AS INT) AS ship_date_key,
-             l_quantity AS quantity
-      FROM lineitem
-      QUALIFY row_number() OVER (
-        PARTITION BY l_partkey
-        ORDER BY l_shipdate DESC, l_orderkey DESC, l_linenumber DESC) = 1
-      ORDER BY part_key
-    """),
+    Query("latest_ship", (s, d) => Marts.latestShipmentPerPart(s, d), latestShipSql),
     // Spark runs the max_by aggregate form; the oracle's window form
     // states the same latest-per-key semantics
-    Query("latest_ship_agg", (s, d) => Marts.latestShipmentPerPartAgg(s, d), """
-      SELECT l_partkey AS part_key, l_orderkey AS order_key,
-             l_linenumber AS line_number,
-             CAST(strftime(l_shipdate, '%Y%m%d') AS INT) AS ship_date_key,
-             l_quantity AS quantity
-      FROM lineitem
-      QUALIFY row_number() OVER (
-        PARTITION BY l_partkey
-        ORDER BY l_shipdate DESC, l_orderkey DESC, l_linenumber DESC) = 1
-      ORDER BY part_key
-    """),
+    Query("latest_ship_agg", (s, d) => Marts.latestShipmentPerPartAgg(s, d), latestShipSql),
     Query("latest_month_orders", (s, d) => Marts.latestMonthOrderSummary(s, d), """
       SELECT o_orderpriority AS priority,
              COUNT(*) AS order_count,
@@ -184,88 +164,16 @@ object SparkEntry {
       FROM part
       ORDER BY surrogate_key
     """),
-    Query("scd2_upsert", (s, d) => Scd2Queries.upsert(s, d), """
-      WITH base AS (
-        SELECT p_partkey AS part_key, p_name, p_brand, p_type, p_size,
-               CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT) AS price_cents
-        FROM part),
-      dim0 AS (
-        SELECT row_number() OVER (ORDER BY part_key) AS surrogate_key, base.*,
-               md5(concat_ws('|', p_name, p_brand, p_type,
-                   CAST(p_size AS VARCHAR), CAST(price_cents AS VARCHAR))) AS attr_hash
-        FROM base),
-      src AS (
-        SELECT part_key, p_name, p_brand, p_type, p_size,
-               CASE WHEN part_key % 7 = 0 THEN price_cents + 100 ELSE price_cents END AS price_cents
-        FROM base
-        UNION ALL
-        SELECT part_key + 1000000, p_name || '_v2', p_brand, p_type, p_size, price_cents
-        FROM base WHERE part_key % 50 = 0),
-      srch AS (
-        SELECT src.*, md5(concat_ws('|', p_name, p_brand, p_type,
-                   CAST(p_size AS VARCHAR), CAST(price_cents AS VARCHAR))) AS attr_hash
-        FROM src),
-      changed AS (
-        SELECT s.* FROM srch s LEFT JOIN dim0 d USING (part_key)
-        WHERE d.part_key IS NULL OR d.attr_hash <> s.attr_hash),
-      old_rows AS (
-        SELECT d.part_key, d.p_name, d.p_brand, d.p_type, d.p_size,
-               d.price_cents, d.attr_hash, d.surrogate_key,
-               DATE '2024-01-01' AS effective_date,
-               CASE WHEN c.part_key IS NOT NULL THEN DATE '2024-06-01'
-                    ELSE CAST(NULL AS DATE) END AS expiry_date,
-               c.part_key IS NULL AS is_current
-        FROM dim0 d LEFT JOIN (SELECT DISTINCT part_key FROM changed) c USING (part_key)),
-      new_rows AS (
-        SELECT part_key, p_name, p_brand, p_type, p_size, price_cents, attr_hash,
-               (SELECT count(*) FROM dim0) + row_number() OVER (ORDER BY part_key) AS surrogate_key,
-               DATE '2024-06-01' AS effective_date,
-               CAST(NULL AS DATE) AS expiry_date,
-               TRUE AS is_current
-        FROM changed)
+    Query("scd2_upsert", (s, d) => Scd2Queries.upsert(s, d), s"""
+      WITH $scd2Changed,
+      $scd2Rows
       SELECT * FROM old_rows UNION ALL SELECT * FROM new_rows ORDER BY surrogate_key
     """),
     // same merge pipeline as scd2_upsert, then the point-in-time filter:
     // the version current ON 2024-07-01 (effective ≤ date < expiry)
-    Query("scd2_snapshot", (s, d) => Scd2Queries.snapshot(s, d), """
-      WITH base AS (
-        SELECT p_partkey AS part_key, p_name, p_brand, p_type, p_size,
-               CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT) AS price_cents
-        FROM part),
-      dim0 AS (
-        SELECT row_number() OVER (ORDER BY part_key) AS surrogate_key, base.*,
-               md5(concat_ws('|', p_name, p_brand, p_type,
-                   CAST(p_size AS VARCHAR), CAST(price_cents AS VARCHAR))) AS attr_hash
-        FROM base),
-      src AS (
-        SELECT part_key, p_name, p_brand, p_type, p_size,
-               CASE WHEN part_key % 7 = 0 THEN price_cents + 100 ELSE price_cents END AS price_cents
-        FROM base
-        UNION ALL
-        SELECT part_key + 1000000, p_name || '_v2', p_brand, p_type, p_size, price_cents
-        FROM base WHERE part_key % 50 = 0),
-      srch AS (
-        SELECT src.*, md5(concat_ws('|', p_name, p_brand, p_type,
-                   CAST(p_size AS VARCHAR), CAST(price_cents AS VARCHAR))) AS attr_hash
-        FROM src),
-      changed AS (
-        SELECT s.* FROM srch s LEFT JOIN dim0 d USING (part_key)
-        WHERE d.part_key IS NULL OR d.attr_hash <> s.attr_hash),
-      old_rows AS (
-        SELECT d.part_key, d.p_name, d.p_brand, d.p_type, d.p_size,
-               d.price_cents, d.attr_hash, d.surrogate_key,
-               DATE '2024-01-01' AS effective_date,
-               CASE WHEN c.part_key IS NOT NULL THEN DATE '2024-06-01'
-                    ELSE CAST(NULL AS DATE) END AS expiry_date,
-               c.part_key IS NULL AS is_current
-        FROM dim0 d LEFT JOIN (SELECT DISTINCT part_key FROM changed) c USING (part_key)),
-      new_rows AS (
-        SELECT part_key, p_name, p_brand, p_type, p_size, price_cents, attr_hash,
-               (SELECT count(*) FROM dim0) + row_number() OVER (ORDER BY part_key) AS surrogate_key,
-               DATE '2024-06-01' AS effective_date,
-               CAST(NULL AS DATE) AS expiry_date,
-               TRUE AS is_current
-        FROM changed),
+    Query("scd2_snapshot", (s, d) => Scd2Queries.snapshot(s, d), s"""
+      WITH $scd2Changed,
+      $scd2Rows,
       merged AS (SELECT * FROM old_rows UNION ALL SELECT * FROM new_rows)
       SELECT * FROM merged
       WHERE effective_date <= DATE '2024-07-01'
@@ -274,30 +182,8 @@ object SparkEntry {
     """),
     // same merge pipeline, then each fact line joins the dim version
     // current on its (order-month-parity-derived) as-of date
-    Query("fact_dim_asof", (s, d) => Scd2Queries.factDimAsOf(s, d), """
-      WITH base AS (
-        SELECT p_partkey AS part_key, p_name, p_brand, p_type, p_size,
-               CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT) AS price_cents
-        FROM part),
-      dim0 AS (
-        SELECT row_number() OVER (ORDER BY part_key) AS surrogate_key, base.*,
-               md5(concat_ws('|', p_name, p_brand, p_type,
-                   CAST(p_size AS VARCHAR), CAST(price_cents AS VARCHAR))) AS attr_hash
-        FROM base),
-      src AS (
-        SELECT part_key, p_name, p_brand, p_type, p_size,
-               CASE WHEN part_key % 7 = 0 THEN price_cents + 100 ELSE price_cents END AS price_cents
-        FROM base
-        UNION ALL
-        SELECT part_key + 1000000, p_name || '_v2', p_brand, p_type, p_size, price_cents
-        FROM base WHERE part_key % 50 = 0),
-      srch AS (
-        SELECT src.*, md5(concat_ws('|', p_name, p_brand, p_type,
-                   CAST(p_size AS VARCHAR), CAST(price_cents AS VARCHAR))) AS attr_hash
-        FROM src),
-      changed AS (
-        SELECT s.* FROM srch s LEFT JOIN dim0 d USING (part_key)
-        WHERE d.part_key IS NULL OR d.attr_hash <> s.attr_hash),
+    Query("fact_dim_asof", (s, d) => Scd2Queries.factDimAsOf(s, d), s"""
+      WITH $scd2Changed,
       old_rows AS (
         SELECT d.part_key, d.p_brand, d.price_cents,
                DATE '2024-01-01' AS effective_date,
@@ -405,20 +291,8 @@ object SparkEntry {
     // sessions via gap-islands, then a plain NON-EQUI overlap self-join:
     // proves the bucketed exactly-once emission loses and duplicates
     // nothing
-    Query("session_overlap", (s, d) => Events.sessionOverlapCounts(s, d), """
-      WITH e AS (SELECT user_id, ts::TIMESTAMP AS ts FROM events),
-      flagged AS (
-        SELECT user_id, ts,
-               CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                         >= INTERVAL 30 MINUTE
-                    OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                    THEN 1 ELSE 0 END AS new_session
-        FROM e),
-      islands AS (
-        SELECT user_id, ts,
-               sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-                 ROWS UNBOUNDED PRECEDING) AS sid
-        FROM flagged),
+    Query("session_overlap", (s, d) => Events.sessionOverlapCounts(s, d), s"""
+      WITH $sessionIslands,
       sess AS (
         SELECT user_id, epoch_us(min(ts)) AS s_start, epoch_us(max(ts)) AS s_end
         FROM islands GROUP BY user_id, sid)
@@ -497,20 +371,8 @@ object SparkEntry {
       import org.apache.spark.sql.functions.col
       graft.streaming.EventStream.sessionWindows(Tables.events(s, d))
         .orderBy(col("user_id"), col("first_ts"))
-    }, """
-      WITH e AS (SELECT user_id, ts::TIMESTAMP AS ts FROM events),
-      flagged AS (
-        SELECT user_id, ts,
-               CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                         >= INTERVAL 30 MINUTE
-                    OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                    THEN 1 ELSE 0 END AS new_session
-        FROM e),
-      islands AS (
-        SELECT user_id, ts,
-               sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-                 ROWS UNBOUNDED PRECEDING) AS sid
-        FROM flagged)
+    }, s"""
+      WITH $sessionIslands
       SELECT user_id, min(ts) AS first_ts, max(ts) AS last_ts,
              count(*) AS n_events
       FROM islands
@@ -521,63 +383,18 @@ object SparkEntry {
       SELECT md5(text) AS text_hash, min(doc_id) AS kept_doc_id, count(*) AS n_copies
       FROM documents GROUP BY 1 ORDER BY kept_doc_id
     """),
-    Query("dedup_minhash", (s, d) => Dedup.minhashPairs(s, d), """
-      WITH docs AS (
-        SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks FROM documents),
-      th AS (
-        SELECT doc_id, toks,
-               list_transform(toks, t -> ('0x' || substr(md5(t), 1, 15))::BIGINT % 1000000007) AS h
-        FROM docs),
-      sig AS (
-        SELECT doc_id, toks,
-               list_transform(range(0, 16), i ->
-                 list_min(list_transform(h, x -> ((2*i+1) * x + 7*i+3) % 1000000007))) AS sig
-        FROM th),
-      bands AS (
-        SELECT doc_id, bs.b AS band,
-               sig[bs.b*4+1] AS k1, sig[bs.b*4+2] AS k2,
-               sig[bs.b*4+3] AS k3, sig[bs.b*4+4] AS k4
-        FROM sig CROSS JOIN (SELECT unnest([0,1,2,3]) AS b) bs),
-      cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.k1 = b.k1 AND a.k2 = b.k2
-         AND a.k3 = b.k3 AND a.k4 = b.k4 AND a.doc_id < b.doc_id),
-      hsets AS (SELECT doc_id, list_distinct(h) AS hs FROM th),
-      pairs AS (
-        SELECT doc_a, doc_b,
-               len(list_intersect(ta.hs, tb.hs)) AS inter,
-               len(ta.hs) AS na, len(tb.hs) AS nb
-        FROM cand
-          JOIN hsets ta ON cand.doc_a = ta.doc_id
-          JOIN hsets tb ON cand.doc_b = tb.doc_id)
-      SELECT doc_a, doc_b,
-             floor((inter / (na + nb - inter)) * 10000 + 0.5) / 10000 AS jaccard
-      FROM pairs
-      WHERE inter / (na + nb - inter) >= 0.9
-      ORDER BY doc_a, doc_b
-    """),
+    Query("dedup_minhash", (s, d) => Dedup.minhashPairs(s, d), minhashPairsSql(None)),
     // Incremental admission: batch = doc_id % 10 = 0, corpus = the rest.
     // The oracle states the semantics DOC-level (band join over all
     // cross-side doc pairs, then a per-batch-doc rank); Spark's batch-set
     // contraction and argmax-absorbed band duplicates are invisible to it
-    Query("dedup_incremental", (s, d) => Dedup.dedupIncremental(s, d), """
-      WITH docs AS (
-        SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks FROM documents),
-      th AS (
-        SELECT doc_id,
-               list_transform(toks, t -> ('0x' || substr(md5(t), 1, 15))::BIGINT % 1000000007) AS h
-        FROM docs),
+    Query("dedup_incremental", (s, d) => Dedup.dedupIncremental(s, d), s"""
+      WITH ${minhashTokens("doc_id")},
       sig AS (
         SELECT doc_id,
-               list_transform(range(0, 16), i ->
-                 list_min(list_transform(h, x -> ((2*i+1) * x + 7*i+3) % 1000000007))) AS sig
+               ${minhashSig(16, "h")}
         FROM th),
-      bands AS (
-        SELECT doc_id, bs.b AS band,
-               sig[bs.b*4+1] AS k1, sig[bs.b*4+2] AS k2,
-               sig[bs.b*4+3] AS k3, sig[bs.b*4+4] AS k4
-        FROM sig CROSS JOIN (SELECT unnest([0,1,2,3]) AS b) bs),
+      $minhashBands,
       hsets AS (SELECT doc_id, list_distinct(h) AS hs FROM th),
       cand AS (
         SELECT DISTINCT nb.doc_id AS new_id, cb.doc_id AS cdoc
@@ -585,13 +402,7 @@ object SparkEntry {
           ON nb.band = cb.band AND nb.k1 = cb.k1 AND nb.k2 = cb.k2
          AND nb.k3 = cb.k3 AND nb.k4 = cb.k4
         WHERE nb.doc_id % 10 = 0 AND cb.doc_id % 10 <> 0),
-      pairs AS (
-        SELECT new_id, cdoc,
-               len(list_intersect(ta.hs, tb.hs)) AS inter,
-               len(ta.hs) AS na, len(tb.hs) AS nb
-        FROM cand
-          JOIN hsets ta ON cand.new_id = ta.doc_id
-          JOIN hsets tb ON cand.cdoc = tb.doc_id),
+      pairs AS (${jaccardInter("new_id", "cdoc", "hsets", "doc_id")}),
       best AS (
         SELECT new_id, cdoc,
                floor((inter / (na + nb - inter)) * 10000 + 0.5) / 10000 AS j,
@@ -614,68 +425,15 @@ object SparkEntry {
     // The oracle replays the same window-count cut, proving the cut
     // semantics — not just the uncapped path — match an independent
     // engine.
-    Query("dedup_minhash_capped", (s, d) => Dedup.minhashPairs(s, d, maxBucketSize = Some(10)), """
-      WITH docs AS (
-        SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks FROM documents),
-      th AS (
-        SELECT doc_id, toks,
-               list_transform(toks, t -> ('0x' || substr(md5(t), 1, 15))::BIGINT % 1000000007) AS h
-        FROM docs),
-      sig AS (
-        SELECT doc_id, toks,
-               list_transform(range(0, 16), i ->
-                 list_min(list_transform(h, x -> ((2*i+1) * x + 7*i+3) % 1000000007))) AS sig
-        FROM th),
-      bands AS (
-        SELECT doc_id, bs.b AS band,
-               sig[bs.b*4+1] AS k1, sig[bs.b*4+2] AS k2,
-               sig[bs.b*4+3] AS k3, sig[bs.b*4+4] AS k4
-        FROM sig CROSS JOIN (SELECT unnest([0,1,2,3]) AS b) bs),
-      capped AS (
-        SELECT doc_id, band, k1, k2, k3, k4
-        FROM (SELECT *, count(*) OVER (PARTITION BY band, k1, k2, k3, k4) AS bsz
-              FROM bands)
-        WHERE bsz <= 10),
-      cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM capped a JOIN capped b
-          ON a.band = b.band AND a.k1 = b.k1 AND a.k2 = b.k2
-         AND a.k3 = b.k3 AND a.k4 = b.k4 AND a.doc_id < b.doc_id),
-      hsets AS (SELECT doc_id, list_distinct(h) AS hs FROM th),
-      pairs AS (
-        SELECT doc_a, doc_b,
-               len(list_intersect(ta.hs, tb.hs)) AS inter,
-               len(ta.hs) AS na, len(tb.hs) AS nb
-        FROM cand
-          JOIN hsets ta ON cand.doc_a = ta.doc_id
-          JOIN hsets tb ON cand.doc_b = tb.doc_id)
-      SELECT doc_a, doc_b,
-             floor((inter / (na + nb - inter)) * 10000 + 0.5) / 10000 AS jaccard
-      FROM pairs
-      WHERE inter / (na + nb - inter) >= 0.9
-      ORDER BY doc_a, doc_b
-    """),
+    Query("dedup_minhash_capped", (s, d) => Dedup.minhashPairs(s, d, maxBucketSize = Some(10)),
+      minhashPairsSql(Some(10))),
     Query("dedup_simhash", (s, d) => Dedup.simhash(s, d), s"""
       WITH $tokenHalves
       $simhashSelect ORDER BY doc_id
     """),
-    Query("dedup_ngram", (s, d) => Dedup.ngramJaccardPairs(s, d), """
-      WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-      sh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(
-                 list_distinct(CASE WHEN len(toks) < 3 THEN []::VARCHAR[]
-                   ELSE list_transform(range(1, len(toks) - 1), i ->
-                          toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                   END),
-                 s -> ('0x' || substr(md5(s), 1, 15))::BIGINT)) AS s
-        FROM t),
-      inv AS (SELECT doc_id, len(s) AS n_sh, unnest(s) AS sh FROM sh),
-      shared AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.n_sh AS na, b.n_sh AS nb,
-               count(*) AS inter
-        FROM inv a JOIN inv b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2, 3, 4)
+    Query("dedup_ngram", (s, d) => Dedup.ngramJaccardPairs(s, d), s"""
+      WITH ${shingleSets(false)},
+      $sharedShingles
       SELECT doc_a, doc_b,
              floor((inter / (na + nb - inter)) * 10000 + 0.5) / 10000 AS jaccard
       FROM shared
@@ -685,23 +443,9 @@ object SparkEntry {
     // directed shingle containment — the same inverted-index join as
     // dedup_ngram (no size-ratio cut: containment pairs are
     // size-asymmetric by definition), both directions from one count
-    Query("dedup_containment", (s, d) => Dedup.containmentPairs(s, d), """
-      WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-      sh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(
-                 list_distinct(CASE WHEN len(toks) < 3 THEN []::VARCHAR[]
-                   ELSE list_transform(range(1, len(toks) - 1), i ->
-                          toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                   END),
-                 s -> ('0x' || substr(md5(s), 1, 15))::BIGINT)) AS s
-        FROM t),
-      inv AS (SELECT doc_id, len(s) AS n_sh, unnest(s) AS sh FROM sh),
-      shared AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.n_sh AS na, b.n_sh AS nb,
-               count(*) AS inter
-        FROM inv a JOIN inv b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY 1, 2, 3, 4),
+    Query("dedup_containment", (s, d) => Dedup.containmentPairs(s, d), s"""
+      WITH ${shingleSets(false)},
+      $sharedShingles,
       dirs AS (
         SELECT doc_a AS doc_id, doc_b AS container_id, inter / na AS c_raw FROM shared
         UNION ALL
@@ -717,17 +461,8 @@ object SparkEntry {
     // both lossless on the sliced pair space, so the oracle states the
     // plain inverted-index semantics directly — shared shingles between
     // a batch doc and a corpus doc over the containee's size
-    Query("dedup_containment_incr", (s, d) => Dedup.containmentIncremental(s, d), """
-      WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-      sh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(
-                 list_distinct(CASE WHEN len(toks) < 3 THEN []::VARCHAR[]
-                   ELSE list_transform(range(1, len(toks) - 1), i ->
-                          toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                   END),
-                 s -> ('0x' || substr(md5(s), 1, 15))::BIGINT)) AS s
-        FROM t),
+    Query("dedup_containment_incr", (s, d) => Dedup.containmentIncremental(s, d), s"""
+      WITH ${shingleSets(false)},
       shn AS (SELECT doc_id, s, len(s) AS n_sh FROM sh WHERE len(s) > 0),
       binv AS (SELECT doc_id, n_sh, unnest(s) AS sh FROM shn WHERE doc_id % 10 = 0),
       cinv AS (SELECT doc_id AS container_id, n_sh AS nb, unnest(s) AS sh
@@ -752,17 +487,8 @@ object SparkEntry {
     // alone, but under the cut a pair survives iff the containee's
     // PREFIX holds a COLD shingle of the container.
     Query("dedup_containment_capped", (s, d) =>
-      Dedup.containmentPairs(s, d, maxShingleFreq = Some(5)), """
-      WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-      sh AS (
-        SELECT doc_id,
-               list_sort(list_distinct(list_transform(
-                 list_distinct(CASE WHEN len(toks) < 3 THEN []::VARCHAR[]
-                   ELSE list_transform(range(1, len(toks) - 1), i ->
-                          toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                   END),
-                 s -> ('0x' || substr(md5(s), 1, 15))::BIGINT))) AS s
-        FROM t),
+      Dedup.containmentPairs(s, d, maxShingleFreq = Some(5)), s"""
+      WITH ${shingleSets(true)},
       shn AS (SELECT doc_id, s, len(s) AS n_sh FROM sh WHERE len(s) > 0),
       fullidx AS (SELECT doc_id, n_sh, unnest(s) AS sh FROM shn),
       freq AS (SELECT sh, count(*) AS f FROM fullidx GROUP BY 1),
@@ -789,17 +515,8 @@ object SparkEntry {
     // dropped from the INDEX (candidate generation) only; surviving
     // pairs re-verify on their FULL shingle sets, so reported jaccard
     // values stay exact — the oracle replays the same frequency cut
-    Query("dedup_ngram_capped", (s, d) => Dedup.ngramJaccardPairs(s, d, maxShingleFreq = Some(5)), """
-      WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-      sh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(
-                 list_distinct(CASE WHEN len(toks) < 3 THEN []::VARCHAR[]
-                   ELSE list_transform(range(1, len(toks) - 1), i ->
-                          toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
-                   END),
-                 s -> ('0x' || substr(md5(s), 1, 15))::BIGINT)) AS s
-        FROM t),
+    Query("dedup_ngram_capped", (s, d) => Dedup.ngramJaccardPairs(s, d, maxShingleFreq = Some(5)), s"""
+      WITH ${shingleSets(false)},
       inv AS (SELECT doc_id, len(s) AS n_sh, unnest(s) AS sh FROM sh),
       cut AS (
         SELECT doc_id, n_sh, sh
@@ -833,28 +550,14 @@ object SparkEntry {
     // the Spark side maintains labels batch-by-batch (ClusterMaintain)
     // and the oracle states the equivalence theorem: incremental
     // maintenance == one CC run over the complete pair graph
-    Query("dedup_streaming", (s, d) => graft.streaming.ClusterMaintain.streamingClusters(s, d), """
-      WITH RECURSIVE docs AS (
-        SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks FROM documents),
-      th AS (
-        SELECT doc_id,
-               list_transform(toks, t -> ('0x' || substr(md5(t), 1, 15))::BIGINT % 1000000007) AS h
-        FROM docs),
+    Query("dedup_streaming", (s, d) => graft.streaming.ClusterMaintain.streamingClusters(s, d), s"""
+      WITH RECURSIVE ${minhashTokens("doc_id")},
       sig AS (
         SELECT doc_id,
-               list_transform(range(0, 16), i ->
-                 list_min(list_transform(h, x -> ((2*i+1) * x + 7*i+3) % 1000000007))) AS sig
+               ${minhashSig(16, "h")}
         FROM th),
-      bands AS (
-        SELECT doc_id, bs.b AS band,
-               sig[bs.b*4+1] AS k1, sig[bs.b*4+2] AS k2,
-               sig[bs.b*4+3] AS k3, sig[bs.b*4+4] AS k4
-        FROM sig CROSS JOIN (SELECT unnest([0,1,2,3]) AS b) bs),
-      cand AS (
-        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.band = b.band AND a.k1 = b.k1 AND a.k2 = b.k2
-         AND a.k3 = b.k3 AND a.k4 = b.k4 AND a.doc_id < b.doc_id),
+      $minhashBands,
+      ${bandCand("bands")},
       hsets AS (SELECT doc_id, list_distinct(h) AS hs FROM th),
       pairs AS (
         SELECT doc_a, doc_b
@@ -875,14 +578,8 @@ object SparkEntry {
       FROM comp c JOIN sizes s USING (cluster_id)
       ORDER BY c.doc_id
     """),
-    Query("dedup_embedding", (s, d) => Dedup.embeddingPairs(s, d), """
-      WITH p AS (
-        SELECT vec_id, embedding::DOUBLE[] AS v,
-               CAST(list_sum(list_transform(range(0, 8), j ->
-                 CASE WHEN (embedding::DOUBLE[])[j+1] > 0 THEN (1 << j) ELSE 0 END)) AS INT) AS bucket,
-               list_reduce(list_transform(range(1, len(embedding) + 1), i ->
-                 (embedding::DOUBLE[])[i] * (embedding::DOUBLE[])[i]), (x, y) -> x + y) AS norm2
-        FROM embeddings),
+    Query("dedup_embedding", (s, d) => Dedup.embeddingPairs(s, d), s"""
+      WITH ${bucketedCorpus("INT")},
       c AS (
         SELECT a.vec_id AS id_a, b.vec_id AS id_b,
                list_reduce(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i]),
@@ -894,14 +591,8 @@ object SparkEntry {
     """),
     // Spark probes Hamming-1 neighbor buckets; the oracle states the
     // SEMANTICS directly (pairs whose sign-vectors differ in ≤1 plane)
-    Query("dedup_embedding_multiprobe", (s, d) => Dedup.embeddingPairsMultiProbe(s, d), """
-      WITH p AS (
-        SELECT vec_id, embedding::DOUBLE[] AS v,
-               CAST(list_sum(list_transform(range(0, 8), j ->
-                 CASE WHEN (embedding::DOUBLE[])[j+1] > 0 THEN (1 << j) ELSE 0 END)) AS BIGINT) AS bucket,
-               list_reduce(list_transform(range(1, len(embedding) + 1), i ->
-                 (embedding::DOUBLE[])[i] * (embedding::DOUBLE[])[i]), (x, y) -> x + y) AS norm2
-        FROM embeddings),
+    Query("dedup_embedding_multiprobe", (s, d) => Dedup.embeddingPairsMultiProbe(s, d), s"""
+      WITH ${bucketedCorpus("BIGINT")},
       c AS (
         SELECT a.vec_id AS id_a, b.vec_id AS id_b,
                list_reduce(list_transform(range(1, len(a.v) + 1), i -> a.v[i] * b.v[i]),
@@ -984,11 +675,10 @@ object SparkEntry {
     Query("ann_streamed_refit", (s, d) => Similarity.annStreamedRefit(s, d),
       ivfBasePrefix + Similarity.streamedRefitOracleSql()),
     // hard-negative mining: the label-DISequality dual of knn_filtered
-    Query("hard_negatives", (s, d) => Similarity.hardNegatives(s, d), """
+    Query("hard_negatives", (s, d) => Similarity.hardNegatives(s, d), s"""
       WITH p AS (
         SELECT vec_id, label, embedding::DOUBLE[] AS v,
-               list_reduce(list_transform(range(1, len(embedding) + 1), i ->
-                 (embedding::DOUBLE[])[i] * (embedding::DOUBLE[])[i]), (x, y) -> x + y) AS norm2
+               $embeddingNorm2
         FROM embeddings),
       q AS (SELECT vec_id AS anchor_id, label AS anchor_label, v AS va, norm2 AS na2
             FROM p WHERE vec_id % 100 = 0),
@@ -1131,14 +821,8 @@ object SparkEntry {
     """),
     // inverted-index decontamination: shared 3-gram hashes vs the
     // doc_id % 97 = 0 benchmark stand-in
-    Query("decontaminate", (s, d) => TextAnalysis.decontaminate(s, d), """
-      WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-      sh AS (
-        SELECT doc_id, unnest(list_distinct(CASE WHEN len(toks) < 3 THEN []::BIGINT[]
-                 ELSE list_transform(range(1, len(toks) - 1), i ->
-                   ('0x' || substr(md5(toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]), 1, 15))::BIGINT) END)) AS g
-        FROM t),
-      bench AS (SELECT DISTINCT g FROM sh WHERE doc_id % 97 = 0)
+    Query("decontaminate", (s, d) => TextAnalysis.decontaminate(s, d), s"""
+      WITH $benchShingles
       SELECT s.doc_id, count(DISTINCT s.g) AS n_shared
       FROM sh s JOIN bench b USING (g)
       WHERE s.doc_id % 97 <> 0
@@ -1183,14 +867,11 @@ object SparkEntry {
              CAST(ceil(n_chars / 4.0) AS BIGINT) AS est_bpe_tokens
       FROM documents ORDER BY doc_id
     """),
-    Query("doc_fingerprints", (s, d) => TextAnalysis.fingerprints(s, d), """
+    Query("doc_fingerprints", (s, d) => TextAnalysis.fingerprints(s, d), s"""
       WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
       h AS (
         SELECT doc_id,
-               CASE WHEN len(toks) < 3 THEN []::BIGINT[]
-                 ELSE list_transform(range(1, len(toks) - 1), i ->
-                   ('0x' || substr(md5(toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]), 1, 15))::BIGINT)
-                 END AS hs
+               $shingleHashList AS hs
         FROM t),
       f AS (
         SELECT doc_id,
@@ -1354,22 +1035,16 @@ object SparkEntry {
     """),
     // composite pipeline: exact-dedup → quality gate → hash split →
     // corpus summary, replayed stage-for-stage in SQL
-    Query("training_corpus", (s, d) => TextAnalysis.trainingCorpus(s, d), """
+    Query("training_corpus", (s, d) => TextAnalysis.trainingCorpus(s, d), s"""
       WITH kept AS (
         SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
       d AS (
         SELECT doc.* FROM documents doc JOIN kept USING (doc_id)),
       q AS (
         SELECT doc_id, lang, n_chars, text,
-               floor((least(1.0, n_tokens / 50.0) * (1.0 - n_digits / len_text) *
-                      (0.5 + 0.5 * least(1.0, s_en / n_tokens * 5))) * 10000 + 0.5) / 10000 AS quality_score
+               $qualityScore
         FROM (
-          SELECT doc_id, lang, n_chars, text,
-            CAST(len(string_split(text, ' ')) AS INT) AS n_tokens,
-            CAST(len(list_filter(string_split(text,' '), t -> t IN ('the','a','of','to','in'))) AS INT) AS s_en,
-            CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS INT) AS n_digits,
-            CAST(length(text) AS INT) AS len_text
-          FROM d)),
+          ${qualityFeatures("doc_id, lang, n_chars, text", "d")})),
       f AS (SELECT * FROM q WHERE quality_score >= 0.5),
       s AS (SELECT *, CASE WHEN (('0x' || substr(md5(text), 1, 15))::BIGINT) % 10 = 0
                            THEN 'test' ELSE 'train' END AS split FROM f)
@@ -1471,24 +1146,10 @@ object SparkEntry {
     """),
     // the Spark side loads + RE-loads before aggregating; matching the
     // single-copy oracle proves replace-partition idempotency end-to-end
-    Query("idempotent_reload", (s, d) => Extras.idempotentReload(s, d), """
-      SELECT CAST(strftime(o_orderdate, '%Y%m') AS INT) AS ingestion_month,
-             count(*) AS n_orders,
-             floor((CAST(sum(CAST(o_totalprice AS DECIMAL(38,8))) AS DOUBLE)) * 10000 + 0.5) / 10000 AS total_value
-      FROM orders
-      GROUP BY 1
-      ORDER BY 1
-    """),
+    Query("idempotent_reload", (s, d) => Extras.idempotentReload(s, d), monthlyOrdersSql),
     // same single-copy aggregate: the manifest-committed retry must
     // converge to exactly one copy of every partition
-    Query("manifest_reload", (s, d) => Extras.manifestReload(s, d), """
-      SELECT CAST(strftime(o_orderdate, '%Y%m') AS INT) AS ingestion_month,
-             count(*) AS n_orders,
-             floor((CAST(sum(CAST(o_totalprice AS DECIMAL(38,8))) AS DOUBLE)) * 10000 + 0.5) / 10000 AS total_value
-      FROM orders
-      GROUP BY 1
-      ORDER BY 1
-    """),
+    Query("manifest_reload", (s, d) => Extras.manifestReload(s, d), monthlyOrdersSql),
     // Spark side runs the BUCKETED range join (equi-join on bucket id +
     // exact BETWEEN refilter); the oracle's plain non-equi join proves
     // the bucketization is lossless and duplicate-free
@@ -1675,15 +1336,13 @@ object SparkEntry {
     // C4-style global chunk dedup + reassembly: first occurrence =
     // lowest (doc_id, chunk_no) per chunk hash, replayed here as a
     // row_number window; reassembled text compared as md5
-    Query("span_dedup", (s, d) => TextAnalysis.spanDedup(s, d), """
+    Query("span_dedup", (s, d) => TextAnalysis.spanDedup(s, d), s"""
       WITH toks AS (
         SELECT doc_id, string_split(text, ' ') AS t,
                len(string_split(text, ' ')) AS n_toks,
                len(string_split(text, ' ')) // 8 AS n_chunks
         FROM documents),
-      chunks AS (
-        SELECT doc_id, unnest(range(0, n_chunks)) AS chunk_no, t
-        FROM toks WHERE n_chunks >= 1),
+      $spanChunks,
       hashed AS (
         SELECT doc_id, chunk_no,
                array_to_string(t[(chunk_no*8+1):(chunk_no*8+8)], ' ') AS chunk_text,
@@ -1976,34 +1635,15 @@ object SparkEntry {
     // band row per doc, so no candidate DISTINCT is needed; the
     // SimHash membership side stays exhaustive
     Query("sketch_agreement", (s, d) => Dedup.sketchAgreement(s, d), {
-      val mhBand0 = """
-      WITH docs AS (
-        SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks FROM documents),
-      th AS (
-        SELECT doc_id, toks,
-               list_transform(toks, t -> ('0x' || substr(md5(t), 1, 15))::BIGINT % 1000000007) AS h
-        FROM docs),
+      val mhBand0 = s"""
+      WITH ${minhashTokens("doc_id, toks")},
       sig AS (
         SELECT doc_id,
-               list_transform(range(0, 4), i ->
-                 list_min(list_transform(h, x -> ((2*i+1) * x + 7*i+3) % 1000000007))) AS sig
+               ${minhashSig(4, "h")}
         FROM th),
-      bands AS (
-        SELECT doc_id, sig[1] AS k1, sig[2] AS k2, sig[3] AS k3, sig[4] AS k4
-        FROM sig),
-      cand AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.k1 = b.k1 AND a.k2 = b.k2
-         AND a.k3 = b.k3 AND a.k4 = b.k4 AND a.doc_id < b.doc_id),
+      $band0Cand,
       hsets AS (SELECT doc_id, list_distinct(h) AS hs FROM th),
-      mpairs AS (
-        SELECT doc_a, doc_b,
-               len(list_intersect(ta.hs, tb.hs)) AS inter,
-               len(ta.hs) AS na, len(tb.hs) AS nb
-        FROM cand
-          JOIN hsets ta ON cand.doc_a = ta.doc_id
-          JOIN hsets tb ON cand.doc_b = tb.doc_id)
+      mpairs AS (${jaccardInter("doc_a", "doc_b", "hsets", "doc_id")})
       SELECT doc_a, doc_b
       FROM mpairs
       WHERE inter / (na + nb - inter) >= 0.9
@@ -2076,14 +1716,12 @@ object SparkEntry {
     """),
     // per-doc duplicated-chunk coverage: chunk multiplicity replayed on
     // the span_dedup hash space
-    Query("doc_span_dup_ratio", (s, d) => TextAnalysis.docSpanDupRatio(s, d), """
+    Query("doc_span_dup_ratio", (s, d) => TextAnalysis.docSpanDupRatio(s, d), s"""
       WITH toks AS (
         SELECT doc_id, string_split(text, ' ') AS t,
                len(string_split(text, ' ')) // 8 AS n_chunks
         FROM documents),
-      chunks AS (
-        SELECT doc_id, unnest(range(0, n_chunks)) AS chunk_no, t
-        FROM toks WHERE n_chunks >= 1),
+      $spanChunks,
       hashed AS (
         SELECT doc_id,
                ('0x' || substr(md5(array_to_string(t[(chunk_no*8+1):(chunk_no*8+8)], ' ')), 1, 15))::BIGINT AS chunk_h
@@ -2168,18 +1806,12 @@ object SparkEntry {
     // curriculum ordering: exact global rank by (quality desc, doc_id) —
     // Spark side computes it with range-partition + zipWithIndex, never
     // a single-partition window
-    Query("curriculum_order", (s, d) => TextAnalysis.curriculumOrder(s, d), """
+    Query("curriculum_order", (s, d) => TextAnalysis.curriculumOrder(s, d), s"""
       WITH q AS (
         SELECT doc_id,
-               floor((least(1.0, n_tokens / 50.0) * (1.0 - n_digits / len_text) *
-                      (0.5 + 0.5 * least(1.0, s_en / n_tokens * 5))) * 10000 + 0.5) / 10000 AS quality_score
+               $qualityScore
         FROM (
-          SELECT doc_id, n_chars,
-            CAST(len(string_split(text, ' ')) AS INT) AS n_tokens,
-            CAST(len(list_filter(string_split(text,' '), t -> t IN ('the','a','of','to','in'))) AS INT) AS s_en,
-            CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS INT) AS n_digits,
-            CAST(length(text) AS INT) AS len_text
-          FROM documents))
+          ${qualityFeatures("doc_id, n_chars", "documents")}))
       SELECT doc_id, quality_score,
              CAST(row_number() OVER (ORDER BY quality_score DESC, doc_id) AS BIGINT)
                AS curriculum_pos
@@ -2230,18 +1862,12 @@ object SparkEntry {
     """),
     // per-source quality quota: the oracle ranks with a window; Spark
     // uses the bounded-heap topk_by (same ORDER BY quality DESC, doc_id)
-    Query("source_quota", (s, d) => TextAnalysis.sourceQuota(s, d), """
+    Query("source_quota", (s, d) => TextAnalysis.sourceQuota(s, d), s"""
       WITH q AS (
         SELECT doc_id, source,
-               floor((least(1.0, n_tokens / 50.0) * (1.0 - n_digits / len_text) *
-                      (0.5 + 0.5 * least(1.0, s_en / n_tokens * 5))) * 10000 + 0.5) / 10000 AS quality_score
+               $qualityScore
         FROM (
-          SELECT doc_id, source,
-            CAST(len(string_split(text, ' ')) AS INT) AS n_tokens,
-            CAST(len(list_filter(string_split(text,' '), t -> t IN ('the','a','of','to','in'))) AS INT) AS s_en,
-            CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS INT) AS n_digits,
-            CAST(length(text) AS INT) AS len_text
-          FROM documents)),
+          ${qualityFeatures("doc_id, source", "documents")})),
       ranked AS (
         SELECT source, doc_id, quality_score,
                CAST(row_number() OVER (PARTITION BY source
@@ -2253,18 +1879,12 @@ object SparkEntry {
     """),
     // adaptive per-lang threshold: quantile_cont == Spark's exact
     // percentile (both linear-interpolated; money-rounded on both sides)
-    Query("quality_gate_per_lang", (s, d) => TextAnalysis.qualityGatePerLang(s, d), """
+    Query("quality_gate_per_lang", (s, d) => TextAnalysis.qualityGatePerLang(s, d), s"""
       WITH q AS (
         SELECT doc_id, lang,
-               floor((least(1.0, n_tokens / 50.0) * (1.0 - n_digits / len_text) *
-                      (0.5 + 0.5 * least(1.0, s_en / n_tokens * 5))) * 10000 + 0.5) / 10000 AS quality_score
+               $qualityScore
         FROM (
-          SELECT doc_id, lang,
-            CAST(len(string_split(text, ' ')) AS INT) AS n_tokens,
-            CAST(len(list_filter(string_split(text,' '), t -> t IN ('the','a','of','to','in'))) AS INT) AS s_en,
-            CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS INT) AS n_digits,
-            CAST(length(text) AS INT) AS len_text
-          FROM documents)),
+          ${qualityFeatures("doc_id, lang", "documents")})),
       th AS (
         SELECT lang,
                floor(quantile_cont(quality_score, 0.75) * 10000 + 0.5) / 10000 AS q_threshold
@@ -2287,14 +1907,8 @@ object SparkEntry {
     """),
     // the bloom prune has no false negatives, so the exact join behind
     // it must reproduce the unpruned decontamination answer exactly
-    Query("decontaminate_bloom", (s, d) => TextAnalysis.decontaminateBloom(s, d), """
-      WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-      sh AS (
-        SELECT doc_id, unnest(list_distinct(CASE WHEN len(toks) < 3 THEN []::BIGINT[]
-                 ELSE list_transform(range(1, len(toks) - 1), i ->
-                   ('0x' || substr(md5(toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]), 1, 15))::BIGINT) END)) AS g
-        FROM t),
-      bench AS (SELECT DISTINCT g FROM sh WHERE doc_id % 97 = 0)
+    Query("decontaminate_bloom", (s, d) => TextAnalysis.decontaminateBloom(s, d), s"""
+      WITH $benchShingles
       SELECT doc_id, count(*) AS n_shared
       FROM sh JOIN bench USING (g)
       WHERE doc_id % 97 <> 0
@@ -2318,30 +1932,8 @@ object SparkEntry {
     """),
     // CDF between two as-of snapshots reconstructed from the same SCD2
     // merge pipeline the snapshot oracle replays
-    Query("scd2_diff", (s, d) => Scd2Queries.changes(s, d), """
-      WITH base AS (
-        SELECT p_partkey AS part_key, p_name, p_brand, p_type, p_size,
-               CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT) AS price_cents
-        FROM part),
-      dim0 AS (
-        SELECT row_number() OVER (ORDER BY part_key) AS surrogate_key, base.*,
-               md5(concat_ws('|', p_name, p_brand, p_type,
-                   CAST(p_size AS VARCHAR), CAST(price_cents AS VARCHAR))) AS attr_hash
-        FROM base),
-      src AS (
-        SELECT part_key, p_name, p_brand, p_type, p_size,
-               CASE WHEN part_key % 7 = 0 THEN price_cents + 100 ELSE price_cents END AS price_cents
-        FROM base
-        UNION ALL
-        SELECT part_key + 1000000, p_name || '_v2', p_brand, p_type, p_size, price_cents
-        FROM base WHERE part_key % 50 = 0),
-      srch AS (
-        SELECT src.*, md5(concat_ws('|', p_name, p_brand, p_type,
-                   CAST(p_size AS VARCHAR), CAST(price_cents AS VARCHAR))) AS attr_hash
-        FROM src),
-      changed AS (
-        SELECT s.* FROM srch s LEFT JOIN dim0 d USING (part_key)
-        WHERE d.part_key IS NULL OR d.attr_hash <> s.attr_hash),
+    Query("scd2_diff", (s, d) => Scd2Queries.changes(s, d), s"""
+      WITH $scd2Changed,
       old_rows AS (
         SELECT d.part_key, d.price_cents, d.attr_hash,
                DATE '2024-01-01' AS effective_date,
@@ -2386,11 +1978,10 @@ object SparkEntry {
     """),
     // filtered ANN: neighbors restricted to the query's own label —
     // the Spark side runs it as a hash equi-join on label
-    Query("knn_filtered", (s, d) => Similarity.knnFilteredByLabel(s, d), """
+    Query("knn_filtered", (s, d) => Similarity.knnFilteredByLabel(s, d), s"""
       WITH p AS (
         SELECT vec_id, label, embedding::DOUBLE[] AS v,
-               list_reduce(list_transform(range(1, len(embedding) + 1), i ->
-                 (embedding::DOUBLE[])[i] * (embedding::DOUBLE[])[i]), (x, y) -> x + y) AS norm2
+               $embeddingNorm2
         FROM embeddings),
       q AS (SELECT vec_id AS query_id, label, v AS va, norm2 AS na2 FROM p WHERE vec_id % 100 = 0),
       s AS (
@@ -2477,21 +2068,15 @@ object SparkEntry {
     """),
     // staged curation composite: dedup -> per-lang p75 gate (thresholds
     // learned AFTER dedup) -> per-source top-10 quota -> summary
-    Query("curation_pipeline", (s, d) => TextAnalysis.curationPipeline(s, d), """
+    Query("curation_pipeline", (s, d) => TextAnalysis.curationPipeline(s, d), s"""
       WITH kept AS (
         SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
       d AS (SELECT doc.* FROM documents doc JOIN kept USING (doc_id)),
       q AS (
         SELECT doc_id, lang, source, n_chars,
-               floor((least(1.0, n_tokens / 50.0) * (1.0 - n_digits / len_text) *
-                      (0.5 + 0.5 * least(1.0, s_en / n_tokens * 5))) * 10000 + 0.5) / 10000 AS quality_score
+               $qualityScore
         FROM (
-          SELECT doc_id, lang, source, n_chars,
-            CAST(len(string_split(text, ' ')) AS INT) AS n_tokens,
-            CAST(len(list_filter(string_split(text,' '), t -> t IN ('the','a','of','to','in'))) AS INT) AS s_en,
-            CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS INT) AS n_digits,
-            CAST(length(text) AS INT) AS len_text
-          FROM d)),
+          ${qualityFeatures("doc_id, lang, source, n_chars", "d")})),
       th AS (
         SELECT lang,
                floor(quantile_cont(quality_score, 0.75) * 10000 + 0.5) / 10000 AS t
@@ -2999,12 +2584,8 @@ object SparkEntry {
     // neighborhood Jaccard on existing edges only; the intersection is
     // replayed as common-neighbor join counting (oracle-side wedge
     // enumeration is fine at verify scale)
-    Query("part_similarity", (s, d) => Graphs.partSimilarity(s, d), """
-      WITH items AS (
-        SELECT DISTINCT l_orderkey AS okey, l_partkey AS part FROM lineitem),
-      und AS (
-        SELECT DISTINCT a.part AS a, b.part AS b
-        FROM items a JOIN items b ON a.okey = b.okey AND a.part < b.part),
+    Query("part_similarity", (s, d) => Graphs.partSimilarity(s, d), s"""
+      WITH $coPurchaseUnd,
       adj AS (
         SELECT a AS n, b AS nb FROM und UNION ALL SELECT b AS n, a AS nb FROM und),
       deg AS (SELECT n, count(*) AS d FROM adj GROUP BY 1),
@@ -3026,12 +2607,8 @@ object SparkEntry {
     // neighbor-id→token): the oracle replays signature, 8×2 banding,
     // the bucket-size window cut, AND the exact verify — proving the
     // cap is candidate-gen-only, like dedup_minhash_capped
-    Query("part_similarity_capped", (s, d) => Graphs.partSimilarityCapped(s, d), """
-      WITH items AS (
-        SELECT DISTINCT l_orderkey AS okey, l_partkey AS part FROM lineitem),
-      und AS (
-        SELECT DISTINCT a.part AS a, b.part AS b
-        FROM items a JOIN items b ON a.okey = b.okey AND a.part < b.part),
+    Query("part_similarity_capped", (s, d) => Graphs.partSimilarityCapped(s, d), s"""
+      WITH $coPurchaseUnd,
       adj AS (
         SELECT n, list(nb) AS nbrs FROM (
           SELECT a AS n, b AS nb FROM und UNION ALL SELECT b AS n, a AS nb FROM und)
@@ -3042,8 +2619,7 @@ object SparkEntry {
         FROM adj),
       sig AS (
         SELECT n, hs,
-               list_transform(range(0, 16), i ->
-                 list_min(list_transform(hs, x -> ((2*i+1) * x + 7*i+3) % 1000000007))) AS sig
+               ${minhashSig(16, "hs")}
         FROM th),
       bands AS (
         SELECT n, bs.b AS band, sig[bs.b*2+1] AS k1, sig[bs.b*2+2] AS k2
@@ -3057,13 +2633,7 @@ object SparkEntry {
         SELECT DISTINCT x.n AS part_a, y.n AS part_b
         FROM capped x JOIN capped y
           ON x.band = y.band AND x.k1 = y.k1 AND x.k2 = y.k2 AND x.n < y.n),
-      pairs AS (
-        SELECT part_a, part_b,
-               len(list_intersect(ta.hs, tb.hs)) AS inter,
-               len(ta.hs) AS na, len(tb.hs) AS nb
-        FROM cand
-          JOIN th ta ON cand.part_a = ta.n
-          JOIN th tb ON cand.part_b = tb.n)
+      pairs AS (${jaccardInter("part_a", "part_b", "th", "n")})
       SELECT part_a, part_b,
              floor((inter / (na + nb - inter)) * 10000 + 0.5) / 10000 AS jaccard
       FROM pairs
@@ -3197,7 +2767,11 @@ object SparkEntry {
              CASE WHEN n_violations = 0 THEN 'pass' ELSE 'fail' END AS status
       FROM checks ORDER BY table_name, check_name
     """),
-    Query("dq_gated_promotion", (s, d) => DataQuality.dqGatedPromotion(s, d), """
+    // gated promotion replay: both batches' rule counts re-derived in
+    // SQL; `promoted` = every rule clean AND batch non-empty;
+    // rows_landed = the batch total iff promoted (the Spark side reads
+    // this back from the bronze dir it actually wrote)
+    Query("dq_gated_promotion", (s, d) => DataQuality.dqGatedPromotion(s, d), s"""
       WITH cb AS (SELECT o_orderkey, o_custkey, o_totalprice FROM orders),
       tb AS (SELECT o_orderkey,
                CASE WHEN o_orderkey % 97 = 0 THEN NULL ELSE o_custkey END AS o_custkey,
@@ -3236,19 +2810,11 @@ object SparkEntry {
         FROM tagg, torph,
           (VALUES ('not_null_o_custkey'), ('range_o_totalprice'),
                   ('unique_o_orderkey'), ('fk_o_custkey_customer')) r(rule)),
-      fin AS (
-        SELECT batch, rule, n_rows, n_violations, n_violations = 0 AS passed,
-               (min(CASE WHEN n_violations = 0 THEN 1 ELSE 0 END)
-                  OVER (PARTITION BY batch)) = 1 AND n_rows > 0 AS promoted
-        FROM rep)
+      ${gateFin("")}
       SELECT batch, rule, n_rows, n_violations, passed, promoted,
              CASE WHEN promoted THEN n_rows ELSE CAST(0 AS BIGINT) END AS rows_landed
       FROM fin ORDER BY batch, rule
     """),
-    // gated promotion replay: both batches' rule counts re-derived in
-    // SQL; `promoted` = every rule clean AND batch non-empty;
-    // rows_landed = the batch total iff promoted (the Spark side reads
-    // this back from the bronze dir it actually wrote)
     // gated SCD2 merge replay, ACCEPT path: rule counts re-derived in
     // SQL (ambiguity = keys with >1 distinct attr-hash in the batch,
     // blast radius = would-expire count iff over 50% of current
@@ -3256,106 +2822,22 @@ object SparkEntry {
     // state — the Spark side reads these back from the parquet dim it
     // actually wrote. The REJECT path is its own query below (round-9
     // brief #2: one query per merge cycle).
-    Query("scd2_gated", (s, d) => Scd2Queries.gated(s, d), """
-      WITH base AS (
-        SELECT p_partkey AS part_key, p_name, p_brand, p_type, p_size,
-               CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT) AS price_cents
-        FROM part),
-      bh AS (SELECT part_key, md5(concat_ws('|', p_name, p_brand, p_type,
-               CAST(p_size AS VARCHAR), CAST(price_cents AS VARCHAR))) AS h
-             FROM base),
-      cb AS (
+    Query("scd2_gated", (s, d) => Scd2Queries.gated(s, d), scd2GatedSql("clean", "c", """
         SELECT part_key, p_name, p_brand, p_type, p_size,
                price_cents + 100 AS price_cents
         FROM base WHERE part_key % 7 = 0
         UNION ALL
         SELECT part_key + 1000000, p_name || '_v2', p_brand, p_type, p_size, price_cents
-        FROM base WHERE part_key % 50 = 0),
-      cbh AS (SELECT part_key, p_name, md5(concat_ws('|', p_name, p_brand, p_type,
-               CAST(p_size AS VARCHAR), CAST(price_cents AS VARCHAR))) AS h
-              FROM cb),
-      np AS (SELECT CAST(count(*) AS BIGINT) AS n FROM base),
-      cs AS (SELECT
-        (SELECT CAST(count(*) AS BIGINT) FROM cb) AS total,
-        (SELECT CAST(sum(CASE WHEN p_name IS NULL THEN 1 ELSE 0 END) AS BIGINT) FROM cb) AS nn,
-        (SELECT CAST(count(*) AS BIGINT) FROM
-          (SELECT part_key FROM cbh GROUP BY 1 HAVING count(DISTINCT h) > 1)) AS amb,
-        (SELECT CAST(count(DISTINCT c.part_key) AS BIGINT)
-         FROM cbh c JOIN bh USING (part_key) WHERE c.h <> bh.h) AS chg,
-        (SELECT CAST(count(DISTINCT c.part_key) AS BIGINT)
-         FROM cbh c LEFT JOIN bh USING (part_key) WHERE bh.h IS NULL) AS newk),
-      rep AS (
-        SELECT 'clean' AS batch, r.rule, cs.total AS n_rows,
-               CASE r.rule WHEN 'not_null_p_name' THEN cs.nn
-                           WHEN 'ambiguous_latest' THEN cs.amb
-                           ELSE CASE WHEN cs.chg * 100 > np.n * 50 THEN cs.chg ELSE CAST(0 AS BIGINT) END
-               END AS n_violations,
-               cs.chg AS chg, cs.newk AS newk
-        FROM cs, np,
-          (VALUES ('not_null_p_name'), ('ambiguous_latest'),
-                  ('expire_blast_radius')) r(rule)),
-      fin AS (
-        SELECT batch, rule, n_rows, n_violations, n_violations = 0 AS passed,
-               (min(CASE WHEN n_violations = 0 THEN 1 ELSE 0 END)
-                  OVER (PARTITION BY batch)) = 1 AND n_rows > 0 AS promoted,
-               chg, newk
-        FROM rep)
-      SELECT batch, rule, n_rows, n_violations, passed, promoted,
-             CASE WHEN promoted THEN np.n + chg + newk ELSE np.n END AS versions_on_disk,
-             CASE WHEN promoted THEN np.n + newk ELSE np.n END AS current_on_disk
-      FROM fin, np ORDER BY batch, rule
-    """),
+        FROM base WHERE part_key % 50 = 0""")),
     // gated SCD2 merge replay, REJECT path: the fat-fingered full reload
     // trips ambiguity + blast radius; promoted is false by construction
     // and the dimension state equals v1 (n base rows, all current)
-    Query("scd2_gate_reject", (s, d) => Scd2Queries.gateReject(s, d), """
-      WITH base AS (
-        SELECT p_partkey AS part_key, p_name, p_brand, p_type, p_size,
-               CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT) AS price_cents
-        FROM part),
-      bh AS (SELECT part_key, md5(concat_ws('|', p_name, p_brand, p_type,
-               CAST(p_size AS VARCHAR), CAST(price_cents AS VARCHAR))) AS h
-             FROM base),
-      tb AS (
+    Query("scd2_gate_reject", (s, d) => Scd2Queries.gateReject(s, d), scd2GatedSql("tainted", "t", """
         SELECT part_key, p_name, p_brand, p_type, p_size,
                price_cents + 1 AS price_cents FROM base
         UNION ALL
         SELECT part_key, p_name, p_brand, p_type, p_size,
-               price_cents + 999 FROM base WHERE part_key = 1),
-      tbh AS (SELECT part_key, p_name, md5(concat_ws('|', p_name, p_brand, p_type,
-               CAST(p_size AS VARCHAR), CAST(price_cents AS VARCHAR))) AS h
-              FROM tb),
-      np AS (SELECT CAST(count(*) AS BIGINT) AS n FROM base),
-      ts AS (SELECT
-        (SELECT CAST(count(*) AS BIGINT) FROM tb) AS total,
-        (SELECT CAST(sum(CASE WHEN p_name IS NULL THEN 1 ELSE 0 END) AS BIGINT) FROM tb) AS nn,
-        (SELECT CAST(count(*) AS BIGINT) FROM
-          (SELECT part_key FROM tbh GROUP BY 1 HAVING count(DISTINCT h) > 1)) AS amb,
-        (SELECT CAST(count(DISTINCT t.part_key) AS BIGINT)
-         FROM tbh t JOIN bh USING (part_key) WHERE t.h <> bh.h) AS chg,
-        (SELECT CAST(count(DISTINCT t.part_key) AS BIGINT)
-         FROM tbh t LEFT JOIN bh USING (part_key) WHERE bh.h IS NULL) AS newk),
-      rep AS (
-        SELECT 'tainted' AS batch, r.rule, ts.total AS n_rows,
-               CASE r.rule WHEN 'not_null_p_name' THEN ts.nn
-                           WHEN 'ambiguous_latest' THEN ts.amb
-                           ELSE CASE WHEN ts.chg * 100 > np.n * 50 THEN ts.chg ELSE CAST(0 AS BIGINT) END
-               END AS n_violations,
-               ts.chg AS chg, ts.newk AS newk
-        FROM ts, np,
-          (VALUES ('not_null_p_name'), ('ambiguous_latest'),
-                  ('expire_blast_radius')) r(rule)),
-      fin AS (
-        SELECT batch, rule, n_rows, n_violations, n_violations = 0 AS passed,
-               (min(CASE WHEN n_violations = 0 THEN 1 ELSE 0 END)
-                  OVER (PARTITION BY batch)) = 1 AND n_rows > 0 AS promoted,
-               chg, newk
-        FROM rep)
-      SELECT batch, rule, n_rows, n_violations, passed, promoted,
-             CASE WHEN promoted THEN np.n + chg + newk ELSE np.n END AS versions_on_disk,
-             CASE WHEN promoted THEN np.n + newk ELSE np.n END AS current_on_disk
-      FROM fin, np ORDER BY batch, rule
-    """),
+               price_cents + 999 FROM base WHERE part_key = 1""")),
     // deterministic epoch shuffle: shard/position are pure functions of
     // h64(doc_id:epoch) — both engines derive identical permutations
     Query("epoch_shards", (s, d) => TextAnalysis.epochShards(s, d), """
@@ -3457,34 +2939,15 @@ object SparkEntry {
     // pipeline restricted to band 0 (the bandSubset sampling lever,
     // exactly as sketch_agreement) at verify threshold 0.5, then
     // buckets exact Jaccard by tenths
-    Query("dedup_threshold_curve", (s, d) => Dedup.dedupThresholdCurve(s, d), """
-      WITH docs AS (
-        SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks FROM documents),
-      th AS (
-        SELECT doc_id, toks,
-               list_transform(toks, t -> ('0x' || substr(md5(t), 1, 15))::BIGINT % 1000000007) AS h
-        FROM docs),
+    Query("dedup_threshold_curve", (s, d) => Dedup.dedupThresholdCurve(s, d), s"""
+      WITH ${minhashTokens("doc_id, toks")},
       sig AS (
         SELECT doc_id, toks,
-               list_transform(range(0, 16), i ->
-                 list_min(list_transform(h, x -> ((2*i+1) * x + 7*i+3) % 1000000007))) AS sig
+               ${minhashSig(16, "h")}
         FROM th),
-      bands AS (
-        SELECT doc_id, sig[1] AS k1, sig[2] AS k2, sig[3] AS k3, sig[4] AS k4
-        FROM sig),
-      cand AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-        FROM bands a JOIN bands b
-          ON a.k1 = b.k1 AND a.k2 = b.k2
-         AND a.k3 = b.k3 AND a.k4 = b.k4 AND a.doc_id < b.doc_id),
+      $band0Cand,
       hsets AS (SELECT doc_id, list_distinct(h) AS hs FROM th),
-      pairs AS (
-        SELECT doc_a, doc_b,
-               len(list_intersect(ta.hs, tb.hs)) AS inter,
-               len(ta.hs) AS na, len(tb.hs) AS nb
-        FROM cand
-          JOIN hsets ta ON cand.doc_a = ta.doc_id
-          JOIN hsets tb ON cand.doc_b = tb.doc_id),
+      pairs AS (${jaccardInter("doc_a", "doc_b", "hsets", "doc_id")}),
       scored AS (
         SELECT doc_a, doc_b,
                floor((inter / (na + nb - inter)) * 10000 + 0.5) / 10000 AS jaccard
@@ -3509,14 +2972,8 @@ object SparkEntry {
     // transitive closure of the embedding-cosine pair graph: the same
     // recursive-CTE min-label components as dedup_clusters, seeded with
     // EVERY vec_id so singletons keep themselves
-    Query("embedding_clusters", (s, d) => Dedup.embeddingClusters(s, d), """
-      WITH RECURSIVE p AS (
-        SELECT vec_id, embedding::DOUBLE[] AS v,
-               CAST(list_sum(list_transform(range(0, 8), j ->
-                 CASE WHEN (embedding::DOUBLE[])[j+1] > 0 THEN (1 << j) ELSE 0 END)) AS INT) AS bucket,
-               list_reduce(list_transform(range(1, len(embedding) + 1), i ->
-                 (embedding::DOUBLE[])[i] * (embedding::DOUBLE[])[i]), (x, y) -> x + y) AS norm2
-        FROM embeddings),
+    Query("embedding_clusters", (s, d) => Dedup.embeddingClusters(s, d), s"""
+      WITH RECURSIVE ${bucketedCorpus("INT")},
       pr AS (
         SELECT a.vec_id AS id_a, b.vec_id AS id_b
         FROM p a JOIN p b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
@@ -3544,6 +3001,289 @@ object SparkEntry {
   lazy val oracleSql: Map[String, String] = table.map(q => q.name -> q.oracle).toMap
 
   // ---- named oracle fragments, shared by composing, never by cutting ----
+
+  // the latest shipment line per part: the window form of max_by
+  private val latestShipSql = """
+      SELECT l_partkey AS part_key, l_orderkey AS order_key,
+             l_linenumber AS line_number,
+             CAST(strftime(l_shipdate, '%Y%m%d') AS INT) AS ship_date_key,
+             l_quantity AS quantity
+      FROM lineitem
+      QUALIFY row_number() OVER (
+        PARTITION BY l_partkey
+        ORDER BY l_shipdate DESC, l_orderkey DESC, l_linenumber DESC) = 1
+      ORDER BY part_key
+    """
+
+  // the single-copy monthly order aggregate a reload must converge to
+  private val monthlyOrdersSql = """
+      SELECT CAST(strftime(o_orderdate, '%Y%m') AS INT) AS ingestion_month,
+             count(*) AS n_orders,
+             floor((CAST(sum(CAST(o_totalprice AS DECIMAL(38,8))) AS DOUBLE)) * 10000 + 0.5) / 10000 AS total_value
+      FROM orders
+      GROUP BY 1
+      ORDER BY 1
+    """
+
+  // the SCD2 dim's change hash over the part attributes
+  private val scd2AttrHash = """md5(concat_ws('|', p_name, p_brand, p_type,
+                   CAST(p_size AS VARCHAR), CAST(price_cents AS VARCHAR)))"""
+
+  // `base`: every part with its price in cents
+  private val scd2Base = """base AS (
+        SELECT p_partkey AS part_key, p_name, p_brand, p_type, p_size,
+               CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT) AS price_cents
+        FROM part)"""
+
+  // the SCD2 merge of one batch into the day-0 dim: `base`, `dim0` (the
+  // hashed day-0 dim), `src` (every 7th part repriced, every 50th
+  // renamed under a new key), `srch` (hashed) and `changed` (the batch
+  // rows that are new or whose hash moved)
+  private val scd2Changed = s"""$scd2Base,
+      dim0 AS (
+        SELECT row_number() OVER (ORDER BY part_key) AS surrogate_key, base.*,
+               $scd2AttrHash AS attr_hash
+        FROM base),
+      src AS (
+        SELECT part_key, p_name, p_brand, p_type, p_size,
+               CASE WHEN part_key % 7 = 0 THEN price_cents + 100 ELSE price_cents END AS price_cents
+        FROM base
+        UNION ALL
+        SELECT part_key + 1000000, p_name || '_v2', p_brand, p_type, p_size, price_cents
+        FROM base WHERE part_key % 50 = 0),
+      srch AS (
+        SELECT src.*, $scd2AttrHash AS attr_hash
+        FROM src),
+      changed AS (
+        SELECT s.* FROM srch s LEFT JOIN dim0 d USING (part_key)
+        WHERE d.part_key IS NULL OR d.attr_hash <> s.attr_hash)"""
+
+  // the merged dim's full rows over `scd2Changed`: `old_rows` (the day-0
+  // versions, expired on 2024-06-01 where changed) and `new_rows`
+  private val scd2Rows = """old_rows AS (
+        SELECT d.part_key, d.p_name, d.p_brand, d.p_type, d.p_size,
+               d.price_cents, d.attr_hash, d.surrogate_key,
+               DATE '2024-01-01' AS effective_date,
+               CASE WHEN c.part_key IS NOT NULL THEN DATE '2024-06-01'
+                    ELSE CAST(NULL AS DATE) END AS expiry_date,
+               c.part_key IS NULL AS is_current
+        FROM dim0 d LEFT JOIN (SELECT DISTINCT part_key FROM changed) c USING (part_key)),
+      new_rows AS (
+        SELECT part_key, p_name, p_brand, p_type, p_size, price_cents, attr_hash,
+               (SELECT count(*) FROM dim0) + row_number() OVER (ORDER BY part_key) AS surrogate_key,
+               DATE '2024-06-01' AS effective_date,
+               CAST(NULL AS DATE) AS expiry_date,
+               TRUE AS is_current
+        FROM changed)"""
+
+  // the gate verdict `fin` over `rep` (batch, rule, n_rows,
+  // n_violations, then `extra`): a batch is promoted iff every rule is
+  // clean and it has rows
+  private def gateFin(extra: String): String = s"""fin AS (
+        SELECT batch, rule, n_rows, n_violations, n_violations = 0 AS passed,
+               (min(CASE WHEN n_violations = 0 THEN 1 ELSE 0 END)
+                  OVER (PARTITION BY batch)) = 1 AND n_rows > 0 AS promoted$extra
+        FROM rep)"""
+
+  /** The gated SCD2 merge of one batch replayed: `rows` is the batch's
+    * SELECT over `base`; the rules count null names, ambiguous keys
+    * (more than one hash in the batch) and a blast radius (more than
+    * 50% of current versions would expire); the result is the verdict
+    * and the dim's row counts after the run. `p` prefixes the batch's
+    * CTE names (`c` clean, `t` tainted). */
+  private def scd2GatedSql(batch: String, p: String, rows: String): String = s"""
+      WITH $scd2Base,
+      bh AS (SELECT part_key, $scd2AttrHash AS h
+             FROM base),
+      ${p}b AS ($rows),
+      ${p}bh AS (SELECT part_key, p_name, $scd2AttrHash AS h
+              FROM ${p}b),
+      np AS (SELECT CAST(count(*) AS BIGINT) AS n FROM base),
+      ${p}s AS (SELECT
+        (SELECT CAST(count(*) AS BIGINT) FROM ${p}b) AS total,
+        (SELECT CAST(sum(CASE WHEN p_name IS NULL THEN 1 ELSE 0 END) AS BIGINT) FROM ${p}b) AS nn,
+        (SELECT CAST(count(*) AS BIGINT) FROM
+          (SELECT part_key FROM ${p}bh GROUP BY 1 HAVING count(DISTINCT h) > 1)) AS amb,
+        (SELECT CAST(count(DISTINCT $p.part_key) AS BIGINT)
+         FROM ${p}bh $p JOIN bh USING (part_key) WHERE $p.h <> bh.h) AS chg,
+        (SELECT CAST(count(DISTINCT $p.part_key) AS BIGINT)
+         FROM ${p}bh $p LEFT JOIN bh USING (part_key) WHERE bh.h IS NULL) AS newk),
+      rep AS (
+        SELECT '$batch' AS batch, r.rule, ${p}s.total AS n_rows,
+               CASE r.rule WHEN 'not_null_p_name' THEN ${p}s.nn
+                           WHEN 'ambiguous_latest' THEN ${p}s.amb
+                           ELSE CASE WHEN ${p}s.chg * 100 > np.n * 50 THEN ${p}s.chg ELSE CAST(0 AS BIGINT) END
+               END AS n_violations,
+               ${p}s.chg AS chg, ${p}s.newk AS newk
+        FROM ${p}s, np,
+          (VALUES ('not_null_p_name'), ('ambiguous_latest'),
+                  ('expire_blast_radius')) r(rule)),
+      ${gateFin(", chg, newk")}
+      SELECT batch, rule, n_rows, n_violations, passed, promoted,
+             CASE WHEN promoted THEN np.n + chg + newk ELSE np.n END AS versions_on_disk,
+             CASE WHEN promoted THEN np.n + newk ELSE np.n END AS current_on_disk
+      FROM fin, np ORDER BY batch, rule
+    """
+
+  // gap-islands over `events`: `e`, `flagged` (a new session opens where
+  // the inter-event gap >= 30 minutes) and `islands` (session id `sid`)
+  private val sessionIslands = """e AS (SELECT user_id, ts::TIMESTAMP AS ts FROM events),
+      flagged AS (
+        SELECT user_id, ts,
+               CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
+                         >= INTERVAL 30 MINUTE
+                    OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
+                    THEN 1 ELSE 0 END AS new_session
+        FROM e),
+      islands AS (
+        SELECT user_id, ts,
+               sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
+                 ROWS UNBOUNDED PRECEDING) AS sid
+        FROM flagged)"""
+
+  // MinHash `docs` (each document's distinct tokens) and `th` (their
+  // hashes `h` mod P); `cols` carries the tokens along or not
+  private def minhashTokens(cols: String): String = s"""docs AS (
+        SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks FROM documents),
+      th AS (
+        SELECT $cols,
+               list_transform(toks, t -> ('0x' || substr(md5(t), 1, 15))::BIGINT % 1000000007) AS h
+        FROM docs)"""
+
+  // the MinHash signature: `n` min-hashes over the hash list `hs`, hash
+  // i being ((2i+1)·x + 7i+3) mod P
+  private def minhashSig(n: Int, hs: String): String = s"""list_transform(range(0, $n), i ->
+                 list_min(list_transform($hs, x -> ((2*i+1) * x + 7*i+3) % 1000000007))) AS sig"""
+
+  // `bands`: the 16-hash `sig` cut into 4 bands of 4 keys
+  private val minhashBands = """bands AS (
+        SELECT doc_id, bs.b AS band,
+               sig[bs.b*4+1] AS k1, sig[bs.b*4+2] AS k2,
+               sig[bs.b*4+3] AS k3, sig[bs.b*4+4] AS k4
+        FROM sig CROSS JOIN (SELECT unnest([0,1,2,3]) AS b) bs)"""
+
+  // `cand`: the distinct doc pairs sharing a bucket of the bands `rel`
+  private def bandCand(rel: String): String = s"""cand AS (
+        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+        FROM $rel a JOIN $rel b
+          ON a.band = b.band AND a.k1 = b.k1 AND a.k2 = b.k2
+         AND a.k3 = b.k3 AND a.k4 = b.k4 AND a.doc_id < b.doc_id)"""
+
+  // band 0 alone (Dedup's bandSubset sample): `bands`, one row per doc,
+  // and `cand`, the pairs sharing its bucket
+  private val band0Cand = """bands AS (
+        SELECT doc_id, sig[1] AS k1, sig[2] AS k2, sig[3] AS k3, sig[4] AS k4
+        FROM sig),
+      cand AS (
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+        FROM bands a JOIN bands b
+          ON a.k1 = b.k1 AND a.k2 = b.k2
+         AND a.k3 = b.k3 AND a.k4 = b.k4 AND a.doc_id < b.doc_id)"""
+
+  // the exact verify of `cand`'s pairs (`a`, `b`) on the hash sets `hs`
+  // of `sets`, keyed by `key`: their overlap `inter` and sizes `na`, `nb`
+  private def jaccardInter(a: String, b: String, sets: String, key: String): String = s"""
+        SELECT $a, $b,
+               len(list_intersect(ta.hs, tb.hs)) AS inter,
+               len(ta.hs) AS na, len(tb.hs) AS nb
+        FROM cand
+          JOIN $sets ta ON cand.$a = ta.$key
+          JOIN $sets tb ON cand.$b = tb.$key"""
+
+  /** MinHash LSH pairs at Jaccard >= 0.9 (16 hashes, 4 bands of 4);
+    * `cap` drops band buckets holding more than it docs before the
+    * self-join, so it cuts candidates only and the verify stays exact. */
+  private def minhashPairsSql(cap: Option[Int]): String = {
+    val (capped, from) = cap match {
+      case None => ("", "bands")
+      case Some(n) => (s"""capped AS (
+        SELECT doc_id, band, k1, k2, k3, k4
+        FROM (SELECT *, count(*) OVER (PARTITION BY band, k1, k2, k3, k4) AS bsz
+              FROM bands)
+        WHERE bsz <= $n),
+      """, "capped")
+    }
+    s"""
+      WITH ${minhashTokens("doc_id, toks")},
+      sig AS (
+        SELECT doc_id, toks,
+               ${minhashSig(16, "h")}
+        FROM th),
+      $minhashBands,
+      $capped${bandCand(from)},
+      hsets AS (SELECT doc_id, list_distinct(h) AS hs FROM th),
+      pairs AS (${jaccardInter("doc_a", "doc_b", "hsets", "doc_id")})
+      SELECT doc_a, doc_b,
+             floor((inter / (na + nb - inter)) * 10000 + 0.5) / 10000 AS jaccard
+      FROM pairs
+      WHERE inter / (na + nb - inter) >= 0.9
+      ORDER BY doc_a, doc_b
+    """
+  }
+
+  // `t` (tokens) and `sh` (doc_id, `s`: the distinct 3-gram shingle
+  // hashes, ascending when `sorted`)
+  private def shingleSets(sorted: Boolean): String = {
+    val set = """list_distinct(list_transform(
+                 list_distinct(CASE WHEN len(toks) < 3 THEN []::VARCHAR[]
+                   ELSE list_transform(range(1, len(toks) - 1), i ->
+                          toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
+                   END),
+                 s -> ('0x' || substr(md5(s), 1, 15))::BIGINT))"""
+    s"""t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+      sh AS (
+        SELECT doc_id,
+               ${if (sorted) s"list_sort($set)" else set} AS s
+        FROM t)"""
+  }
+
+  // `inv` (one row per doc and shingle of `sh`) and `shared` (the doc
+  // pairs with shingle counts `na`, `nb` and their overlap `inter`)
+  private val sharedShingles = """inv AS (SELECT doc_id, len(s) AS n_sh, unnest(s) AS sh FROM sh),
+      shared AS (
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.n_sh AS na, b.n_sh AS nb,
+               count(*) AS inter
+        FROM inv a JOIN inv b ON a.sh = b.sh AND a.doc_id < b.doc_id
+        GROUP BY 1, 2, 3, 4)"""
+
+  // each 3-gram's hash over the token list `toks`, in order; [] under
+  // 3 tokens
+  private val shingleHashList = """CASE WHEN len(toks) < 3 THEN []::BIGINT[]
+                 ELSE list_transform(range(1, len(toks) - 1), i ->
+                   ('0x' || substr(md5(toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]), 1, 15))::BIGINT) END"""
+
+  // `t`, `sh` (one row per doc and distinct 3-gram hash `g`) and `bench`
+  // (the hashes of the doc_id % 97 = 0 benchmark stand-in)
+  private val benchShingles = s"""t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+      sh AS (
+        SELECT doc_id, unnest(list_distinct($shingleHashList)) AS g
+        FROM t),
+      bench AS (SELECT DISTINCT g FROM sh WHERE doc_id % 97 = 0)"""
+
+  // `chunks`: each doc's whole 8-token chunks over `toks` (t, n_chunks)
+  private val spanChunks = """chunks AS (
+        SELECT doc_id, unnest(range(0, n_chunks)) AS chunk_no, t
+        FROM toks WHERE n_chunks >= 1)"""
+
+  // the text-quality features of `rel`'s text, next to its `cols`
+  private def qualityFeatures(cols: String, rel: String): String = s"""SELECT $cols,
+          CAST(len(string_split(text, ' ')) AS INT) AS n_tokens,
+          CAST(len(list_filter(string_split(text,' '), t -> t IN ('the','a','of','to','in'))) AS INT) AS s_en,
+          CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS INT) AS n_digits,
+          CAST(length(text) AS INT) AS len_text
+        FROM $rel"""
+
+  // the quality score over those features, money-rounded
+  private val qualityScore = """floor((least(1.0, n_tokens / 50.0) * (1.0 - n_digits / len_text) *
+                    (0.5 + 0.5 * least(1.0, s_en / n_tokens * 5))) * 10000 + 0.5) / 10000 AS quality_score"""
+
+  // the co-purchase graph's undirected edges: `items` (order, part) and
+  // `und` (part pairs a < b sharing an order)
+  private val coPurchaseUnd = """items AS (
+        SELECT DISTINCT l_orderkey AS okey, l_partkey AS part FROM lineitem),
+      und AS (
+        SELECT DISTINCT a.part AS a, b.part AS b
+        FROM items a JOIN items b ON a.okey = b.okey AND a.part < b.part)"""
 
   // md5 halves of each document's distinct tokens
   private val tokenHalves = """th AS (
@@ -3603,12 +3343,34 @@ object SparkEntry {
       ORDER BY c.doc_id
     """
 
+  // an embedding's squared norm
+  private val embeddingNorm2 = """list_reduce(list_transform(range(1, len(embedding) + 1), i ->
+                 (embedding::DOUBLE[])[i] * (embedding::DOUBLE[])[i]), (x, y) -> x + y) AS norm2"""
+
   // the embeddings corpus `p`: vector and squared norm
-  private val embeddingCorpus = """p AS (
+  private val embeddingCorpus = s"""p AS (
         SELECT vec_id, embedding::DOUBLE[] AS v,
-               list_reduce(list_transform(range(1, len(embedding) + 1), i ->
-                 (embedding::DOUBLE[])[i] * (embedding::DOUBLE[])[i]), (x, y) -> x + y) AS norm2
+               $embeddingNorm2
         FROM embeddings)"""
+
+  // `p` with its hyperplane bucket: the signs of the first 8
+  // coordinates as bits, cast to `cast`
+  private def bucketedCorpus(cast: String): String = s"""p AS (
+        SELECT vec_id, embedding::DOUBLE[] AS v,
+               CAST(list_sum(list_transform(range(0, 8), j ->
+                 CASE WHEN (embedding::DOUBLE[])[j+1] > 0 THEN (1 << j) ELSE 0 END)) AS $cast) AS bucket,
+               $embeddingNorm2
+        FROM embeddings)"""
+
+  // the 5 nearest of `s` (query_id, neighbor_id, cosine) per query
+  private val top5Neighbors = """
+      SELECT query_id,
+             CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS INT) AS rank,
+             neighbor_id, cosine
+      FROM s
+      QUALIFY rank <= 5
+      ORDER BY query_id, rank
+    """
 
   private val knnBruteForceSql = s"""
       WITH $embeddingCorpus,
@@ -3617,14 +3379,7 @@ object SparkEntry {
         SELECT q.query_id, p.vec_id AS neighbor_id,
                floor((list_reduce(list_transform(range(1, len(q.va) + 1), i -> q.va[i] * p.v[i]),
                  (x, y) -> x + y) / sqrt(q.na2 * p.norm2)) * 10000 + 0.5) / 10000 AS cosine
-        FROM q JOIN p ON p.vec_id <> q.query_id)
-      SELECT query_id,
-             CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS INT) AS rank,
-             neighbor_id, cosine
-      FROM s
-      QUALIFY rank <= 5
-      ORDER BY query_id, rank
-    """
+        FROM q JOIN p ON p.vec_id <> q.query_id)""" + top5Neighbors
 
   /** IVF's LEARNED coarse quantizer over corpus relation `rel` (`p`, or
     * the 75% base slice `pb`): Lloyd's k-means (k=10, 3 iterations)
@@ -3669,14 +3424,7 @@ object SparkEntry {
         SELECT pr.query_id, corp.vec_id AS neighbor_id,
                floor((list_reduce(list_transform(range(1, len(pr.va) + 1), j -> pr.va[j] * corp.v[j]), (x, y) -> x + y)
                  / sqrt(pr.na2 * corp.norm2)) * 10000 + 0.5) / 10000 AS cosine
-        FROM probes pr JOIN corp ON corp.cid = pr.cid AND corp.vec_id <> pr.query_id)
-      SELECT query_id,
-             CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS INT) AS rank,
-             neighbor_id, cosine
-      FROM s
-      QUALIFY rank <= 5
-      ORDER BY query_id, rank
-    """
+        FROM probes pr JOIN corp ON corp.cid = pr.cid AND corp.vec_id <> pr.query_id)""" + top5Neighbors
 
   private val ivfpqSql = ivfPrefix + Similarity.ivfpqServeSql()
 
@@ -3783,20 +3531,14 @@ object SparkEntry {
       ORDER BY doc_id
     """
 
-  private val textQualitySql = """
+  private val textQualitySql = s"""
       SELECT doc_id, n_tokens,
              floor(((n_chars - (n_tokens - 1)) / n_tokens) * 10000 + 0.5) / 10000 AS avg_token_len,
              floor((s_en / n_tokens) * 10000 + 0.5) / 10000 AS stopword_ratio,
              floor((n_digits / len_text) * 10000 + 0.5) / 10000 AS digit_ratio,
-             floor((least(1.0, n_tokens / 50.0) * (1.0 - n_digits / len_text) *
-                    (0.5 + 0.5 * least(1.0, s_en / n_tokens * 5))) * 10000 + 0.5) / 10000 AS quality_score
+             $qualityScore
       FROM (
-        SELECT doc_id, n_chars,
-          CAST(len(string_split(text, ' ')) AS INT) AS n_tokens,
-          CAST(len(list_filter(string_split(text,' '), t -> t IN ('the','a','of','to','in'))) AS INT) AS s_en,
-          CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS INT) AS n_digits,
-          CAST(length(text) AS INT) AS len_text
-        FROM documents)
+        ${qualityFeatures("doc_id, n_chars", "documents")})
       ORDER BY doc_id
     """
 

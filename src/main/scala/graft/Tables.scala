@@ -47,14 +47,4 @@ object Tables {
   }
   def documents(spark: SparkSession, dir: String): DataFrame  = read(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "embeddings")
-
-  /** Register every fixture as a temp view so `spark.sql` queries work —
-    * the reference's SQL-on-catalog entry point (SURVEY.md §2.1 S8/S9,
-    * reference `dags/sales.py:65-88`). `events` goes through the ns→µs
-    * normalization above. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach {
-      case "events" => events(spark, dir).createOrReplaceTempView("events")
-      case n        => read(spark, dir, n).createOrReplaceTempView(n)
-    }
 }

@@ -25,9 +25,7 @@ import org.apache.spark.sql.functions._
   * renames it to the next unused `ckpt-<seq>.json`, and only then
   * deletes the older docs, so a crash at any point leaves either the
   * old watermark or the new one readable — never neither, which would
-  * silently full-reload rows later batches already loaded. Dirs written
-  * by the earlier Spark JSON writer (`part-*.json`) still read; their
-  * doc counts as older than any sequenced one.
+  * silently full-reload rows later batches already loaded.
   *
   * The data path stays fully distributed: one aggregate computes the
   * count gate and the new watermark, and appends are partitioned by
@@ -53,16 +51,13 @@ object ExtractLoad {
     .enable(DeserializationFeature.FAIL_ON_NULL_FOR_PRIMITIVES)
 
   private val SeqDoc = """ckpt-(\d+)\.json""".r
-  private val LegacyDoc = """part-.*\.json""".r
 
-  /** Checkpoint docs in `dir` by sequence number, oldest first; the
-    * legacy Spark-written doc ranks below every sequenced one. */
+  /** Checkpoint docs in `dir` by sequence number, oldest first. */
   private def docs(fs: FileSystem, dir: Path): Seq[(Long, Path)] =
     files(fs, dir).flatMap(p => p.getName match {
-      case SeqDoc(n)   => Some(n.toLong -> p)
-      case LegacyDoc() => Some(-1L -> p)
-      case _           => None
-    }).sortBy { case (n, p) => (n, p.getName) }
+      case SeqDoc(n) => Some(n.toLong -> p)
+      case _         => None
+    }).sortBy(_._1)
 
   private def files(fs: FileSystem, dir: Path): Seq[Path] =
     if (!fs.exists(dir)) Seq.empty
@@ -91,7 +86,7 @@ object ExtractLoad {
   def saveCheckpoint(spark: SparkSession, dir: String, ckpt: Checkpoint): Unit = {
     val (fs, d) = Fs.resolve(spark, dir)
     val old = docs(fs, d)
-    val next = old.lastOption.fold(0L)(_._1 + 1).max(0L)
+    val next = old.lastOption.fold(0L)(_._1 + 1)
     Fs.publishNew(fs, new Path(d, f"ckpt-$next%020d.json"), mapper.writeValueAsBytes(ckpt),
       s"checkpoint save lost the race for doc $next at $dir")
     (old.map(_._2) ++ files(fs, d).filter(_.getName.startsWith("_tmp-")))
@@ -126,14 +121,22 @@ object ExtractLoad {
   def run(spark: SparkSession, source: DataFrame, tableName: String,
       idCol: String, eventCol: String, ckptDir: String, outDir: String,
       ingestionDate: String): Long = {
-    val ckpt = readCheckpoint(spark, ckptDir)
-    val batchId = ckpt.map(_.last_id).getOrElse(-1L)
-    val delta = incremental(source, idCol, eventCol, ckpt)
-      .withColumn("ingestion_date", to_date(lit(ingestionDate)))
-      .withColumn("batch_id", lit(batchId))
+    val (batchId, delta) = batch(spark, source, idCol, eventCol, ckptDir, ingestionDate)
     val (n, wm) = watermark(delta, tableName, idCol, eventCol, ingestionDate)
     wm.foreach(promote(spark, delta, _, eventCol, ckptDir, outDir, ingestionDate, batchId))
     n
+  }
+
+  /** The work unit a run starts from: its `batch_id` (the checkpoint's
+    * last_id, -1 for the initial full load) and the delta past the
+    * checkpoint, tagged with both partition columns. */
+  private def batch(spark: SparkSession, source: DataFrame, idCol: String, eventCol: String,
+      ckptDir: String, ingestionDate: String): (Long, DataFrame) = {
+    val ckpt = readCheckpoint(spark, ckptDir)
+    val batchId = ckpt.map(_.last_id).getOrElse(-1L)
+    (batchId, incremental(source, idCol, eventCol, ckpt)
+      .withColumn("ingestion_date", to_date(lit(ingestionDate)))
+      .withColumn("batch_id", lit(batchId)))
   }
 
   /** One aggregate over the delta: its row count (the count gate,
@@ -192,11 +195,7 @@ object ExtractLoad {
       idCol: String, eventCol: String, ckptDir: String, outDir: String,
       ingestionDate: String, rules: Seq[DataQuality.Rule],
       ri: Seq[DataQuality.Ri] = Nil): (Long, DataFrame) = {
-    val ckpt = readCheckpoint(spark, ckptDir)
-    val batchId = ckpt.map(_.last_id).getOrElse(-1L)
-    val delta = incremental(source, idCol, eventCol, ckpt)
-      .withColumn("ingestion_date", to_date(lit(ingestionDate)))
-      .withColumn("batch_id", lit(batchId))
+    val (batchId, delta) = batch(spark, source, idCol, eventCol, ckptDir, ingestionDate)
     val report = DataQuality.gateReport(delta, rules, ri)
     // the report is |rules| rows — a driver-side decision, not a scan
     val rows = report.collect()

@@ -7,8 +7,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * re-expressed as Spark catalog databases over parquet (no Delta jars
   * locally — SURVEY.md §7.5.3; the API keeps the substrate swappable).
   *
-  * Covers S5-S13: partitioned append with schema merge, overwrite with
-  * schema replace, saveAsTable, CTAS, INSERT INTO, catalog scans.
+  * Covers S6-S13: overwrite with schema replace, saveAsTable, CTAS,
+  * INSERT INTO, catalog scans.
   */
 object Layers {
 
@@ -17,14 +17,6 @@ object Layers {
   /** S10: CREATE DATABASE per layer (reference create_schema.sql). */
   def createAll(spark: SparkSession): Unit =
     layers.foreach(l => spark.sql(s"CREATE DATABASE IF NOT EXISTS $l"))
-
-  /** S5: append sink with schema evolution. Parquet `mergeSchema` is a
-    * read-side option, so evolution on append = union of schemas happens
-    * at scan; partitioned by `ingestion_date` like the reference
-    * (`extract_load_template.py:171-175`). */
-  def appendPartitioned(df: DataFrame, table: String, partitionCol: String = "ingestion_date"): Unit =
-    df.write.mode(SaveMode.Append).partitionBy(partitionCol)
-      .option("mergeSchema", "true").format("parquet").saveAsTable(table)
 
   /** S6: overwrite sink with schema replace (`overwriteSchema=true` on
     * Delta → drop/recreate on parquet). */

@@ -626,15 +626,7 @@ object Manifest {
   def changeFeed(spark: SparkSession, path: String,
       fromVersion: Long, toVersion: Long): DataFrame = {
     import org.apache.spark.sql.functions.lit
-    require(fromVersion <= toVersion,
-      s"changeFeed: fromVersion $fromVersion > toVersion $toVersion")
-    val st0 = stateOrThrow(spark, path, Some(fromVersion))
-    val st1 = stateOrThrow(spark, path, Some(toVersion))
-    def key(e: Entry) = (e.part, e.dir)
-    val keys0 = st0.entries.map(key).toSet
-    val keys1 = st1.entries.map(key).toSet
-    val removed = st0.entries.filterNot(e => keys1.contains(key(e)))
-    val added = st1.entries.filterNot(e => keys0.contains(key(e)))
+    val (st0, st1, removed, added) = netEntries(spark, path, "changeFeed", fromVersion, toVersion)
     def side(entries: Seq[Entry], ddl: String, tpe: String): Option[DataFrame] =
       if (entries.isEmpty) None
       else Some(readEntries(spark, path, StructType.fromDDL(ddl), entries)
@@ -651,6 +643,21 @@ object Manifest {
           .withColumn("_change_type", lit("insert"))
       case dfs => dfs.reduce(_.unionByName(_, allowMissingColumns = true))
     }
+  }
+
+  /** The states at `fromVersion` and `toVersion` and their net entry
+    * diff: the entries only the first holds (removed) and only the
+    * second holds (added). An entry is its (part, dir) pair. */
+  private def netEntries(spark: SparkSession, path: String, op: String,
+      fromVersion: Long, toVersion: Long): (State, State, Seq[Entry], Seq[Entry]) = {
+    require(fromVersion <= toVersion, s"$op: fromVersion $fromVersion > toVersion $toVersion")
+    val st0 = stateOrThrow(spark, path, Some(fromVersion))
+    val st1 = stateOrThrow(spark, path, Some(toVersion))
+    def key(e: Entry) = (e.part, e.dir)
+    val keys0 = st0.entries.map(key).toSet
+    val keys1 = st1.entries.map(key).toSet
+    (st0, st1, st0.entries.filterNot(e => keys1.contains(key(e))),
+      st1.entries.filterNot(e => keys0.contains(key(e))))
   }
 
   /** Row-level snapshot-vs-snapshot diff via the manifest log (Delta's
@@ -674,21 +681,13 @@ object Manifest {
   def snapshotDiff(spark: SparkSession, path: String,
       fromVersion: Long, toVersion: Long, keyCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit, when, struct, coalesce, not}
-    require(fromVersion <= toVersion,
-      s"snapshotDiff: fromVersion $fromVersion > toVersion $toVersion")
-    val st0 = stateOrThrow(spark, path, Some(fromVersion))
-    val st1 = stateOrThrow(spark, path, Some(toVersion))
-    def key(e: Entry) = (e.part, e.dir)
-    val keys0 = st0.entries.map(key).toSet
-    val keys1 = st1.entries.map(key).toSet
+    val (st0, st1, removed, added) = netEntries(spark, path, "snapshotDiff", fromVersion, toVersion)
     val schema0 = StructType.fromDDL(st0.schemaDdl)
     val schema1 = StructType.fromDDL(st1.schemaDdl)
     val valueCols = schema1.fieldNames.toSeq
       .filterNot(keyCols.contains).filter(schema0.fieldNames.contains)
-    val before = readEntries(spark, path, schema0,
-      st0.entries.filterNot(e => keys1.contains(key(e))))
-    val after = readEntries(spark, path, schema1,
-      st1.entries.filterNot(e => keys0.contains(key(e))))
+    val before = readEntries(spark, path, schema0, removed)
+    val after = readEntries(spark, path, schema1, added)
     val b = before.select((keyCols.map(col) :+ lit(true).as("__has_old")) ++
       valueCols.map(c => col(c).as(s"old_$c")): _*)
     val a = after.select((keyCols.map(col) :+ lit(true).as("__has_new")) ++

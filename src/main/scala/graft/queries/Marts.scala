@@ -77,28 +77,8 @@ object Marts {
     * two fewer BroadcastExchange builds here); result identical —
     * inner equi-joins reassociated. */
   def salesSummary(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    val o  = Tables.orders(spark, dir)
-    val p  = Tables.part(spark, dir)
-    val c  = Tables.customer(spark, dir)
-    val n  = Tables.nation(spark, dir)
-    val r  = Tables.region(spark, dir)
-    // geography flattened at customer grain: bounded-dim joins stay
-    // hint-broadcast (25 / 5 rows); c′ itself is SF-scaled, so NO hint —
-    // AQE broadcasts it at fixture scale, sort-merges at cluster scale
-    // r16 session 2 (opt guide §2.2/§3.4): region_name is a FUNCTION of
-    // nation_name, so the region attach moves above the aggregate — the
-    // customer flatten carries one fewer string per fact row and the
-    // distinct-agg exchanges one fewer group key; the 25-row map joins
-    // the agg output. Identical rows (nation→region unique inner join
-    // commutes with a group-by on nation).
-    val cGeo = c.join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-      .select(col("c_custkey"), col("c_mktsegment"), col("n_name"))
-    val nGeo = n.join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-      .select(col("n_name").as("ng_nation"), col("r_name"))
-    li.join(o, col("l_orderkey") === col("o_orderkey"))
-      .join(p, col("l_partkey") === col("p_partkey"))
-      .join(cGeo, col("o_custkey") === col("c_custkey"))
+    val (star, nGeo) = salesStar(spark, dir)
+    star
       .groupBy(
         col("n_name").as("nation_name"),
         col("c_mktsegment").as("mktsegment"),
@@ -261,12 +241,7 @@ object Marts {
     * groups — dimension-bounded, not fact-bounded, so the agg output
     * stays small at any fact scale. */
   def salesSummaryCalendar(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    val o  = Tables.orders(spark, dir)
-    val p  = Tables.part(spark, dir)
-    val c  = Tables.customer(spark, dir)
-    val n  = Tables.nation(spark, dir)
-    val r  = Tables.region(spark, dir)
+    val (star, nGeo) = salesStar(spark, dir)
     // calendar generated over the fact's date span (the fixture's orders
     // run 1995–2001; the reference hardcodes its own 2010–2029 span)
     val dd = graft.engine.DimDate.generate(spark, "1995-01-01", 2557)
@@ -283,13 +258,7 @@ object Marts {
     // each deferred join's key IS a group key and is unique on the dim
     // side (generated calendar; 25 distinct nations), so inner-join
     // filtering commutes with the aggregate.
-    val cGeo = c.join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-      .select(col("c_custkey"), col("c_mktsegment"), col("n_name"))
-    val nGeo = n.join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-      .select(col("n_name").as("ng_nation"), col("r_name"))
-    li.join(o, col("l_orderkey") === col("o_orderkey"))
-      .join(p, col("l_partkey") === col("p_partkey"))
-      .join(cGeo, col("o_custkey") === col("c_custkey"))
+    star
       .groupBy(
         date_format(col("o_orderdate"), "yyyyMMdd").cast("int").as("date_key"),
         col("p_brand").as("brand"), col("p_type").as("part_type"),
@@ -317,6 +286,33 @@ object Marts {
       .orderBy(
         col("date_key"), col("brand"), col("part_type"), col("part_size"),
         col("region_name"), col("nation_name"), col("mktsegment"), col("priority"))
+  }
+
+  /** The fact star both sales marts aggregate, lineitem ⋈ orders ⋈
+    * part ⋈ c′, and `nGeo`, the 25-row nation → region map they join to
+    * their aggregate output.
+    *
+    * Geography is flattened at customer grain: the bounded-dim joins
+    * stay hint-broadcast (25 / 5 rows); c′ itself is SF-scaled, so NO
+    * hint — AQE broadcasts it at fixture scale, sort-merges at cluster
+    * scale. r16 session 2 (opt guide §2.2/§3.4): region_name is a
+    * FUNCTION of nation_name, so the region attach moves above the
+    * aggregate — the customer flatten carries one fewer string per fact
+    * row and the distinct-agg exchanges one fewer group key. Identical
+    * rows (nation→region unique inner join commutes with a group-by on
+    * nation). */
+  private def salesStar(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val n = Tables.nation(spark, dir)
+    val cGeo = Tables.customer(spark, dir)
+      .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
+      .select(col("c_custkey"), col("c_mktsegment"), col("n_name"))
+    val nGeo = n.join(broadcast(Tables.region(spark, dir)), col("n_regionkey") === col("r_regionkey"))
+      .select(col("n_name").as("ng_nation"), col("r_name"))
+    val star = Tables.lineitem(spark, dir)
+      .join(Tables.orders(spark, dir), col("l_orderkey") === col("o_orderkey"))
+      .join(Tables.part(spark, dir), col("l_partkey") === col("p_partkey"))
+      .join(cGeo, col("o_custkey") === col("c_custkey"))
+    (star, nGeo)
   }
 
   /** Co-located join via BUCKETED tables — the standing answer to "this

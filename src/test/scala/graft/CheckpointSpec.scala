@@ -59,16 +59,6 @@ class CheckpointSpec extends SparkSpec {
     }
   }
 
-  test("a checkpoint dir written by the Spark JSON writer still reads, and the next save replaces it") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("ckpt_legacy").toString + "/ckpt"
-    Seq(ck(4)).toDS().toDF().coalesce(1).write.json(dir)
-    assert(ExtractLoad.readCheckpoint(spark, dir).contains(ck(4)))
-    ExtractLoad.saveCheckpoint(spark, dir, ck(5))
-    assert(ExtractLoad.readCheckpoint(spark, dir).contains(ck(5)))
-    assert(!Fs.listFiles(spark, dir).exists(_.getName.startsWith("part-")))
-  }
-
   test("a missing or doc-less dir is no checkpoint; each save leaves exactly one doc") {
     val dir = Files.createTempDirectory("ckpt_seq").toString + "/ckpt"
     assert(ExtractLoad.readCheckpoint(spark, dir).isEmpty)
