@@ -295,8 +295,8 @@ object Marts {
     * Geography is flattened at customer grain: the bounded-dim joins
     * stay hint-broadcast (25 / 5 rows); c′ itself is SF-scaled, so NO
     * hint — AQE broadcasts it at fixture scale, sort-merges at cluster
-    * scale. r16 session 2 (opt guide §2.2/§3.4): region_name is a
-    * FUNCTION of nation_name, so the region attach moves above the
+    * scale. region_name is a FUNCTION of nation_name (opt guide
+    * §2.2/§3.4), so the region attach moves above the
     * aggregate — the customer flatten carries one fewer string per fact
     * row and the distinct-agg exchanges one fewer group key. Identical
     * rows (nation→region unique inner join commutes with a group-by on
